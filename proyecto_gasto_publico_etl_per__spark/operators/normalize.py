@@ -48,23 +48,18 @@ def coerce_numeric(
     """PRJ4 — ``to_numeric(errors="coerce")`` semantics: try_cast, junk → NULL (Spark 4 ANSI CAST throws)
     (transformar_mensual.py:86-87,144-145).  Metrics go to exact decimal,
     not float64 — see functions/money.py."""
-    out = df
-    for c in int_cols:
-        if c in out.columns:
-            out = out.withColumn(c, F.col(c).try_cast("int"))
-    for c in metric_cols:
-        if c in out.columns:
-            out = out.withColumn(c, F.col(c).try_cast(DEC))
-    return out
+    present = set(df.columns)
+    casts = {c: F.col(c).try_cast("int") for c in int_cols if c in present}
+    casts.update(
+        {c: F.col(c).try_cast(DEC) for c in metric_cols if c in present}
+    )
+    return df.withColumns(casts)
 
 
 def clean_text_cols(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """PRJ5 — NULL→"" → strip → collapse whitespace on every text column
     (transformar_mensual.py:91-94,146-147)."""
-    out = df
-    for c in cols:
-        out = out.withColumn(c, clean_text(c))
-    return out
+    return df.withColumns({c: clean_text(c) for c in cols})
 
 
 def with_month_date(

@@ -1123,46 +1123,6 @@ def _pq_dtable_from(
     )
 
 
-def pq_search(
-    df: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 4,
-    n_codes: int = 16,
-    k: int = 5,
-    quant: int = 1_000_000,
-) -> DataFrame:
-    """Asymmetric-distance (ADC) PQ search: approximate top-k by
-    summing, per corpus vector, the PRECOMPUTED query→codeword
-    subdistances of its 4 PQ codes — the classic IVF-PQ serving path.
-
-    Scale shape: the corpus is touched only through its code table
-    (m ints per vector, built map-only by ``pq_encode``); the
-    distance table (|queries| × m × n_codes rows — hundreds, a model
-    artifact) broadcasts into the join, and the only shuffle is the
-    (query, vector) partial-sum aggregate, bounded by |queries| ×
-    corpus codes, never d-dimensional vectors.
-    """
-    codebook = sampled_codebook(df, id_col, vec_col, m, n_codes)
-    codes = pq_encode(df, id_col, vec_col, m, n_codes, quant, codebook)
-    dtable = _pq_dtable(queries, codebook, id_col, vec_col, quant)
-    scored = (
-        codes.join(F.broadcast(dtable), ["subspace", "code"])
-        .where(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(F.sum("pd_q6").cast("bigint").alias("adist_q6"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        "adist_q6", "neighbor_id"
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "adist_q6", "rk")
-    )
-
-
 def ivf_pq_build_index(
     corpus: DataFrame,
     id_col: str = "vec_id",

@@ -4,22 +4,25 @@ resolution, grain consolidation.
 This is the Spark restatement of the reference's load stage
 (``ETL Gasto publico Perú/etl/cargar_postgres.py:270-388``).  The reference
 round-trips to PostgreSQL on every dim read/insert and fact sub-batch; here
-all state lives as Parquet tables and the whole load is ONE lazy plan:
+all state lives as Parquet tables and each step is one lazy plan:
 
-- dim "INSERT ... ON CONFLICT DO NOTHING" (L:127-152)  →  dedup + left-anti
-  join + append (``upsert_dim``), property-tested idempotent;
-- client-side dim key→id caches (L:283-320)            →  broadcast hash
-  joins (``resolve_fks``);
+- dim "INSERT ... ON CONFLICT DO NOTHING" (L:127-152)  →  dedup + null-safe
+  left-anti join (``new_dim_rows``, the delta a load appends) and its
+  ``existing ∪ delta`` form (``upsert_dim``), property-tested idempotent;
+- client-side dim key→id caches (L:283-320)            →  inline hash ids
+  over the normalized keys (``resolve_fks``, two projections for all dims);
 - SERIAL surrogate ids                                  →  xxhash64 natural-
   key hashes (functions/hashing.py) — no sequence, no coordination;
 - grain consolidation group-by-sum (L:374-375)          →  shuffle hash agg
-  with map-side partial aggregation (``consolidate``).
+  with map-side partial aggregation (``consolidate``), then a grain-keyed
+  anti-join (``new_fact_rows``; ``append_fact`` is ``existing ∪ delta``).
 
 Scale notes (100 TB): dims stay broadcast-sized (≤ tens of thousands of
-rows, SURVEY.md §1.4) so FK resolution never shuffles the fact; the only
-fact shuffle is the final grain consolidation, whose key count is bounded by
-the grain cardinality.  The fact is written partitioned by ``anio`` for
-partition pruning.
+rows, SURVEY.md §1.4) so the dim anti-joins broadcast the stored dim and
+FK resolution never shuffles the fact; the only fact shuffles are the
+grain consolidation and the grain anti-join against the batch's own year
+partitions.  The deltas are what a load writes (``mode("append")``), so a
+load costs O(batch), and a replay computes empty deltas and writes nothing.
 """
 
 from __future__ import annotations
@@ -34,23 +37,22 @@ from ..functions.hashing import surrogate_key
 from ..schema import DIMENSIONS, FACT_FKS, METRICS, Dim
 
 
-def normalize_key_cols(df: DataFrame, dim: Dim) -> DataFrame:
+def _key_expr(dim: Dim, k: str) -> Column:
     """Key-type normalization at join time (cargar_postgres.py:120-123):
     every key compared as a trimmed string, except declared int keys
     (``tipo_transaccion``, L:214) compared numerically.  Replicating this
     exactly is what keeps joins from silently missing (SURVEY.md §7.4)."""
-    out = df
-    for k in dim.key:
-        if k in dim.int_keys:
-            out = out.withColumn(k, F.col(k).try_cast("int"))
-        else:
-            # NULL → "" like the loader's string normalization — otherwise a
-            # NULL key never equals itself in the upsert anti-join and the
-            # same dim row re-appends on every load
-            out = out.withColumn(
-                k, F.coalesce(F.trim(F.col(k).cast("string")), F.lit(""))
-            )
-    return out
+    if k in dim.int_keys:
+        return F.col(k).try_cast("int")
+    # NULL → "" like the loader's string normalization — otherwise a NULL
+    # key never equals itself in the upsert anti-join and the same dim row
+    # re-appends on every load
+    return F.coalesce(F.trim(F.col(k).cast("string")), F.lit(""))
+
+
+def normalize_key_cols(df: DataFrame, dim: Dim) -> DataFrame:
+    """Normalize every key column of ``dim`` in one projection."""
+    return df.withColumns({k: _key_expr(dim, k) for k in dim.key})
 
 
 def extract_dim(records: DataFrame, dim: Dim) -> DataFrame:
@@ -68,16 +70,12 @@ def extract_dim(records: DataFrame, dim: Dim) -> DataFrame:
     )
 
 
-def upsert_dim(
+def new_dim_rows(
     existing: DataFrame | None, incoming: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
-    """Idempotent dedup-append: the engine-level ``ON CONFLICT DO NOTHING``
-    (cargar_postgres.py:127-152; SURVEY.md §7.4).
-
-    Returns existing ∪ (incoming ∖ existing on natural key).  Appending the
-    same batch twice is a no-op — the idempotency property the reference
-    gets from unique indexes (L:101-113).
-    """
+    """The dim delta: incoming ∖ existing on the natural key, in the stored
+    dim's column order — exactly the rows an append must add.  Empty when
+    the batch brings no new key, so a replayed load appends nothing."""
     fresh = incoming.dropDuplicates(list(keys))
     if existing is None:
         return fresh
@@ -90,7 +88,21 @@ def upsert_dim(
         [F.col(f"inc.{k}").eqNullSafe(F.col(f"ex.{k}")) for k in keys],
     )
     new_rows = inc.join(F.broadcast(ex), cond, "left_anti")
-    return existing.unionByName(new_rows.select(existing.columns))
+    return new_rows.select(existing.columns)
+
+
+def upsert_dim(
+    existing: DataFrame | None, incoming: DataFrame, keys: Sequence[str]
+) -> DataFrame:
+    """Idempotent dedup-append: the engine-level ``ON CONFLICT DO NOTHING``
+    (cargar_postgres.py:127-152; SURVEY.md §7.4).
+
+    Returns existing ∪ (incoming ∖ existing on natural key).  Appending the
+    same batch twice is a no-op — the idempotency property the reference
+    gets from unique indexes (L:101-113).
+    """
+    new_rows = new_dim_rows(existing, incoming, keys)
+    return new_rows if existing is None else existing.unionByName(new_rows)
 
 
 def resolve_fks(
@@ -104,11 +116,12 @@ def resolve_fks(
     exist to serve attributes at query time, not to mint ids — this is what
     deletes the reference's per-batch read-dim/insert/re-read cycle.)
     """
-    out = records
-    for dim in dims:
-        out = normalize_key_cols(out, dim)
-        out = out.withColumn(dim.id_col, surrogate_key(*dim.key))
-    return out
+    keys = {k: _key_expr(dim, k) for dim in dims for k in dim.key}
+    # two projections for any number of dims: the ids hash the
+    # normalized keys, so they come after them
+    return records.withColumns(keys).withColumns(
+        {dim.id_col: surrogate_key(*dim.key) for dim in dims}
+    )
 
 
 def fk_complete_filter(df: DataFrame, fks: Sequence[str] = FACT_FKS) -> DataFrame:
@@ -133,20 +146,30 @@ def consolidate(
     )
 
 
+def new_fact_rows(
+    existing: DataFrame | None,
+    incoming: DataFrame,
+    grain: Sequence[str] = FACT_FKS,
+    metrics: Sequence[str] = METRICS,
+) -> DataFrame:
+    """The fact delta: the batch consolidated to the grain, minus the grain
+    keys already stored (the fact-side ``ON CONFLICT DO NOTHING``,
+    cargar_postgres.py:236-267, 379-388).  Empty on a replayed batch."""
+    batch = consolidate(incoming, grain, metrics)
+    if existing is None:
+        return batch
+    return batch.join(existing.select(*grain), list(grain), "left_anti")
+
+
 def append_fact(
     existing: DataFrame | None,
     incoming: DataFrame,
     grain: Sequence[str] = FACT_FKS,
     metrics: Sequence[str] = METRICS,
 ) -> DataFrame:
-    """Idempotent fact append: consolidate the batch to the grain, then
-    anti-join against existing grain keys (the fact-side
-    ``ON CONFLICT DO NOTHING``, cargar_postgres.py:236-267, 379-388)."""
-    batch = consolidate(incoming, grain, metrics)
-    if existing is None:
-        return batch
-    new_rows = batch.join(existing.select(*grain), list(grain), "left_anti")
-    return existing.unionByName(new_rows)
+    """Idempotent fact append: existing ∪ ``new_fact_rows``."""
+    new_rows = new_fact_rows(existing, incoming, grain, metrics)
+    return new_rows if existing is None else existing.unionByName(new_rows)
 
 
 def scd1_merge(

@@ -20,11 +20,6 @@ START = "2010-01-01"
 END = "2030-12-01"
 
 
-def time_dim_id(year_col, month_col) -> "F.Column":
-    """The arithmetic surrogate key for dim_tiempo."""
-    return (F.col(year_col).cast("long") * 100 + F.col(month_col)).alias("tiempo_id")
-
-
 def build_time_dim(
     spark: SparkSession, start: str = START, end: str = END
 ) -> DataFrame:

@@ -4627,6 +4627,14 @@ def incr_agg_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: boundaries at every SF
 _MANIFEST_LO, _MANIFEST_HI = 199606, 199711
 
+
+def _overflow_safe_sum(col: str) -> Column:
+    """SUM of a BIGINT column carried in DECIMAL(38,0), so it neither
+    raises (ANSI) nor wraps on overflow; only the presented total is
+    BIGINT — the ``incr_agg_serving`` discipline."""
+    return F.sum(F.col(col).cast("decimal(38,0)")).cast("long")
+
+
 #: per-process clustered-copy root (with its manifest), keyed by sf_dir
 _MANIFEST_TABLES: dict[str, str] = {}
 
@@ -4704,7 +4712,7 @@ def manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pruned.groupBy("ym").agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.sum("price").cast("long").alias("sum_price"),
+        _overflow_safe_sum("price").alias("sum_price"),
     )
 
 
@@ -4995,7 +5003,7 @@ def bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return rows.groupBy(F.col("o_custkey").alias("cust")).agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.sum("price").cast("long").alias("sum_price"),
+        _overflow_safe_sum("price").alias("sum_price"),
     )
 
 

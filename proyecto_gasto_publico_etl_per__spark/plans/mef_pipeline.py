@@ -19,9 +19,19 @@ Parquet tables:
     <warehouse>/dim_<name>/            (7 extracted dimensions)
     <warehouse>/fact_gasto_mensual/    (partitioned by anio)
 
+The load is append-only, like the reference's insert-only loader
+(``ON CONFLICT DO NOTHING``, etl/cargar_postgres.py:127-152,379-388): it
+writes ``dim_tiempo`` once, appends each dim's new natural keys and the
+fact's new grain rows, and never rewrites a stored file.  A dim gains at
+most one file per load that brings new keys; a fact year partition gains
+files only when the load brings new grain rows for that year (one per
+writing task, one at monthly-delta size).  A replay writes nothing.
+``sources.maintenance.compact_parquet`` folds the accumulated small files.
+
 Scale: the fact is partitioned by ``anio`` so every year-filtered query
-prunes partitions; dims stay broadcast-sized; the only wide shuffle in the
-load is the grain consolidation.
+prunes partitions; dims stay broadcast-sized; the fact's wide shuffles in
+the load are the grain consolidation and the grain anti-join against the
+batch's own year partitions.
 """
 
 from __future__ import annotations
@@ -97,10 +107,11 @@ def load(
     """Load stage: normalized Parquet → star warehouse (idempotent).
 
     Replaces the reference's per-batch read-dim/insert/re-read/join cycle
-    (cargar_postgres.py:283-363) with: per-dim anti-join upsert against the
-    stored dim, inline hash surrogate ids on the fact side, one grain
-    consolidation, and a grain-keyed anti-join fact append.  Re-loading the
-    same input is a no-op (the ON CONFLICT DO NOTHING property)."""
+    (cargar_postgres.py:283-363) with: per-dim anti-join against the stored
+    dim appending only new keys, inline hash surrogate ids on the fact
+    side, one grain consolidation, and a grain-keyed anti-join fact append.
+    Re-loading the same input is a no-op that writes no file (the ON
+    CONFLICT DO NOTHING property)."""
     return load_frame(spark, spark.read.parquet(normalized_dir), warehouse)
 
 
@@ -108,27 +119,35 @@ def load_frame(
     spark: SparkSession, normalized: DataFrame, warehouse: str
 ) -> DataFrame:
     """The load stage on an already-materialized normalized frame — shared
-    by the batch CLI and the streaming loader's per-micro-batch handler."""
+    by the batch CLI and the streaming loader's per-micro-batch handler.
+
+    Writes only the delta, never rewriting a stored file: the calendar
+    when it is absent, each dim's new natural keys, and the fact grain
+    rows its years do not hold yet.  A replay of the same input writes
+    nothing."""
     wh = Path(warehouse)
     # business-meaning column comments (CreacionDBOrigen.sql:75-137) ride
     # along as field metadata into every dim/fact parquet written below
     records = with_column_comments(_star_records(normalized))
 
-    time_dim = with_column_comments(build_time_dim(spark))
-    time_dim.write.mode("overwrite").parquet(str(wh / "dim_tiempo"))
+    time_path = wh / "dim_tiempo"
+    if not time_path.exists():
+        with_column_comments(build_time_dim(spark)).write.parquet(
+            str(time_path)
+        )
 
     for dim in DIMENSIONS:
-        incoming = star.extract_dim(records, dim)
         dim_path = wh / dim.name
         existing = (
             spark.read.parquet(str(dim_path)) if dim_path.exists() else None
         )
-        merged = star.upsert_dim(existing, incoming, dim.key)
-        # localCheckpoint: materialize before overwriting the directory we
-        # just read from (classic read-modify-write hazard)
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            str(dim_path)
+        new_rows = star.new_dim_rows(
+            existing, star.extract_dim(records, dim), dim.key
         )
+        # a flat append of an empty frame still writes an empty part
+        # file; dim deltas are broadcast-sized, so one file per load
+        if not new_rows.isEmpty():
+            new_rows.coalesce(1).write.mode("append").parquet(str(dim_path))
 
     resolved = star.resolve_fks(records, DIMENSIONS)
     complete = star.fk_complete_filter(
@@ -140,10 +159,10 @@ def load_frame(
     )
     fact_path = wh / "fact_gasto_mensual"
     if fact_path.exists():
-        # partition-scoped upsert: the grain anti-join only needs the
-        # years present in this batch (a handful of values — a metadata
-        # collect, not a data collect), so an incremental month touches
-        # O(one year partition), never O(warehouse)
+        # partition-scoped anti-join: it only needs the years present in
+        # this batch (a handful of values — a metadata collect, not a data
+        # collect), so an incremental month reads O(one year partition),
+        # never O(warehouse)
         years = [
             r.anio for r in batch.select("anio").distinct().collect()
         ]
@@ -152,14 +171,13 @@ def load_frame(
         )
     else:
         existing_fact = None
-    merged = star.append_fact(
+    new_rows = star.new_fact_rows(
         existing_fact, batch, grain=[*FACT_FKS, "anio"], metrics=METRICS
     )
-    # dynamic partition overwrite rewrites ONLY the affected anio
-    # partitions; untouched years keep their files byte-for-byte
-    merged.localCheckpoint(eager=True).write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("anio").parquet(str(fact_path))
+    # appended files land only under the batch's own anio partitions
+    # (a partitioned append of an empty delta writes no file); every
+    # stored file keeps its bytes
+    new_rows.write.mode("append").partitionBy("anio").parquet(str(fact_path))
     return spark.read.parquet(str(fact_path))
 
 

@@ -52,6 +52,15 @@ AGG_LABELS: tuple[tuple[str, str], ...] = (
     ("dist_ejecutora_nombre", "SIN DISTRITO"),
 )
 
+
+def _agg_labels() -> dict:
+    """``AGG_LABELS`` as one ``withColumns`` map: column → label expression."""
+    return {
+        col: label_or_placeholder(col, placeholder)
+        for col, placeholder in AGG_LABELS
+    }
+
+
 #: The view's group columns in the reference's select order (V:121-147),
 #: after label substitution.  ``region_mapa`` (V:136-140) is a pure
 #: function of the coalesced departamento and is attached after the agg.
@@ -86,9 +95,7 @@ def vw_gasto_agregado_mensual(base: DataFrame) -> DataFrame:
     Column-for-column the reference view (V:119-179): 13 group columns +
     ``region_mapa`` + the 7 un-prefixed metric totals.
     """
-    labeled = base
-    for col, placeholder in AGG_LABELS:
-        labeled = labeled.withColumn(col, label_or_placeholder(col, placeholder))
+    labeled = base.withColumns(_agg_labels())
     sums = [
         gsum(F.coalesce(F.col(m), F.lit(0)), out)  # NULL-safe exact grid sum
         for m, out in AGG_METRIC_ALIASES
@@ -165,9 +172,7 @@ def finalize_agg_mensual(preagg: DataFrame) -> DataFrame:
     """Final aggregate of a micros-pre-aggregated base: same output as
     ``vw_gasto_agregado_mensual(base)`` when ``preagg`` carries the view's
     group source columns plus ``__micros_<metric>`` partial sums."""
-    labeled = preagg
-    for col, placeholder in AGG_LABELS:
-        labeled = labeled.withColumn(col, label_or_placeholder(col, placeholder))
+    labeled = preagg.withColumns(_agg_labels())
     agg = labeled.groupBy(*AGG_GROUP_COLS).agg(
         *[_present(m, out) for m, out in AGG_METRIC_ALIASES]
     )

@@ -17,12 +17,6 @@ Spark star-builder needs (``operators/star.py``).
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
-
-# Money metrics: NUMERIC in the warehouse (CreacionDeDataWareHouse.sql:127-133).
-# Decimal, not double, so sums are exact and deterministic under parallelism.
-MONEY_TYPE = T.DecimalType(20, 2)
-
 #: The 7 additive budget-execution measures (transformar_mensual.py:67-68,
 #: CreacionDeDataWareHouse.sql:127-133).  Order = funnel order.
 METRICS: tuple[str, ...] = (
@@ -172,26 +166,6 @@ FACT_FKS: tuple[str, ...] = (
 )
 
 
-def fact_schema() -> T.StructType:
-    """Schema of ``fact_gasto_mensual`` (surrogate ids + 7 metrics)."""
-    fields = [T.StructField(fk, T.LongType(), False) for fk in FACT_FKS]
-    fields += [T.StructField(m, MONEY_TYPE, True) for m in METRICS]
-    return T.StructType(fields)
-
-
-def time_dim_schema() -> T.StructType:
-    """``dim_tiempo`` (CreacionDeDataWareHouse.sql:9-15)."""
-    return T.StructType(
-        [
-            T.StructField("tiempo_id", T.LongType(), False),
-            T.StructField("fecha", T.DateType(), False),
-            T.StructField("anio", T.IntegerType(), False),
-            T.StructField("mes", T.IntegerType(), False),
-            T.StructField("trimestre", T.IntegerType(), False),
-        ]
-    )
-
-
 # --- raw (normalized-parquet) record -----------------------------------------
 
 #: Raw-side period + numeric columns (transformar_mensual.py:71-75).
@@ -238,10 +212,3 @@ COLS_CLAVE: tuple[str, ...] = (
     *RAW_METRIC_COLS,
 )
 
-
-def raw_schema() -> T.StructType:
-    """All-string raw schema: CSV is read ``dtype=str`` in the reference
-    (transformar_mensual.py:134-138); typing happens in normalization."""
-    return T.StructType(
-        [T.StructField(c, T.StringType(), True) for c in COLS_CLAVE]
-    )

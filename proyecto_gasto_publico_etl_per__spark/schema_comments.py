@@ -100,9 +100,12 @@ def with_column_comments(
 ) -> DataFrame:
     """Attach the business comment to every matching column's metadata.
     Parquet round-trips Spark field metadata, so warehouse tables keep
-    their documentation."""
-    for col in df.columns:
-        c = comments.get(col)
-        if c is not None:
-            df = df.withMetadata(col, {"comment": c})
-    return df
+    their documentation.  One projection, however many columns match."""
+    return df.select(
+        *[
+            df[c].alias(c, metadata={"comment": comments[c]})
+            if c in comments
+            else df[c]
+            for c in df.columns
+        ]
+    )

@@ -25,6 +25,9 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.filterPushdown": "true",
+    # no `[Stage N:>` bars: they interleave with library, CLI and test
+    # output and fill the tail of captured stdout
+    "spark.ui.showConsoleProgress": "false",
     # dims in this engine are broadcast-sized by construction (SURVEY.md §1.4);
     # raise the threshold so Catalyst never degrades a dim join to SMJ.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),

@@ -6,6 +6,8 @@ raw file, including the idempotent re-load property."""
 from __future__ import annotations
 
 import csv
+import os
+import re
 from pathlib import Path
 
 import pytest
@@ -194,7 +196,7 @@ def test_incremental_load_touches_only_affected_year_partitions(
     spark, tmp_path
 ):
     """Loading a new year's data must not rewrite existing year
-    partitions (dynamic partition overwrite + partition-scoped
+    partitions (partitioned append + partition-scoped
     anti-join) — the property that keeps incremental loads O(year),
     not O(warehouse)."""
     import os
@@ -386,3 +388,88 @@ def test_cli_sql_and_refresh_agg(spark, tmp_path, raw_csv, capsys):
     agg = str(tmp_path / "agg")
     cli.main(["refresh-agg", wh, agg])
     assert spark.read.parquet(agg).count() > 0
+
+
+def _data_files(root: str) -> dict[str, int]:
+    """relative path → mtime (ns) of every data file under ``root``."""
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if not f.startswith((".", "_")):
+                p = Path(dirpath, f)
+                out[str(p.relative_to(root))] = p.stat().st_mtime_ns
+    return out
+
+
+def test_load_appends_only_the_delta(spark, tmp_path, raw_csv):
+    """The load is append-only: a replay writes no file, and a month that
+    brings no new dim key leaves every dim file alone and adds fact files
+    only under its own year partition — stored files are never rewritten."""
+    wh = str(tmp_path / "warehouse")
+    norm_dir = str(tmp_path / "normalized")
+    mef_pipeline.transform(spark, raw_csv, norm_dir)
+    mef_pipeline.load(spark, norm_dir, wh)
+    first = _data_files(wh)
+    assert any(rel.startswith("dim_ejecutora/") for rel in first)
+
+    mef_pipeline.load(spark, norm_dir, wh)
+    assert _data_files(wh) == first
+
+    march = tmp_path / "2024-03-Gasto-Mensual.csv"
+    _write_csv(
+        march,
+        [["2024", "3", "E", "GOBIERNO NACIONAL", "001", "E1",
+          "Ejecutora Uno", "01", "SALUD", "7", "8", "9"]],
+    )
+    nd = str(tmp_path / "normalized_march")
+    mef_pipeline.transform(spark, str(march), nd)
+    mef_pipeline.load(spark, nd, wh)
+    after = _data_files(wh)
+    assert {rel: after.get(rel) for rel in first} == first
+    added = set(after) - set(first)
+    assert added
+    assert all(
+        rel.startswith("fact_gasto_mensual/anio=2024/") for rel in added
+    ), added
+    assert spark.read.parquet(f"{wh}/fact_gasto_mensual").count() == 3
+
+
+def _project_count(df) -> int:
+    plan = df._jdf.queryExecution().logical().toString()
+    return len(re.findall(r"^[\s+:-]*'?Project ", plan, re.M))
+
+
+def test_wide_etl_steps_are_one_projection(spark):
+    """Each wide ETL step adds one Project to the logical plan (two for
+    FK resolution: keys, then ids) whatever its column count — a
+    per-column chain adds one per column, each re-analyzed by Catalyst."""
+    from proyecto_gasto_publico_etl_per__spark.operators import (
+        normalize,
+        star,
+    )
+    from proyecto_gasto_publico_etl_per__spark.schema import (
+        COLS_CLAVE,
+        DIMENSIONS,
+        RAW_INT_COLS,
+        RAW_METRIC_COLS,
+    )
+    from proyecto_gasto_publico_etl_per__spark.schema_comments import (
+        with_column_comments,
+    )
+
+    def added(before, after) -> int:
+        return _project_count(after) - _project_count(before)
+
+    raw = spark.createDataFrame([["1"] * len(COLS_CLAVE)], list(COLS_CLAVE))
+    numeric = set(RAW_INT_COLS) | set(RAW_METRIC_COLS)
+    text = [c for c in COLS_CLAVE if c not in numeric]
+
+    coerced = normalize.coerce_numeric(raw)
+    assert len(numeric) == 10 and added(raw, coerced) == 1
+    cleaned = normalize.clean_text_cols(coerced, text)
+    assert len(text) == 54 and added(coerced, cleaned) == 1
+    records = mef_pipeline._star_records(cleaned)
+    commented = with_column_comments(records)
+    assert added(records, commented) == 1
+    resolved = star.resolve_fks(commented, DIMENSIONS)
+    assert len(DIMENSIONS) == 7 and added(commented, resolved) == 2
