@@ -24,6 +24,7 @@ from .plans import mef_pipeline
 from .plans import queries as Q
 from .session import get_spark
 from .operators.skew import pin
+from .sources import zones
 
 
 def _warn_cross_modality(media: str, *flags) -> None:
@@ -37,146 +38,49 @@ def _warn_cross_modality(media: str, *flags) -> None:
             )
 
 
-def _text_index_deltas(index_dir: str) -> list[int]:
-    """delta=N numbers present under a text index dir, ascending."""
-    import os
-    import re
-
+def _layout(fn, *args):
+    """A `sources.zones` layout call (resolver, build/append target,
+    out-dir guard); its refusal exits the CLI with the message."""
     try:
-        names = os.listdir(index_dir)
-    except FileNotFoundError:
-        return []
-    return sorted(
-        int(m.group(1))
-        for name in names
-        if (m := re.fullmatch(r"delta=(\d+)", name))
-    )
+        return fn(*args)
+    except ValueError as exc:
+        raise SystemExit(str(exc)) from exc
 
 
-def _text_index_epochs(index_dir: str) -> list[int]:
-    """epoch=N numbers present under a text index dir, ascending —
-    the zone-set layout `streaming.incremental.bm25_index_ingest`
-    writes (one root per micro-batch).  Round 15: the CLI resolver
-    recognizes them so a STREAMED index serves and compacts through
-    the same text-search / text-index-compact commands as a batch one
-    (previously 'no text index here')."""
-    import os
-    import re
-
-    try:
-        names = os.listdir(index_dir)
-    except FileNotFoundError:
-        return []
-    return sorted(
-        int(m.group(1))
-        for name in names
-        if (m := re.fullmatch(r"epoch=(\d+)", name))
-    )
-
-
-def _is_bare_zone_root(path: str) -> bool:
-    """True when ``path`` is itself a zone root (postings/ directly
-    under it — e.g. a compacted out_dir), as opposed to a structured
-    index dir holding base/ and delta=N/ roots.  The ONE probe the
-    build/append guards and the roots resolver all share, so a zone
-    layout change lands in one place (r14 review)."""
-    import os
-
-    return os.path.isdir(f"{path}/postings")
-
-
-def _text_index_roots(index_dir: str) -> list[str]:
-    """base + delta=N + epoch=N zone roots of a text index dir
-    (deltas/epochs in append order); a bare zone root (postings/
-    present, no base/) serves as-is — so `text-search` also works
-    directly on a compacted out_dir, and (round 15) a STREAMED index
-    (`bm25_index_ingest`'s epoch=N layout) serves and compacts through
-    the same commands.  A directory that is BOTH (postings/ alongside
-    structured roots) is ambiguous — serving only the bare zones would
-    silently drop the structured roots' documents (r13 review) — so it
-    errors."""
-    import os
-
-    bare = _is_bare_zone_root(index_dir)
-    structured = []
-    if os.path.isdir(f"{index_dir}/base"):
-        structured.append(f"{index_dir}/base")
-    structured += [
-        f"{index_dir}/delta={n}" for n in _text_index_deltas(index_dir)
-    ]
-    structured += [
-        f"{index_dir}/epoch={n}" for n in _text_index_epochs(index_dir)
-    ]
-    if bare and structured:
+def _index_roots(index_dir: str, marker: str, what: str) -> list[str]:
+    """The zone roots of an index dir (`zones.index_roots`: base/,
+    delta=N/, epoch=N/, or a bare root holding ``marker``)."""
+    roots = _layout(zones.index_roots, index_dir, marker)
+    if not roots:
         raise SystemExit(
-            f"{index_dir}: ambiguous text index — it is a bare zone "
-            "root (postings/) AND contains structured roots "
-            f"({[os.path.basename(r) for r in structured]}). Serving "
-            "either subset alone would silently drop the other's "
-            "documents; separate them into distinct directories."
+            f"{index_dir}: no {what} here (expected base/, delta=N/, "
+            f"epoch=N/, or a bare zone root with {marker})"
         )
-    if bare:
-        return [index_dir]
-    if not structured:
+    return roots
+
+
+def _refuse_reingest(spark, roots, ids, id_col: str) -> None:
+    """The append guard every tombstoned lane shares: an incoming id
+    that is tombstoned would stay invisible after the append."""
+    clash = zones.reingest_conflicts(spark, roots, ids, id_col)
+    if clash:
         raise SystemExit(
-            f"{index_dir}: no text index here (expected base/, "
-            "delta=N/, epoch=N/, or a bare zone root with postings/)"
+            f"{'100+' if len(clash) == 100 else len(clash)} incoming "
+            f"id(s) are tombstoned in this index (e.g. {clash[:5]}); "
+            "appending them would leave those rows invisible. Compact "
+            "the index first (it folds tombstones out) or re-ingest "
+            "under fresh ids."
         )
-    return structured
 
 
-def _numbered_subdirs(path: str, prefix: str) -> list[int]:
-    """``<prefix>=N`` numbers directly under ``path``, ascending."""
-    import os
-    import re
-
-    try:
-        names = os.listdir(path)
-    except FileNotFoundError:
-        return []
-    return sorted(
-        int(m.group(1))
-        for name in names
-        if (m := re.fullmatch(rf"{prefix}=(\d+)", name))
-    )
-
-
-def _agg_zone_roots(agg_dir: str) -> list[str]:
-    """base + delta=N + epoch=N roots of an aggregate-zone dir (the
-    `_text_index_roots` layout applied to the rollup lane — epoch=N is
-    what `streaming.incremental.agg_zone_ingest` writes, so a streamed
-    rollup serves and compacts through the same commands).  A bare
-    zone root (spec.json directly under the dir — e.g. a compacted
-    out_dir) serves as-is; bare + structured together is ambiguous and
-    errors, exactly like the text-index resolver."""
-    import os
-
-    bare = os.path.isfile(f"{agg_dir}/spec.json")
-    structured = []
-    if os.path.isdir(f"{agg_dir}/base"):
-        structured.append(f"{agg_dir}/base")
-    structured += [
-        f"{agg_dir}/delta={n}" for n in _numbered_subdirs(agg_dir, "delta")
-    ]
-    structured += [
-        f"{agg_dir}/epoch={n}" for n in _numbered_subdirs(agg_dir, "epoch")
-    ]
-    if bare and structured:
-        raise SystemExit(
-            f"{agg_dir}: ambiguous aggregate-zone dir — it is a bare "
-            "zone root (spec.json) AND contains structured roots "
-            f"({[os.path.basename(r) for r in structured]}). Serving "
-            "either subset alone would silently drop the other's "
-            "rows; separate them into distinct directories."
-        )
-    if bare:
-        return [agg_dir]
-    if not structured:
-        raise SystemExit(
-            f"{agg_dir}: no aggregate zones here (expected base/, "
-            "delta=N/, epoch=N/, or a bare zone root with spec.json)"
-        )
-    return structured
+def _delete_request(spark, args, ids: list[int]):
+    """A ``*-delete`` command's ids: the command-line list, or the
+    frame at ``--ids-parquet`` (its first column)."""
+    if args.ids_parquet is not None:
+        return spark.read.parquet(args.ids_parquet)
+    if not ids:
+        raise SystemExit(f"{args.cmd}: pass ids or --ids-parquet")
+    return ids
 
 
 def _split_cols(s: str) -> list[str]:
@@ -912,7 +816,7 @@ def main(argv: list[str] | None = None) -> None:
         cb = similarity.sampled_codebook(
             emb, "vec_id", "embedding", args.m, args.n_codes
         )
-        base = args.index_dir
+        base, _ = zones.build_root(args.index_dir, "ann_index_")
         model_store.save_model(
             spark, f"{base}/centroids", "ivf_centroids",
             [[c, v] for c, v in pairs],
@@ -942,18 +846,7 @@ def main(argv: list[str] | None = None) -> None:
         emb = load_table(spark, args.sf_dir, "embeddings")
         delta = emb.filter(F.col("vec_id") >= args.from_id)
         base = args.index_dir
-        clash = similarity.ann_reingest_conflicts(spark, base, delta)
-        if clash:
-            # a tombstone anti-joins its id out of the whole assigned
-            # zone, new rows included — the re-ingested vectors would
-            # be permanently invisible (the text lane's append guard)
-            raise SystemExit(
-                f"{'100+' if len(clash) == 100 else len(clash)} "
-                "delta vec id(s) are tombstoned in this "
-                f"index (e.g. {clash[:5]}); appending them would leave "
-                "those vectors invisible. Run ann-compact first (it "
-                "folds tombstones out) or re-ingest under fresh ids."
-            )
+        _refuse_reingest(spark, [base], delta.select("vec_id"), "neighbor_id")
         pairs_payload, _ = model_store.load_model(
             spark, f"{base}/centroids", "ivf_centroids"
         )
@@ -1027,7 +920,9 @@ def main(argv: list[str] | None = None) -> None:
             spark, base, manifest, args.k, args.rerank, args.nprobe,
             args.target_recall,
         )
-        tomb = similarity.ann_tombstone_ids(spark, base)
+        tomb = zones.read_tombstones(
+            spark, [base], similarity.ANN_TOMBSTONES_SCHEMA
+        )
         if tomb is not None:
             print(
                 "index has pending tombstones — serving subtracts them "
@@ -1061,7 +956,7 @@ def main(argv: list[str] | None = None) -> None:
 
         lex = bm25_serve(
             spark,
-            _text_index_roots(args.text_index_dir),
+            _index_roots(args.text_index_dir, "postings", "text index"),
             args.terms,
             k=args.component_k,
             max_df_frac=args.max_df_frac,
@@ -1098,7 +993,9 @@ def main(argv: list[str] | None = None) -> None:
                 spark.read.parquet(f"{base}/index_assigned"),
                 spark.read.parquet(f"{base}/index_codes"),
             ),
-            tombstones=similarity.ann_tombstone_ids(spark, base),
+            tombstones=zones.read_tombstones(
+                spark, [base], similarity.ANN_TOMBSTONES_SCHEMA
+            ),
         ).select(
             "query_id", F.col("neighbor_id").alias("doc_id"), "rk"
         )
@@ -1113,14 +1010,7 @@ def main(argv: list[str] | None = None) -> None:
     elif args.cmd == "ann-delete":
         from .operators import similarity
 
-        if args.ids_parquet is not None:
-            ids = spark.read.parquet(args.ids_parquet)
-        elif args.vec_ids:
-            ids = spark.createDataFrame(
-                [(int(i),) for i in args.vec_ids], "neighbor_id LONG"
-            )
-        else:
-            raise SystemExit("ann-delete: pass vec ids or --ids-parquet")
+        ids = _delete_request(spark, args, args.vec_ids)
         n = similarity.delete_from_ann_index(spark, args.index_dir, ids)
         print(
             f"tombstoned {n} vectors (search subtracts them now; the "
@@ -1158,77 +1048,29 @@ def main(argv: list[str] | None = None) -> None:
     elif args.cmd == "text-index-build":
         from .operators.retrieval import build_bm25_index
 
-        if _is_bare_zone_root(args.index_dir):
-            # a bare zone root (e.g. a compacted out_dir): writing
-            # base/ under it would create an index text-search refuses
-            # as ambiguous — the indexed documents would effectively
-            # vanish from results (r13 review)
-            raise SystemExit(
-                f"{args.index_dir} is a bare zone root (postings/ "
-                "present — e.g. a compacted out_dir); building base/ "
-                "under it would make the index ambiguous. Build into "
-                "a fresh directory."
-            )
-        stale = [f"delta={n}" for n in _text_index_deltas(args.index_dir)]
-        stale += [f"epoch={n}" for n in _text_index_epochs(args.index_dir)]
-        if stale:
-            # rebuilding base while deltas/epochs survive would
-            # double-count every one of their documents at search time
-            # (r13 review; epochs added r15 with streamed-index CLI
-            # support)
-            raise SystemExit(
-                f"{args.index_dir} has existing zone roots ({stale}); "
-                "a rebuilt base plus stale roots double-counts their "
-                "documents. Remove them (the rebuild covers them) or "
-                "compact to a fresh directory instead."
-            )
+        base = _layout(zones.base_root, args.index_dir, "postings")
         docs = spark.read.parquet(args.docs_parquet)
-        root = build_bm25_index(spark, docs, root=f"{args.index_dir}/base")
+        root = build_bm25_index(spark, docs, root=base)
         n = spark.read.parquet(f"{root}/doclen").count()
         print(f"indexed {n} documents → {root}")
     elif args.cmd == "text-index-append":
         from .operators.retrieval import build_bm25_index
 
-        if _is_bare_zone_root(args.index_dir):
-            # appending delta=0 under a bare zone root would create an
-            # ambiguous index (text-search refuses it) — the appended
-            # documents would silently vanish from results otherwise
-            raise SystemExit(
-                f"{args.index_dir} is a bare zone root (postings/ "
-                "present — e.g. a compacted out_dir); delta zones "
-                "under it would make the index ambiguous. Append to a "
-                "directory with base/ (move the compacted zones to "
-                f"{args.index_dir}/base first)."
-            )
-        nxt = max(_text_index_deltas(args.index_dir), default=-1) + 1
+        delta = _layout(zones.delta_root, args.index_dir, "postings")
         docs = spark.read.parquet(args.docs_parquet)
-        from .operators.retrieval import reingest_conflicts
-
-        clash = reingest_conflicts(
-            spark, _text_index_roots(args.index_dir), docs
+        _refuse_reingest(
+            spark,
+            _index_roots(args.index_dir, "postings", "text index"),
+            docs,
+            "doc_id",
         )
-        if clash:
-            # a tombstone anti-joins its doc_id out of EVERY root,
-            # including this new delta — the re-ingested docs would be
-            # permanently invisible while their delta stats still
-            # count (r14 review)
-            raise SystemExit(
-                f"{'100+' if len(clash) == 100 else len(clash)} "
-                "incoming doc id(s) are tombstoned in "
-                f"this index (e.g. {clash[:5]}); appending them would "
-                "leave those documents invisible. Run "
-                "text-index-compact first (it folds tombstones out) "
-                "or re-ingest under fresh ids."
-            )
-        root = build_bm25_index(
-            spark, docs, root=f"{args.index_dir}/delta={nxt}"
-        )
+        root = build_bm25_index(spark, docs, root=delta)
         n = spark.read.parquet(f"{root}/doclen").count()
         print(f"appended {n} documents → {root}")
     elif args.cmd == "text-search":
         from .operators.retrieval import bm25_serve, phrase_serve
 
-        roots = _text_index_roots(args.index_dir)
+        roots = _index_roots(args.index_dir, "postings", "text index")
         if args.phrase:
             if args.max_df_frac is not None:
                 # dropping a term from a PHRASE breaks its adjacency
@@ -1252,118 +1094,51 @@ def main(argv: list[str] | None = None) -> None:
             for r in rows.collect():
                 print(f"{r.rk:3d}  doc {r.doc_id}  score_q {r.bm25_q}")
     elif args.cmd == "text-index-compact":
-        import os
-
         from .operators.retrieval import compact_bm25_index
 
-        roots = _text_index_roots(args.index_dir)
-        out_real = os.path.realpath(args.out_dir)
-        # index_dir itself is checked too: out_dir == index_dir would
-        # write postings/ beside base/ (an ambiguous index), and any
-        # nesting either way risks Spark overwriting a path it is
-        # reading — realpath comparison also catches symlink aliases
-        # (r13 review)
-        for r in (args.index_dir, *roots):
-            r_real = os.path.realpath(r)
-            if (
-                out_real == r_real
-                or out_real.startswith(r_real + os.sep)
-                or r_real.startswith(out_real + os.sep)
-            ):
-                raise SystemExit(
-                    f"out_dir {args.out_dir} overlaps {r}; compact to "
-                    "a directory outside the index being read."
-                )
+        roots = _index_roots(args.index_dir, "postings", "text index")
+        # out_dir inside index_dir would add a bare root beside base/
+        # (an ambiguous index); compact_bm25_index guards the roots
+        _layout(zones.check_disjoint, args.out_dir, [args.index_dir])
         out = compact_bm25_index(spark, roots, args.out_dir)
         print(f"compacted {len(roots)} roots → {out}")
     elif args.cmd == "text-index-delete":
         from .operators.retrieval import delete_from_bm25_index
 
-        roots = _text_index_roots(args.index_dir)
-        if args.ids_parquet is not None:
-            ids = spark.read.parquet(args.ids_parquet)
-        elif args.doc_ids:
-            ids = spark.createDataFrame(
-                [(int(i),) for i in args.doc_ids], "doc_id LONG"
-            )
-        else:
-            raise SystemExit(
-                "text-index-delete: pass doc ids or --ids-parquet"
-            )
-        n = delete_from_bm25_index(spark, roots, ids)
+        roots = _index_roots(args.index_dir, "postings", "text index")
+        n = delete_from_bm25_index(
+            spark, roots, _delete_request(spark, args, args.doc_ids)
+        )
         print(
             f"tombstoned {n} documents (search subtracts them now; "
             "the next text-index-compact folds them out physically)"
         )
     elif args.cmd == "substring-index-build":
-        import os
-
         from .operators.trigram import build_trigram_index
 
-        if os.path.isdir(f"{args.index_dir}/postings"):
-            raise SystemExit(
-                f"{args.index_dir} is a bare zone root (postings/ "
-                "present); building base/ under it would make the "
-                "index ambiguous. Build into a fresh directory."
-            )
-        stale = [
-            f"delta={n}" for n in _numbered_subdirs(args.index_dir, "delta")
-        ] + [
-            f"epoch={n}" for n in _numbered_subdirs(args.index_dir, "epoch")
-        ]
-        if stale:
-            raise SystemExit(
-                f"{args.index_dir} has existing zone roots ({stale}); "
-                "a rebuilt base plus stale roots double-serves their "
-                "documents. Remove them first."
-            )
+        base = _layout(zones.base_root, args.index_dir, "postings")
         docs = spark.read.parquet(args.docs_parquet)
-        root = build_trigram_index(
-            spark, docs, root=f"{args.index_dir}/base"
-        )
+        root = build_trigram_index(spark, docs, root=base)
         n = spark.read.parquet(f"{root}/stats").collect()[0]["n_docs"]
         print(f"trigram-indexed {n} documents → {root}")
     elif args.cmd == "substring-index-append":
-        import os
-
         from .operators.trigram import build_trigram_index
 
-        if not os.path.isdir(f"{args.index_dir}/base"):
-            raise SystemExit(
-                f"{args.index_dir}: no base/ zone — run "
-                "substring-index-build first"
-            )
-        nxt = max(_numbered_subdirs(args.index_dir, "delta"), default=-1) + 1
+        delta = _layout(zones.delta_root, args.index_dir, "postings")
         docs = spark.read.parquet(args.docs_parquet)
-        root = build_trigram_index(
-            spark, docs, root=f"{args.index_dir}/delta={nxt}"
+        _refuse_reingest(
+            spark,
+            _index_roots(args.index_dir, "postings", "trigram index"),
+            docs,
+            "doc_id",
         )
+        root = build_trigram_index(spark, docs, root=delta)
         n = spark.read.parquet(f"{root}/stats").collect()[0]["n_docs"]
         print(f"trigram-indexed {n} documents → {root}")
     elif args.cmd == "substring-search":
-        import os
-
         from .operators.trigram import trigram_serve
 
-        roots = []
-        if os.path.isdir(f"{args.index_dir}/postings"):
-            roots = [args.index_dir]
-        else:
-            if os.path.isdir(f"{args.index_dir}/base"):
-                roots.append(f"{args.index_dir}/base")
-            roots += [
-                f"{args.index_dir}/delta={n}"
-                for n in _numbered_subdirs(args.index_dir, "delta")
-            ]
-            roots += [
-                f"{args.index_dir}/epoch={n}"
-                for n in _numbered_subdirs(args.index_dir, "epoch")
-            ]
-        if not roots:
-            raise SystemExit(
-                f"{args.index_dir}: no trigram index here (expected "
-                "base/, delta=N/, epoch=N/, or a bare zone root)"
-            )
+        roots = _index_roots(args.index_dir, "postings", "trigram index")
         docs = spark.read.parquet(args.docs_parquet)
         try:
             hits = trigram_serve(spark, roots, args.needle, docs)
@@ -1376,62 +1151,19 @@ def main(argv: list[str] | None = None) -> None:
             f"{ids[: args.limit]}"
         )
     elif args.cmd == "substring-index-delete":
-        import os
-
         from .operators.trigram import delete_from_trigram_index
 
-        roots = []
-        if os.path.isdir(f"{args.index_dir}/postings"):
-            roots = [args.index_dir]
-        elif os.path.isdir(f"{args.index_dir}/base"):
-            roots = [f"{args.index_dir}/base"]
-        if not roots:
-            raise SystemExit(
-                f"{args.index_dir}: no trigram index here"
-            )
-        if args.ids_parquet is not None:
-            ids = spark.read.parquet(args.ids_parquet)
-        elif args.doc_ids:
-            ids = spark.createDataFrame(
-                [(int(i),) for i in args.doc_ids], "doc_id LONG"
-            )
-        else:
-            raise SystemExit(
-                "substring-index-delete: pass doc ids or --ids-parquet"
-            )
-        n = delete_from_trigram_index(spark, roots, ids)
+        roots = _index_roots(args.index_dir, "postings", "trigram index")
+        n = delete_from_trigram_index(
+            spark, roots, _delete_request(spark, args, args.doc_ids)
+        )
         print(
             f"tombstoned {n} documents (search anti-joins them now)"
         )
     elif args.cmd == "agg-zone-build":
-        import os
-
         from .operators.aggzone import KMV_K, build_agg_zone
 
-        if os.path.isfile(f"{args.agg_dir}/spec.json"):
-            # a bare zone root (e.g. a compacted out_dir): base/ under
-            # it would make the dir ambiguous to the roots resolver
-            raise SystemExit(
-                f"{args.agg_dir} is a bare zone root (spec.json "
-                "present — e.g. a compacted out_dir); building base/ "
-                "under it would make the dir ambiguous. Build into a "
-                "fresh directory."
-            )
-        stale = [
-            f"delta={n}" for n in _numbered_subdirs(args.agg_dir, "delta")
-        ] + [
-            f"epoch={n}" for n in _numbered_subdirs(args.agg_dir, "epoch")
-        ]
-        if stale:
-            # rebuilding base while deltas/epochs survive would
-            # double-count every one of their rows at serve time (the
-            # text-index-build rule applied to the rollup lane)
-            raise SystemExit(
-                f"{args.agg_dir} has existing zone roots ({stale}); a "
-                "rebuilt base plus stale roots double-counts their "
-                "rows. Remove them (the rebuild covers them) or "
-                "compact to a fresh directory instead."
-            )
+        base = _layout(zones.base_root, args.agg_dir, "spec.json")
         df = spark.read.parquet(args.input_parquet)
         root = build_agg_zone(
             spark,
@@ -1442,42 +1174,26 @@ def main(argv: list[str] | None = None) -> None:
             maxs=_split_cols(args.maxs),
             kmvs=_split_cols(args.kmvs),
             k=args.k if args.k is not None else KMV_K,
-            root=f"{args.agg_dir}/base",
+            root=base,
         )
         n = spark.read.parquet(f"{root}/partials").count()
         print(f"materialized {n} group partials → {root}")
     elif args.cmd == "agg-zone-append":
-        import os
-
         from .operators.aggzone import build_agg_zone, zone_spec
 
-        if os.path.isfile(f"{args.agg_dir}/spec.json"):
-            raise SystemExit(
-                f"{args.agg_dir} is a bare zone root (spec.json "
-                "present — e.g. a compacted out_dir); delta zones "
-                "under it would make the dir ambiguous. Append to a "
-                "directory with base/ (move the compacted zone to "
-                f"{args.agg_dir}/base first)."
-            )
-        base = f"{args.agg_dir}/base"
-        if not os.path.isdir(base):
-            raise SystemExit(
-                f"{args.agg_dir}: no base/ zone — run agg-zone-build "
-                "first (the append derives its spec from the base so "
-                "zones can never diverge)"
-            )
+        delta = _layout(zones.delta_root, args.agg_dir, "spec.json")
+        # the append derives its spec from the base (the first root),
+        # so zones can never diverge
+        base = _index_roots(args.agg_dir, "spec.json", "aggregate zones")[0]
         spec = zone_spec(base)
-        nxt = max(_numbered_subdirs(args.agg_dir, "delta"), default=-1) + 1
         df = spark.read.parquet(args.input_parquet)
-        root = build_agg_zone(
-            spark, df, root=f"{args.agg_dir}/delta={nxt}", **spec
-        )
+        root = build_agg_zone(spark, df, root=delta, **spec)
         n = spark.read.parquet(f"{root}/partials").count()
         print(f"appended {n} group partials → {root}")
     elif args.cmd == "agg-zone-serve":
         from .operators.aggzone import serve_agg
 
-        roots = _agg_zone_roots(args.agg_dir)
+        roots = _index_roots(args.agg_dir, "spec.json", "aggregate zones")
         out = serve_agg(spark, roots)
         if args.out:
             out.write.parquet(args.out)
@@ -1492,23 +1208,10 @@ def main(argv: list[str] | None = None) -> None:
     elif args.cmd == "agg-zone-compact":
         from .operators.aggzone import compact_agg_zones
 
-        roots = _agg_zone_roots(args.agg_dir)
-        # compact_agg_zones guards root overlap itself; the agg_dir
-        # container is checked here (out_dir == agg_dir would write a
-        # bare zone BESIDE base/ — the ambiguous layout)
-        import os
-
-        out_real = os.path.realpath(args.out_dir)
-        dir_real = os.path.realpath(args.agg_dir)
-        if (
-            out_real == dir_real
-            or out_real.startswith(dir_real + os.sep)
-            or dir_real.startswith(out_real + os.sep)
-        ):
-            raise SystemExit(
-                f"out_dir {args.out_dir} overlaps {args.agg_dir}; "
-                "compact to a directory outside the zones being read."
-            )
+        roots = _index_roots(args.agg_dir, "spec.json", "aggregate zones")
+        # out_dir inside agg_dir would add a bare zone beside base/ (the
+        # ambiguous layout); compact_agg_zones guards the roots
+        _layout(zones.check_disjoint, args.out_dir, [args.agg_dir])
         out = compact_agg_zones(spark, roots, args.out_dir)
         print(f"compacted {len(roots)} zone root(s) → {out}")
     elif args.cmd == "table-stats":

@@ -6,11 +6,12 @@ each load (`CreacionDeDataWareHouse.sql` rebuilds its summary queries
 per run; SURVEY.md §2.6).  That is fine at reference scale and fatal at
 100 TB: a daily ingest of 0.1% of the corpus would pay a corpus-sized
 aggregation every day.  This module is the engine's materialized-view
-maintenance lane, shaped exactly like the BM25/ANN index lifecycle
-(`operators.retrieval` / `operators.similarity`): each ingest batch
-writes its OWN small zone of per-group PARTIAL aggregates, serving
-merges the zones' partials (cost: |groups| × |zones| rows, independent
-of base-table size), and a periodic compaction folds zones into one.
+maintenance lane, on the zone lifecycle the BM25/ANN/trigram lanes
+share (`sources.zones`: roots, the URI boundary, the compaction guard,
+the base/delta=N/epoch=N layout): each ingest batch writes its OWN
+small zone of per-group PARTIAL aggregates, serving merges the zones'
+partials (cost: |groups| × |zones| rows, independent of base-table
+size), and a periodic compaction folds zones into one.
 
 Zone layout per root:
 
@@ -62,15 +63,14 @@ from __future__ import annotations
 
 import json
 import os
-import re
-import shutil
 import tempfile
 from collections.abc import Sequence
-from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..sources import zones
 
 #: default KMV sketch size: ~13% rsd, 64×8 bytes per group per zone
 KMV_K = 64
@@ -97,31 +97,6 @@ def kmv_hash(col: Column | str) -> Column:
         16,
         10,
     ).cast("long")
-
-
-def _as_local_path(root: str) -> str:
-    """Normalize a zone root to a plain local path (the
-    `retrieval._as_local_path` boundary rule): ``spec.json`` is read
-    and written with plain file IO, so a ``file:`` URI is resolved and
-    any other scheme fails loudly instead of producing a zone whose
-    spec probe silently misses."""
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):(?=/)", root)
-    if m is None:
-        return root
-    scheme = m.group(1).lower()
-    if scheme == "file":
-        path = urlparse(root).path
-        if not path:
-            raise ValueError(
-                f"aggzone: cannot resolve file URI {root!r} to a "
-                "local path"
-            )
-        return path
-    raise ValueError(
-        f"aggzone: zone root {root!r} has scheme {scheme!r} — this "
-        "local-mode engine reads the zone's spec.json with local file "
-        "IO; pass a plain local path"
-    )
 
 
 def _spec_dict(
@@ -233,18 +208,12 @@ def build_agg_zone(
     The build is the only job that touches the input rows: one hash
     aggregate for cnt/sum/min/max (map-side combinable, one shuffle on
     the group keys) plus, per kmv column, one distinct + bounded
-    window (see `_kmv_partial`).  Streaming callers replaying an epoch
-    pass an epoch-scoped root and overwrite it in place
-    (`streaming.incremental.agg_zone_ingest` — the at-least-once
-    discipline of `bm25_index_ingest`)."""
+    window (see `_kmv_partial`).  An explicit root is rewritten in
+    place (`zones.build_root`), which is what streamed epoch replays
+    (`streaming.incremental.zone_epoch_ingest`) need."""
     if not keys:
         raise ValueError("aggzone: need at least one group key")
-    if root is None:
-        root = tempfile.mkdtemp(prefix="agg_zone_") + "/zone"
-        mode = "errorifexists"
-    else:
-        root = _as_local_path(root)
-        mode = "overwrite"
+    root, mode = zones.build_root(root, "agg_zone_")
 
     dtypes = dict(zip(df.schema.names, [f.dataType for f in df.schema]))
     aggs: list[Column] = [F.count(F.lit(1)).alias("cnt")]
@@ -297,7 +266,7 @@ def zone_spec(root: str) -> dict:
     spec, so an append can never silently diverge from the base."""
     return {
         k: v
-        for k, v in _load_spec(_as_local_path(root)).items()
+        for k, v in _load_spec(zones.as_local_path(root)).items()
         if k != "schema"
     }
 
@@ -309,9 +278,7 @@ def read_partials(
     plus the shared spec.  Roots built under DIFFERENT specs refuse to
     merge loudly — adding zones' cnt columns is only meaningful when
     every zone aggregated the same keys and measures."""
-    if not roots:
-        raise ValueError("aggzone: need at least one root")
-    roots = [_as_local_path(r) for r in roots]
+    roots = zones.local_roots(roots)
     specs = [_load_spec(r) for r in roots]
     spec0 = {
         k: v for k, v in specs[0].items() if k != "schema"
@@ -324,11 +291,7 @@ def read_partials(
                 "keys, measures, and k agree"
             )
     schema = T.StructType.fromJson(specs[0]["schema"])
-    rd = spark.read.schema(schema)
-    out = rd.parquet(f"{roots[0]}/partials")
-    for r in roots[1:]:
-        out = out.unionByName(rd.parquet(f"{r}/partials"))
-    return out, specs[0]
+    return zones.read_zone(spark, roots, "partials", schema), specs[0]
 
 
 def _merge_partials(partials: DataFrame, spec: dict) -> DataFrame:
@@ -398,29 +361,14 @@ def compact_agg_zones(
     the compacted root equals serving the inputs by the same
     associativity serving itself relies on (pytest-pinned); at scale
     this is the periodic job that keeps the per-query zone fan-in
-    bounded while ingest keeps appending epochs."""
+    bounded while ingest keeps appending epochs.  ``out_root`` is
+    guarded by `zones.compact_root`."""
     if out_root is None:
         out_root = tempfile.mkdtemp(prefix="agg_zone_compacted_") + "/zone"
-    out_root = _as_local_path(out_root)
-    roots_local = [_as_local_path(r) for r in roots]
-    # the overlap guard of compact_bm25_index: writing into (or over) a
-    # root being read risks Spark clobbering its own input mid-scan
-    out_real = os.path.realpath(out_root)
-    for r in roots_local:
-        r_real = os.path.realpath(r)
-        if (
-            out_real == r_real
-            or out_real.startswith(r_real + os.sep)
-            or r_real.startswith(out_real + os.sep)
-        ):
-            raise ValueError(
-                f"aggzone: out_root {out_root!r} overlaps input root "
-                f"{r!r} — compaction must write to a fresh location"
-            )
-    partials, spec = read_partials(spark, roots_local)
+    out_root = zones.compact_root(out_root, roots)
+    partials, spec = read_partials(spark, roots)
     merged = _merge_partials(partials, spec)
-    shutil.rmtree(out_root, ignore_errors=True)
-    merged.write.parquet(f"{out_root}/partials")
+    merged.write.mode("overwrite").parquet(f"{out_root}/partials")
     spec_out = dict(spec)
     spec_out["schema"] = merged.schema.jsonValue()
     with open(f"{out_root}/spec.json", "w") as fh:

@@ -21,13 +21,18 @@ The index layout is four parquet zones per build root —
   `delete_from_bm25_index`; serving subtracts their contributions
   algebraically, compaction folds them out physically.
 
+Roots, tombstones, the URI boundary, the compaction guard and the
+index-directory layout follow the shared zone lifecycle in
+`sources.zones`; this module keeps the zone schemas, the delete batch
+(a doclen lookup) and the fold.
+
 Every zone holds associative integer aggregates, so zones built over
 DISJOINT document subsets merge exactly: postings/doclen union, dfreq
 re-sums per term, stats add.  That associativity is what makes both
 the append path (`plans.extension_queries.bm25_append_serving`) and
-the streaming at-ingest path (`streaming.incremental.bm25_index_
-ingest`) value-identical to a full rebuild — contracts the test suite
-and the driver's oracle gate both pin.
+the streaming at-ingest path (`streaming.incremental.zone_epoch_
+ingest` over `build_bm25_index`) value-identical to a full rebuild —
+contracts the test suite and the driver's oracle gate both pin.
 
 Scoring is BM25 with k1=6/5, b=3/4 and the log-free rational idf
 idf = (N - df + ½)/(df + ½) (the BM25 idf core without the log; see
@@ -47,6 +52,7 @@ import logging
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import zones
 from . import dedup
 
 log = logging.getLogger(__name__)
@@ -81,7 +87,6 @@ _ZONE_SCHEMAS = {
     "doclen": _DOCLEN_SCHEMA,
     "dfreq": _DFREQ_SCHEMA,
     "stats": _STATS_SCHEMA,
-    "tombstones": _TOMBSTONES_SCHEMA,
 }
 
 
@@ -133,25 +138,9 @@ def build_bm25_index(
     """One pass over ``docs`` (doc_id, text) → the four zones under
     ``root`` (a fresh tempdir when None).  Returns the root.
 
-    Writes are plain parquet saves (mode default = errorifexists for a
-    fresh root); streaming callers that replay an epoch pass an
-    epoch-scoped root and overwrite it (`bm25_index_ingest`)."""
-    import shutil
-    import tempfile
-
-    if root is None:
-        root = tempfile.mkdtemp(prefix="bm25_index_") + "/zones"
-        mode = "errorifexists"
-    else:
-        # epoch-scoped root: at-least-once replays rewrite in place.
-        # A rebuild must also clear any STALE tombstones zone — the
-        # four zone writes overwrite their dirs, but tombstones are
-        # written by delete_from_bm25_index, not by builds, so a
-        # surviving zone from the previous index would silently
-        # anti-join the NEW corpus's matching doc_ids and mis-adjust
-        # every score (r14 review).
-        shutil.rmtree(f"{root}/tombstones", ignore_errors=True)
-        mode = "overwrite"
+    An explicit root is rewritten in place (`zones.build_root`), which
+    is what streamed epoch replays need."""
+    root, mode = zones.build_root(root, "bm25_index_")
     words = docs.select(
         "doc_id", F.posexplode(dedup._tokens("text")).alias("pos", "tok")
     ).filter(F.col("tok") != "")
@@ -164,7 +153,7 @@ def build_bm25_index(
     # NOT localCheckpoint: the cache is explicitly released in the
     # finally block below, where checkpoint blocks would sit in the
     # one-JVM storage pool until driver GC happened to run the
-    # ContextCleaner — a long-running bm25_index_ingest stream calling
+    # ContextCleaner — a long-running streamed index calling
     # this per micro-batch accumulated them without bound (r13
     # review).  The sorted in-doc position list rides in the same
     # entry (the positional-index layout) — phrase queries intersect
@@ -218,84 +207,22 @@ def _read_zones(
     sub: str,
     positions: bool = False,
 ) -> DataFrame:
-    """Schema-declared union of one zone across roots (partition
-    discovery runs per root; declared schemas keep empty zones readable
-    — see _ZONE_SCHEMAS).  ``positions=True`` widens a postings read to
-    include the positional column (phrase path / compaction); BM25
-    scoring keeps the narrow schema so the column is never decoded."""
+    """`zones.read_zone` with this lane's schema for ``sub``.
+    ``positions=True`` widens a postings read to include the positional
+    column (phrase path / compaction); BM25 scoring keeps the narrow
+    schema so the column is never decoded."""
     schema = (
         _POSTINGS_POS_SCHEMA
         if positions and sub == "postings"
         else _ZONE_SCHEMAS[sub]
     )
-    rd = spark.read.schema(schema)
-    out = rd.parquet(f"{roots[0]}/{sub}")
-    for r in roots[1:]:
-        out = out.unionByName(rd.parquet(f"{r}/{sub}"))
-    return out
+    return zones.read_zone(spark, roots, sub, schema)
 
 
-def _as_local_path(root: str) -> str:
-    """Normalize an index root to a plain local path.
-
-    Tombstone presence is detected with a local directory probe
-    (`_tombstone_roots`), which is the ONE zone whose detection is not
-    a schema-declared read — a root spelled as a URI (``file:/...``)
-    that Spark's readers and writers happily accept would make the
-    probe miss an existing tombstones zone and silently resurrect
-    every deleted document (r14 review).  So at the API boundary:
-    ``file:`` URIs are resolved to their local path (all three
-    spellings — file:/p, file://host/p, file:///p), and any OTHER
-    scheme fails loudly instead of dropping deletions."""
-    import re
-    from urllib.parse import urlparse
-
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):(?=/)", root)
-    if m is None:
-        return root
-    scheme = m.group(1).lower()
-    if scheme == "file":
-        path = urlparse(root).path
-        if not path:
-            raise ValueError(
-                f"retrieval: cannot resolve file URI {root!r} to a "
-                "local path"
-            )
-        return path
-    raise ValueError(
-        f"retrieval: index root {root!r} has scheme {scheme!r} — this "
-        "local-mode engine detects deletion tombstones with a local "
-        "filesystem probe, so a non-local root would silently ignore "
-        "deletes; pass a plain local path"
-    )
-
-
-def _local_roots(roots: Sequence[str]) -> list[str]:
-    """`_as_local_path` over a root list (the shared API boundary for
-    every function that probes tombstones)."""
-    return [_as_local_path(r) for r in roots]
-
-
-def _tombstone_roots(roots: Sequence[str]) -> list[str]:
-    """Roots that carry a tombstones zone.  A directory probe per root
-    (on a cluster this is the manifest/catalog lookup every table
-    format does before planning a scan) — when NO deletes ever
-    happened, the serving plan is byte-identical to the pre-deletion
-    one: zero extra joins, zero extra reads.  Callers have already
-    normalized roots via `_local_roots`, so the probe never silently
-    misses a URI-spelled zone."""
-    import os
-
-    return [r for r in roots if os.path.isdir(f"{r}/tombstones")]
-
-
-def _read_tombstones(spark: SparkSession, roots: Sequence[str]) -> DataFrame:
-    """Distinct (doc_id, dl) across the roots' tombstone zones.  The
-    distinct makes repeated deletes of the same doc idempotent (the
-    rows are identical — dl is a function of doc_id) and tombstone
-    placement irrelevant (producers guarantee disjoint-doc roots, so a
-    doc's tombstone can live in any root without double-subtracting)."""
-    return _read_zones(spark, roots, "tombstones").distinct()
+def _read_tombstones(
+    spark: SparkSession, roots: Sequence[str]
+) -> DataFrame | None:
+    return zones.read_tombstones(spark, roots, _TOMBSTONES_SCHEMA)
 
 
 def delete_from_bm25_index(
@@ -333,83 +260,16 @@ def delete_from_bm25_index(
     a new document under a tombstoned id (takedown then re-crawl)
     would leave it permanently invisible while its delta still bumps
     df/stats.  A tombstoned id must be compacted out (the fold erases
-    the tombstone) before its id can be re-ingested; use
-    `reingest_conflicts` to detect the collision up front (the CLI
-    append path refuses it — r14 review)."""
-    import os
-
-    if not roots:
-        raise ValueError("delete_from_bm25_index: need at least one root")
-    roots = _local_roots(roots)
-    if tomb_root is not None:
-        tomb_root = _as_local_path(tomb_root)
-    if tomb_root is not None and os.path.realpath(tomb_root) not in {
-        os.path.realpath(r) for r in roots
-    }:
-        # a tombstone zone outside the served roots is invisible to
-        # bm25_serve/phrase_serve/compact (they probe only `roots`) —
-        # the delete would report success and change nothing, and the
-        # idempotence anti-join would miss it too (r14 review)
-        raise ValueError(
-            f"delete_from_bm25_index: tomb_root {tomb_root!r} is not "
-            "one of the index roots — serving would never see the "
-            "tombstones"
-        )
-    if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(F.col(doc_ids.columns[0]).alias("doc_id"))
-    else:
-        ids = spark.createDataFrame(
-            [(int(i),) for i in doc_ids], "doc_id LONG"
-        )
-    doclen = _read_zones(spark, roots, "doclen")
-    batch = doclen.join(F.broadcast(ids.distinct()), "doc_id")
-    existing = _tombstone_roots(roots)
-    if existing:
-        batch = batch.join(
-            F.broadcast(
-                _read_tombstones(spark, existing).select("doc_id")
-            ),
-            "doc_id",
-            "left_anti",
-        )
-    target = tomb_root if tomb_root is not None else roots[0]
-    # tiny frame (the delete batch): one file keeps the zone compact
-    batch = batch.coalesce(1).persist()
-    try:
-        n = batch.count()
-        if n:
-            batch.write.mode("append").parquet(f"{target}/tombstones")
-    finally:
-        batch.unpersist()
-    return n
-
-
-def reingest_conflicts(
-    spark: SparkSession, roots: Sequence[str], docs: DataFrame
-) -> list[int]:
-    """Doc ids in ``docs`` (first column) that are TOMBSTONED in the
-    index at ``roots`` — appending such a batch would leave those
-    documents permanently invisible: tombstones anti-join their doc_id
-    out of every root's postings, including the new delta, while the
-    delta's df/stats contributions still count (takedown → re-crawl of
-    the same id; r14 review).  The collision must be resolved by
-    compacting first (the fold erases the tombstone) or by assigning
-    the re-crawled document a fresh id.
-
-    Cost is one broadcast semi-join of the (delete-batch-sized)
-    tombstone zone against the incoming batch's ids — nothing
-    corpus-sized; with no tombstones anywhere it is zero reads.
-    Returns a sorted bounded sample (≤100 ids) for the error message;
-    an empty list means the append is safe."""
-    tomb_roots = _tombstone_roots(_local_roots(roots))
-    if not tomb_roots:
-        return []
-    ids = docs.select(F.col(docs.columns[0]).alias("doc_id")).distinct()
-    hit = ids.join(
-        F.broadcast(_read_tombstones(spark, tomb_roots).select("doc_id")),
-        "doc_id",
-    ).limit(100)
-    return sorted(r.doc_id for r in hit.collect())
+    the tombstone) before its id can be re-ingested;
+    `zones.reingest_conflicts` detects the collision up front (the CLI
+    append path refuses it)."""
+    ids = zones.id_frame(spark, doc_ids, "doc_id")
+    batch = _read_zones(spark, roots, "doclen").join(
+        F.broadcast(ids.distinct()), "doc_id"
+    )
+    return zones.append_tombstones(
+        spark, roots, batch, _TOMBSTONES_SCHEMA, tomb_root
+    )
 
 
 def bm25_serve(
@@ -448,11 +308,8 @@ def bm25_serve(
     input).  Queries reduced to ONLY hot terms return empty."""
     from pyspark.sql import Window
 
-    if not roots:
-        raise ValueError("bm25_serve: need at least one index root")
     if not terms:
         raise ValueError("bm25_serve: need at least one query term")
-    roots = _local_roots(roots)
 
     terms = list(dict.fromkeys(terms))
     if max_df_frac is not None:
@@ -502,8 +359,8 @@ def bm25_serve(
         F.sum("n_docs").alias("n_docs"),
         F.sum("s_tokens").alias("s_tokens"),
     )
-    tomb_roots = _tombstone_roots(roots)
-    if tomb_roots:
+    tomb = _read_tombstones(spark, roots)
+    if tomb is not None:
         # deletion adjustments, all computed from the ALREADY-PRUNED
         # postings(q) read plus the (delete-batch-sized, broadcast)
         # tombstone zone — serving stays |postings(q)|-bounded:
@@ -513,7 +370,6 @@ def bm25_serve(
         #  - stats decrement by (count, Σdl) captured at delete time.
         # The result is EXACTLY the rebuild-on-remaining-docs zones
         # restricted to the query terms (oracle-gated contract).
-        tomb = _read_tombstones(spark, tomb_roots)
         tomb_ids = F.broadcast(tomb.select("doc_id"))
         df_rm = (
             postings.join(tomb_ids, "doc_id")
@@ -571,51 +427,14 @@ def compact_bm25_index(
     no per-query adjustment, and the tombstone set never grows past
     one compaction interval (the lifecycle: delete appends a
     tombstone, serve subtracts it algebraically, compact erases it
-    physically)."""
-    import os
-    import shutil
+    physically).  ``out_root`` is guarded by `zones.compact_root`."""
+    out_root = zones.compact_root(out_root, roots)
+    tomb = _read_tombstones(spark, roots)
+    postings = zones.drop_tombstoned(
+        _read_zones(spark, roots, "postings", positions=True), tomb
+    )
+    doclen = zones.drop_tombstoned(_read_zones(spark, roots, "doclen"), tomb)
 
-    if not roots:
-        raise ValueError("compact_bm25_index: need at least one root")
-    roots = _local_roots(roots)
-    out_root = _as_local_path(out_root)
-
-    # out_root must not overlap any input root: the stale-tombstone
-    # rmtree below runs BEFORE any input is read, so out_root ==
-    # roots[0] would destroy the input's tombstones zone first and the
-    # "compaction" would resurrect every deleted document with no
-    # error; any nesting either way also risks Spark overwriting a
-    # path it is reading.  The CLI has always enforced this — the
-    # check lives here too so library callers get the same protection
-    # (r14 review).  realpath comparison catches symlink aliases.
-    out_real = os.path.realpath(out_root)
-    for r in roots:
-        r_real = os.path.realpath(r)
-        if (
-            out_real == r_real
-            or out_real.startswith(r_real + os.sep)
-            or r_real.startswith(out_real + os.sep)
-        ):
-            raise ValueError(
-                f"compact_bm25_index: out_root {out_root!r} overlaps "
-                f"input root {r!r}; compact to a directory outside "
-                "the index being read"
-            )
-
-    # a reused out_root may carry a stale tombstones zone from a
-    # previous index generation — the four zone writes below overwrite
-    # their own dirs but would leave it behind to mis-adjust every
-    # serve (r14 review)
-    shutil.rmtree(f"{out_root}/tombstones", ignore_errors=True)
-    tomb_roots = _tombstone_roots(roots)
-    postings = _read_zones(spark, roots, "postings", positions=True)
-    doclen = _read_zones(spark, roots, "doclen")
-    if tomb_roots:
-        tomb_ids = F.broadcast(
-            _read_tombstones(spark, tomb_roots).select("doc_id")
-        )
-        postings = postings.join(tomb_ids, "doc_id", "left_anti")
-        doclen = doclen.join(tomb_ids, "doc_id", "left_anti")
     folded = postings.groupBy("doc_id", "tok", "tok_bucket").agg(
         # disjoint-doc roots: each (doc_id, tok) lives in exactly one
         # root, so sum(cnt) == cnt, max(dl) == dl and first(positions)
@@ -635,7 +454,7 @@ def compact_bm25_index(
         F.sum("dl").alias("dl")
     )
     doclen_folded.write.mode("overwrite").parquet(f"{out_root}/doclen")
-    if tomb_roots:
+    if tomb is not None:
         # df must EXCLUDE tombstoned docs: recompute from the JUST-
         # WRITTEN folded zones (one row per live (doc, tok) → count
         # per tok; doclen → count + Σdl).  Reading the compacted
@@ -730,11 +549,8 @@ def phrase_serve(
     inner join would produce one anyway) with zero postings reads."""
     from pyspark.sql import Window
 
-    if not roots:
-        raise ValueError("phrase_serve: need at least one index root")
     if len(phrase) < 2:
         raise ValueError("phrase_serve: a phrase needs >= 2 terms")
-    roots = _local_roots(roots)
 
     dfs = {
         r.tok: r.df
@@ -822,17 +638,9 @@ def phrase_serve(
         .filter(F.col("n_occur") > 0)
         .select("doc_id", "n_occur")
     )
-    tomb_roots = _tombstone_roots(roots)
-    if tomb_roots:
-        # phrase counts are per-doc (no corpus stats), so deletion is
-        # one anti-join on the (already term-bounded) match frame
-        occ = occ.join(
-            F.broadcast(
-                _read_tombstones(spark, tomb_roots).select("doc_id")
-            ),
-            "doc_id",
-            "left_anti",
-        )
+    # phrase counts are per-doc (no corpus stats), so deletion is one
+    # anti-join on the (already term-bounded) match frame
+    occ = zones.drop_tombstoned(occ, _read_tombstones(spark, roots))
     top = occ.orderBy(F.desc("n_occur"), "doc_id").limit(k)
     w = Window.orderBy(F.desc("n_occur"), "doc_id")
     return top.withColumn("rk", F.row_number().over(w)).select(

@@ -33,6 +33,7 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
+from ..sources import zones
 from ..sources.tables import fan_out
 from .skew import pin
 
@@ -2503,36 +2504,13 @@ def rrf_fuse(
     )
 
 
-#: persisted ANN-index tombstones: one row per deleted vector.  The
-#: schema is declared at read time so an empty zone (or a zone written
-#: by a full takedown) stays readable — the retrieval lane's
-#: _ZONE_SCHEMAS discipline applied to the ANN index.
+#: persisted ANN-index tombstones: one row per deleted vector, kept
+#: beside the index zones under ``<base>/tombstones`` and read with
+#: `sources.zones.read_tombstones(spark, [base], ANN_TOMBSTONES_SCHEMA)`
+#: (None when no delete ever happened, so serving plans stay the
+#: pre-deletion ones).  The base dir follows the shared zone lifecycle
+#: (`sources.zones`) as one bare root.
 ANN_TOMBSTONES_SCHEMA = "neighbor_id LONG"
-
-
-def ann_tombstone_ids(spark, base: str) -> DataFrame | None:
-    """The deletion markers persisted beside a saved IVF-PQ index
-    (``<base>/tombstones``, written by `delete_from_ann_index`), as a
-    distinct one-column (neighbor_id) frame — or None when no delete
-    ever happened, in which case serving plans stay byte-identical to
-    the pre-deletion ones (zero extra joins, zero extra reads).
-
-    The distinct makes repeated deletes of the same vector idempotent.
-    Base-dir probing shares the retrieval lane's local-path boundary:
-    ``file:`` URIs resolve, non-local schemes fail loudly instead of
-    silently resurrecting deleted vectors (r14 review)."""
-    import os
-
-    from .retrieval import _as_local_path
-
-    base = _as_local_path(base)
-    if not os.path.isdir(f"{base}/tombstones"):
-        return None
-    return (
-        spark.read.schema(ANN_TOMBSTONES_SCHEMA)
-        .parquet(f"{base}/tombstones")
-        .distinct()
-    )
 
 
 def delete_from_ann_index(
@@ -2563,59 +2541,18 @@ def delete_from_ann_index(
     re-appending a deleted id (takedown then re-crawl) would leave the
     vector permanently invisible while its rows still sit in the
     zones.  Compact first (the fold erases the tombstone) or assign a
-    fresh id; `ann_reingest_conflicts` detects the collision and the
+    fresh id; `zones.reingest_conflicts` detects the collision and the
     CLI append path refuses it."""
-    from .retrieval import _as_local_path
-
-    base = _as_local_path(base)
-    if isinstance(vec_ids, DataFrame):
-        ids = vec_ids.select(
-            F.col(vec_ids.columns[0]).alias("neighbor_id")
-        )
-    else:
-        ids = spark.createDataFrame(
-            [(int(i),) for i in vec_ids], ANN_TOMBSTONES_SCHEMA
-        )
-    assigned = spark.read.parquet(f"{base}/index_assigned").select(
-        "neighbor_id"
+    base = zones.as_local_path(base)
+    ids = zones.id_frame(spark, vec_ids, "neighbor_id")
+    batch = (
+        spark.read.parquet(f"{base}/index_assigned")
+        .select("neighbor_id")
+        .join(F.broadcast(ids.distinct()), "neighbor_id")
     )
-    batch = assigned.join(F.broadcast(ids.distinct()), "neighbor_id")
-    existing = ann_tombstone_ids(spark, base)
-    if existing is not None:
-        batch = batch.join(
-            F.broadcast(existing), "neighbor_id", "left_anti"
-        )
-    # tiny frame (the delete batch): one file keeps the zone compact
-    batch = batch.coalesce(1).persist()
-    try:
-        n = batch.count()
-        if n:
-            batch.write.mode("append").parquet(f"{base}/tombstones")
-    finally:
-        batch.unpersist()
-    return n
-
-
-def ann_reingest_conflicts(
-    spark, base: str, delta: DataFrame, id_col: str = "vec_id"
-) -> list[int]:
-    """Ids in ``delta`` that are TOMBSTONED in the index at ``base`` —
-    appending them (`ivf_pq_index_append` → zone append) would leave
-    those vectors permanently invisible: the tombstone anti-joins
-    their id out of the whole assigned zone, new rows included, while
-    the appended rows still occupy the zones (the retrieval lane's
-    `reingest_conflicts`, applied to ANN).  Resolve by compacting
-    first or re-ingesting under fresh ids.
-
-    One broadcast semi-join of the (delete-batch-sized) tombstone set
-    against the delta's ids; zero reads when no tombstones exist.
-    Returns a sorted bounded sample (≤100 ids); empty means safe."""
-    tomb = ann_tombstone_ids(spark, base)
-    if tomb is None:
-        return []
-    ids = delta.select(F.col(id_col).alias("neighbor_id")).distinct()
-    hit = ids.join(F.broadcast(tomb), "neighbor_id").limit(100)
-    return sorted(r.neighbor_id for r in hit.collect())
+    return zones.append_tombstones(
+        spark, [base], batch, ANN_TOMBSTONES_SCHEMA, None
+    )
 
 
 def compact_ann_index(spark, base: str, out_base: str) -> str:
@@ -2628,49 +2565,22 @@ def compact_ann_index(spark, base: str, out_base: str) -> str:
     needs no per-query adjustment, completing the delete lifecycle:
     delete appends a tombstone, serve anti-joins it, compact erases it
     physically (the `retrieval.compact_bm25_index` fold applied to
-    ANN, oracle-gated via ``ann_compacted_serving``).
-
-    ``out_base`` must not overlap ``base`` (either direction): the
-    zones are read from ``base`` while being written, and a same-dir
-    "compaction" would first destroy the tombstones zone it is about
-    to fold (the r14 BM25 compact review, enforced in the library)."""
+    ANN, oracle-gated via ``ann_compacted_serving``).  ``out_base`` is
+    guarded by `zones.compact_root`."""
     import os
     import shutil
 
-    from .retrieval import _as_local_path
-
-    base = _as_local_path(base)
-    out_base = _as_local_path(out_base)
-    base_real = os.path.realpath(base)
-    out_real = os.path.realpath(out_base)
-    if (
-        out_real == base_real
-        or out_real.startswith(base_real + os.sep)
-        or base_real.startswith(out_real + os.sep)
-    ):
-        raise ValueError(
-            f"compact_ann_index: out_base {out_base!r} overlaps the "
-            f"index being read ({base!r}); compact to a directory "
-            "outside it"
-        )
-    # a reused out_base may carry a stale tombstones zone from a
-    # previous index generation — the zone writes below overwrite
-    # their own dirs but would leave it behind to silently hide
-    # vectors of the NEW index
-    shutil.rmtree(f"{out_base}/tombstones", ignore_errors=True)
-
-    assigned = spark.read.parquet(f"{base}/index_assigned")
+    base = zones.as_local_path(base)
+    out_base = zones.compact_root(out_base, [base])
+    tomb = zones.read_tombstones(spark, [base], ANN_TOMBSTONES_SCHEMA)
+    assigned = zones.drop_tombstoned(
+        spark.read.parquet(f"{base}/index_assigned"), tomb
+    )
     codes = spark.read.parquet(f"{base}/index_codes")
-    tomb = ann_tombstone_ids(spark, base)
     if tomb is not None:
-        tomb_b = F.broadcast(tomb)
-        assigned = assigned.join(tomb_b, "neighbor_id", "left_anti")
         # the codes zone is keyed by the build's id_col (first column)
-        code_id = codes.columns[0]
-        codes = codes.join(
-            tomb_b.withColumnRenamed("neighbor_id", code_id),
-            code_id,
-            "left_anti",
+        codes = zones.drop_tombstoned(
+            codes, tomb.withColumnRenamed("neighbor_id", codes.columns[0])
         )
     assigned.write.mode("overwrite").parquet(f"{out_base}/index_assigned")
     codes.write.mode("overwrite").parquet(f"{out_base}/index_codes")

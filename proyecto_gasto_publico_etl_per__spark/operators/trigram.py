@@ -25,7 +25,10 @@ partition count is CONSTANT under vocabulary/corpus growth):
 Zones over DISJOINT doc subsets union exactly (postings are a set,
 stats add), so append-maintained multi-root serving == a full rebuild
 — the same associativity contract as the BM25 lane, here at set
-rather than aggregate level.
+rather than aggregate level.  Roots, tombstones (doc_id), the URI
+boundary, the compaction guard and the index-directory layout follow
+the shared zone lifecycle in `sources.zones`; a delete tombstones the
+ids as given.
 
 Serving cost: |postings(needle's trigrams)| rows into one doc-grouped
 count (docs with all k trigrams), then the verify pass touches ONLY
@@ -43,14 +46,14 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import zones
+
 #: posting-zone partition fan-out — constant under vocab/corpus growth
 N_TRI_BUCKETS = 64
 
 _POSTINGS_SCHEMA = "doc_id LONG, tri STRING, tri_bucket LONG"
-_STATS_SCHEMA = "n_docs LONG"
 #: deletion markers — serving anti-joins them out of the candidate
-#: set, compaction folds them out physically (the BM25/ANN tombstone
-#: lifecycle applied to the substring lane)
+#: set, compaction folds them out physically
 _TOMBSTONES_SCHEMA = "doc_id LONG"
 
 MIN_NEEDLE = 3
@@ -92,25 +95,9 @@ def build_trigram_index(
     spark: SparkSession, docs: DataFrame, root: str | None = None
 ) -> str:
     """One pass over ``docs`` (doc_id, text) → postings + stats zones
-    under ``root`` (fresh tempdir when None).  Returns the root.
-    Streaming/epoch callers pass an epoch-scoped root and overwrite it
-    (the `build_bm25_index` at-least-once discipline)."""
-    import tempfile
-
-    if root is None:
-        root = tempfile.mkdtemp(prefix="trigram_index_") + "/zones"
-        mode = "errorifexists"
-    else:
-        # epoch-scoped rebuild: clear any STALE tombstones zone too —
-        # the zone writes below overwrite their own dirs, but
-        # tombstones are written by delete_from_trigram_index, and a
-        # survivor from the previous index would silently anti-join
-        # the NEW corpus's matching doc_ids (the r14 writers-clear-
-        # zones-they-don't-own rule)
-        import shutil
-
-        shutil.rmtree(f"{root}/tombstones", ignore_errors=True)
-        mode = "overwrite"
+    under ``root`` (fresh tempdir when None).  Returns the root.  An
+    explicit root is rewritten in place (`zones.build_root`)."""
+    root, mode = zones.build_root(root, "trigram_index_")
     norm = docs.select("doc_id", _norm("text").alias("__t"))
     postings = (
         norm.select(
@@ -131,51 +118,29 @@ def build_trigram_index(
 
 
 def _read_postings(spark: SparkSession, roots: Sequence[str]) -> DataFrame:
-    rd = spark.read.schema(_POSTINGS_SCHEMA)
-    out = rd.parquet(f"{roots[0]}/postings")
-    for r in roots[1:]:
-        out = out.unionByName(rd.parquet(f"{r}/postings"))
-    return out
-
-
-def _tombstone_roots(roots: Sequence[str]) -> list[str]:
-    """Roots carrying a tombstones zone — a directory probe per root
-    (the catalog lookup every table format runs before planning); when
-    no deletes ever happened the serving plan is byte-identical to
-    the pre-deletion one."""
-    import os
-
-    return [r for r in roots if os.path.isdir(f"{r}/tombstones")]
+    return zones.read_zone(spark, roots, "postings", _POSTINGS_SCHEMA)
 
 
 def _read_tombstones(
     spark: SparkSession, roots: Sequence[str]
-) -> DataFrame:
-    """Distinct deleted doc_ids across the roots' tombstone zones —
-    the distinct makes repeated deletes idempotent and placement
-    irrelevant."""
-    rd = spark.read.schema(_TOMBSTONES_SCHEMA)
-    out = rd.parquet(f"{roots[0]}/tombstones")
-    for r in roots[1:]:
-        out = out.unionByName(rd.parquet(f"{r}/tombstones"))
-    return out.distinct()
+) -> DataFrame | None:
+    return zones.read_tombstones(spark, roots, _TOMBSTONES_SCHEMA)
 
 
 def delete_from_trigram_index(
-    spark: SparkSession, roots: Sequence[str], ids: DataFrame
+    spark: SparkSession, roots: Sequence[str], ids: DataFrame | Sequence[int]
 ) -> int:
     """Tombstone documents (takedown/retraction without rebuild):
-    appends the ids' first column as (doc_id) tombstones under
-    ``roots[0]`` — a delete-batch-sized write, never a postings
-    rewrite.  Serving anti-joins candidates against the union of all
-    roots' tombstones; `compact_trigram_index` later folds them out
-    physically.  Returns the batch's id count."""
-    doc_ids = ids.select(
-        F.col(ids.columns[0]).cast("long").alias("doc_id")
-    ).distinct()
-    n = doc_ids.count()
-    doc_ids.write.mode("append").parquet(f"{roots[0]}/tombstones")
-    return n
+    appends the ids (a frame's first column, or a list) as (doc_id)
+    tombstones under ``roots[0]`` — a delete-batch-sized write, never
+    a postings rewrite.  Serving anti-joins candidates against the
+    union of all roots' tombstones; `compact_trigram_index` later
+    folds them out physically.  Returns the number of newly tombstoned
+    ids (a re-delete appends nothing)."""
+    batch = zones.id_frame(spark, ids, "doc_id").distinct()
+    return zones.append_tombstones(
+        spark, roots, batch, _TOMBSTONES_SCHEMA, None
+    )
 
 
 def compact_trigram_index(
@@ -186,39 +151,19 @@ def compact_trigram_index(
     distinct docs (plus indexed-but-trigramless docs cannot be
     recovered from postings — their absence only affects the stats
     count, never results, documented).  The output root carries NO
-    tombstones zone; out_root must not overlap an input (the
-    compact_bm25_index guard)."""
-    import os
-
-    if not roots:
-        raise ValueError("compact_trigram_index: need at least one root")
-    out_real = os.path.realpath(out_root)
-    for r in roots:
-        r_real = os.path.realpath(r)
-        if (
-            out_real == r_real
-            or out_real.startswith(r_real + os.sep)
-            or r_real.startswith(out_real + os.sep)
-        ):
-            raise ValueError(
-                f"compact_trigram_index: out_root {out_root!r} overlaps "
-                f"input root {r!r} — compact to a fresh location"
-            )
-    posts = _read_postings(spark, roots)
-    t_roots = _tombstone_roots(roots)
-    if t_roots:
-        posts = posts.join(
-            F.broadcast(_read_tombstones(spark, t_roots)),
-            "doc_id",
-            "left_anti",
-        )
-    posts = posts.repartition(F.col("tri_bucket"))
-    posts.write.partitionBy("tri_bucket").parquet(f"{out_root}/postings")
+    tombstones zone; ``out_root`` is guarded by `zones.compact_root`."""
+    out_root = zones.compact_root(out_root, roots)
+    posts = zones.drop_tombstoned(
+        _read_postings(spark, roots), _read_tombstones(spark, roots)
+    )
+    posts.repartition(F.col("tri_bucket")).write.mode(
+        "overwrite"
+    ).partitionBy("tri_bucket").parquet(f"{out_root}/postings")
     (
-        spark.read.schema(_POSTINGS_SCHEMA)
-        .parquet(f"{out_root}/postings")
+        _read_postings(spark, [out_root])
         .agg(F.count_distinct("doc_id").alias("n_docs"))
-        .write.parquet(f"{out_root}/stats")
+        .write.mode("overwrite")
+        .parquet(f"{out_root}/stats")
     )
     return out_root
 
@@ -250,17 +195,10 @@ def trigram_candidates(
         .where(F.col("__k") == len(tris))
         .select("doc_id")
     )
-    t_roots = _tombstone_roots(roots)
-    if t_roots:
-        # deletion adjustment on the ALREADY-PRUNED candidate set: a
-        # broadcast anti-join of the delete-batch-sized tombstones —
-        # serving stays |postings(needle)|-bounded with deletes pending
-        cands = cands.join(
-            F.broadcast(_read_tombstones(spark, t_roots)),
-            "doc_id",
-            "left_anti",
-        )
-    return cands
+    # deletion adjustment on the ALREADY-PRUNED candidate set: a
+    # broadcast anti-join of the delete-batch-sized tombstones — serving
+    # stays |postings(needle)|-bounded with deletes pending
+    return zones.drop_tombstoned(cands, _read_tombstones(spark, roots))
 
 
 def trigram_serve(

@@ -25,6 +25,7 @@ from ..operators import (
     textstats,
 )
 from ..operators.skew import pin
+from ..sources import zones
 from ..sources.tables import load_table
 from ..streaming.incremental import windowed_event_counts
 from .driver_queries import REGISTRY, register
@@ -3164,7 +3165,9 @@ def _ann_serve_from(spark: SparkSession, emb, base: str) -> DataFrame:
             spark.read.parquet(f"{base}/index_assigned"),
             spark.read.parquet(f"{base}/index_codes"),
         ),
-        tombstones=similarity.ann_tombstone_ids(spark, base),
+        tombstones=zones.read_tombstones(
+            spark, [base], similarity.ANN_TOMBSTONES_SCHEMA
+        ),
     )
 
 

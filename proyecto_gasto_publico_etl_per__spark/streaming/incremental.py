@@ -479,135 +479,6 @@ def streaming_drift_monitor(
     )
 
 
-def bm25_index_ingest(
-    stream: DataFrame,
-    zones_dir: str,
-    checkpoint_dir: str,
-):
-    """Living inverted-index maintenance at the ingest door: every
-    arriving micro-batch of documents (doc_id, text) is indexed into
-    its OWN epoch-scoped zone set under ``zones_dir/epoch=<id>`` —
-    postings PARTITIONED BY tok, doclen, dfreq, and the 1-row corpus
-    stats (`operators.retrieval.build_bm25_index`).
-
-    Because every zone holds associative integer aggregates and a
-    file-source epoch owns a disjoint set of documents, serving over
-    ALL epoch roots (`retrieval.bm25_serve`) reproduces a full batch
-    rebuild EXACTLY — the same associativity contract
-    ``bm25_append_serving`` puts under the driver's hash gate, here
-    proven streamed==batch by test.  At-least-once replays rewrite
-    their epoch's zones in place (per-epoch OVERWRITE), so a retried
-    batch cannot double-count.
-
-    Cost per batch is O(batch tokens) — the index build never touches
-    previously ingested epochs; a periodic compaction job can fold
-    epoch roots into one (zone-level unions + re-sums, no re-tokenize).
-
-    Returns the started StreamingQuery (AvailableNow trigger).
-    """
-    from ..operators.retrieval import build_bm25_index
-
-    def index(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        build_bm25_index(
-            batch_df.sparkSession,
-            batch_df,
-            root=f"{zones_dir}/epoch={epoch_id}",
-        )
-
-    return (
-        stream.writeStream.foreachBatch(index)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def bm25_delete_ingest(
-    stream: DataFrame,
-    zones_dir: str,
-    checkpoint_dir: str,
-):
-    """Takedowns at the ingest door (round 15 — the deletion twin of
-    ``bm25_index_ingest``): every arriving micro-batch of delete
-    requests (one column of doc_ids) is tombstoned against ALL epoch
-    roots under ``zones_dir`` via
-    `operators.retrieval.delete_from_bm25_index` — one keyed doclen
-    lookup per batch, never a corpus re-tokenize — so a living
-    streamed index honors retractions at the same cadence it honors
-    appends.
-
-    Idempotence under at-least-once replay comes from the delete
-    operator itself: a replayed batch's ids are already tombstoned and
-    the anti-join appends nothing (re-delete is a no-op, test-pinned),
-    so this sink needs no per-epoch overwrite discipline.  Tombstones
-    land in the FIRST epoch root (sorted order — deterministic across
-    replays); serving and compaction read them from any root.
-
-    A delete arriving before any document epoch exists (or for a doc
-    never ingested) is ignored, exactly as the batch operator ignores
-    absent ids.  Streamed-delete == batch-delete identity is pinned in
-    tests/test_streaming.py.
-
-    Returns the started StreamingQuery (AvailableNow trigger).
-    """
-    import glob as _glob
-
-    from ..operators.retrieval import delete_from_bm25_index
-
-    def tombstone(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        roots = sorted(_glob.glob(f"{zones_dir}/epoch=*"))
-        if not roots:
-            return
-        delete_from_bm25_index(batch_df.sparkSession, roots, batch_df)
-
-    return (
-        stream.writeStream.foreachBatch(tombstone)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def ann_delete_ingest(
-    stream: DataFrame,
-    index_base: str,
-    checkpoint_dir: str,
-):
-    """Vector takedowns at the ingest door (round 15 — the ANN twin of
-    ``bm25_delete_ingest``): every arriving micro-batch of delete
-    requests (one column of vec ids) is tombstoned against the
-    persisted IVF-PQ index at ``index_base`` via
-    `operators.similarity.delete_from_ann_index` — a delete-batch-sized
-    zone append, never a corpus re-encode — so a living vector index
-    honors retractions at the same cadence its zones grow.
-
-    Idempotence under at-least-once replay comes from the delete
-    operator (re-delete anti-joins to a no-op), so the sink needs no
-    per-epoch overwrite discipline; ids absent from the index are
-    ignored.  Streamed-delete == batch-delete identity is pinned in
-    tests/test_streaming.py.
-
-    Returns the started StreamingQuery (AvailableNow trigger).
-    """
-    from ..operators.similarity import delete_from_ann_index
-
-    def tombstone(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delete_from_ann_index(batch_df.sparkSession, index_base, batch_df)
-
-    return (
-        stream.writeStream.foreachBatch(tombstone)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def media_keys_ingest(
     stream: DataFrame,
     out_dir: str,
@@ -625,7 +496,7 @@ def media_keys_ingest(
     under ``out_dir/epoch=<id>`` with per-epoch OVERWRITE, so an
     at-least-once replay rewrites its own partition instead of
     appending duplicates (the ``streaming_neardup_ingest`` /
-    ``bm25_index_ingest`` idempotence pattern).
+    ``zone_epoch_ingest`` idempotence pattern).
 
     The extraction is map-only with no cross-batch state, so the
     streamed key set over any partitioning of the assets into
@@ -653,81 +524,35 @@ def media_keys_ingest(
     )
 
 
-def agg_zone_ingest(
+def zone_epoch_ingest(
     stream: DataFrame,
     zones_dir: str,
     checkpoint_dir: str,
-    keys: list[str],
-    sums: list[str] = [],
-    mins: list[str] = [],
-    maxs: list[str] = [],
-    kmvs: list[str] = [],
-    k: int | None = None,
+    build: Callable[..., str],
 ):
-    """Living materialized aggregates at the ingest door: every
-    arriving micro-batch writes its OWN epoch-scoped partial-aggregate
-    zone under ``zones_dir/epoch=<id>`` (`operators.aggzone.
-    build_agg_zone`) — the rollup-lane twin of `bm25_index_ingest`.
+    """Living zone maintenance at the ingest door: every arriving
+    micro-batch is built into its OWN zone root under
+    ``zones_dir/epoch=<id>`` by the lane's ``build(spark, batch,
+    root=...)`` — `retrieval.build_bm25_index`,
+    `trigram.build_trigram_index`, or `aggzone.build_agg_zone` with its
+    spec bound.
 
-    Because every partial is associative and a file-source epoch owns
-    a disjoint set of rows, serving over ALL epoch roots
-    (`aggzone.serve_agg`) reproduces a full batch aggregation EXACTLY
-    — the contract `incr_agg_serving` puts under the driver's hash
-    gate, here proven streamed==batch by test.  At-least-once replays
-    rewrite their epoch's zone in place (per-epoch OVERWRITE), so a
-    retried batch cannot double-count.  Cost per batch is O(batch
-    rows); previously ingested epochs are never touched, and
-    `aggzone.compact_agg_zones` periodically folds epochs into one.
+    A file-source epoch owns a disjoint slice of the input and every
+    lane's zones merge associatively, so serving over all epoch roots
+    (`sources.zones.index_roots`) reproduces one batch build EXACTLY
+    (streamed==batch, pinned per lane by test).  A replayed epoch
+    rewrites its own root in place (`zones.build_root`), so an
+    at-least-once retry cannot double-count.  Cost per batch is
+    O(batch); earlier epochs are never touched, and the lane's
+    compaction folds them.
 
     Returns the started StreamingQuery (AvailableNow trigger).
     """
-    from ..operators.aggzone import KMV_K, build_agg_zone
-
-    kk = KMV_K if k is None else k
-
-    def roll(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        build_agg_zone(
-            batch_df.sparkSession,
-            batch_df,
-            keys=keys,
-            sums=sums,
-            mins=mins,
-            maxs=maxs,
-            kmvs=kmvs,
-            k=kk,
-            root=f"{zones_dir}/epoch={epoch_id}",
-        )
-
-    return (
-        stream.writeStream.foreachBatch(roll)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def trigram_index_ingest(
-    stream: DataFrame,
-    zones_dir: str,
-    checkpoint_dir: str,
-):
-    """Living substring index at the ingest door: every arriving
-    micro-batch of documents (doc_id, text) is trigram-indexed into
-    its OWN epoch-scoped zone set under ``zones_dir/epoch=<id>``
-    (`operators.trigram.build_trigram_index`) — the substring-search
-    twin of `bm25_index_ingest`.  Postings are SETS over disjoint doc
-    subsets, so serving over all epoch roots == one batch build of
-    the whole corpus (streamed==batch pinned by test); at-least-once
-    replays rewrite their epoch in place (per-epoch OVERWRITE).
-    Returns the started StreamingQuery (AvailableNow trigger)."""
-    from ..operators.trigram import build_trigram_index
 
     def index(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        build_trigram_index(
+        build(
             batch_df.sparkSession,
             batch_df,
             root=f"{zones_dir}/epoch={epoch_id}",
@@ -735,6 +560,39 @@ def trigram_index_ingest(
 
     return (
         stream.writeStream.foreachBatch(index)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def zone_delete_ingest(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    delete: Callable[[SparkSession, DataFrame], int],
+):
+    """Takedowns at the ingest door: every arriving micro-batch of
+    delete requests (one id column) goes to the lane's
+    ``delete(spark, ids)`` — e.g. `retrieval.delete_from_bm25_index`
+    over the index's current roots, or `similarity.
+    delete_from_ann_index` on a persisted base — a delete-batch-sized
+    tombstone append, never a rebuild, so a living index honors
+    retractions at the cadence it honors appends.
+
+    Replays need no per-epoch overwrite: the shared tombstone append
+    (`sources.zones.append_tombstones`) skips ids already tombstoned,
+    so a replayed batch appends nothing.  Streamed-delete ==
+    batch-delete is pinned per lane in tests/test_streaming.py.
+
+    Returns the started StreamingQuery (AvailableNow trigger).
+    """
+
+    def tombstone(batch_df: DataFrame, epoch_id: int) -> None:
+        if not batch_df.isEmpty():
+            delete(batch_df.sparkSession, batch_df)
+
+    return (
+        stream.writeStream.foreachBatch(tombstone)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

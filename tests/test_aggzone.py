@@ -9,8 +9,9 @@ The lane's contract ladder:
 3. compaction preserves the serve (the incr_agg_compacted contract);
 4. the KMV estimate is EXACT below k and within the analytic error
    bound above it;
-5. non-associative specs and self-destructive compactions are refused
-   loudly.
+5. non-associative specs are refused loudly (the shared compaction
+   guard and URI boundary are pinned per lane in tests/test_zones.py
+   and tests/test_extensions.py).
 """
 
 from __future__ import annotations
@@ -204,30 +205,9 @@ def test_spec_mismatch_refused(spark):
         aggzone.serve_agg(spark, [r1, r2])
 
 
-def test_compact_overlap_refused(spark):
-    df = spark.createDataFrame([("a", 1)], "g STRING, v INT")
-    root = aggzone.build_agg_zone(spark, df, keys=["g"], sums=["v"])
-    with pytest.raises(ValueError, match="overlaps"):
-        aggzone.compact_agg_zones(spark, [root], out_root=root)
-
-
 def test_non_zone_root_refused(spark):
     with pytest.raises(ValueError, match="spec.json"):
         aggzone.serve_agg(spark, ["/tmp/definitely-not-a-zone"])
-
-
-def test_uri_root_normalized(spark, tmp_path):
-    """file: URIs resolve at the API boundary; other schemes fail
-    loudly (the retrieval._as_local_path rule)."""
-    df = spark.createDataFrame([("a", 1)], "g STRING, v INT")
-    root = aggzone.build_agg_zone(
-        spark, df, keys=["g"], sums=["v"], root=f"file:{tmp_path}/z"
-    )
-    assert not root.startswith("file:")
-    [row] = aggzone.serve_agg(spark, [f"file://{tmp_path}/z"]).collect()
-    assert row.cnt == 1
-    with pytest.raises(ValueError, match="scheme"):
-        aggzone.serve_agg(spark, ["s3://bucket/zone"])
 
 
 def test_empty_input_zone_tolerated(spark):
@@ -245,10 +225,12 @@ def test_empty_input_zone_tolerated(spark):
 
 
 def test_streamed_epochs_equal_batch(spark, tmp_path):
-    """agg_zone_ingest epochs served together == one batch zone — the
-    streamed==batch identity of the rollup lane."""
+    """zone_epoch_ingest epochs of build_agg_zone served together ==
+    one batch zone — the streamed==batch identity of the rollup lane."""
+    import functools
+
     from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        agg_zone_ingest,
+        zone_epoch_ingest,
     )
 
     df = _orders_input(spark).drop("okey").limit(600)
@@ -264,11 +246,11 @@ def test_streamed_epochs_equal_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    q = agg_zone_ingest(
+    q = zone_epoch_ingest(
         stream,
         zones,
         str(tmp_path / "ckpt"),
-        **{k: v for k, v in _SPEC.items()},
+        functools.partial(aggzone.build_agg_zone, **_SPEC),
     )
     q.awaitTermination(180)
 

@@ -16,6 +16,7 @@ from proyecto_gasto_publico_etl_per__spark.operators import (
 )
 
 from conftest import SF_SMOKE
+from zone_lanes import LANES
 
 
 @pytest.fixture(scope="module")
@@ -2731,30 +2732,33 @@ def test_bm25_delete_rejects_foreign_tomb_root(spark, tmp_path):
     assert delete_from_bm25_index(spark, [root], [1], tomb_root=root) == 1
 
 
-def test_retrieval_uri_roots_see_tombstones_or_fail_loud(spark):
-    """r14 review: tombstone presence is the one zone detected via a
-    local filesystem probe — a root spelled as a file: URI (which
-    Spark's readers accept) must still see an existing tombstones zone
-    instead of silently resurrecting deleted docs, and a non-local
-    scheme must fail loudly rather than drop deletions."""
-    from proyecto_gasto_publico_etl_per__spark.operators.retrieval import (
-        bm25_serve,
-        build_bm25_index,
-        delete_from_bm25_index,
-    )
-
-    docs = spark.createDataFrame(_TOMB_DOCS, _TOMB_SCHEMA)
-    root = build_bm25_index(spark, docs)
-    delete_from_bm25_index(spark, [root], [2, 5])
-    plain = _serve_set(spark, [root])
+@pytest.mark.parametrize("lane", sorted(LANES))
+def test_retrieval_uri_roots_see_tombstones_or_fail_loud(spark, tmp_path, lane):
+    """r14 review: tombstone presence (and an aggregate zone's
+    spec.json) is detected via a local filesystem probe — a root
+    spelled as a file: URI (which Spark's readers accept) must still
+    see an existing tombstones zone instead of silently resurrecting
+    deleted rows, and a non-local scheme must fail loudly rather than
+    drop deletions.  One boundary (`sources.zones.as_local_path`) for
+    every lane."""
+    lane = LANES[lane]
+    root = lane.build(spark, f"file:{tmp_path}/idx")
+    assert not root.startswith("file:")
+    plain = lane.serve(spark, [root])
+    if lane.tombstoned:
+        victims = sorted({lane.id_of(r) for r in plain})[:2]
+        assert lane.delete(spark, [root], victims) == 2
+        plain = lane.serve(spark, [root])
+        assert plain and not {lane.id_of(r) for r in plain} & set(victims)
     # all three file: URI spellings resolve to the same local zones
     for uri in (f"file:{root}", f"file://{root}", f"file:///{root.lstrip('/')}"):
-        assert _serve_set(spark, [uri]) == plain, uri
+        assert lane.serve(spark, [uri]) == plain, uri
     # a remote scheme cannot be probed locally — loud, not silent
     with pytest.raises(ValueError, match="scheme"):
-        bm25_serve(spark, [f"s3://bucket{root}"], _TOMB_TERMS)
-    with pytest.raises(ValueError, match="scheme"):
-        delete_from_bm25_index(spark, [f"hdfs://nn{root}"], [1])
+        lane.serve(spark, [f"s3://bucket{root}"])
+    if lane.tombstoned:
+        with pytest.raises(ValueError, match="scheme"):
+            lane.delete(spark, [f"hdfs://nn{root}"], [1])
 
 
 def test_compact_refuses_overlapping_out_root_in_library(spark, tmp_path):
@@ -2788,11 +2792,18 @@ def test_reingest_conflicts_and_cli_append_guard(spark, tmp_path, capsys):
     re-crawl) leaves it permanently invisible while its delta stats
     still count — reingest_conflicts must surface the collision and
     the CLI append must refuse it until a compact folds the tombstone
-    out."""
+    out.  The substring lane's append runs the same check with the
+    same message."""
     from proyecto_gasto_publico_etl_per__spark.cli import main
     from proyecto_gasto_publico_etl_per__spark.operators.retrieval import (
         build_bm25_index,
         delete_from_bm25_index,
+    )
+    from proyecto_gasto_publico_etl_per__spark.operators.trigram import (
+        build_trigram_index,
+        delete_from_trigram_index,
+    )
+    from proyecto_gasto_publico_etl_per__spark.sources.zones import (
         reingest_conflicts,
     )
 
@@ -2800,22 +2811,34 @@ def test_reingest_conflicts_and_cli_append_guard(spark, tmp_path, capsys):
     idx = tmp_path / "tindex"
     build_bm25_index(spark, docs, root=f"{idx}/base")
     # no tombstones anywhere: zero reads, no conflicts
-    assert reingest_conflicts(spark, [f"{idx}/base"], docs) == []
+    assert reingest_conflicts(spark, [f"{idx}/base"], docs, "doc_id") == []
     delete_from_bm25_index(spark, [f"{idx}/base"], [2, 5])
     batch = spark.createDataFrame(
         [(5, "row value table"), (9, "fresh doc")], _TOMB_SCHEMA
     )
-    assert reingest_conflicts(spark, [f"{idx}/base"], batch) == [5]
+    assert reingest_conflicts(spark, [f"{idx}/base"], batch, "doc_id") == [5]
 
     pq = tmp_path / "batch.parquet"
     batch.write.parquet(str(pq))
-    with pytest.raises(SystemExit, match="tombstoned"):
+    with pytest.raises(SystemExit, match="tombstoned") as text_exit:
         main(["text-index-append", str(pq), str(idx)])
     # conflict-free batches still append
     ok = tmp_path / "ok.parquet"
     batch.where(F.col("doc_id") == 9).write.parquet(str(ok))
     main(["text-index-append", str(ok), str(idx)])
     assert "appended 1 documents" in capsys.readouterr().out
+
+    # the trigram lane: same check, same refusal message
+    tidx = tmp_path / "sindex"
+    build_trigram_index(spark, docs, root=f"{tidx}/base")
+    assert reingest_conflicts(spark, [f"{tidx}/base"], batch, "doc_id") == []
+    delete_from_trigram_index(spark, [f"{tidx}/base"], [2, 5])
+    assert reingest_conflicts(spark, [f"{tidx}/base"], batch, "doc_id") == [5]
+    with pytest.raises(SystemExit, match="tombstoned") as sub_exit:
+        main(["substring-index-append", str(pq), str(tidx)])
+    assert str(sub_exit.value) == str(text_exit.value)
+    main(["substring-index-append", str(ok), str(tidx)])
+    assert "trigram-indexed 1 documents" in capsys.readouterr().out
 
 
 def test_phrase_serve_rarest_first_semijoin_identity(spark):
@@ -2873,8 +2896,7 @@ def test_ann_delete_lifecycle_persisted_zones(spark, tmp_path):
     overlap-guarded), and ann_reingest_conflicts flags a tombstoned id
     until the compact erases it."""
     from proyecto_gasto_publico_etl_per__spark.operators.similarity import (
-        ann_reingest_conflicts,
-        ann_tombstone_ids,
+        ANN_TOMBSTONES_SCHEMA,
         compact_ann_index,
         delete_from_ann_index,
         ivf_centroids,
@@ -2884,6 +2906,10 @@ def test_ann_delete_lifecycle_persisted_zones(spark, tmp_path):
     )
     from proyecto_gasto_publico_etl_per__spark.sources.tables import (
         load_table,
+    )
+    from proyecto_gasto_publico_etl_per__spark.sources.zones import (
+        read_tombstones,
+        reingest_conflicts,
     )
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
@@ -2910,11 +2936,14 @@ def test_ann_delete_lifecycle_persisted_zones(spark, tmp_path):
             tuple(r)
             for r in ivf_pq_search(
                 corpus, queries, index=idx,
-                tombstones=ann_tombstone_ids(spark, b), **kw
+                tombstones=read_tombstones(
+                    spark, [b], ANN_TOMBSTONES_SCHEMA
+                ),
+                **kw,
             ).collect()
         }
 
-    assert ann_tombstone_ids(spark, base) is None
+    assert read_tombstones(spark, [base], ANN_TOMBSTONES_SCHEMA) is None
     before = serve(base)
 
     tomb_pred = (F.col("vec_id") % 7 == 0) & (F.col("vec_id") >= 3)
@@ -2944,12 +2973,15 @@ def test_ann_delete_lifecycle_persisted_zones(spark, tmp_path):
 
     # re-ingest guard: a tombstoned id conflicts until compacted out
     batch = spark.createDataFrame([(7,), (1,)], "vec_id LONG")
-    assert ann_reingest_conflicts(spark, base, batch) == [7]
+    assert reingest_conflicts(spark, [base], batch, "neighbor_id") == [7]
 
     # file: URI roots still see the tombstones; remote schemes fail loud
-    assert ann_tombstone_ids(spark, f"file:{base}") is not None
+    assert (
+        read_tombstones(spark, [f"file:{base}"], ANN_TOMBSTONES_SCHEMA)
+        is not None
+    )
     with pytest.raises(ValueError, match="scheme"):
-        ann_tombstone_ids(spark, f"s3://bucket{base}")
+        read_tombstones(spark, [f"s3://bucket{base}"], ANN_TOMBSTONES_SCHEMA)
 
     # compact: overlap guard fires BEFORE anything is touched
     for bad in (base, f"{base}/nested", str(tmp_path)):
@@ -2958,7 +2990,7 @@ def test_ann_delete_lifecycle_persisted_zones(spark, tmp_path):
     assert serve(base) == after
 
     out = compact_ann_index(spark, base, str(tmp_path / "folded"))
-    assert ann_tombstone_ids(spark, out) is None
+    assert read_tombstones(spark, [out], ANN_TOMBSTONES_SCHEMA) is None
     assert serve(out) == after
     # the folded zones carry no tombstoned rows at all
     folded_ids = {
@@ -2966,7 +2998,7 @@ def test_ann_delete_lifecycle_persisted_zones(spark, tmp_path):
         for r in spark.read.parquet(f"{out}/index_assigned").collect()
     }
     assert not (folded_ids & tomb_ids)
-    assert ann_reingest_conflicts(spark, out, batch) == []
+    assert reingest_conflicts(spark, [out], batch, "neighbor_id") == []
 
 
 def test_max_df_frac_reaches_hybrid_and_cli(spark, tmp_path, caplog, capsys):

@@ -802,7 +802,7 @@ def test_bm25_index_ingest_streamed_equals_batch(spark, tmp_path):
         _BM25_TERMS,
     )
     from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        bm25_index_ingest,
+        zone_epoch_ingest,
     )
 
     schema = "doc_id LONG, text STRING"
@@ -824,7 +824,9 @@ def test_bm25_index_ingest_streamed_equals_batch(spark, tmp_path):
         .parquet(str(src / "*"))
     )
     zones = tmp_path / "zones"
-    q = bm25_index_ingest(stream, str(zones), str(tmp_path / "ckpt"))
+    q = zone_epoch_ingest(
+        stream, str(zones), str(tmp_path / "ckpt"), build_bm25_index
+    )
     q.awaitTermination(180)
 
     roots = sorted(str(p) for p in zones.glob("epoch=*"))
@@ -850,7 +852,9 @@ def test_bm25_index_ingest_streamed_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    q2 = bm25_index_ingest(stream2, str(zones), str(tmp_path / "ckpt"))
+    q2 = zone_epoch_ingest(
+        stream2, str(zones), str(tmp_path / "ckpt"), build_bm25_index
+    )
     q2.awaitTermination(120)
     assert sorted(str(p) for p in zones.glob("epoch=*")) == roots
 
@@ -891,7 +895,7 @@ def test_bm25_compaction_preserves_serving(spark, tmp_path):
 
 
 def test_bm25_delete_ingest_streamed_equals_batch(spark, tmp_path):
-    """Round 15: deletes arriving IN-STREAM (foreachBatch →
+    """Round 15: deletes arriving IN-STREAM (zone_delete_ingest →
     delete_from_bm25_index) over a streamed-built index must equal the
     batch delete of the same ids — and both equal a rebuild over the
     remaining docs (the living-index story covers takedowns at ingest,
@@ -904,9 +908,12 @@ def test_bm25_delete_ingest_streamed_equals_batch(spark, tmp_path):
     from proyecto_gasto_publico_etl_per__spark.plans.extension_queries import (
         _BM25_TERMS,
     )
+    from proyecto_gasto_publico_etl_per__spark.sources.zones import (
+        index_roots,
+    )
     from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        bm25_delete_ingest,
-        bm25_index_ingest,
+        zone_delete_ingest,
+        zone_epoch_ingest,
     )
 
     schema = "doc_id LONG, text STRING"
@@ -924,13 +931,20 @@ def test_bm25_delete_ingest_streamed_equals_batch(spark, tmp_path):
             docs[i * 3 : i * 3 + 3], schema
         ).coalesce(1).write.parquet(str(src / f"batch{i}"))
     zones = tmp_path / "zones"
-    q = bm25_index_ingest(
+    q = zone_epoch_ingest(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*")),
         str(zones),
         str(tmp_path / "ckpt_ingest"),
+        build_bm25_index,
     )
+
+    def delete(spark, ids):
+        # the streamed index's epoch roots, resolved per micro-batch
+        roots = index_roots(str(zones), "postings")
+        return delete_from_bm25_index(spark, roots, ids)
+
     q.awaitTermination(180)
 
     # delete requests stream in: doc 2 (epoch 0) and doc 5 (epoch 1),
@@ -943,12 +957,12 @@ def test_bm25_delete_ingest_streamed_equals_batch(spark, tmp_path):
     spark.createDataFrame(
         [(5,), (999,)], "doc_id LONG"
     ).coalesce(1).write.parquet(str(dsrc / "d1"))
-    qd = bm25_delete_ingest(
+    qd = zone_delete_ingest(
         spark.readStream.schema("doc_id LONG")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(dsrc / "*")),
-        str(zones),
         str(tmp_path / "ckpt_del"),
+        delete,
     )
     qd.awaitTermination(180)
 
@@ -979,12 +993,12 @@ def test_bm25_delete_ingest_streamed_equals_batch(spark, tmp_path):
 
     # replay with the same checkpoint: the delete op's idempotence
     # means the served set is unchanged
-    qd2 = bm25_delete_ingest(
+    qd2 = zone_delete_ingest(
         spark.readStream.schema("doc_id LONG")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(dsrc / "*")),
-        str(zones),
         str(tmp_path / "ckpt_del"),
+        delete,
     )
     qd2.awaitTermination(180)
     assert {
@@ -993,13 +1007,13 @@ def test_bm25_delete_ingest_streamed_equals_batch(spark, tmp_path):
 
 
 def test_ann_delete_ingest_streamed_equals_batch(spark, tmp_path):
-    """Round 15: vector takedowns arriving IN-STREAM (foreachBatch →
-    delete_from_ann_index) against a persisted IVF-PQ index must equal
+    """Round 15: vector takedowns arriving IN-STREAM (zone_delete_ingest
+    → delete_from_ann_index) against a persisted IVF-PQ index must equal
     the one-call batch delete of the same ids — and serving the
     tombstoned index equals search over the index rebuilt on the
     remaining vectors.  A checkpointed replay adds nothing."""
     from proyecto_gasto_publico_etl_per__spark.operators.similarity import (
-        ann_tombstone_ids,
+        ANN_TOMBSTONES_SCHEMA,
         delete_from_ann_index,
         ivf_centroids,
         ivf_pq_build_index,
@@ -1009,8 +1023,11 @@ def test_ann_delete_ingest_streamed_equals_batch(spark, tmp_path):
     from proyecto_gasto_publico_etl_per__spark.sources.tables import (
         load_table,
     )
+    from proyecto_gasto_publico_etl_per__spark.sources.zones import (
+        read_tombstones,
+    )
     from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        ann_delete_ingest,
+        zone_delete_ingest,
     )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -1039,7 +1056,10 @@ def test_ann_delete_ingest_streamed_equals_batch(spark, tmp_path):
             tuple(r)
             for r in ivf_pq_search(
                 corpus, queries, index=idx,
-                tombstones=ann_tombstone_ids(spark, base), **kw
+                tombstones=read_tombstones(
+                    spark, [base], ANN_TOMBSTONES_SCHEMA
+                ),
+                **kw,
             ).collect()
         }
 
@@ -1057,12 +1077,15 @@ def test_ann_delete_ingest_streamed_equals_batch(spark, tmp_path):
     spark.createDataFrame(
         [(35,), (10**9,)], "vec_id LONG"
     ).coalesce(1).write.parquet(str(dsrc / "d1"))
-    q = ann_delete_ingest(
+    def delete(spark, ids):
+        return delete_from_ann_index(spark, streamed_base, ids)
+
+    q = zone_delete_ingest(
         spark.readStream.schema("vec_id LONG")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(dsrc / "*")),
-        streamed_base,
         str(tmp_path / "ckpt"),
+        delete,
     )
     q.awaitTermination(180)
 
@@ -1078,12 +1101,12 @@ def test_ann_delete_ingest_streamed_equals_batch(spark, tmp_path):
     assert got == serve(rebuilt_base, corpus=remaining)
 
     # checkpointed replay: idempotent, nothing changes
-    q2 = ann_delete_ingest(
+    q2 = zone_delete_ingest(
         spark.readStream.schema("vec_id LONG")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(dsrc / "*")),
-        streamed_base,
         str(tmp_path / "ckpt"),
+        delete,
     )
     q2.awaitTermination(180)
     assert serve(streamed_base) == got

@@ -131,10 +131,11 @@ def test_postings_read_is_partition_pruned(spark, corpus):
 
 
 def test_streamed_epochs_equal_batch(spark, tmp_path):
-    """trigram_index_ingest epochs served together == one batch index
-    — the substring lane's streamed==batch identity."""
+    """zone_epoch_ingest epochs of build_trigram_index served together
+    == one batch index — the substring lane's streamed==batch
+    identity."""
     from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        trigram_index_ingest,
+        zone_epoch_ingest,
     )
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
@@ -152,7 +153,9 @@ def test_streamed_epochs_equal_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    q = trigram_index_ingest(stream, zones, str(tmp_path / "ckpt"))
+    q = zone_epoch_ingest(
+        stream, zones, str(tmp_path / "ckpt"), trigram.build_trigram_index
+    )
     q.awaitTermination(180)
 
     import glob
@@ -233,13 +236,6 @@ def test_delete_equals_rebuild_on_remaining(spark, corpus):
     assert _served(spark, [folded], "window sc", docs) == want
 
 
-def test_compact_overlap_refused(spark, corpus):
-    docs, _ = corpus
-    root = trigram.build_trigram_index(spark, docs.limit(10))
-    with pytest.raises(ValueError, match="overlaps"):
-        trigram.compact_trigram_index(spark, [root], root)
-
-
 def test_epoch_rebuild_clears_stale_tombstones(spark, tmp_path):
     """An epoch-root rebuild must clear a surviving tombstones zone —
     the previous index's deletions must not suppress the NEW corpus's
@@ -274,3 +270,40 @@ def test_cli_substring_delete(spark, tmp_path, capsys):
     cli.main(["substring-search", idx, d, "window sc"])
     out = capsys.readouterr().out
     assert "[2]" in out
+
+
+def test_cli_substring_streamed_and_ambiguous_layouts(spark, tmp_path, capsys):
+    """The substring commands resolve an index dir like the text and
+    aggregate commands do: a streamed index (epoch=N roots only, the
+    layout `zone_epoch_ingest` writes) deletes and serves, and a dir
+    that is both a bare root and holds base/ is refused as ambiguous
+    instead of serving only the bare zones."""
+    from proyecto_gasto_publico_etl_per__spark import cli
+
+    schema = "doc_id LONG, text STRING"
+    rows = [(1, "window scan a"), (2, "window scan b"), (3, "plain")]
+    d = str(tmp_path / "d")
+    docs = spark.createDataFrame(rows, schema)
+    docs.write.parquet(d)
+
+    streamed = tmp_path / "streamed"
+    trigram.build_trigram_index(
+        spark, docs.where(F.col("doc_id") <= 2), root=f"{streamed}/epoch=0"
+    )
+    trigram.build_trigram_index(
+        spark, docs.where(F.col("doc_id") > 2), root=f"{streamed}/epoch=1"
+    )
+    cli.main(["substring-index-delete", str(streamed), "1"])
+    assert "tombstoned 1 documents" in capsys.readouterr().out
+    cli.main(["substring-search", str(streamed), d, "window sc"])
+    assert "[2]" in capsys.readouterr().out
+
+    both = tmp_path / "both"
+    trigram.build_trigram_index(spark, docs, root=f"{both}/base")
+    trigram.build_trigram_index(spark, docs.limit(1), root=str(both))
+    for argv in (
+        ["substring-search", str(both), d, "window sc"],
+        ["substring-index-delete", str(both), "1"],
+    ):
+        with pytest.raises(SystemExit, match="ambiguous"):
+            cli.main(argv)
