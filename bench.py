@@ -119,19 +119,14 @@ EXTENSIONS = (
     # round 10 additions (baseline starts at r10): integer-exact
     # corpus AUC of the quality classifier
     "classifier_auc_eval",
-    # round 12 additions (baseline starts at r12): the shared pigeonhole
-    # Hamming pair generator (text simhash + image phash) with the
-    # collapse + hot-bucket-cap guards on production defaults, and the
-    # video near-dup pair operator (value-level counting + the
-    # ubiquitous-frame cap)
+    # round 12 additions (baseline starts at r12): the pigeonhole
+    # Hamming pair generator with the collapse + hot-bucket-cap guards
+    # on production defaults
     "neardup_hamming_pairs",
-    "video_neardup_pairs",
-    # round 13 additions (baseline starts at r13): the audio lane's
-    # capped LSH pair stage and the BM25 retrieval pair — bm25_topk
-    # rescans the corpus by design (rebuild), bm25_serving reads the
-    # persisted tok-partitioned index zone (serving; build is the warm
-    # run, like the other serving splits)
-    "audio_neardup_pairs",
+    # round 13 additions (baseline starts at r13): the BM25 retrieval
+    # pair — bm25_topk rescans the corpus by design (rebuild),
+    # bm25_serving reads the persisted tok-partitioned index zone
+    # (serving; build is the warm run, like the other serving splits)
     "bm25_topk",
     "bm25_serving",
     "bm25_append_serving",

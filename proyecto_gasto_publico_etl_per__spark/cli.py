@@ -27,17 +27,6 @@ from .operators.skew import pin
 from .sources import zones
 
 
-def _warn_cross_modality(media: str, *flags) -> None:
-    """Print a warning for each explicitly-set knob that does not apply
-    to the selected --media (review r12: never silently discard)."""
-    for flag, val in flags:
-        if val is not None:
-            print(
-                f"warning: {flag} does not apply to --media {media} "
-                "— ignored"
-            )
-
-
 def _layout(fn, *args):
     """A `sources.zones` layout call (resolver, build/append target,
     out-dir guard); its refusal exits the CLI with the message."""
@@ -581,97 +570,6 @@ def main(argv: list[str] | None = None) -> None:
     tsc.add_argument("--out", default=None,
                      help="write matching rows to this parquet dir instead "
                           "of printing the count")
-
-    mh = sub.add_parser(
-        "media-hash",
-        help="per-asset near-dup keys over an assets parquet "
-             "(multimodal.ASSET_SCHEMA) — one map pass.  images: BIGINT "
-             "phash64 column.  audio: array<double> log-mel fingerprint "
-             "column.  decode failures quarantine to NULL per row",
-    )
-    mh.add_argument("assets_parquet")
-    mh.add_argument("out_dir")
-    mh.add_argument(
-        "--media", choices=["image", "audio", "video", "auto"],
-        default="image",
-        help="which asset rows to key (run once per modality).  'auto' "
-             "sniffs each payload's MAGIC BYTES and keys all three "
-             "modalities in ONE fused Arrow pass (stored labels "
-             "ignored; unrecognized payloads quarantine as 'unknown')",
-    )
-    mh.add_argument(
-        "--kind", choices=["ahash", "dhash", "phash"], default=None,
-        help="image/video mode hash kind (default phash)",
-    )
-    mh.add_argument(
-        "--n-mels", type=int, default=None,
-        help="audio mode: mel bands per fingerprint (2x this many "
-             "dimensions), default 16",
-    )
-    mh.add_argument(
-        "--n-frames", type=int, default=None,
-        help="video mode: evenly sampled frames per video (default 5)",
-    )
-
-    md = sub.add_parser(
-        "media-dedup",
-        help="media near-dup clusters over an assets parquet.  images: "
-             "hash map pass → pigeonhole candidate pairs (never "
-             "all-pairs) → connected components.  audio: log-mel "
-             "fingerprint map pass → LSH-bucketed cosine pairs → the "
-             "same components.  video: frame-hash map pass → pigeonhole "
-             "frame pairs → video-pair threshold → the same components. "
-             "writes (asset_id, cluster_id)",
-    )
-    md.add_argument("assets_parquet")
-    md.add_argument("out_dir")
-    md.add_argument(
-        "--media", choices=["image", "audio", "video", "auto"],
-        default="image",
-        help="which asset rows to cluster (the other media types are "
-             "ignored — run the command once per modality).  'auto' "
-             "sniffs each payload's MAGIC BYTES, routes it to the "
-             "right lane, and runs all three in one invocation "
-             "(mixed crawl directories; labels are ignored)",
-    )
-    # per-modality knobs default to None so a knob set for the WRONG
-    # modality can be detected and warned about instead of silently
-    # ignored (resolved to the real defaults in the handler)
-    md.add_argument(
-        "--kind", choices=["ahash", "dhash", "phash"], default=None,
-        help="image/video mode hash kind (default phash)",
-    )
-    md.add_argument(
-        "--max-hamming", type=int, default=None,
-        help="image/video mode: exact pigeonhole radius, default 3 "
-             "(chunks = max-hamming + 1; larger radii shrink chunk width "
-             "and grow buckets — see operators/imagehash.phash_pairs)",
-    )
-    md.add_argument(
-        "--n-frames", type=int, default=None,
-        help="video mode: evenly sampled frames per video (default 5)",
-    )
-    md.add_argument(
-        "--min-matches", type=int, default=None,
-        help="video mode: frame-hash matches required for a video pair "
-             "(default 2)",
-    )
-    md.add_argument(
-        "--threshold", type=float, default=None,
-        help="audio mode: fingerprint cosine threshold for a near-dup "
-             "pair, default 0.95 "
-             "(operators/multimodal.audio_neardup_clusters)",
-    )
-    md.add_argument(
-        "--n-mels", type=int, default=None,
-        help="audio mode: mel bands per fingerprint (2x this many "
-             "dimensions), default 16",
-    )
-    md.add_argument(
-        "--n-planes", type=int, default=None,
-        help="audio mode: hyperplane LSH planes (2^n buckets — raise "
-             "for large corpora), default 4",
-    )
 
     dfz = sub.add_parser(
         "drift-freeze",
@@ -1272,213 +1170,6 @@ def main(argv: list[str] | None = None) -> None:
                 f"scanned {len(kept)}/{total} file(s), "
                 f"{df.count()} matching row(s)"
             )
-    elif args.cmd == "media-hash":
-        assets = spark.read.parquet(args.assets_parquet)
-
-        if args.media == "auto":
-            from .operators.multimodal import media_keys_auto
-
-            # every knob applies to its own lane in auto mode
-            out = media_keys_auto(
-                assets,
-                kind="phash" if args.kind is None else args.kind,
-                n_mels=16 if args.n_mels is None else args.n_mels,
-                n_frames=5 if args.n_frames is None else args.n_frames,
-            )
-            out.write.mode("overwrite").parquet(args.out_dir)
-            done = spark.read.parquet(args.out_dir)
-            per_mode = {
-                r["media_type"]: r["count"]
-                for r in done.groupBy("media_type").count().collect()
-            }
-            n = sum(per_mode.values())
-            keyed = sum(
-                v for m, v in per_mode.items() if m != "unknown"
-            )
-            print(
-                f"recognized {keyed}/{n} assets (image "
-                f"{per_mode.get('image', 0)}, audio "
-                f"{per_mode.get('audio', 0)}, video "
-                f"{per_mode.get('video', 0)}; "
-                f"{per_mode.get('unknown', 0)} unrecognized) → "
-                f"{args.out_dir}"
-            )
-            return
-        if args.media == "audio":
-            from .operators.multimodal import audio_fingerprints
-
-            _warn_cross_modality(args.media, ("--kind", args.kind), ("--n-frames", args.n_frames))
-            out = audio_fingerprints(
-                assets, n_mels=16 if args.n_mels is None else args.n_mels
-            ).select("asset_id", "fingerprint")
-            key_col, label = "fingerprint", "mel-fingerprint"
-        elif args.media == "video":
-            from .operators.videohash import video_hashes
-
-            _warn_cross_modality(args.media, ("--n-mels", args.n_mels))
-            kind = "phash" if args.kind is None else args.kind
-            out = video_hashes(
-                assets, kind,
-                n_frames=5 if args.n_frames is None else args.n_frames,
-            ).select("asset_id", "frame_hashes")
-            key_col, label = "frame_hashes", f"frame-{kind}"
-        else:
-            from .operators.multimodal import image_hashes
-
-            _warn_cross_modality(args.media, ("--n-mels", args.n_mels),
-                         ("--n-frames", args.n_frames))
-            kind = "phash" if args.kind is None else args.kind
-            out = image_hashes(assets, kind).select("asset_id", "phash64")
-            key_col, label = "phash64", kind
-        out.write.mode("overwrite").parquet(args.out_dir)
-        done = spark.read.parquet(args.out_dir)
-        n = done.count()
-        nn = done.where(f"{key_col} IS NOT NULL").count()
-        print(
-            f"hashed {nn}/{n} assets ({label}) → {args.out_dir} "
-            f"({n - nn} quarantined/non-{args.media})"
-        )
-    elif args.cmd == "media-dedup":
-        assets = spark.read.parquet(args.assets_parquet)
-        if args.media == "auto":
-            from .operators.imagehash import image_neardup_clusters
-            from .operators.multimodal import (
-                audio_neardup_clusters,
-                sniff_media_types,
-            )
-            from .operators.videohash import video_neardup_clusters
-
-            # every knob applies to its own lane in auto mode — no
-            # cross-modality warnings.  One sniff pass relabels
-            # media_type from magic bytes; each lane then filters on
-            # the label exactly as a single-media run would, so the
-            # per-modality outputs are identical to three separate
-            # invocations with correct labels (tested).  The relabeled
-            # frame is checkpointed once: three lanes would otherwise
-            # each rerun the Arrow sniff pass over the payload bytes.
-            sniffed = pin(sniff_media_types(assets), eager=True)
-            max_hamming = 3 if args.max_hamming is None else args.max_hamming
-            threshold = 0.95 if args.threshold is None else args.threshold
-            min_matches = 2 if args.min_matches is None else args.min_matches
-            lanes = {
-                "image": image_neardup_clusters(
-                    sniffed,
-                    kind="phash" if args.kind is None else args.kind,
-                    max_hamming=max_hamming,
-                    log_capped=True,
-                ),
-                "audio": audio_neardup_clusters(
-                    sniffed,
-                    n_mels=16 if args.n_mels is None else args.n_mels,
-                    threshold=threshold,
-                    n_planes=4 if args.n_planes is None else args.n_planes,
-                    log_capped=True,
-                ),
-                "video": video_neardup_clusters(
-                    sniffed,
-                    kind="phash" if args.kind is None else args.kind,
-                    n_frames=5 if args.n_frames is None else args.n_frames,
-                    max_hamming=max_hamming,
-                    min_matches=min_matches,
-                    log_capped=True,
-                ),
-            }
-            # asset ids are globally unique, so the min-id cluster
-            # labels of disjoint modality lanes can never collide
-            out = None
-            for frame in lanes.values():
-                out = frame if out is None else out.unionByName(frame)
-            out.write.mode("overwrite").parquet(args.out_dir)
-            done = spark.read.parquet(args.out_dir)
-            # per-lane counts from the WRITTEN frame (one join against
-            # the sniffed labels) — re-running the three lane pipelines
-            # just to count them doubled the command's wall clock
-            # (r13 review)
-            per_mode = {
-                r["media_type"]: r["count"]
-                for r in done.join(
-                    sniffed.select("asset_id", "media_type"), "asset_id"
-                )
-                .groupBy("media_type")
-                .count()
-                .collect()
-            }
-            per_mode = {
-                m: per_mode.get(m, 0) for m in ("image", "audio", "video")
-            }
-            n = sum(per_mode.values())
-            groups = done.select("cluster_id").distinct().count()
-            total = sniffed.count()
-            print(
-                f"clustered {n} sniffed assets into {groups} groups "
-                f"(image {per_mode['image']}, audio {per_mode['audio']}, "
-                f"video {per_mode['video']}; "
-                f"{total - n} unrecognized/quarantined) → {args.out_dir}"
-            )
-            return
-        if args.media == "audio":
-            from .operators.multimodal import audio_neardup_clusters
-
-            _warn_cross_modality(args.media, 
-                ("--kind", args.kind), ("--max-hamming", args.max_hamming),
-                ("--n-frames", args.n_frames),
-                ("--min-matches", args.min_matches),
-            )
-            threshold = 0.95 if args.threshold is None else args.threshold
-            clusters = audio_neardup_clusters(
-                assets,
-                n_mels=16 if args.n_mels is None else args.n_mels,
-                threshold=threshold,
-                n_planes=4 if args.n_planes is None else args.n_planes,
-                log_capped=True,
-            )
-            knob = f"cosine >= {threshold}"
-            noun = "fingerprinted"
-        elif args.media == "video":
-            from .operators.videohash import video_neardup_clusters
-
-            _warn_cross_modality(args.media, 
-                ("--threshold", args.threshold), ("--n-mels", args.n_mels),
-                ("--n-planes", args.n_planes),
-            )
-            max_hamming = 3 if args.max_hamming is None else args.max_hamming
-            min_matches = 2 if args.min_matches is None else args.min_matches
-            clusters = video_neardup_clusters(
-                assets,
-                kind="phash" if args.kind is None else args.kind,
-                n_frames=5 if args.n_frames is None else args.n_frames,
-                max_hamming=max_hamming,
-                min_matches=min_matches,
-                log_capped=True,
-            )
-            knob = f"radius {max_hamming}, matches >= {min_matches}"
-            noun = "frame-hashed"
-        else:
-            from .operators.imagehash import image_neardup_clusters
-
-            _warn_cross_modality(args.media, 
-                ("--threshold", args.threshold), ("--n-mels", args.n_mels),
-                ("--n-planes", args.n_planes),
-                ("--n-frames", args.n_frames),
-                ("--min-matches", args.min_matches),
-            )
-            max_hamming = 3 if args.max_hamming is None else args.max_hamming
-            clusters = image_neardup_clusters(
-                assets,
-                kind="phash" if args.kind is None else args.kind,
-                max_hamming=max_hamming,
-                log_capped=True,
-            )
-            knob = f"radius {max_hamming}"
-            noun = "hashed"
-        clusters.write.mode("overwrite").parquet(args.out_dir)
-        done = spark.read.parquet(args.out_dir)
-        n = done.count()
-        groups = done.select("cluster_id").distinct().count()
-        print(
-            f"clustered {n} {noun} assets into {groups} groups "
-            f"({knob}) → {args.out_dir}"
-        )
     elif args.cmd == "drift-freeze":
         from .operators.textstats import token_distribution
         from .sources.tables import load_table

@@ -583,8 +583,8 @@ def hamming_pairs(
     log_capped: bool = False,
 ) -> DataFrame:
     """Pairs within Hamming distance ``max_hamming`` of a BIGINT hash
-    column — the shared pigeonhole candidate generator behind
-    ``simhash_pairs`` (text) and ``imagehash.phash_pairs`` (images):
+    column — the pigeonhole candidate generator behind
+    ``simhash_pairs`` (text) and the synthetic-hash near-dup queries:
     split into ``max_hamming + 1`` chunks, bucket equi-join on
     (chunk_idx, chunk_value), verify the full distance JVM-side.
 
@@ -614,7 +614,7 @@ def hamming_pairs(
       EVERY chunk it shares lands in a dropped bucket.  ``None``
       disables (test-scale exactness); ``log_capped=True`` runs one
       eager count over the 2-col hash frame and logs what was
-      dropped (batch only — the CLI lanes turn it on).
+      dropped (batch only).
 
     ``shiftrightunsigned`` throughout: identical to an arithmetic shift
     on non-negative hashes (simhash's 60-bit values) and REQUIRED for

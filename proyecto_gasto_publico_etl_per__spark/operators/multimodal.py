@@ -382,230 +382,6 @@ def _looks_like_tga(p: bytes) -> bool:
     )
 
 
-def sniff_media_type(payload: bytes | None) -> str | None:
-    """Classify an asset payload as ``"image"``/``"audio"``/``"video"``
-    by MAGIC BYTES alone (round 13 — the ``--media auto`` dispatcher):
-    a real crawl directory's labels are unreliable, so mixed-media
-    ingest sniffs each payload and routes it to the right near-dup
-    lane in one pass.  Returns None for unrecognized / empty payloads
-    (quarantine — no lane claims them).
-
-    Rules mirror the decoders' own dispatch byte-for-byte
-    (``decode_image`` / ``decode_audio`` / ``real_video_frames``), so
-    a sniffed row is one its lane can actually open:
-
-    - RIFF container splits on the form type: ``AVI `` → video,
-      ``WAVE`` → audio.  ISO BMFF (``ftyp`` at offset 4) → video.
-    - GIF is the one genuinely ambiguous magic: ≥2 image descriptors
-      (a cheap block walk — sub-block skipping, no LZW decode) →
-      video (animated), else image (still).  A truncated/corrupt GIF
-      sniffs as image and quarantines in the image lane's decoder.
-    - FORM/AIFF, ``.snd`` (AU), ``fLaC`` → audio.
-    - PNG / JPEG / TIFF / BMP / netpbm / TGA-heuristic (last, it has
-      no magic) → image.
-    """
-    if not payload:
-        return None
-    p = bytes(payload[:16])
-    if len(payload) >= 12 and p[:4] == b"RIFF":
-        form = p[8:12]
-        if form == b"AVI ":
-            return "video"
-        if form == b"WAVE":
-            return "audio"
-        return None
-    if len(payload) >= 8 and p[4:8] == b"ftyp":
-        return "video"
-    if p[:6] in (b"GIF87a", b"GIF89a"):
-        return "video" if _gif_is_animated(bytes(payload)) else "image"
-    if len(payload) >= 12 and p[:4] == b"FORM" and p[8:12] in (
-        b"AIFF", b"AIFC",
-    ):
-        return "audio"
-    if p[:4] == b".snd" or p[:4] == b"fLaC":
-        return "audio"
-    if (
-        p[:8] == _PNG_MAGIC
-        or p[:2] == b"\xff\xd8"
-        or p[:4] in (b"II*\x00", b"MM\x00*")
-        or p[:2] == b"BM"
-        or (p[:1] == b"P" and p[1:2] in b"123456")
-        or _looks_like_tga(bytes(payload[:18]))
-    ):
-        return "image"
-    return None
-
-
-def _gif_is_animated(payload: bytes) -> bool:
-    """True when the GIF holds ≥2 image descriptors — a sub-block SKIP
-    walk (length bytes only, LZW data never touched), so sniffing a
-    large still costs header bytes, not a decode.  Any structural error
-    answers False: the still-image lane owns the loud failure."""
-    try:
-        if len(payload) < 14:
-            return False
-        pos = 13
-        if payload[10] & 0x80:
-            pos += 3 * (2 ** ((payload[10] & 7) + 1))
-        frames = 0
-        while pos < len(payload):
-            b = payload[pos]
-            if b == 0x3B:
-                break
-            if b == 0x21:  # extension: label + sub-blocks
-                pos += 2
-            elif b == 0x2C:  # image descriptor
-                p2 = payload[pos + 9]
-                pos += 10
-                if p2 & 0x80:
-                    pos += 3 * (2 ** ((p2 & 7) + 1))
-                pos += 1  # LZW min-code byte
-                frames += 1
-                if frames >= 2:
-                    return True
-            else:
-                return False
-            # skip the sub-block chain (extension payload / LZW data)
-            while pos < len(payload):
-                n = payload[pos]
-                pos += 1
-                if n == 0:
-                    break
-                pos += n
-        return False
-    except IndexError:
-        # truncated walk (the loop indexes ahead of bounds checks);
-        # struct is never used here — a stale struct.error in this
-        # tuple was an unbound name that turned the quarantine into a
-        # NameError crash on corrupt GIFs (r13 review)
-        return False
-
-
-def sniff_media_types(assets: DataFrame) -> DataFrame:
-    """Relabel ``media_type`` from payload magic bytes — one Arrow map
-    pass, schema preserved (``sniff_media_type`` per row; unrecognized
-    payloads get ``"unknown"`` so no modality lane claims them).  The
-    ``--media auto`` front door: downstream lanes keep filtering on
-    ``media_type`` exactly as in single-media runs, so per-modality
-    outputs are identical to three separate invocations with correct
-    labels."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            out["media_type"] = [
-                sniff_media_type(p) or "unknown" for p in out["payload"]
-            ]
-            yield out
-
-    return assets.mapInPandas(batches, schema=assets.schema)
-
-
-def media_keys_auto(
-    assets: DataFrame,
-    kind: str = "phash",
-    n_mels: int = 16,
-    n_frames: int = 5,
-) -> DataFrame:
-    """Mixed-media near-dup keys in ONE Arrow pass (round 14 — the
-    ``--media auto`` ingest shape): each payload is sniffed by magic
-    bytes (``sniff_media_type``) and keyed by ITS modality's extractor
-    in the same batch — image → ``phash64`` (BIGINT), audio →
-    ``fingerprint`` (array<double>, ``audio_dsp.mel_fingerprint``),
-    video → ``frame_hashes`` (array<long>, evenly sampled frames, the
-    ``videohash.video_hashes`` pick).  Off-modality key columns are
-    NULL; unrecognized payloads get media_type ``"unknown"`` with all
-    keys NULL (quarantine); per-row decode failures quarantine to a
-    NULL key, never a job abort.
-
-    Why fused: the chained form (``sniff_media_types`` →
-    ``image_hashes`` → ``audio_fingerprints`` → ``video_hashes``)
-    moves every payload across the Arrow boundary FOUR times — and
-    worse, it CORRUPTS keys: a nullable int64 column (``phash64``)
-    crossing a later extractor's Arrow pass coerces to float64 in
-    pandas (int64 has no NaN) and silently loses low bits past 2^53
-    (caught live in testing — a phash of ...008027 came back
-    ...008128).  One fused pass means the bytes cross once and no key
-    column ever re-enters pandas.  Value-identity with the per-lane
-    single-media extractors is test-pinned, and the streaming twin
-    (``streaming.incremental.media_keys_ingest``) runs this per
-    micro-batch — map-only, so streamed == batch exactly."""
-    from .audio_dsp import mel_fingerprint
-    from .imagehash import image_phash64
-    from .videohash import real_video_frames
-
-    if n_frames < 1:
-        raise ValueError(f"n_frames must be >= 1, got {n_frames}")
-
-    def keys(p) -> tuple[str, int | None, list | None, list | None]:
-        mt = sniff_media_type(p) or "unknown"
-        try:
-            if mt == "image":
-                return mt, image_phash64(bytes(p), kind), None, None
-            if mt == "audio":
-                d = decode_audio(bytes(p))
-                return (
-                    mt,
-                    None,
-                    mel_fingerprint(
-                        d["samples"],
-                        d["sample_rate"],
-                        n_channels=d["n_channels"],
-                        n_mels=n_mels,
-                    ),
-                    None,
-                )
-            if mt == "video":
-                frames = real_video_frames(bytes(p))
-                if not frames:
-                    raise ValueError("no real frame decode path")
-                return (
-                    mt,
-                    None,
-                    None,
-                    [
-                        image_phash64(
-                            frames[i * len(frames) // n_frames], kind
-                        )
-                        for i in range(n_frames)
-                    ],
-                )
-        except Exception:
-            return mt, None, None, None  # per-row quarantine
-        return mt, None, None, None
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols = [keys(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": [c[0] for c in cols],
-                    "phash64": pd.Series(
-                        [c[1] for c in cols],
-                        index=pdf.index,
-                        dtype="object",
-                    ),
-                    "fingerprint": pd.Series(
-                        [c[2] for c in cols],
-                        index=pdf.index,
-                        dtype="object",
-                    ),
-                    "frame_hashes": pd.Series(
-                        [c[3] for c in cols],
-                        index=pdf.index,
-                        dtype="object",
-                    ),
-                }
-            )
-
-    schema = (
-        "asset_id LONG, media_type STRING, phash64 LONG, "
-        "fingerprint ARRAY<DOUBLE>, frame_hashes ARRAY<BIGINT>"
-    )
-    return assets.mapInPandas(batches, schema=schema)
-
-
 def resize_image_real(payload: bytes, width: int, height: int) -> bytes:
     """Real decode → resample → re-encode.  Pillow (LANCZOS, any format)
     when importable; else stdlib decode + exact area-average (box)
@@ -842,8 +618,8 @@ def audio_features(payload: bytes, dim: int = 4) -> list[float]:
     """Real audio features: [sample_rate, n_channels, n_frames, rms];
     at dim >= 5, the zero-crossing rate; at dim >= 6, the remaining
     slots fill with the log-mel fingerprint (per-band mean/std of the
-    Hann-rFFT-mel spectrogram, ``audio_dsp.mel_fingerprint`` — the
-    duration-invariant embedding audio near-dup keys on).  Each tier's
+    Hann-rFFT-mel spectrogram, ``audio_dsp.mel_fingerprint``, a
+    duration-invariant embedding).  Each tier's
     O(samples) work only runs when its slots survive the cut.
     Deterministic — pytest-oracle-able."""
     d = decode_audio(payload)
@@ -876,224 +652,6 @@ def _fake_resized(payload: bytes, width: int, height: int) -> bytes:
         payload + f":{width}x{height}".encode()
     ).digest()
     return seed * (width * height // len(seed) + 1)
-
-
-def image_hashes(
-    assets: DataFrame, kind: str = "phash", strict: bool = False
-) -> DataFrame:
-    """64-bit perceptual hash per image asset (round 11): asset columns
-    plus a BIGINT ``phash64`` — the image near-dup key.  Arrow-batched
-    ``mapInPandas``; non-image / NULL-payload rows get NULL, and decode
-    failures quarantine PER ROW to NULL (the ``extract_features``
-    contract) unless ``strict=True``.
-
-    Scale shape: one map pass, no shuffle.  Candidate generation
-    downstream is the SimHash idiom — band the 16 nibbles
-    (``F.expr("(phash64 >> (4*b)) & 15")`` per band) and equi-join on
-    (band, value), never all-pairs; verify with JVM-side
-    ``F.bit_count(a ^ b)``.  See ``operators/imagehash`` for the hash
-    math (area-average luma downscale + mean/gradient/DCT bits)."""
-    from .imagehash import image_phash64
-
-    def one(b) -> int | None:
-        if b is None:
-            return None
-        try:
-            return image_phash64(bytes(b), kind)
-        except Exception:
-            if strict:
-                raise
-            return None
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            is_img = out["media_type"] == "image"
-            vals = [
-                one(p) if ok else None
-                for ok, p in zip(is_img, out["payload"])
-            ]
-            out["phash64"] = pd.array(vals, dtype="Int64")
-            yield out
-
-    schema = T.StructType(
-        [*assets.schema.fields, T.StructField("phash64", T.LongType(), True)]
-    )
-    return assets.mapInPandas(batches, schema=schema)
-
-
-def audio_fingerprints(
-    assets: DataFrame, n_mels: int = 16, strict: bool = False
-) -> DataFrame:
-    """Duration-invariant log-mel fingerprint per audio asset (round
-    11): asset columns plus ``fingerprint`` — ``array<double>`` of
-    2·n_mels per-band mean/std stats (``audio_dsp.mel_fingerprint``).
-    The audio analogue of ``image_hashes``: one Arrow map pass, non-
-    audio / failed rows get NULL (the quarantine contract).  The column
-    is embedding-shaped on purpose — it feeds the existing
-    ``similarity``/``embedding_neardup`` operators (cosine top-k,
-    LSH/IVF bucketing) without new machinery."""
-    from .audio_dsp import mel_fingerprint
-
-    def one(b) -> list | None:
-        if b is None:
-            return None
-        try:
-            d = decode_audio(bytes(b))
-            return mel_fingerprint(
-                d["samples"], d["sample_rate"],
-                n_channels=d["n_channels"], n_mels=n_mels,
-            )
-        except Exception:
-            if strict:
-                raise
-            return None
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            is_audio = out["media_type"] == "audio"
-            out["fingerprint"] = [
-                one(p) if ok else None
-                for ok, p in zip(is_audio, out["payload"])
-            ]
-            yield out
-
-    schema = T.StructType(
-        [
-            *assets.schema.fields,
-            T.StructField(
-                "fingerprint", T.ArrayType(T.DoubleType()), True
-            ),
-        ]
-    )
-    return assets.mapInPandas(batches, schema=schema)
-
-
-def audio_fingerprint_pairs(
-    fps: DataFrame,
-    id_col: str = "asset_id",
-    fp_col: str = "fingerprint",
-    threshold: float = 0.95,
-    n_planes: int = 4,
-    max_bucket: int | None = 10_000,
-    log_capped: bool = False,
-) -> DataFrame:
-    """Near-dup pairs over a fingerprint frame — the audio lane's pair
-    stage, factored out of ``audio_neardup_clusters`` (round 13) so the
-    driver-oracle query ``audio_neardup_pairs`` can exercise it over
-    synthesized fingerprints the way ``video_neardup_pairs`` feeds
-    ``videohash.video_pairs`` synthesized frame hashes.  Input is any
-    (id, array<double>) frame — typically ``audio_fingerprints`` output
-    with NULLs filtered; returns (id_a, id_b, score_q3) with cosine
-    quantized to the 1e-3 grid.
-
-    Two-stage shape, the ``hamming_pairs`` contract: bit-identical
-    fingerprints (re-ingests, silent/constant clips) collapse to star
-    edges (score 1000) from the min-id representative BEFORE the LSH
-    self-join — connected components are unchanged because identical
-    vectors have identical cosine relations — and only representatives
-    enter ``similarity.embedding_neardup_pairs`` (hyperplane-LSH
-    buckets, exact-cosine verify, ``max_bucket`` hot-bucket cap)."""
-    from pyspark.sql import Window
-
-    from .similarity import embedding_neardup_pairs
-
-    base = fps.where(F.col(fp_col).isNotNull()).select(
-        F.col(id_col).alias("asset_id"), F.col(fp_col).alias("fingerprint")
-    )
-    from .skew import pin
-
-    tagged = pin(
-        base.withColumn(
-            "rep",
-            F.min("asset_id").over(Window.partitionBy("fingerprint")),
-        )
-    )
-    star = tagged.where(F.col("asset_id") != F.col("rep")).select(
-        F.col("rep").alias("id_a"),
-        F.col("asset_id").alias("id_b"),
-        F.lit(1000).cast("long").alias("score_q3"),  # cosine 1.0 on the grid
-    )
-    reps = tagged.where(F.col("asset_id") == F.col("rep")).select(
-        "asset_id", "fingerprint"
-    )
-    # max_bucket guards the residual near-identical-but-not-equal
-    # cohort (the collapse above only absorbs BIT-identical prints):
-    # a hot LSH bucket past the cap drops from candidate generation
-    # instead of going quadratic — the hamming_pairs cap contract
-    pairs = embedding_neardup_pairs(
-        reps,
-        id_col="asset_id",
-        vec_col="fingerprint",
-        threshold=threshold,
-        n_planes=n_planes,
-        max_bucket=max_bucket,
-        log_capped=log_capped,
-    ).withColumn("score_q3", F.col("score_q3").cast("long"))
-    return pairs.unionByName(star)
-
-
-def audio_neardup_clusters(
-    assets: DataFrame,
-    n_mels: int = 16,
-    threshold: float = 0.95,
-    n_planes: int = 4,
-    max_bucket: int | None = 10_000,
-    log_capped: bool = False,
-) -> DataFrame:
-    """End-to-end audio near-dup grouping (round 12 — the audio twin of
-    ``imagehash.image_neardup_clusters``): log-mel fingerprint column
-    (one Arrow map pass) → hyperplane-LSH-bucketed cosine pairs at
-    ``threshold`` (``similarity.embedding_neardup_pairs`` — bucketed,
-    never all-pairs) → the shared connected-components machinery.
-    Returns (asset_id, cluster_id) for every fingerprinted asset,
-    singletons included; non-audio / undecodable rows carry no
-    fingerprint and are excluded (the quarantine contract).
-
-    The fingerprint is duration- and container-invariant
-    (``audio_dsp.mel_fingerprint``), so the same clip re-encoded
-    WAV↔AIFF↔AU or resampled clusters together while distinct program
-    material does not — the CLI exposes ``threshold`` and ``n_planes``
-    (2^n_planes LSH buckets: the corpus-scale knob, exactly as
-    ``hyperplane_buckets`` documents).
-
-    Identical fingerprints (bit-for-bit re-ingests, silent/constant
-    clips — the audio analogue of the constant-pHash cohort) collapse
-    to star edges from the min-id representative BEFORE the LSH
-    self-join, the round-12 ``hamming_pairs`` contract: a 10k-identical
-    cohort contributes ONE row per bucket instead of a quadratic
-    in-bucket clique, and connected components are unchanged (identical
-    vectors have identical cosine relations, so the rep inherits every
-    ≥-threshold pair a member had)."""
-    from .dedup import cluster_duplicates
-
-    # one decode+fingerprint pass feeds the pair join AND the label
-    # join — same single-barrier rationale as the image lane
-    from .skew import pin
-
-    fps = pin(
-        audio_fingerprints(assets, n_mels=n_mels)
-        .where(F.col("fingerprint").isNotNull())
-        .select("asset_id", "fingerprint"),
-        eager=True,
-    )
-    pairs = audio_fingerprint_pairs(
-        fps,
-        threshold=threshold,
-        n_planes=n_planes,
-        max_bucket=max_bucket,
-        log_capped=log_capped,
-    )
-    clustered = cluster_duplicates(pairs, id_a="id_a", id_b="id_b")
-    return fps.join(
-        clustered, fps.asset_id == clustered.doc_id, "left"
-    ).select(
-        "asset_id",
-        F.coalesce(F.col("cluster_id"), F.col("asset_id")).alias(
-            "cluster_id"
-        ),
-    )
 
 
 def resize_images(
@@ -1193,6 +751,32 @@ def _avi_mjpeg_frames(payload: bytes) -> list[bytes]:
     return frames
 
 
+def _real_video_frames(payload: bytes) -> list[bytes] | None:
+    """Container demux for the stdlib-verified video surfaces: a list
+    of standalone image payloads (JPEG for MJPEG tracks, PNG for GIF
+    frames), or None when the container is unsupported or the walk
+    fails — per-row quarantine, never a job abort."""
+    try:
+        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
+            return _avi_mjpeg_frames(payload) or None
+        if payload[4:8] == b"ftyp":  # ISO BMFF (MP4/MOV)
+            from .mp4 import mp4_mjpeg_frames
+
+            return mp4_mjpeg_frames(payload) or None
+        if payload[:6] in (b"GIF87a", b"GIF89a"):
+            from .gif import gif_frames
+
+            return [
+                _png_encode(
+                    fr["width"], fr["height"], fr["channels"], fr["pixels"]
+                )
+                for fr in gif_frames(payload)
+            ]
+    except Exception:
+        return None
+    return None
+
+
 def sample_frames(assets: DataFrame, n_frames: int = 4) -> DataFrame:
     """Sample ``n_frames`` evenly-spaced frames from each video payload —
     a row-expanding mapInPandas (one input row → n output rows), the shape
@@ -1226,12 +810,8 @@ def sample_frames(assets: DataFrame, n_frames: int = 4) -> DataFrame:
         bulk ingest must never abort on one row, so the loud-guard
         contract belongs to the direct ``gif_frames``/``decode_image``
         calls, and here unsupported degrades to the deterministic
-        fallback like any other undecodable payload.  The dispatch is
-        shared with the video near-dup lane (round 12) — one walk
-        table for both consumers."""
-        from .videohash import real_video_frames
-
-        return real_video_frames(p)
+        fallback like any other undecodable payload."""
+        return _real_video_frames(p)
 
     def frame_at(p: bytes, real: list[bytes] | None, i: int) -> bytes:
         if real:

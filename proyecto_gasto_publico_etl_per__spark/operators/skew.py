@@ -149,6 +149,12 @@ def broadcast_if_bounded(
     return pinned
 
 
+def _stopped(df: DataFrame) -> bool:
+    """True once ``df``'s SparkContext is stopped (``stop()`` drops its
+    JVM handle)."""
+    return df.sparkSession.sparkContext._jsc is None
+
+
 def release_pinned() -> int:
     """Unpersist every frame ``broadcast_if_bounded`` has pinned since
     the last release and return how many were freed.  Safe to call at
@@ -165,18 +171,22 @@ def release_pinned() -> int:
     frees when the JVM object is unreachable — reference-dropping (not
     a forced unpersist) is the SAFE release, because a frame the
     caller still holds (a lazy result a later action will run) stays
-    reachable and keeps its blocks."""
-    n = 0
-    while _PINNED:
-        _PINNED.pop().unpersist()
-        n += 1
-    if _CKPT_PINNED:
-        spark = _CKPT_PINNED[0].sparkSession
-        n += len(_CKPT_PINNED)
-        _CKPT_PINNED.clear()
+    reachable and keeps its blocks.
+
+    Frames whose SparkContext has been stopped are dropped from both
+    registries without any JVM call: their blocks died with the
+    context, and the stopped context's block manager would raise."""
+    pinned, ckpt = list(_PINNED), list(_CKPT_PINNED)
+    _PINNED.clear()
+    _CKPT_PINNED.clear()
+    for df in pinned:
+        if not _stopped(df):
+            df.unpersist()
+    live = [df for df in ckpt if not _stopped(df)]
+    if live:
         # nudge ContextCleaner: checkpoint RDD blocks free on JVM GC
-        spark.sparkContext._jvm.System.gc()
-    return n
+        live[0].sparkSession.sparkContext._jvm.System.gc()
+    return len(pinned) + len(ckpt)
 
 
 def salted_join(

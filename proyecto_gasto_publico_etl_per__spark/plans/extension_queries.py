@@ -280,14 +280,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: bits), and far (8 bits) members per group, plus cross-group pairs
 #: wherever bit_count(g1^g2) <= 3.  Pure shifts/xor so Spark and DuckDB
 #: compute bit-identical BIGINTs (no overflow, no multiplication).
-#: SYNTH_ROLE_CASE is the single source for the role→flip table — the
-#: scaling probe (tools/scaling_probe.py media-neardup) formats it with
-#: its own id column so probe workload and oracle stay in lockstep.
-SYNTH_ROLE_CASE = (
-    "CASE CAST({col} % 7 AS INT) WHEN 3 THEN 1 WHEN 4 THEN 3 "
+_SYNTH_HASH_SQL = (
+    "CASE CAST(doc_id % 7 AS INT) WHEN 3 THEN 1 WHEN 4 THEN 3 "
     "WHEN 5 THEN 7 WHEN 6 THEN 255 ELSE 0 END"
 )
-_SYNTH_HASH_SQL = SYNTH_ROLE_CASE.format(col="doc_id")
 
 
 @register(
@@ -320,8 +316,7 @@ _SYNTH_HASH_SQL = SYNTH_ROLE_CASE.format(col="doc_id")
 )
 def neardup_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared pigeonhole Hamming-pair generator
-    (``dedup.hamming_pairs`` — behind both text SimHash and image pHash
-    near-dup) against a DuckDB brute-force oracle: chunk split → bucket
+    (``dedup.hamming_pairs`` — behind text SimHash near-dup) against a DuckDB brute-force oracle: chunk split → bucket
     equi-join → ``bit_count(xor)`` verify, with exact-hash collapse
     (star edges from the min-id rep) and the hot-bucket cap on its
     production default.  VERDICT r12 task 4."""
@@ -401,174 +396,6 @@ def neardup_hamming_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashes, "doc_id", "hv", 3, 64, max_bucket=100
     )
     return pairs.withColumn("hamming", F.col("hamming").cast("int"))
-
-
-@register(
-    "video_neardup_pairs",
-    """
-    WITH fr AS (
-      -- synthetic 5-frame videos: group g = doc_id//10; frames are the
-      -- consecutive values (g+s)<<20, so adjacent groups overlap on 4
-      -- of 5 values and near-value matches arise wherever
-      -- bit_count((g+s) ^ (g'+s')) <= 3.  Non-negative by construction.
-      SELECT DISTINCT doc_id AS vid, ((doc_id // 10) + s.s) << 20 AS hv
-      FROM documents, (SELECT unnest(range(5)) AS s) s
-    ),
-    -- the ubiquity cap IS part of the contract (max_value_df=40 FIRES:
-    -- mid-range values appear in 50 videos and drop; only the edge
-    -- values survive) — the oracle mirrors the algorithm's filter
-    -- placement, not a brute-force scan of the uncapped corpus
-    kept AS (SELECT hv FROM fr GROUP BY hv HAVING COUNT(*) <= 40),
-    fr2 AS (SELECT fr.vid, fr.hv FROM fr JOIN kept USING (hv)),
-    vals AS (SELECT DISTINCT hv FROM fr2),
-    near AS (
-      SELECT a.hv AS v_a, b.hv AS v_b FROM vals a JOIN vals b
-      ON bit_count(xor(a.hv, b.hv)) <= 3
-    ),
-    m AS (
-      SELECT fa.vid AS vida, fb.vid AS vidb,
-             least(n.v_a, n.v_b) AS pa, greatest(n.v_a, n.v_b) AS pb
-      FROM fr2 fa JOIN near n ON fa.hv = n.v_a
-      JOIN fr2 fb ON fb.hv = n.v_b
-      WHERE fa.vid <> fb.vid
-    ),
-    -- distinct at the TUPLE level (vid pair x value pair): packing the
-    -- value pair into one integer (pa * 2^30 + pb) overflows once hv
-    -- exceeds 2^30 and the collided keys silently under-count, so the
-    -- dedup happens on the raw columns instead (round-13 advice)
-    md AS (
-      SELECT DISTINCT least(vida, vidb) AS vid_a,
-             greatest(vida, vidb) AS vid_b, pa, pb
-      FROM m
-    )
-    SELECT vid_a, vid_b, CAST(COUNT(*) AS INT) AS n_matches
-    FROM md GROUP BY 1, 2
-    HAVING COUNT(*) >= 2
-    """,
-)
-def video_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The video near-dup pair operator under the driver gate (round
-    12): value-level match counting (distinct matched hash-value pairs
-    — immune to rep-routing distortion) AND the ubiquitous-frame cap
-    (``max_value_df=40``, which fires on this corpus) against a DuckDB
-    brute-force mirror of the same algorithm.  See
-    ``operators/videohash.video_pairs``."""
-    from ..operators.videohash import video_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    hashes = docs.select(
-        F.col("doc_id").alias("asset_id"),
-        F.expr(
-            "transform(sequence(0, 4), "
-            "s -> shiftleft(doc_id div 10 + s, 20))"
-        ).alias("frame_hashes"),
-    )
-    pairs = video_pairs(hashes, min_matches=2, max_value_df=40)
-    return pairs.withColumn("n_matches", F.col("n_matches").cast("int"))
-
-
-#: audio pair-lane knobs — the cap FIRES at every shipped SF by
-#: construction (120-rep fingerprint universe, see the query docstring)
-AUDIO_PAIR_T = 0.25
-AUDIO_PAIR_CAP = 9
-
-
-@register(
-    "audio_neardup_pairs",
-    f"""
-    WITH fps AS (
-      -- synthetic fingerprints: every asset carries the embedding of
-      -- its leader (vec_id % 120), so the distinct-fingerprint universe
-      -- is a CONSTANT 120 vectors at every SF — bucket occupancy (and
-      -- therefore cap firing) is scale-invariant while star edges
-      -- scale with the corpus
-      SELECT m.vec_id AS asset_id, l.embedding::DOUBLE[] AS fp
-      FROM embeddings m JOIN embeddings l ON l.vec_id = m.vec_id % 120
-    ),
-    reps AS (SELECT fp, MIN(asset_id) AS rep FROM fps GROUP BY fp),
-    star AS (
-      SELECT r.rep AS id_a, f.asset_id AS id_b,
-             CAST(1000 AS BIGINT) AS score_q3
-      FROM fps f JOIN reps r ON f.fp = r.fp
-      WHERE f.asset_id <> r.rep
-    ),
-    dims AS (
-      SELECT rep AS vec_id, generate_subscripts(fp, 1) - 1 AS d,
-             unnest(fp) AS x
-      FROM reps
-    ),
-    planes AS (SELECT unnest(range(4)) AS p),
-    dots AS (
-      SELECT vec_id, p,
-             SUM(x * CASE WHEN CAST(('0x' || substr(
-                       md5(p::VARCHAR || ':' || d::VARCHAR), 1, 1)) AS INT)
-                       & 1 = 0
-                     THEN 1.0 ELSE -1.0 END) AS dot
-      FROM dims CROSS JOIN planes GROUP BY vec_id, p
-    ),
-    buckets AS (
-      SELECT vec_id,
-             CAST(SUM(CASE WHEN dot >= 0 THEN (1::BIGINT << p) ELSE 0 END)
-                  AS BIGINT) AS bucket
-      FROM dots GROUP BY vec_id
-    ),
-    -- the hot-bucket cap IS part of the contract (the
-    -- neardup_hamming_capped precedent): buckets holding more than
-    -- {AUDIO_PAIR_CAP} representatives drop from candidate generation,
-    -- and on this corpus the cap FIRES (16 hyperplane buckets over 120
-    -- reps put 3-4 buckets past it at every shipped SF)
-    kept AS (
-      SELECT bucket FROM buckets
-      GROUP BY bucket HAVING COUNT(*) <= {AUDIO_PAIR_CAP}
-    ),
-    v AS (
-      SELECT b.vec_id, b.bucket, r.fp
-      FROM buckets b JOIN kept USING (bucket) JOIN reps r ON r.rep = b.vec_id
-    ),
-    pairs AS (
-      SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b,
-             CAST(floor(list_cosine_similarity(a.fp, b.fp) * 1000 + 0.5)
-                  AS BIGINT) AS score_q3
-      FROM v a JOIN v b USING (bucket)
-      WHERE a.vec_id < b.vec_id
-        AND CAST(floor(list_cosine_similarity(a.fp, b.fp) * 1000 + 0.5)
-                 AS BIGINT) >= {int(AUDIO_PAIR_T * 1000)}
-    )
-    SELECT id_a, id_b, score_q3 FROM pairs
-    UNION ALL
-    SELECT id_a, id_b, score_q3 FROM star
-    """,
-)
-def audio_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The audio near-dup pair stage under the driver gate (round 13 —
-    closes the lane symmetry: image and video near-dup both had green
-    CORRECTNESS rows, audio was pytest-only): synthesized deterministic
-    fingerprint vectors (each asset carries its vec_id%120 leader's
-    embedding, the ``video_neardup_pairs`` synthesis pattern) through
-    ``multimodal.audio_fingerprint_pairs`` — bit-identical-fingerprint
-    collapse to star edges, hyperplane-LSH bucketing of the 120
-    representatives, the ``max_bucket`` hot-bucket cap (which FIRES at
-    every shipped SF by construction), and exact quantized-cosine
-    verification — against a DuckDB mirror of the same algorithm
-    including the cap's filter placement."""
-    from ..operators.multimodal import audio_fingerprint_pairs
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    leaders = emb.select(
-        F.col("vec_id").alias("lead_id"),
-        F.col("embedding").cast("array<double>").alias("fingerprint"),
-    )
-    fps = (
-        emb.select("vec_id", (F.col("vec_id") % 120).alias("lead_id"))
-        .join(F.broadcast(leaders), "lead_id")
-        .select(F.col("vec_id").alias("asset_id"), "fingerprint")
-    )
-    return audio_fingerprint_pairs(
-        fps,
-        threshold=AUDIO_PAIR_T,
-        n_planes=4,
-        max_bucket=AUDIO_PAIR_CAP,
-    )
 
 
 @register(
@@ -2243,11 +2070,16 @@ def sim_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_SQL = """
+#: IVF geometry shared by every IVF query, its oracle and ann_rrf_fusion:
+#: md5-sampled centroids, and the inverted lists probed per query
+IVF_N_CENTROIDS = 16
+IVF_NPROBE = 4
+
+_IVF_SQL = f"""
     WITH cents AS (
       SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
       FROM embeddings
-      ORDER BY CAST(('0x' || substr(md5('ivf:' || CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000, vec_id LIMIT {n_centroids}
+      ORDER BY CAST(('0x' || substr(md5('ivf:' || CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000, vec_id LIMIT {IVF_N_CENTROIDS}
     ),
     corpus AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
     assign AS (
@@ -2270,7 +2102,7 @@ _IVF_SQL = """
                                * 1000 + 0.5) AS BIGINT) DESC, cents.cid
                ) AS prk
         FROM (SELECT * FROM corpus WHERE vec_id < 10) q CROSS JOIN cents
-      ) WHERE prk <= {nprobe}
+      ) WHERE prk <= {IVF_NPROBE}
     ),
     cand AS (
       SELECT p.query_id, a.vec_id AS neighbor_id,
@@ -2290,7 +2122,7 @@ _IVF_SQL = """
 """
 
 
-@register("sim_topk_ivf", _IVF_SQL.format(n_centroids=16, nprobe=4))
+@register("sim_topk_ivf", _IVF_SQL)
 def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-5: 16 deterministic sample-init centroids,
     4-probe search over the inverted lists (operators/similarity.py)."""
@@ -2299,8 +2131,8 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         emb.filter(F.col("vec_id") < 10),
         k=5,
-        n_centroids=16,
-        nprobe=4,
+        n_centroids=IVF_N_CENTROIDS,
+        nprobe=IVF_NPROBE,
     )
 
 
@@ -2404,7 +2236,7 @@ def sim_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH cents AS (
       SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
       FROM embeddings
-      ORDER BY CAST(('0x' || substr(md5('ivf:' || CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000, vec_id LIMIT 16
+      ORDER BY CAST(('0x' || substr(md5('ivf:' || CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000, vec_id LIMIT {IVF_N_CENTROIDS}
     ),
     corpus AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
     assign AS (
@@ -2427,7 +2259,7 @@ def sim_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
                                * 1000 + 0.5) AS BIGINT) DESC, cents.cid
                ) AS prk
         FROM (SELECT * FROM corpus WHERE vec_id < 10) q CROSS JOIN cents
-      ) WHERE prk <= 4
+      ) WHERE prk <= {IVF_NPROBE}
     ),
     cand AS (
       SELECT p.query_id, a.vec_id AS neighbor_id
@@ -2525,8 +2357,8 @@ def sim_topk_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         emb.filter(F.col("vec_id") < 10),
         k=5,
-        n_centroids=16,
-        nprobe=4,
+        n_centroids=IVF_N_CENTROIDS,
+        nprobe=IVF_NPROBE,
         rerank=SQ8_RERANK,
     )
 
@@ -2571,7 +2403,7 @@ _ADC_DIST = f"""CAST(floor(list_reduce(
 _IVF_PQ_SERVING_SQL = f"""
     WITH cents AS (
       SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
-      FROM embeddings ORDER BY {_IVF_ORD} LIMIT 16
+      FROM embeddings ORDER BY {_IVF_ORD} LIMIT {IVF_N_CENTROIDS}
     ),
     corpus AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
     assign AS (
@@ -2670,7 +2502,7 @@ _IVF_PQ_SERVING_SQL = f"""
 _IVF_PQ_RESIDUAL_SQL = f"""
     WITH cents AS (
       SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
-      FROM embeddings ORDER BY {_IVF_ORD} LIMIT 16
+      FROM embeddings ORDER BY {_IVF_ORD} LIMIT {IVF_N_CENTROIDS}
     ),
     corpus AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
     assign AS (
@@ -2809,7 +2641,9 @@ def ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _ANN_RESIDUAL_MODELS.get(sf_dir)
     if base is None:
         base = tempfile.mkdtemp(prefix="ann_residual_")
-        cents = similarity.ivf_centroids(emb, "vec_id", "embedding", 16)
+        cents = similarity.ivf_centroids(
+            emb, "vec_id", "embedding", IVF_N_CENTROIDS
+        )
         pairs = [
             (int(r["vec_id"]), [float(x) for x in r["embedding"]])
             for r in cents
@@ -2912,7 +2746,9 @@ def ann_ivf_pq_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _ANN_SERVING_MODELS.get(sf_dir)
     if base is None:
         base = tempfile.mkdtemp(prefix="ann_serving_")
-        cents = similarity.ivf_centroids(emb, "vec_id", "embedding", 16)
+        cents = similarity.ivf_centroids(
+            emb, "vec_id", "embedding", IVF_N_CENTROIDS
+        )
         pairs = [
             (int(r["vec_id"]), [float(x) for x in r["embedding"]])
             for r in cents
@@ -3023,7 +2859,9 @@ def ann_append_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_dir = _ANN_APPEND_MODELS.get(sf_dir)
     if base_dir is None:
         base_dir = tempfile.mkdtemp(prefix="ann_append_")
-        cents = similarity.ivf_centroids(emb, "vec_id", "embedding", 16)
+        cents = similarity.ivf_centroids(
+            emb, "vec_id", "embedding", IVF_N_CENTROIDS
+        )
         pairs = [
             (int(r["vec_id"]), [float(x) for x in r["embedding"]])
             for r in cents
@@ -3107,7 +2945,9 @@ def _ann_plain_index(spark: SparkSession, emb, base_dir: str) -> None:
     dead weight built once per process)."""
     from ..operators import model_store
 
-    cents = similarity.ivf_centroids(emb, "vec_id", "embedding", 16)
+    cents = similarity.ivf_centroids(
+        emb, "vec_id", "embedding", IVF_N_CENTROIDS
+    )
     pairs = [
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in cents
@@ -3286,7 +3126,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH brute AS ({_COSINE_TOPK_SQL}),
     lsh AS ({_LSH_TOPK_SQL}),
-    ivf AS ({_IVF_SQL.format(n_centroids=16, nprobe=4)}),
+    ivf AS ({_IVF_SQL}),
     methods AS (
       SELECT 'ivf' AS method, query_id, neighbor_id FROM ivf
       UNION ALL
@@ -3326,8 +3166,8 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < 10),
         k=5,
         n_planes=8,
-        n_centroids=16,
-        nprobe=4,
+        n_centroids=IVF_N_CENTROIDS,
+        nprobe=IVF_NPROBE,
     )
 
 
@@ -3336,7 +3176,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH brute AS ({_COSINE_TOPK_SQL}),
     lsh AS ({_LSH_TOPK_SQL}),
-    ivf AS ({_IVF_SQL.format(n_centroids=16, nprobe=4)}),
+    ivf AS ({_IVF_SQL}),
     methods AS (
       SELECT 'ivf' AS method, query_id, neighbor_id, rk FROM ivf
       UNION ALL
@@ -3386,8 +3226,8 @@ def ann_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < 10),
         k=5,
         n_planes=8,
-        n_centroids=16,
-        nprobe=4,
+        n_centroids=IVF_N_CENTROIDS,
+        nprobe=IVF_NPROBE,
     )
 
 
@@ -3399,7 +3239,7 @@ _NDCG_IDCG_MICRO = 2_948_457  # sum_(i=1..5) floor(1e6/log2(i+1)), k=5
     f"""
     WITH brute AS ({_COSINE_TOPK_SQL}),
     lsh AS ({_LSH_TOPK_SQL}),
-    ivf AS ({_IVF_SQL.format(n_centroids=16, nprobe=4)}),
+    ivf AS ({_IVF_SQL}),
     methods AS (
       SELECT 'ivf' AS method, query_id, neighbor_id, rk FROM ivf
       UNION ALL
@@ -3456,8 +3296,8 @@ def ann_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < 10),
         k=5,
         n_planes=8,
-        n_centroids=16,
-        nprobe=4,
+        n_centroids=IVF_N_CENTROIDS,
+        nprobe=IVF_NPROBE,
     )
 
 
@@ -4033,7 +3873,9 @@ def ann_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.filter(F.col("vec_id") < 10)
     lists = [
         similarity.lsh_multiprobe_topk(emb, probes),
-        similarity.ivf_topk(emb, probes, k=5, n_centroids=16, nprobe=4),
+        similarity.ivf_topk(
+            emb, probes, k=5, n_centroids=IVF_N_CENTROIDS, nprobe=IVF_NPROBE
+        ),
         similarity.sq8_topk(emb, probes, k=5, rerank=SQ8_RERANK),
     ]
     return similarity.rrf_fuse(lists, k_const=60, topk=5)

@@ -479,51 +479,6 @@ def streaming_drift_monitor(
     )
 
 
-def media_keys_ingest(
-    stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    kind: str = "phash",
-    n_mels: int = 16,
-    n_frames: int = 5,
-):
-    """Mixed-media key extraction at the ingest door (round 14 — the
-    ``--media auto`` streaming twin): each arriving micro-batch of
-    assets is sniffed AND keyed in one Arrow pass
-    (``multimodal.media_keys_auto`` — image phash64 / audio mel
-    fingerprint / video frame hashes, off-modality columns NULL,
-    unrecognized payloads quarantined as ``"unknown"``) and written
-    under ``out_dir/epoch=<id>`` with per-epoch OVERWRITE, so an
-    at-least-once replay rewrites its own partition instead of
-    appending duplicates (the ``streaming_neardup_ingest`` /
-    ``zone_epoch_ingest`` idempotence pattern).
-
-    The extraction is map-only with no cross-batch state, so the
-    streamed key set over any partitioning of the assets into
-    micro-batches is IDENTICAL to one batch pass — test-pinned over a
-    mixed image+audio+video+junk stream.  This is the realistic crawl
-    ingest: payloads are keyed once, on arrival, and the per-modality
-    near-dup lanes downstream consume keys, never raw bytes.
-
-    Returns the started StreamingQuery (AvailableNow trigger).
-    """
-    from ..operators.multimodal import media_keys_auto
-
-    def extract(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        media_keys_auto(
-            batch_df, kind=kind, n_mels=n_mels, n_frames=n_frames
-        ).write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
-
-    return (
-        stream.writeStream.foreachBatch(extract)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def zone_epoch_ingest(
     stream: DataFrame,
     zones_dir: str,

@@ -1,149 +1,37 @@
-"""Perceptual image hashing (`operators/imagehash.py`, round 11):
-near-duplicate images (re-encode, resize) must land within a small
-Hamming radius; unrelated structured images far away; the Spark-side
-`image_hashes` column matches the python hash and the JVM
-`bit_count(xor)` distance matches `hamming64`."""
+"""Generic near-duplicate pair operators: the pigeonhole Hamming pair
+generator (``dedup.hamming_pairs``), connected components over its pairs
+(``dedup.cluster_duplicates``) and the LSH-bucketed embedding cosine
+pairs (``similarity.embedding_neardup_pairs``) — the collapse and
+hot-bucket-cap guards and their recall bounds."""
 
 from __future__ import annotations
 
 import sys
 from pathlib import Path
 
-import numpy as np
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from proyecto_gasto_publico_etl_per__spark.operators import (  # noqa: E402
-    imagehash,
-    multimodal,
+from proyecto_gasto_publico_etl_per__spark.operators.dedup import (  # noqa: E402
+    cluster_duplicates,
+    hamming_pairs,
+)
+from proyecto_gasto_publico_etl_per__spark.operators.similarity import (  # noqa: E402
+    embedding_neardup_pairs,
+    hyperplane_buckets,
 )
 
-
-def _scene(seed: int, w: int = 64, h: int = 64) -> np.ndarray:
-    """A structured test image: gradient background + seeded blocks
-    (perceptual hashes are meaningless on pure noise — structure is
-    the contract)."""
-    rng = np.random.default_rng(seed)
-    y, x = np.mgrid[0:h, 0:w]
-    # seeded GLOBAL structure (random-phase low-frequency waves), so
-    # different seeds differ in layout, not just in local detail — a
-    # mean/gradient hash legitimately scores images sharing one fixed
-    # background as near-dups
-    fx, fy = rng.uniform(1.0, 3.0, 2)
-    px, py = rng.uniform(0, 2 * np.pi, 2)
-    base = (
-        np.sin(2 * np.pi * fx * x / w + px)
-        + np.sin(2 * np.pi * fy * y / h + py)
-    )
-    img = np.stack(
-        [
-            (base + 2.0) * 63.0,
-            (np.roll(base, w // 4, axis=1) + 2.0) * 63.0,
-            (np.roll(base, h // 4, axis=0) + 2.0) * 63.0,
-        ],
-        axis=-1,
-    )
-    for _ in range(6):
-        x0, y0 = rng.integers(0, w - 16), rng.integers(0, h - 16)
-        bw, bh = rng.integers(8, 16, 2)
-        img[y0 : y0 + bh, x0 : x0 + bw] = rng.integers(0, 256, 3)
-    return np.clip(img, 0, 255).astype(np.uint8)
+#: the pair columns the 64-bit perceptual-hash callers name their output
+_IMG = {"out_a": "img_a", "out_b": "img_b"}
 
 
-def _png(img: np.ndarray) -> bytes:
-    h, w, ch = img.shape
-    return multimodal._png_encode(w, h, ch, img.tobytes())
-
-
-@pytest.mark.parametrize("kind", ["ahash", "dhash", "phash"])
-def test_hash_is_deterministic_and_signed64(kind):
-    p = _png(_scene(1))
-    a = imagehash.image_phash64(p, kind)
-    assert a == imagehash.image_phash64(p, kind)
-    assert -(1 << 63) <= a < (1 << 63)
-
-
-@pytest.mark.parametrize("kind", ["ahash", "dhash", "phash"])
-def test_near_duplicates_land_close(kind):
-    src = _scene(2)
-    base = imagehash.image_phash64(_png(src), kind)
-    # resize to 75% then decode-rehash: same structure, new raster
-    resized = multimodal.resize_image_real(_png(src), 48, 48)
-    d_resize = imagehash.hamming64(
-        base, imagehash.image_phash64(resized, kind)
-    )
-    assert d_resize <= 10, d_resize
-    # mild brightness shift: structure unchanged
-    brighter = np.clip(src.astype(np.int16) + 12, 0, 255).astype(np.uint8)
-    d_bright = imagehash.hamming64(
-        base, imagehash.image_phash64(_png(brighter), kind)
-    )
-    assert d_bright <= 10, d_bright
-
-
-@pytest.mark.parametrize("kind", ["ahash", "dhash", "phash"])
-def test_unrelated_scenes_land_far(kind):
-    dists = []
-    for s1, s2 in ((3, 4), (5, 6), (7, 8)):
-        a = imagehash.image_phash64(_png(_scene(s1)), kind)
-        b = imagehash.image_phash64(_png(_scene(s2)), kind)
-        dists.append(imagehash.hamming64(a, b))
-    # unrelated structured images: expect ~32; anything >= 16 separates
-    # cleanly from the <= 10 near-dup radius
-    assert min(dists) >= 16, dists
-
-
-def test_unsupported_kind_raises():
-    with pytest.raises(ValueError, match="kind"):
-        imagehash.image_phash64(_png(_scene(1)), "md5")
-
-
-def test_image_hashes_spark_column_and_jvm_distance(spark):
+def test_hamming_pairs_pigeonhole_and_cluster_pipeline(spark):
+    """Pigeonhole pair-gen finds exactly the within-radius pairs (bucket
+    equi-join, no cartesian in the plan), identical negative hashes
+    pair at distance 0, and connected components over the pairs group
+    the near cohort while a far hash keeps its own id."""
     from pyspark.sql import functions as F
-
-    src, near = _scene(9), _scene(10)
-    rows = [
-        (1, "image", bytearray(_png(src)), {}),
-        (2, "image", bytearray(multimodal.resize_image_real(_png(src), 48, 48)), {}),
-        (3, "image", bytearray(_png(near)), {}),
-        (4, "audio", bytearray(b"not an image"), {}),
-        (5, "image", bytearray(b"II*\x00corrupt tiff"), {}),  # quarantined
-    ]
-    assets = spark.createDataFrame(rows, multimodal.ASSET_SCHEMA)
-    got = {
-        r["asset_id"]: r["phash64"]
-        for r in multimodal.image_hashes(assets, "phash").collect()
-    }
-    assert got[1] == imagehash.image_phash64(bytes(rows[0][2]), "phash")
-    assert got[4] is None and got[5] is None  # non-image + quarantine
-    # JVM bit_count(xor) == python hamming64
-    jvm = (
-        spark.range(1)
-        .select(
-            F.bit_count(
-                F.lit(got[1]).bitwiseXOR(F.lit(got[2]))
-            ).alias("d")
-        )
-        .collect()[0]["d"]
-    )
-    assert jvm == imagehash.hamming64(got[1], got[2])
-    assert jvm <= 10  # the near-dup radius through the Spark path
-    assert imagehash.hamming64(got[1], got[3]) >= 16
-
-
-def test_phash_pairs_pigeonhole_and_cluster_pipeline(spark):
-    """The Spark near-dup pipeline: pigeonhole pair-gen finds exactly
-    the within-radius pairs (bucket equi-join, no cartesian in the
-    plan), and image_neardup_clusters groups variants of the same
-    scene while singletons keep their own id."""
-    from pyspark.sql import functions as F
-
-    from proyecto_gasto_publico_etl_per__spark.operators.imagehash import (
-        image_neardup_clusters,
-        phash_pairs,
-    )
 
     # hashes with known distances: 10/11 differ by 2 bits, 12 by 1 bit
     # from 10, 20/21 identical, 30 far from everything
@@ -156,7 +44,7 @@ def test_phash_pairs_pigeonhole_and_cluster_pipeline(spark):
         (30, (1 << 55) - 1),
     ]
     hashes = spark.createDataFrame(rows, "asset_id long, phash64 long")
-    pairs = phash_pairs(hashes, max_hamming=3)
+    pairs = hamming_pairs(hashes, "asset_id", "phash64", 3, bits=64, **_IMG)
     got = {
         (r["img_a"], r["img_b"]): r["hamming"] for r in pairs.collect()
     }
@@ -170,26 +58,22 @@ def test_phash_pairs_pigeonhole_and_cluster_pipeline(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
-    # end-to-end on real payloads: same scene re-rastered clusters
-    src = _scene(20)
-    assets = spark.createDataFrame(
-        [
-            (1, "image", bytearray(_png(src)), {}),
-            (2, "image", bytearray(
-                multimodal.resize_image_real(_png(src), 64, 64)
-            ), {}),
-            (3, "image", bytearray(_png(_scene(21))), {}),
-            (4, "image", bytearray(b"II*\x00junk"), {}),  # quarantined
-        ],
-        multimodal.ASSET_SCHEMA,
-    )
+    # components over the pairs, singletons labelled by their own id
+    clustered = cluster_duplicates(pairs, id_a="img_a", id_b="img_b")
     out = {
         r["asset_id"]: r["cluster_id"]
-        for r in image_neardup_clusters(assets, max_hamming=3).collect()
+        for r in hashes.join(
+            clustered, hashes.asset_id == clustered.doc_id, "left"
+        )
+        .select(
+            "asset_id",
+            F.coalesce(F.col("cluster_id"), F.col("asset_id")).alias(
+                "cluster_id"
+            ),
+        )
+        .collect()
     }
-    assert out[1] == out[2] == 1  # the re-raster joins its source
-    assert out[3] == 3  # unrelated scene stays a singleton
-    assert 4 not in out  # quarantined rows carry no hash
+    assert out == {10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 30: 30}
 
 
 def test_hamming_pairs_degenerate_corpus_stays_linear(spark):
@@ -197,15 +81,11 @@ def test_hamming_pairs_degenerate_corpus_stays_linear(spark):
     letterboxed crawl segment) must NOT go quadratic.  Collapse
     semantics: 9 999 star edges from the min-id rep, not ~50M clique
     pairs — and the near-dup neighbor attaches at rep level only."""
-    from proyecto_gasto_publico_etl_per__spark.operators.imagehash import (
-        phash_pairs,
-    )
-
     const_hash = -(1 << 61) + 12345
     rows = [(i, const_hash) for i in range(10_000)]
     rows.append((20_000, const_hash ^ 0b11))  # distance-2 neighbor
     hashes = spark.createDataFrame(rows, "asset_id long, phash64 long")
-    pairs = phash_pairs(hashes, max_hamming=3)
+    pairs = hamming_pairs(hashes, "asset_id", "phash64", 3, bits=64, **_IMG)
     assert pairs.count() == 10_000  # 9 999 star + 1 rep-level cross
     got = pairs.where("hamming > 0").collect()
     assert [(r.img_a, r.img_b, r.hamming) for r in got] == [
@@ -222,14 +102,10 @@ def test_hamming_pairs_radius_zero_is_exact_dup_stars(spark):
     """max_hamming=0 (one 64-bit chunk — the mask must not overflow
     BIGINT) degenerates to exact-duplicate grouping: star edges only,
     no cross pairs."""
-    from proyecto_gasto_publico_etl_per__spark.operators.imagehash import (
-        phash_pairs,
-    )
-
     rows = [(1, 42), (2, 42), (3, 42), (4, -7), (5, -7), (6, 99)]
-    pairs = phash_pairs(
+    pairs = hamming_pairs(
         spark.createDataFrame(rows, "asset_id long, phash64 long"),
-        max_hamming=0,
+        "asset_id", "phash64", 0, bits=64, **_IMG,
     )
     got = {(r.img_a, r.img_b, r.hamming) for r in pairs.collect()}
     assert got == {(1, 2, 0), (1, 3, 0), (4, 5, 0)}
@@ -238,10 +114,6 @@ def test_hamming_pairs_radius_zero_is_exact_dup_stars(spark):
 def test_hamming_pairs_rejects_streaming_input(spark):
     """Batch-only contract: the collapse window and bucket self-join
     have no streaming plan — a stream must go through foreachBatch."""
-    from proyecto_gasto_publico_etl_per__spark.operators.dedup import (
-        hamming_pairs,
-    )
-
     stream = spark.readStream.format("rate").load()
     with pytest.raises(ValueError, match="batch-only"):
         hamming_pairs(stream, "value", "value", 3, 64)
@@ -260,10 +132,6 @@ def test_hamming_pairs_hot_bucket_cap_logs_and_bounds(spark, caplog):
         logging.INFO,
         logger="proyecto_gasto_publico_etl_per__spark.operators.dedup",
     )
-    from proyecto_gasto_publico_etl_per__spark.operators.dedup import (
-        hamming_pairs,
-    )
-
     # 64-bit / radius 3 → 16-bit chunks.  All rows share chunk 0
     # (=0xBEEF); ids 0/1 also share chunks 1-3 (distance 2 pair);
     # the rest differ everywhere above chunk 0.
@@ -271,15 +139,14 @@ def test_hamming_pairs_hot_bucket_cap_logs_and_bounds(spark, caplog):
     rows = [(0, (0xAAAA0000 << 16) | base), (1, (0xAAAA0003 << 16) | base)]
     rows += [(i, ((0x1000 + i * 7) << 16) | base) for i in range(2, 40)]
     hashes = spark.createDataFrame(rows, "asset_id long, phash64 long")
-    from proyecto_gasto_publico_etl_per__spark.operators.imagehash import (
-        phash_pairs,
+    uncapped = hamming_pairs(
+        hashes, "asset_id", "phash64", 3, bits=64, max_bucket=None, **_IMG
     )
-
-    uncapped = phash_pairs(hashes, max_hamming=3, max_bucket=None)
     got_all = {(r.img_a, r.img_b) for r in uncapped.collect()}
     assert (0, 1) in got_all
-    capped = phash_pairs(
-        hashes, max_hamming=3, max_bucket=10, log_capped=True
+    capped = hamming_pairs(
+        hashes, "asset_id", "phash64", 3, bits=64,
+        max_bucket=10, log_capped=True, **_IMG,
     )
     got_capped = {(r.img_a, r.img_b) for r in capped.collect()}
     out = caplog.text
@@ -294,8 +161,8 @@ def test_hamming_pairs_hot_bucket_cap_logs_and_bounds(spark, caplog):
 
 
 def _spread(g: int) -> int:
-    """Group base with non-overlapping shifted copies (the scaling
-    probe's construction): cross-group distance = 3·bit_count(g1^g2)."""
+    """Group base with non-overlapping shifted copies: cross-group
+    distance = 3·bit_count(g1^g2)."""
     return (g << 40) ^ (g << 20) ^ (g << 4)
 
 
@@ -326,10 +193,6 @@ def test_collapse_pairs_preserve_components_property(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from proyecto_gasto_publico_etl_per__spark.operators.imagehash import (
-        phash_pairs,
-    )
-
     masks = st.sampled_from([0, 0, 0, 1, 3, 7, 255, 1 << 20, (1 << 20) | 1])
     hv = st.tuples(st.integers(0, 5), masks).map(
         lambda t: _spread(t[0]) ^ t[1]
@@ -345,11 +208,11 @@ def test_collapse_pairs_preserve_components_property(spark):
         ids = list(range(len(hvs)))
         got = {
             (r.img_a, r.img_b, r.hamming)
-            for r in phash_pairs(
+            for r in hamming_pairs(
                 spark.createDataFrame(
                     list(zip(ids, hvs)), "asset_id long, phash64 long"
                 ),
-                max_hamming=3,
+                "asset_id", "phash64", 3, bits=64, **_IMG,
             ).collect()
         }
         # python mirror of the collapse contract
@@ -393,10 +256,6 @@ def test_hamming_cap_recall_bound_property(spark):
     docstring), and capping never invents pairs."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
-
-    from proyecto_gasto_publico_etl_per__spark.operators.dedup import (
-        hamming_pairs,
-    )
 
     M64 = (1 << 64) - 1
 
@@ -499,100 +358,117 @@ def test_hamming_cap_recall_bound_property(spark):
     run()
 
 
-def test_cli_media_hash_and_dedup(spark, tmp_path, capsys):
-    """media-hash → media-dedup through the CLI: persisted hash column
-    with per-row quarantine counts, then clusters over the parquet."""
-    from proyecto_gasto_publico_etl_per__spark import cli
+def test_embedding_neardup_hot_bucket_cap(spark, caplog):
+    """The r12 LSH cap: near-identical (but not bit-equal) vectors all
+    land in one hyperplane bucket — the low-rank hazard
+    hyperplane_buckets documents.  Past max_bucket the bucket drops
+    from candidate generation with a logged accounting (bounded recall
+    trade — INFO on the operator logger since round 13); None keeps the
+    exact test-scale semantics the declared oracles pin."""
+    import logging
 
-    src = _scene(30)
-    assets_dir = str(tmp_path / "assets")
-    spark.createDataFrame(
-        [
-            (1, "image", bytearray(_png(src)), {}),
-            (2, "image", bytearray(
-                multimodal.resize_image_real(_png(src), 48, 48)
-            ), {}),
-            (3, "image", bytearray(_png(_scene(31))), {}),
-            (4, "image", bytearray(b"BMjunk"), {}),  # quarantined
-        ],
-        multimodal.ASSET_SCHEMA,
-    ).write.parquet(assets_dir)
-
-    hdir = str(tmp_path / "hashes")
-    cli.main(["media-hash", assets_dir, hdir])
-    out = capsys.readouterr().out
-    assert "hashed 3/4 assets (phash)" in out and "1 quarantined" in out
-    got = {
-        r["asset_id"]: r["phash64"]
-        for r in spark.read.parquet(hdir).collect()
-    }
-    assert got[1] == imagehash.image_phash64(_png(src), "phash")
-    assert got[4] is None
-
-    cdir = str(tmp_path / "clusters")
-    cli.main(["media-dedup", assets_dir, cdir])
-    out = capsys.readouterr().out
-    assert "clustered 3 hashed assets into 2 groups" in out
-    clusters = {
-        r["asset_id"]: r["cluster_id"]
-        for r in spark.read.parquet(cdir).collect()
-    }
-    assert clusters[1] == clusters[2] == 1
-    assert clusters[3] == 3
-
-
-def test_image_hash_at_ingest_streamed_equals_batch(spark, tmp_path):
-    """Perceptual hashing composes with streaming ingest (the
-    ann/dsir/drift at-ingest pattern): image assets arriving in
-    micro-batches hash inside foreachBatch, and the streamed hash set
-    is identical to batch-hashing the same assets — the map-only plan
-    has no cross-batch state to drift."""
-    rows = []
-    for i in range(4):
-        rows.append((i, "image", bytearray(_png(_scene(40 + i))), {}))
-    rows.append((9, "image", bytearray(b"BMjunk"), {}))  # quarantined
-
-    src = tmp_path / "src"
-    src.mkdir()
-    schema_ddl = (
-        "asset_id LONG, media_type STRING, payload BINARY, "
-        "meta MAP<STRING, STRING>"
+    caplog.set_level(
+        logging.INFO,
+        logger="proyecto_gasto_publico_etl_per__spark.operators.similarity",
     )
-    spark.createDataFrame(rows[:2], multimodal.ASSET_SCHEMA).coalesce(
-        1
-    ).write.parquet(str(src / "b1"))
-    spark.createDataFrame(rows[2:], multimodal.ASSET_SCHEMA).coalesce(
-        1
-    ).write.parquet(str(src / "b2"))
-    out_dir = str(tmp_path / "hashes")
-
-    def hash_batch(batch_df, _epoch):
-        multimodal.image_hashes(batch_df, "phash").select(
-            "asset_id", "phash64"
-        ).write.mode("append").parquet(out_dir)
-
-    q = (
-        spark.readStream.schema(schema_ddl)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-        .writeStream.foreachBatch(hash_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    # one direction, tiny per-row jitter: same sign pattern under any
+    # hyperplane, cosine ~1
+    rows = [
+        (i, [1.0 + i * 1e-6, 2.0, -1.0, 0.5]) for i in range(30)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    uncapped = embedding_neardup_pairs(df, threshold=0.9, n_planes=4)
+    assert uncapped.count() == 30 * 29 // 2
+    capped = embedding_neardup_pairs(
+        df, threshold=0.9, n_planes=4, max_bucket=10, log_capped=True
     )
-    q.awaitTermination(180)
+    assert capped.count() == 0  # the single hot bucket was dropped
+    out = caplog.text
+    assert "capped 1 hot LSH bucket(s) over 10 vectors" in out
+    assert "largest 30" in out
 
-    streamed = {
-        (r.asset_id, r.phash64)
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    batch = {
-        (r.asset_id, r.phash64)
-        for r in multimodal.image_hashes(
-            spark.createDataFrame(rows, multimodal.ASSET_SCHEMA), "phash"
+
+def test_embedding_lsh_cap_recall_bound_property(spark):
+    """The LSH cap's recall bound, property-pinned the way round 13
+    pinned ``hamming_pairs`` (above): over corpora
+    mixing several direction cohorts so the cap fires PARTIALLY — some
+    buckets hot, some not — (1) the uncapped pair set is exactly the
+    same-direction pairs (cross-direction candidates sharing a sign
+    pattern are rejected by the exact-cosine verify), (2) capping only
+    removes pairs, (3) the capped set is exactly the uncapped pairs
+    whose one shared bucket stayed at or under ``max_bucket`` — a pair
+    is missed ONLY if its single shared bucket was hot, the
+    embedding_neardup_pairs docstring's bound stated directly.
+
+    Vectors are ±one-hot with per-coordinate jitter ≤ 1e-3, so the
+    hyperplane sign pattern cannot flip (|⟨v, plane⟩| ≥ 1 − 3e-3) and
+    every cosine sits far from the 0.9 threshold's quantization grid
+    (same direction ≈ 1, cross direction ≈ 0 or −1)."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    member = st.tuples(
+        st.integers(0, 7),  # direction: ±e_d over 4 dims
+        st.integers(0, 999),  # jitter seed
+    )
+
+    @settings(
+        max_examples=6,
+        deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    @given(
+        members=st.lists(member, min_size=2, max_size=24),
+        cap=st.sampled_from([1, 2, 4]),
+    )
+    def run(members, cap):
+        rows = []
+        for i, (direction, seed) in enumerate(members):
+            d, sign = direction % 4, 1.0 if direction < 4 else -1.0
+            vec = [((seed * (j + 1)) % 7) * 1e-4 for j in range(4)]
+            vec[d] += sign
+            rows.append((i, direction, vec))
+        df = spark.createDataFrame(
+            [(i, v) for i, _, v in rows],
+            "vec_id long, embedding array<double>",
         )
-        .select("asset_id", "phash64")
-        .collect()
-    }
-    assert streamed == batch
-    assert (9, None) in streamed  # quarantine identical across modes
+
+        def pairs(max_bucket):
+            return {
+                (r.id_a, r.id_b)
+                for r in embedding_neardup_pairs(
+                    df, threshold=0.9, n_planes=4, max_bucket=max_bucket
+                ).collect()
+            }
+
+        uncapped, capped = pairs(None), pairs(cap)
+        same_direction = {
+            (a, b)
+            for a in range(len(rows))
+            for b in range(a + 1, len(rows))
+            if rows[a][1] == rows[b][1]
+        }
+        assert uncapped == same_direction
+        # bucket ground truth from the operator's own bucketing pass
+        # (its determinism is pinned elsewhere); the cap counts FULL
+        # bucket occupancy, so an unrelated cohort sharing a sign
+        # pattern can push a small cohort's bucket over the cap
+        bucket_of = {
+            r.doc: r.bucket
+            for r in hyperplane_buckets(
+                df, "vec_id", "embedding", n_planes=4
+            ).collect()
+        }
+        size = {}
+        for b in bucket_of.values():
+            size[b] = size.get(b, 0) + 1
+        assert capped <= uncapped
+        assert capped == {
+            (a, b) for a, b in uncapped if size[bucket_of[a]] <= cap
+        }
+        for a, b in uncapped - capped:
+            assert bucket_of[a] == bucket_of[b]
+            assert size[bucket_of[a]] > cap
+
+    run()
+

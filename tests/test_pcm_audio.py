@@ -322,49 +322,6 @@ def test_decode_audio_dispatches_wav_through_full_parser():
         assert d["n_channels"] == 1 and len(d["samples"]) == 4
 
 
-def test_audio_fingerprints_column_feeds_similarity(spark):
-    """audio_fingerprints: array<double> column per audio asset, NULL
-    quarantine, and the vectors are usable by the similarity operators
-    (exact cosine top-1 pairs the same tone across formats)."""
-    from pyspark.sql import functions as F
-
-    t = np.arange(4096) / 8000.0
-    tone_a = (np.sin(2 * np.pi * 440.0 * t) * 20000).astype(int).tolist()
-    tone_b = (np.sin(2 * np.pi * 2000.0 * t) * 20000).astype(int).tolist()
-    wav_a = aiff_write(tone_a)  # same signal, two containers
-    au_a = au_write(
-        b"".join(struct.pack(">h", s) for s in tone_a), enc=3
-    )
-    au_b = au_write(
-        b"".join(struct.pack(">h", s) for s in tone_b), enc=3
-    )
-    assets = spark.createDataFrame(
-        [
-            (1, "audio", bytearray(wav_a), {}),
-            (2, "audio", bytearray(au_a), {}),
-            (3, "audio", bytearray(au_b), {}),
-            (4, "image", bytearray(b"not audio"), {}),
-            (5, "audio", bytearray(b"FORMxxxxAIFFtrunc"), {}),
-        ],
-        multimodal.ASSET_SCHEMA,
-    )
-    got = {
-        r["asset_id"]: r["fingerprint"]
-        for r in multimodal.audio_fingerprints(assets, n_mels=8).collect()
-    }
-    assert got[4] is None and got[5] is None
-    assert len(got[1]) == 16
-    # identical signal through AIFF and AU: identical fingerprints
-    assert got[1] == got[2]
-    # cosine similarity separates same-tone from different-tone
-    def cos(a, b):
-        a, b = np.array(a), np.array(b)
-        return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-
-    assert cos(got[1], got[2]) > 0.999
-    assert cos(got[1], got[3]) < cos(got[1], got[2])
-
-
 def test_second_review_fixes_locked():
     """Late-r11 review findings, locked: denormal/negative AIFF rates
     and zero channels are corrupt; a vendor EXTENSIBLE GUID sharing

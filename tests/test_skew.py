@@ -213,3 +213,56 @@ def test_pin_rejects_unknown_mode(spark, monkeypatch):
     _pin_env(monkeypatch, "bogus")
     with _pytest.raises(ValueError, match="SPARK_GRAFT_PIN_MODE"):
         skew.pin(spark.range(3))
+
+
+_RELEASE_AFTER_STOP = """
+import json
+from pyspark.sql import SparkSession
+from proyecto_gasto_publico_etl_per__spark.operators import skew
+
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "512m")
+    .getOrCreate()
+)
+skew.pin(spark.range(0, 10), eager=True)
+skew.broadcast_if_bounded(spark.range(0, 5))
+spark.stop()
+first = skew.release_pinned()
+print(json.dumps({
+    "released": first,
+    "again": skew.release_pinned(),
+    "pinned": len(skew._PINNED),
+    "ckpt_pinned": len(skew._CKPT_PINNED),
+}))
+"""
+
+
+def test_release_pinned_after_stop_is_a_no_op_on_the_jvm():
+    """A long-lived caller may stop its session before the query-boundary
+    release runs.  release_pinned() must then return the number of
+    frames it dropped, raise nothing, and leave both registries empty —
+    the stopped context's block manager would otherwise fail the
+    unpersist.  Runs in a child process: stopping the suite's shared
+    session would break every later test."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from proyecto_gasto_publico_etl_per__spark.operators import skew
+
+    env = {k: v for k, v in os.environ.items() if k != skew.PIN_MODE_ENV}
+    out = subprocess.run(
+        [sys.executable, "-c", _RELEASE_AFTER_STOP],
+        cwd=Path(__file__).resolve().parent.parent,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got == {"released": 2, "again": 0, "pinned": 0, "ckpt_pinned": 0}

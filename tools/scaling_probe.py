@@ -132,135 +132,6 @@ def build_replicated(
     )
 
 
-def _synthetic_hashes(spark, n: int):
-    """Deterministic 64-bit perceptual-hash stand-in with entropy in
-    EVERY 16-bit pigeonhole chunk (round 12 — the media near-dup probe
-    sweeps HASH CARDINALITY, not decode cost).  Groups of 10 ids share
-    a base built from three non-overlapping shifted copies of the group
-    key (bits 4-19, 20-35, 40-55), so cross-group distance is
-    3·bit_count(g1^g2) — within radius 3 iff the groups differ in
-    exactly one bit (≈16 rep neighbors per group, output linear in n).
-    Within a group, roles flip 0-3 low bits: identical members (star
-    edges), near members at distance 1/2/3, and a far member at 8."""
-    from proyecto_gasto_publico_etl_per__spark.plans.extension_queries import (
-        SYNTH_ROLE_CASE,
-    )
-
-    role_case = SYNTH_ROLE_CASE.format(col="id")
-    return spark.range(n).select(
-        F.col("id").alias("asset_id"),
-        F.expr(
-            "shiftleft(id div 10, 40) ^ shiftleft(id div 10, 20) ^ "
-            f"shiftleft(id div 10, 4) ^ CAST({role_case} AS BIGINT)"
-        ).alias("phash64"),
-    )
-
-
-def media_neardup_probe(spark, k: int, n_base: int = 200_000) -> None:
-    """Wall-clock scaling exponents for the pigeonhole media near-dup
-    lane over synthetic hashes (VERDICT r12 task 3; r13 task 2 widened
-    the sweep).  Production knobs throughout (max_bucket default,
-    radius 3).
-
-    K is the TOP multiplier of a geometric ×3 ladder (k=27 → 1, 3, 9,
-    27): at 2-5 s absolute walls the ~2.3 s scheduling floor dominates
-    a single 3× leg, so the probe reports the per-leg exponent of
-    EVERY rung plus a least-squares slope over the whole ladder — the
-    top leg (where walls are tens of seconds) is the number to trust,
-    and a top-leg/fit disagreement with the bottom leg is the floor's
-    signature, not super-linearity."""
-    from proyecto_gasto_publico_etl_per__spark.operators.dedup import (
-        cluster_duplicates,
-    )
-    from proyecto_gasto_publico_etl_per__spark.operators.imagehash import (
-        phash_pairs,
-    )
-
-    from pyspark.sql import functions as SF
-
-    from proyecto_gasto_publico_etl_per__spark.operators.videohash import (
-        video_pairs,
-    )
-
-    def video_frame_table(df):
-        """Reshape the synthetic hashes into video keys: 5 consecutive
-        frame hashes per video (vid = asset_id div 5) — sweeps the
-        VIDEO lane's explode → pair → per-pair aggregate shape at the
-        same hash cardinality."""
-        return (
-            df.groupBy(SF.expr("asset_id div 5").alias("asset_id"))
-            .agg(SF.collect_list("phash64").alias("frame_hashes"))
-            .localCheckpoint()
-        )
-
-    probes = {
-        "media_neardup_pairs": lambda df: phash_pairs(
-            df, max_hamming=3
-        ).count(),
-        "media_neardup_clusters": lambda df: cluster_duplicates(
-            phash_pairs(df, max_hamming=3), id_a="img_a", id_b="img_b"
-        ).count(),
-        "video_neardup_pairs": lambda df: video_pairs(
-            video_frame_table(df), min_matches=2
-        ).count(),
-    }
-    if k < 2:
-        raise SystemExit(
-            "scaling probe needs k >= 2: a single-rung ladder has no "
-            "leg to fit an exponent over (log-log fit denominator is "
-            "zero at k=1)"
-        )
-    ladder = [1]
-    while ladder[-1] * 3 <= k:
-        ladder.append(ladder[-1] * 3)
-    if ladder[-1] != k:
-        ladder.append(k)
-    import gc
-
-    for name, run in probes.items():
-        times = {}
-        for mult in ladder:
-            # drop the previous leg's checkpoint blocks before sizing
-            # up: a 27x ladder otherwise accumulates every leg's (and
-            # every video reshape's) localCheckpoint in the one-JVM
-            # storage pool and starves execution memory (r13 OOM)
-            gc.collect()
-            df = _synthetic_hashes(spark, n_base * mult).localCheckpoint()
-            run(df)  # warm (codegen, broadcast decisions)
-            runs = []
-            for _ in range(2):
-                t0 = time.monotonic()
-                run(df)
-                runs.append(time.monotonic() - t0)
-            times[mult] = min(runs)
-            df.unpersist()
-        legs = {
-            f"exp_{a}x_{b}x": round(
-                math.log(times[b] / times[a]) / math.log(b / a), 3
-            )
-            for a, b in zip(ladder, ladder[1:])
-        }
-        # least-squares slope of log t vs log n over the whole ladder
-        xs = [math.log(m) for m in ladder]
-        ys = [math.log(times[m]) for m in ladder]
-        mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
-        denom = sum((x - mx) ** 2 for x in xs)
-        fit = sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / denom
-        print(
-            json.dumps(
-                {
-                    "query": name,
-                    "t_sec": {f"{m}x": round(times[m], 2) for m in ladder},
-                    **legs,
-                    "exp_fit": round(fit, 3),
-                    "exp_top": legs[f"exp_{ladder[-2]}x_{ladder[-1]}x"],
-                    "n_base": n_base,
-                }
-            ),
-            flush=True,
-        )
-
-
 def _ladder_of(k: int) -> list[int]:
     """Geometric ×3 ladder up to K (shared by the query and text-index
     lanes): a single leg at 2-5 s walls is scheduling-floor-dominated;
@@ -508,9 +379,6 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     names = sys.argv[3:] or DEFAULT_QUERIES
-    if names == ["media-neardup"]:
-        media_neardup_probe(get_spark(), k)
-        return
     if names == ["delete-ladder"]:
         delete_ladder_probe(get_spark(), sf_dir, k)
         return
