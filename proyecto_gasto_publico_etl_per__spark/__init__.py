@@ -20,11 +20,10 @@ Everything is DataFrame API + Spark SQL; Catalyst/AQE does the physical
 planning.  One declared query runs Python per row: ``multimodal_extract``
 (Arrow-batched ``mapInPandas`` over binary payloads, ``operators/multimodal.py``;
 ``tools/plan_audit.py`` allowlists it and gates every other query as
-UDF-free).  Outside the query registry pandas runs in two more places: the
-stateful streaming sessionizer (``streaming/stateful.py``,
-``applyInPandasWithState``) and the parquet footer reader that builds the
-stats manifest (``sources/manifest.py``, ``mapInPandas`` over file paths,
-one row per file, run before the pruned scan is planned).
+UDF-free).  Outside the query registry pandas runs in one place: the
+parquet footer reader that builds the stats manifest
+(``sources/manifest.py``, ``mapInPandas`` over file paths, one row per
+file, run before the pruned scan is planned).
 """
 
 __version__ = "0.1.0"

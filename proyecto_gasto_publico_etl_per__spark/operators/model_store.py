@@ -1,9 +1,9 @@
 """Tiny model-artifact persistence for the training loops.
 
-The engine's trained models are deliberately driver-sized (BPE merge
-lists, logreg weight vectors, IVF centroids — KBs), but a 100 TB
-pipeline still needs them durable and versioned between stages: train
-once, score many runs, resume after restarts.  Rather than pickle (no
+The engine's trained models are deliberately driver-sized (logreg
+weight vectors, DSIR log-ratios, IVF centroids, PQ codebooks — KBs),
+but a 100 TB pipeline still needs them durable and versioned between
+stages: train once, score many runs, resume after restarts.  Rather than pickle (no
 cross-version story) or JSON sidecar files (outside the warehouse's
 storage layer), models persist as single-row parquet through the same
 SparkSession that runs the pipeline — the zone discipline the corpus
@@ -38,7 +38,7 @@ def load_model(
     spark: SparkSession, path: str, kind: str | None = None
 ) -> tuple[Any, int]:
     """Load (payload, version); optionally assert the artifact kind so a
-    BPE path handed to a logreg scorer fails loudly, not numerically."""
+    codebook path handed to a logreg scorer fails loudly, not numerically."""
     rows = spark.read.parquet(path).collect()
     if len(rows) != 1:
         raise ValueError(f"model store at {path!r} has {len(rows)} rows")
@@ -48,15 +48,6 @@ def load_model(
             f"model at {path!r} is kind={row.kind!r}, expected {kind!r}"
         )
     return json.loads(row.payload), row.version
-
-
-def save_bpe(spark: SparkSession, path: str, merges: list[tuple[str, str]]):
-    save_model(spark, path, "bpe_merges", [list(m) for m in merges])
-
-
-def load_bpe(spark: SparkSession, path: str) -> list[tuple[str, str]]:
-    payload, _ = load_model(spark, path, "bpe_merges")
-    return [tuple(m) for m in payload]
 
 
 def save_logreg(

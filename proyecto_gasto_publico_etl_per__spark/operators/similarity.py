@@ -2230,6 +2230,14 @@ def ivf_sq8_topk(
     )
 
 
+def ndcg_ideal_micro(k: int) -> int:
+    """Ideal DCG of ``k`` all-relevant slots on the nDCG micro grid:
+    the sum of ``floor(1e6 / log2(rank+1))`` over ranks 1..k."""
+    return sum(
+        math.floor(1_000_000 / math.log2(i + 1)) for i in range(1, k + 1)
+    )
+
+
 def ann_ndcg(
     corpus: DataFrame,
     queries: DataFrame,
@@ -2251,9 +2259,7 @@ def ann_ndcg(
     are order-free), and the ideal DCG is the closed-form constant for
     k all-relevant slots — the final ndcg is one double division.
     """
-    idcg_micro = sum(
-        math.floor(1_000_000 / math.log2(i + 1)) for i in range(1, k + 1)
-    )
+    idcg_micro = ndcg_ideal_micro(k)
     truth_keys = brute_force_topk(corpus, queries, id_col, vec_col, k).select(
         "query_id", "neighbor_id"
     )

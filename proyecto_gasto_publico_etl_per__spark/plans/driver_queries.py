@@ -1322,14 +1322,12 @@ def sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def trend_sector_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-sector OLS spending trend (devengado micros per month-index)
-    — ``operators/trend.group_trend``'s shape made cross-engine
-    EXACT: sufficient statistics are integer sums (month index is
-    centered to 1990 so Σt·y stays under the long bound under ANSI),
-    slope/intercept divide those exact longs in double, where IEEE
-    gives both engines bit-identical results.  r² is omitted here: its
-    Σy² term would need 128-bit sums (see trend.group_trend for the
-    double-math version)."""
+    """Per-sector OLS spending trend (devengado micros per month-index),
+    cross-engine EXACT: sufficient statistics are integer sums (month
+    index is centered to 1990 so Σt·y stays under the long bound under
+    ANSI), slope/intercept divide those exact longs in double, where
+    IEEE gives both engines bit-identical results.  r² is omitted: its
+    Σy² term would need 128-bit sums."""
     star = build_star(spark, sf_dir)
     t = ((F.col("anio") - 1990) * 12 + F.col("mes")).cast("long")
     monthly = star.groupBy(

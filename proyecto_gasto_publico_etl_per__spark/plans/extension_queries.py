@@ -1821,7 +1821,11 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- similarity search -------------------------------------------------------
 
-_COSINE_TOPK_SQL = """
+#: neighbors returned per probe by every ANN builder, its oracle's
+#: ``rk <= ANN_K`` cut and the rank-metric evals
+ANN_K = 5
+
+_COSINE_TOPK_SQL = f"""
     WITH q AS (
       SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
       FROM embeddings WHERE vec_id < 10
@@ -1841,7 +1845,7 @@ _COSINE_TOPK_SQL = """
              ) AS INT) AS rk
       FROM scored
     )
-    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= 5
+    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= {ANN_K}
 """
 
 
@@ -1962,7 +1966,9 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for a 10-vector probe set."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.brute_force_topk(emb, emb.filter(F.col("vec_id") < 10))
+    return similarity.brute_force_topk(
+        emb, emb.filter(F.col("vec_id") < 10), k=ANN_K
+    )
 
 
 _BUCKETS_SQL = """
@@ -2015,7 +2021,7 @@ _LSH_TOPK_SQL = f"""
              ) AS INT) AS rk
       FROM scored
     )
-    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= 5
+    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= {ANN_K}
     """
 
 
@@ -2023,7 +2029,7 @@ _LSH_TOPK_SQL = f"""
 def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate top-5 (8 deterministic hyperplanes)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.lsh_topk(emb, emb.filter(F.col("vec_id") < 10))
+    return similarity.lsh_topk(emb, emb.filter(F.col("vec_id") < 10), k=ANN_K)
 
 
 @register(
@@ -2055,7 +2061,7 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
              ) AS INT) AS rk
       FROM scored
     )
-    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= 5
+    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= {ANN_K}
     """,
 )
 def sim_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2066,7 +2072,7 @@ def sim_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows (n_planes+1)×."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.lsh_multiprobe_topk(
-        emb, emb.filter(F.col("vec_id") < 10)
+        emb, emb.filter(F.col("vec_id") < 10), k=ANN_K
     )
 
 
@@ -2118,7 +2124,7 @@ _IVF_SQL = f"""
              ) AS INT) AS rk
       FROM cand
     )
-    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= 5
+    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= {ANN_K}
 """
 
 
@@ -2130,7 +2136,7 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_topk(
         emb,
         emb.filter(F.col("vec_id") < 10),
-        k=5,
+        k=ANN_K,
         n_centroids=IVF_N_CENTROIDS,
         nprobe=IVF_NPROBE,
     )
@@ -2215,7 +2221,7 @@ SQ8_RERANK = 4
              ) AS INT) AS rk
       FROM exact
     )
-    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= 5
+    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= {ANN_K}
     """,
 )
 def sim_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2226,7 +2232,7 @@ def sim_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-ranks (operators/similarity.sq8_topk)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.sq8_topk(
-        emb, emb.filter(F.col("vec_id") < 10), k=5, rerank=SQ8_RERANK
+        emb, emb.filter(F.col("vec_id") < 10), k=ANN_K, rerank=SQ8_RERANK
     )
 
 
@@ -2336,7 +2342,7 @@ def sim_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
              ) AS INT) AS rk
       FROM exact
     )
-    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= 5
+    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= {ANN_K}
     """,
 )
 def sim_topk_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2356,7 +2362,7 @@ def sim_topk_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_sq8_topk(
         emb,
         emb.filter(F.col("vec_id") < 10),
-        k=5,
+        k=ANN_K,
         n_centroids=IVF_N_CENTROIDS,
         nprobe=IVF_NPROBE,
         rerank=SQ8_RERANK,
@@ -2488,7 +2494,7 @@ _IVF_PQ_SERVING_SQL = f"""
              ) AS INT) AS rk
       FROM exact
     )
-    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= 5
+    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= {ANN_K}
 """
 
 #: the residual-encoded IVF-PQ oracle (round 9): same pipeline as
@@ -2602,7 +2608,7 @@ _IVF_PQ_RESIDUAL_SQL = f"""
              ) AS INT) AS rk
       FROM exact
     )
-    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= 5
+    SELECT query_id, neighbor_id, score_q3, rk FROM ranked WHERE rk <= {ANN_K}
 """
 
 
@@ -2692,7 +2698,7 @@ def ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_pq_search(
         emb,
         emb.filter(F.col("vec_id") < 10),
-        k=5,
+        k=ANN_K,
         nprobe=_PQ_NPROBE,
         m=manifest["m"],
         n_codes=manifest["n_codes"],
@@ -2775,7 +2781,7 @@ def ann_ivf_pq_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         ladder = similarity.measure_recall_ladder(
             emb,
             emb.filter(F.col("vec_id") < 10),
-            k=5,
+            k=ANN_K,
             nprobes=(2, 4, 8, 16),
             m=_PQ_M,
             n_codes=16,
@@ -2818,7 +2824,7 @@ def ann_ivf_pq_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_pq_search(
         emb,
         emb.filter(F.col("vec_id") < 10),
-        k=5,
+        k=ANN_K,
         nprobe=_PQ_NPROBE,
         m=_PQ_M,
         n_codes=16,
@@ -2901,7 +2907,7 @@ def ann_append_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_pq_search(
         emb,
         emb.filter(F.col("vec_id") < 10),
-        k=5,
+        k=ANN_K,
         nprobe=_PQ_NPROBE,
         m=_PQ_M,
         n_codes=16,
@@ -2994,7 +3000,7 @@ def _ann_serve_from(spark: SparkSession, emb, base: str) -> DataFrame:
     return similarity.ivf_pq_search(
         emb,
         emb.filter(F.col("vec_id") < 10),
-        k=5,
+        k=ANN_K,
         nprobe=_PQ_NPROBE,
         m=_PQ_M,
         n_codes=16,
@@ -3085,7 +3091,7 @@ def ann_compacted_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "hard_negative_mining",
-    """
+    f"""
     WITH q AS (
       SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv, label AS qlabel
       FROM embeddings WHERE vec_id < 10
@@ -3110,7 +3116,7 @@ def ann_compacted_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM scored
     )
     SELECT query_id, neighbor_id, nlabel, score_q3, rk
-    FROM ranked WHERE rk <= 5
+    FROM ranked WHERE rk <= {ANN_K}
     """,
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3118,7 +3124,9 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors with a DIFFERENT label (operators/similarity.hard_negatives)
     — the contrastive-training mining step."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.hard_negatives(emb, emb.filter(F.col("vec_id") < 10))
+    return similarity.hard_negatives(
+        emb, emb.filter(F.col("vec_id") < 10), k=ANN_K
+    )
 
 
 @register(
@@ -3164,7 +3172,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ann_recall(
         emb,
         emb.filter(F.col("vec_id") < 10),
-        k=5,
+        k=ANN_K,
         n_planes=8,
         n_centroids=IVF_N_CENTROIDS,
         nprobe=IVF_NPROBE,
@@ -3224,14 +3232,14 @@ def ann_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ann_rank_quality(
         emb,
         emb.filter(F.col("vec_id") < 10),
-        k=5,
+        k=ANN_K,
         n_planes=8,
         n_centroids=IVF_N_CENTROIDS,
         nprobe=IVF_NPROBE,
     )
 
 
-_NDCG_IDCG_MICRO = 2_948_457  # sum_(i=1..5) floor(1e6/log2(i+1)), k=5
+_NDCG_IDCG_MICRO = similarity.ndcg_ideal_micro(ANN_K)
 
 
 @register(
@@ -3294,7 +3302,7 @@ def ann_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ann_ndcg(
         emb,
         emb.filter(F.col("vec_id") < 10),
-        k=5,
+        k=ANN_K,
         n_planes=8,
         n_centroids=IVF_N_CENTROIDS,
         nprobe=IVF_NPROBE,
@@ -3846,7 +3854,7 @@ def _rrf_oracle() -> str:
       SELECT *, row_number() OVER (PARTITION BY query_id
                                    ORDER BY rrf_score DESC, neighbor_id) AS rk
       FROM fused
-    ) WHERE rk <= 5
+    ) WHERE rk <= {ANN_K}
     """
 
 
@@ -3872,13 +3880,13 @@ def ann_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probes = emb.filter(F.col("vec_id") < 10)
     lists = [
-        similarity.lsh_multiprobe_topk(emb, probes),
+        similarity.lsh_multiprobe_topk(emb, probes, k=ANN_K),
         similarity.ivf_topk(
-            emb, probes, k=5, n_centroids=IVF_N_CENTROIDS, nprobe=IVF_NPROBE
+            emb, probes, k=ANN_K, n_centroids=IVF_N_CENTROIDS, nprobe=IVF_NPROBE
         ),
-        similarity.sq8_topk(emb, probes, k=5, rerank=SQ8_RERANK),
+        similarity.sq8_topk(emb, probes, k=ANN_K, rerank=SQ8_RERANK),
     ]
-    return similarity.rrf_fuse(lists, k_const=60, topk=5)
+    return similarity.rrf_fuse(lists, k_const=60, topk=ANN_K)
 
 
 #: the hybrid entry's single probe: its dense ranking comes from the
@@ -3913,7 +3921,7 @@ def _hybrid_oracle() -> str:
     FROM (
       SELECT *, row_number() OVER (ORDER BY rrf_score DESC, doc_id) AS rk
       FROM fused
-    ) WHERE rk <= 5
+    ) WHERE rk <= {ANN_K}
     """
 
 
@@ -3961,7 +3969,7 @@ def hybrid_retrieval_topk(
         .select("query_id", F.col("neighbor_id").alias("doc_id"), "rk")
     )
     fused = similarity.rrf_fuse(
-        [lex, dense], k_const=60, topk=5, id_col="doc_id"
+        [lex, dense], k_const=60, topk=ANN_K, id_col="doc_id"
     )
     return fused.select("doc_id", "rrf_score", "n_lists", "rk")
 
@@ -4487,7 +4495,7 @@ _MANIFEST_TABLES: dict[str, str] = {}
 def _manifest_table(spark: SparkSession, sf_dir: str) -> str:
     """Build-once-per-process: orders projected to (ym, price micros,
     o_orderkey), range-clustered into 8 files on ym (each file covers
-    a narrow month window — `maintenance.cluster_by`'s layout), with a
+    a narrow month window — a range-clustered layout), with a
     file-stats manifest collected over ym.  The state a maintained
     warehouse table sits in: clustered data + catalog stats."""
     root = _MANIFEST_TABLES.get(sf_dir)
@@ -4545,8 +4553,8 @@ def manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the driver's hash gate.  At 100 TB this is THE scan lever:
     partition pruning without partition directories — a month query
     over a year-clustered petabyte fact schedules 1/12th of the tasks
-    and opens 1/12th of the footers, composing with `cluster_by` /
-    `cluster_by_zorder` layouts and shrinking further as files narrow.
+    and opens 1/12th of the footers, composing with range-clustered
+    layouts and shrinking further as files narrow.
     A stale manifest (data file it doesn't know) refuses loudly rather
     than silently dropping rows (test-pinned)."""
     from ..sources import manifest as mf

@@ -26,7 +26,8 @@ fact's new grain rows, and never rewrites a stored file.  A dim gains at
 most one file per load that brings new keys; a fact year partition gains
 files only when the load brings new grain rows for that year (one per
 writing task, one at monthly-delta size).  A replay writes nothing.
-``sources.maintenance.compact_parquet`` folds the accumulated small files.
+Nothing compacts those files: a fact year partition's file count grows
+with every load that adds rows to it.
 
 Scale: the fact is partitioned by ``anio`` so every year-filtered query
 prunes partitions; dims stay broadcast-sized; the fact's wide shuffles in

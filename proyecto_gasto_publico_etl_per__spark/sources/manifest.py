@@ -1,7 +1,7 @@
 """File-statistics manifest + pruned scans: data skipping made explicit.
 
-`maintenance.cluster_by` / `cluster_by_zorder` lay a table out so each
-file covers a narrow range of the cluster columns; Spark's parquet
+A range-clustered layout (``repartitionByRange`` + ``sortWithinPartitions``)
+makes each file cover a narrow range of the cluster columns; Spark's parquet
 reader then skips ROW GROUPS via footer min/max once a file is open.
 What that leaves on the table at 100 TB is the listing-and-footer bill
 itself: a range query over one month of a year-clustered fact still

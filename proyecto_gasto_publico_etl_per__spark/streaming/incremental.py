@@ -320,14 +320,11 @@ def session_window_agg(
     """Gap-based sessionization via the NATIVE ``session_window``
     aggregate — Catalyst's merging-session-window exec, fully JVM-side.
 
-    The third sessionize in the engine, by execution strategy:
+    The engine's two sessionizers, by execution strategy:
 
     1. ``sessionize`` (declared query): two window functions + groupBy —
        batch-only, oracle-checkable in plain SQL.
-    2. ``stateful_sessionize``: ``applyInPandasWithState`` — streaming
-       with custom per-key state, the template for arbitrary stateful
-       logic.
-    3. this — the built-in operator: one shuffle on the key, sessions
+    2. this — the built-in operator: one shuffle on the key, sessions
        merged by the dedicated exec node, and the SAME code runs batch
        or streaming (pass ``watermark`` on a stream; required there for
        state eviction).
@@ -337,8 +334,8 @@ def session_window_agg(
     adjacent windows; the query's ``new_session`` fires only on
     ``gap_us > gap``).
 
-    At 100 TB: state/shuffle is one (key, open-session) pair per key —
-    the same bound as the hand-built state store path, without Python.
+    At 100 TB: state/shuffle is one (key, open-session) pair per key,
+    without Python.
     """
     ev = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     if watermark is not None:

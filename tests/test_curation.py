@@ -495,7 +495,7 @@ def test_dsir_train_score_roundtrip(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        model_store.load_bpe(spark, path)
+        model_store.load_logreg(spark, path)
 
 
 def test_dsir_weight_pure_python_identity(spark):

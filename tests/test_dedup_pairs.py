@@ -472,3 +472,21 @@ def test_embedding_lsh_cap_recall_bound_property(spark):
 
     run()
 
+
+
+def test_band_signatures_partition_invariant(spark):
+    """MinHash band signatures must not depend on physical partitioning
+    (min is associative; the band md5 is over a sorted slice) — the
+    property that makes the streaming bucket table consistent with any
+    batch recomputation."""
+    from proyecto_gasto_publico_etl_per__spark.operators.dedup import (
+        band_signatures,
+    )
+
+    rows = [(i, f"doc {i} body text with shared words {i%3}") for i in range(20)]
+    df1 = spark.createDataFrame(rows, "doc_id LONG, text STRING").repartition(1)
+    df8 = spark.createDataFrame(rows, "doc_id LONG, text STRING").repartition(8)
+    sig = lambda df: {  # noqa: E731
+        (r.doc, r.band): r.band_sig for r in band_signatures(df).collect()
+    }
+    assert sig(df1) == sig(df8)

@@ -794,66 +794,6 @@ def test_expression_heavy_queries_fully_codegen(spark):
                 spark.conf.set(k, v)
 
 
-def test_approx_distinct_within_rsd_bound(spark):
-    from pyspark.sql import functions as F
-
-    from proyecto_gasto_publico_etl_per__spark.operators import approx
-    from proyecto_gasto_publico_etl_per__spark.sources.tables import load_table
-
-    orders = load_table(spark, SF_SMOKE, "orders").withColumn(
-        "anio", F.year("o_orderdate")
-    )
-    est = {
-        r.anio: r.approx_distinct
-        for r in approx.approx_distinct(
-            orders, ["anio"], "o_custkey", rsd=0.02
-        ).collect()
-    }
-    exact = {
-        r.anio: r.n
-        for r in orders.groupBy("anio")
-        .agg(F.countDistinct("o_custkey").alias("n"))
-        .collect()
-    }
-    assert set(est) == set(exact)
-    for anio, n in exact.items():
-        # 5 sigma of the configured 2% rsd
-        assert abs(est[anio] - n) <= max(2, 0.10 * n)
-
-
-def test_approx_percentiles_within_rank_error(spark):
-    from pyspark.sql import functions as F
-
-    from proyecto_gasto_publico_etl_per__spark.operators import approx
-    from proyecto_gasto_publico_etl_per__spark.sources.tables import load_table
-
-    orders = load_table(spark, SF_SMOKE, "orders").select(
-        F.year("o_orderdate").alias("anio"), "o_totalprice"
-    )
-    res = {
-        r.anio: (r.p50, r.p95)
-        for r in approx.approx_percentiles(
-            orders, ["anio"], "o_totalprice", (0.5, 0.95), accuracy=10_000
-        ).collect()
-    }
-    groups = {r.anio: r.vals for r in orders.groupBy("anio")
-              .agg(F.sort_array(F.collect_list("o_totalprice")).alias("vals"))
-              .collect()}
-    for anio, vals in groups.items():
-        n = len(vals)
-        p50, p95 = res[anio]
-        # rank error bound: position of returned value within n/accuracy
-        # of the target rank (percentile_approx returns a real data value)
-        import bisect
-
-        for p, got in ((0.5, p50), (0.95, p95)):
-            lo = bisect.bisect_left(vals, got)
-            hi = bisect.bisect_right(vals, got)
-            target = p * n
-            slack = n / 10_000 + 1
-            assert lo - slack <= target <= hi + slack, (anio, p, got)
-
-
 def test_chunk_documents_windows(spark):
     from proyecto_gasto_publico_etl_per__spark.operators import chunking
 
@@ -1112,6 +1052,22 @@ def test_pq_codebook_persistence(spark, tmp_path):
     p = str(tmp_path / "pq")
     model_store.save_pq_codebook(spark, p, cb)
     assert model_store.load_pq_codebook(spark, p) == cb
+
+
+def test_model_store_roundtrip(spark, tmp_path):
+    from proyecto_gasto_publico_etl_per__spark.operators import model_store
+
+    merges = [("e", "s"), ("es", "t"), ("l", "o")]
+    p = str(tmp_path / "merges_model")
+    model_store.save_model(spark, p, "merges", [list(m) for m in merges])
+
+    with pytest.raises(ValueError, match="kind"):
+        model_store.load_model(spark, p, "logreg")
+
+    lp = str(tmp_path / "lr_model")
+    model_store.save_logreg(spark, lp, [0.5, -1.25], 0.75, ["f0", "f1"])
+    w, b, feats = model_store.load_logreg(spark, lp)
+    assert (w, b, feats) == ([0.5, -1.25], 0.75, ["f0", "f1"])
 
 
 def test_pq_codebook_geometry_guards(spark):
@@ -1801,48 +1757,6 @@ def test_chi2_source_drift_partitioning_invariant(spark):
     one = textstats.chi2_source_drift(df.coalesce(1), top_v=10).collect()
     many = textstats.chi2_source_drift(df.repartition(13), top_v=10).collect()
     assert sorted(map(tuple, one)) == sorted(map(tuple, many))
-
-
-def test_cms_bounds_and_merge(spark):
-    """Count-min contract: never an underestimate, overestimate bounded,
-    and sketches from split loads merge by summing counters."""
-    from collections import Counter
-
-    from proyecto_gasto_publico_etl_per__spark.operators import approx
-
-    # zipf-ish stream: token t{r} appears ~600/(r+1) times
-    rows = [(f"t{r}",) for r in range(30) for _ in range(600 // (r + 1))]
-    exact = Counter(v for v, in rows)
-    n_total = len(rows)
-    df = spark.createDataFrame(rows, "tok STRING")
-    sketch = approx.cms_build(df, "tok", depth=4, width=256)
-    items = spark.createDataFrame([(t,) for t in exact], "tok STRING")
-    est = {
-        r["tok"]: r["est"]
-        for r in approx.cms_estimate(
-            sketch, items, "tok", depth=4, width=256
-        ).collect()
-    }
-    for t, true in exact.items():
-        assert est[t] >= true  # CMS never underestimates
-        assert est[t] <= true + 4 * n_total // 256  # classic eps*N bound
-
-    # mergeability: sketch(A) + sketch(B) == sketch(A ∪ B), exactly
-    half = len(rows) // 2
-    a = approx.cms_build(
-        spark.createDataFrame(rows[:half], "tok STRING"), "tok", 4, 256
-    )
-    b = approx.cms_build(
-        spark.createDataFrame(rows[half:], "tok STRING"), "tok", 4, 256
-    )
-    merged = (
-        a.unionByName(b)
-        .groupBy("j", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, sketch.collect())
-    )
 
 
 def test_chi2_source_drift_zero_for_identical_distributions(spark):

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import tempfile
+from datetime import datetime, timedelta
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -1110,3 +1111,64 @@ def test_ann_delete_ingest_streamed_equals_batch(spark, tmp_path):
     )
     q2.awaitTermination(180)
     assert serve(streamed_base) == got
+
+
+def _mins(m: float) -> datetime:
+    return datetime(2024, 1, 1, 8, 0, 0) + timedelta(minutes=m)
+
+
+def test_dedup_ingest_two_layers(spark, tmp_path):
+    """dedup_ingest: an arriving corpus drop collapses in-stream
+    duplicates (same content, different ids, different micro-batches)
+    AND drops anything already in the static corpus — novel docs pass."""
+    from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
+        dedup_ingest,
+    )
+
+    doc_schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("ingest_ts", T.TimestampType()),
+        ]
+    )
+    existing = spark.createDataFrame(
+        [(1, "already in the corpus")], "doc_id LONG, text STRING"
+    )
+    src = tmp_path / "drops"
+    batches = [
+        [
+            (100, "brand new document", _mins(0)),
+            (101, "already in the corpus", _mins(1)),  # dup of history
+        ],
+        [
+            (102, "brand  new   document", _mins(2)),  # in-stream dup
+            #      (whitespace-normalized to batch-0's text)
+            (103, "another novel one", _mins(3)),
+        ],
+    ]
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, doc_schema).coalesce(1).write.parquet(
+            str(src / f"b{i}")
+        )
+    stream = (
+        spark.readStream.schema(doc_schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/*")
+    )
+    name = f"ingest_{abs(hash(str(src))) % 10**8}"
+    q = (
+        dedup_ingest(stream, existing)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    kept = {
+        r.doc_id for r in spark.sql(f"SELECT * FROM {name}").collect()
+    }
+    assert 100 in kept and 103 in kept  # novel docs pass
+    assert 101 not in kept  # duplicate of the static corpus
+    assert 102 not in kept  # in-stream duplicate within the watermark
