@@ -26,6 +26,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from proyecto_gasto_publico_etl_per__spark.operators.skew import (  # noqa: E402
+    pin_mode,
     release_pinned,
 )
 from proyecto_gasto_publico_etl_per__spark.plans.driver_queries import (  # noqa: E402
@@ -276,10 +277,12 @@ def merge_floors(
     return merged
 
 
-def _env_versions() -> dict[str, str]:
-    """Stamp engine versions into the artifact: bench numbers are only
-    comparable round-over-round when the runtime didn't change under us
-    (the r2→r3 pyspark upgrade broke comparability invisibly)."""
+def _run_env(spark) -> dict[str, str | int]:
+    """Stamp the run's environment into the artifact: bench numbers are
+    only comparable round-over-round when the runtime didn't change
+    under us (the r2→r3 pyspark upgrade broke comparability invisibly),
+    and a run explains itself only with the host CPUs, master, shuffle
+    partitions and pin mode it ran under."""
     import platform
 
     import pyspark
@@ -287,6 +290,12 @@ def _env_versions() -> dict[str, str]:
     return {
         "python": platform.python_version(),
         "pyspark": pyspark.__version__,
+        "cpus": len(os.sched_getaffinity(0)),
+        "master": spark.sparkContext.master,
+        "shuffle_partitions": int(
+            spark.conf.get("spark.sql.shuffle.partitions")
+        ),
+        "pin_mode": pin_mode(),
     }
 
 
@@ -372,6 +381,7 @@ def main() -> None:
             file=sys.stderr,
         )
 
+    env = _run_env(spark)
     detail = {
         "metric": "total_headline_sec",
         "value": round(sum(timings.values()), 4),
@@ -388,7 +398,7 @@ def main() -> None:
         "extension_regressions": regressions,
         "headline_regressions": headline_regressions,
         "sf": sf,
-        "env": _env_versions(),
+        "env": env,
     }
     detail_path = Path(
         os.environ.get(
@@ -405,7 +415,7 @@ def main() -> None:
         "queries": timings,
         "extension_total_sec": detail["extension_total_sec"],
         "sf": sf,
-        "env": _env_versions(),
+        "env": env,
         "detail": detail_path.name,
     }
 

@@ -18,7 +18,9 @@
   their ``nprobe`` nearest inverted lists.
 
 All cosine math is double-precision, presented on an integer grid
-(``score_q``) so thresholds and rank order are engine-reproducible.
+(``_sql_score_q``) so thresholds and rank order are engine-reproducible.
+Every vector expression is one SQL fragment (see the one-form block
+below).
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ import warnings
 from collections.abc import Sequence
 from functools import lru_cache
 
-from pyspark.sql import Column, DataFrame, Row, Window
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from ..sources import zones
@@ -40,51 +42,21 @@ from .skew import pin
 log = logging.getLogger(__name__)
 
 
-def _as_double(vec: Column) -> Column:
-    return F.transform(vec, lambda x: x.cast("double"))
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Raw cosine similarity of two float vectors (double math)."""
-    ad, bd = _as_double(a), _as_double(b)
-    return _dot(ad, bd) / (_norm(ad) * _norm(bd))
-
-
-def score_q(a: Column, b: Column, scale: int = 1000) -> Column:
-    """Cosine quantized to an integer grid (floor(cos*scale + 0.5)).
-
-    floor() of a double is exact in every engine, unlike round(), whose
-    half-up implementations differ — so thresholds, ranks, and outputs
-    built on this are engine-reproducible (double noise ~1e-15 sits ten
-    orders below the 1/scale quantum).
-    """
-    return F.floor(cosine(a, b) * scale + F.lit(0.5)).cast("bigint")
-
-
-# --- SQL-fragment twins of the vector expression builders ---------------------
+# --- One expression form -----------------------------------------------------
 #
-# Plan-build latency is a real serving cost (round-15 measurement: the
-# Column-API construction of an ivf_pq_search plan is ~2000 Py4J round
-# trips ≈ 1s of socket latency per query, ~half its bench wall).  Each
-# builder below renders the IDENTICAL expression as one SQL string so a
-# whole scoring column parses in ONE Py4J call; Spark's parser builds
-# the same operator tree (same IEEE ops in the same fold order), so
-# values are bit-identical — gated by the unchanged oracles and the
-# lane's pytest pins.  Keep every fragment token-for-token in sync with
-# its Column twin above/below; any new scoring expression should get
-# both forms only when it sits on a measured serving path.
+# Every vector expression in this module is defined once, as a SQL
+# fragment string; a caller that needs a Column wraps the fragment in
+# ``F.expr``.  A fragment costs one Py4J parse however deep it is (the
+# Column API pays one JVM call per node), and Spark's parser builds the
+# same Catalyst tree the Column API would — same IEEE ops in the same
+# fold order — so a second form could add nothing but drift.
+# ``tests/test_similarity_one_form.py`` keeps the higher-order Column
+# builders out of this file.
+
+
+def _q(col: str) -> str:
+    """Backtick-quote a column name for embedding in a SQL fragment."""
+    return f"`{col}`"
 
 
 def _sql_as_double(v: str) -> str:
@@ -103,11 +75,19 @@ def _sql_norm(a: str) -> str:
 
 
 def _sql_cosine(a: str, b: str) -> str:
+    """Raw cosine similarity of two float vectors (double math)."""
     ad, bd = _sql_as_double(a), _sql_as_double(b)
     return f"({_sql_dot(ad, bd)} / ({_sql_norm(ad)} * {_sql_norm(bd)}))"
 
 
 def _sql_score_q(a: str, b: str, scale: int = 1000) -> str:
+    """Cosine quantized to an integer grid (floor(cos*scale + 0.5)).
+
+    floor() of a double is exact in every engine, unlike round(), whose
+    half-up implementations differ — so thresholds, ranks, and outputs
+    built on this are engine-reproducible (double noise ~1e-15 sits ten
+    orders below the 1/scale quantum).
+    """
     return (
         f"CAST(floor({_sql_cosine(a, b)} * {scale} + 0.5D) AS BIGINT)"
     )
@@ -213,51 +193,36 @@ def hyperplane_buckets(
     1-char substring compare instead of an interpreted
     md5+conv+substring per (row, plane, dim) — dims × n_planes md5
     evaluations per corpus ROW removed (guide §1.2 step 2 / §4.2: hoist
-    data-independent work out of the per-row path).  Dot products, fold
-    order, and NULL semantics are bit-identical to the former
-    expression: ``x * (+1.0/-1.0)`` is the same IEEE op in the same
-    order, an empty or NULL vector still yields a NULL dot (no bit
-    set), and dims beyond the mask raise instead of silently flipping
-    weights (the former path had no dim limit).
+    data-independent work out of the per-row path).  ``x * (+1.0/-1.0)``
+    is the same IEEE op in the same fold order as the md5 form, an empty
+    or NULL vector still yields a NULL dot (no bit set), and dims beyond
+    the mask raise instead of silently flipping weights.  The whole
+    bucket — every plane's term — is ONE SQL fragment, so building it
+    costs one Py4J parse at any plane count.
     """
     df = fan_out(df)
-    v = _as_double(F.col("vec"))
-    size_v = F.size(F.col("vec"))
-    bucket = F.lit(0).cast("bigint")
-    for p in range(n_planes):
-        m = F.lit(_plane_mask(p))
-        dot_fast = F.aggregate(
-            F.zip_with(
-                v,
-                F.sequence(F.lit(0), size_v - 1),
-                lambda x, d: x
-                * F.when(m.substr(d + 1, F.lit(1)) == "1", 1.0).otherwise(
-                    -1.0
-                ),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        # the sequence() shape reproduces the former empty/NULL-vector
-        # semantics unchanged (NULL dot → no bit set); only the
-        # beyond-mask case needs an explicit loud guard.  (A per-row
-        # inline-md5 FALLBACK branch was tried for the round-15 advice
-        # and rejected by measurement: carrying both branch trees made
-        # the bucket pass ~50% slower for every masked-width row —
-        # the capability gap is closed by the 4096-dim mask instead.)
-        dot_p = F.when(
-            size_v > _PLANE_MAX_DIMS,
-            F.raise_error(
-                F.lit(
-                    "hyperplane_buckets: vector dims exceed "
-                    f"_PLANE_MAX_DIMS={_PLANE_MAX_DIMS}; raise the constant"
-                )
-            ).cast("double"),
-        ).otherwise(dot_fast)
-        bucket = bucket + F.when(dot_p >= 0, F.lit(1 << p)).otherwise(F.lit(0))
+    v = _sql_as_double("vec")
+    # the sequence() shape gives an empty/NULL vector a NULL dot (no bit
+    # set); only the beyond-mask case needs an explicit loud guard.  (A
+    # per-row inline-md5 FALLBACK branch was tried for the round-15
+    # advice and rejected by measurement: carrying both branch trees made
+    # the bucket pass ~50% slower for every masked-width row — the
+    # capability gap is closed by the 4096-dim mask instead.)
+    too_wide = (
+        f"CAST(raise_error('hyperplane_buckets: vector dims exceed "
+        f"_PLANE_MAX_DIMS={_PLANE_MAX_DIMS}; raise the constant') AS DOUBLE)"
+    )
+    terms = [
+        f"CASE WHEN (CASE WHEN size(vec) > {_PLANE_MAX_DIMS} THEN {too_wide}"
+        f" ELSE aggregate(zip_with({v}, sequence(0, size(vec) - 1), (x, d) ->"
+        f" x * CASE WHEN substr('{_plane_mask(p)}', d + 1, 1) = '1'"
+        " THEN 1.0D ELSE -1.0D END), 0.0D, (acc, x) -> acc + x) END) >= 0"
+        f" THEN {1 << p} ELSE 0 END"
+        for p in range(n_planes)
+    ]
     return df.select(
         F.col(id_col).alias("doc"), F.col(vec_col).alias("vec")
-    ).withColumn("bucket", bucket)
+    ).withColumn("bucket", F.expr(" + ".join(["CAST(0 AS BIGINT)", *terms])))
 
 
 def lsh_topk(
@@ -367,32 +332,13 @@ def ivf_centroids(
     )
 
 
-def _centroid_literal(
-    cents: Sequence[Row], id_col: str, vec_col: str
-) -> Column:
-    """The centroid set as one literal array<struct<cid,cvec>> column, so
-    assignment below is whole-stage-codegen map work with no join at all.
-    Built as ONE parsed expression (see ``_dlit_array`` — per-element
-    F.lit chains cost seconds of driver-side plan build)."""
-    return _centroid_expr(
-        [(int(r[id_col]), [float(x) for x in r[vec_col]]) for r in cents]
-    )
-
-
-def _centroid_literal_sql(
-    cents: Sequence[Row], id_col: str, vec_col: str
-) -> str:
-    """``_centroid_literal`` as a SQL fragment, for the one-parse
-    consumers (ivf_assign/ivf_probe/residualize string paths)."""
-    return _centroid_sql(
-        [(int(r[id_col]), [float(x) for x in r[vec_col]]) for r in cents]
-    )
-
-
-def _centroid_sql(pairs: list[tuple[int, list[float]]]) -> str:
-    """The centroid set as a SQL array-of-struct literal FRAGMENT — the
-    one-parse form every string-built consumer embeds (see the
-    SQL-fragment block above)."""
+def centroid_sql(pairs: Sequence[tuple[int, Sequence[float]]]) -> str:
+    """(cid, vector) pairs — the hash-sampled set or a ``kmeans_refine``
+    result — as the literal ``array<struct<cid,cvec>>`` SQL fragment
+    that ``ivf_assign``/``ivf_probe``/``residualize`` embed: assignment
+    is then whole-stage-codegen map work with no join at all, and the
+    literal is ONE parsed expression (per-element ``F.lit`` chains cost
+    seconds of driver-side plan build)."""
     entries = ",".join(
         "named_struct('cid',{cid}L,'cvec',array({vec}))".format(
             cid=int(cid),
@@ -403,121 +349,78 @@ def _centroid_sql(pairs: list[tuple[int, list[float]]]) -> str:
     return f"array({entries})"
 
 
-def _centroid_expr(pairs: list[tuple[int, list[float]]]) -> Column:
-    return F.expr(_centroid_sql(pairs))
-
-
-def _cent_as_sql(cent: "Column | str") -> str | None:
-    """The SQL fragment for a centroid argument, or ``None`` when the
-    caller passed a prebuilt Column (legacy path — kept for external
-    callers that compose the literal themselves)."""
-    return cent if isinstance(cent, str) else None
-
-
-def _q(col: str) -> str:
-    """Backtick-quote a column name for embedding in a SQL fragment."""
-    return f"`{col}`"
+def _ivf_centroid_sql(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_centroids: int,
+    centroids: Sequence[tuple[int, Sequence[float]]] | None,
+) -> str:
+    """``centroid_sql`` of the caller's trained ``centroids``, or of the
+    hash-sampled ``ivf_centroids`` default when there are none."""
+    if centroids is None:
+        centroids = [
+            (r[id_col], r[vec_col])
+            for r in ivf_centroids(corpus, id_col, vec_col, n_centroids)
+        ]
+    return centroid_sql(centroids)
 
 
 def ivf_assign(
     df: DataFrame,
-    cent_lit: "Column | str",
+    cent_sql: str,
     vec_col: str,
     out: str = "cid",
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (max quantized cosine,
     ties to the lowest centroid id).  Map-only: argmax over the literal
-    centroid array — the inverted-list build never shuffles the corpus.
-
-    ``cent_lit`` may be the SQL fragment from ``_centroid_sql`` (one
-    Py4J parse for the whole assignment column — the serving-latency
-    form) or a prebuilt Column (legacy)."""
-    df = fan_out(df)
-    cent_sql = _cent_as_sql(cent_lit)
-    if cent_sql is not None:
-        score = _sql_score_q(_q(vec_col), "c.cvec")
-        return df.withColumn(
-            out,
-            F.expr(
-                f"CAST(-(array_max(transform({cent_sql}, c -> "
-                f"struct({score} AS s, -c.cid AS ncid)))).ncid AS INT)"
-            ),
-        )
-    scored = F.transform(
-        cent_lit,
-        lambda c: F.struct(
-            score_q(F.col(vec_col), c.cvec).alias("s"),
-            (-c.cid).alias("ncid"),
+    centroid array (``cent_sql``, a ``centroid_sql`` fragment) — the
+    inverted-list build never shuffles the corpus."""
+    score = _sql_score_q(_q(vec_col), "c.cvec")
+    return fan_out(df).withColumn(
+        out,
+        F.expr(
+            f"CAST(-(array_max(transform({cent_sql}, c -> "
+            f"struct({score} AS s, -c.cid AS ncid)))).ncid AS INT)"
         ),
     )
-    best = F.array_max(scored)
-    return df.withColumn(out, (-best["ncid"]).cast("int"))
 
 
 def ivf_probe(
     df: DataFrame,
-    cent_lit: "Column | str",
+    cent_sql: str,
     vec_col: str,
     nprobe: int,
     out: str = "cid",
 ) -> DataFrame:
     """Explode each query row into its ``nprobe`` nearest centroid ids
-    (score desc, centroid id asc on ties).  ``cent_lit`` as in
+    (score desc, centroid id asc on ties).  ``cent_sql`` as in
     ``ivf_assign``."""
-    cent_sql = _cent_as_sql(cent_lit)
-    if cent_sql is not None:
-        score = _sql_score_q(_q(vec_col), "c.cvec")
-        return df.withColumn(
-            out,
-            F.explode(
-                F.expr(
-                    f"transform(slice(array_sort(transform({cent_sql}, "
-                    f"c -> struct(-{score} AS ns, c.cid AS cid))), 1, "
-                    f"{int(nprobe)}), p -> p.cid)"
-                )
-            ),
-        )
-    scored = F.transform(
-        cent_lit,
-        lambda c: F.struct(
-            (-score_q(F.col(vec_col), c.cvec)).alias("ns"),
-            c.cid.alias("cid"),
+    score = _sql_score_q(_q(vec_col), "c.cvec")
+    return df.withColumn(
+        out,
+        F.explode(
+            F.expr(
+                f"transform(slice(array_sort(transform({cent_sql}, "
+                f"c -> struct(-{score} AS ns, c.cid AS cid))), 1, "
+                f"{int(nprobe)}), p -> p.cid)"
+            )
         ),
     )
-    probes = F.slice(F.array_sort(scored), 1, nprobe)
-    return df.withColumn(
-        out, F.explode(F.transform(probes, lambda p: p["cid"]))
-    )
-
-
-def centroid_literal_pairs(pairs: list[tuple[int, list[float]]]) -> Column:
-    """(cid, vector) pairs — e.g. a ``kmeans_refine`` result — as the
-    literal centroid array ``ivf_assign``/``ivf_probe`` consume (one
-    parsed expression, see ``_dlit_array``)."""
-    return _centroid_expr(pairs)
-
-
-def _centroid_vec_for(cent_lit: Column, cid_col: Column) -> Column:
-    """The centroid vector for a cid column, looked up INSIDE the
-    literal centroid array — whole-stage-codegen map work, no join.
-    The literal is tiny (n_centroids structs), so the linear
-    ``F.filter`` scan per row is a handful of comparisons."""
-    return F.element_at(
-        F.filter(cent_lit, lambda c: c["cid"] == cid_col.cast("long")), 1
-    )["cvec"]
 
 
 def residualize(
     df: DataFrame,
-    cent_lit: "Column | str",
+    cent_sql: str,
     vec_col: str,
     cid_col: str = "cid",
     out: str = "rvec",
 ) -> DataFrame:
     """Attach the coarse-quantizer residual ``x − centroid(cid)`` as
-    ``out`` (array<double>).  Map-only: the centroid rides along as a
-    literal, so residualizing a 100 TB corpus is part of the same
-    single encode scan as assignment — no join, no shuffle.
+    ``out`` (array<double>).  Map-only: the centroid is looked up inside
+    the literal ``cent_sql`` array (a handful of comparisons per row), so
+    residualizing a 100 TB corpus is part of the same single encode scan
+    as assignment — no join, no shuffle.
 
     This is the standard IVF-PQ trick (Jégou et al., "Product
     Quantization for Nearest Neighbor Search", §IV): PQ-encoding the
@@ -525,23 +428,16 @@ def residualize(
     from every code, concentrating what the codebook must explain into
     a much smaller ball — measurably higher recall at identical
     m/n_codes (see the SCALE.md serving ladder)."""
-    cent_sql = _cent_as_sql(cent_lit)
-    if cent_sql is not None:
-        cvec = (
-            f"(element_at(filter({cent_sql}, c -> c.cid = "
-            f"CAST({_q(cid_col)} AS BIGINT)), 1)).cvec"
-        )
-        return df.withColumn(
-            out,
-            F.expr(
-                f"zip_with({_sql_as_double(_q(vec_col))}, {cvec}, "
-                "(a, b) -> a - b)"
-            ),
-        )
-    cvec = _centroid_vec_for(cent_lit, F.col(cid_col))
+    cvec = (
+        f"(element_at(filter({cent_sql}, c -> c.cid = "
+        f"CAST({_q(cid_col)} AS BIGINT)), 1)).cvec"
+    )
     return df.withColumn(
         out,
-        F.zip_with(_as_double(F.col(vec_col)), cvec, lambda a, b: a - b),
+        F.expr(
+            f"zip_with({_sql_as_double(_q(vec_col))}, {cvec}, "
+            "(a, b) -> a - b)"
+        ),
     )
 
 
@@ -567,25 +463,21 @@ def ivf_topk(
     probe side is small and broadcast, so search touches only
     nprobe/n_centroids of the data and never shuffles the corpus.
     """
-    if centroids is not None:
-        cent_lit = _centroid_sql(
-            [(int(c), [float(x) for x in v]) for c, v in centroids]
-        )
-    else:
-        cents = ivf_centroids(corpus, id_col, vec_col, n_centroids)
-        cent_lit = _centroid_literal_sql(cents, id_col, vec_col)
+    cent_sql = _ivf_centroid_sql(
+        corpus, id_col, vec_col, n_centroids, centroids
+    )
     assigned = ivf_assign(
         corpus.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
         ),
-        cent_lit,
+        cent_sql,
         "cvec",
     )
     probed = ivf_probe(
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
         ),
-        cent_lit,
+        cent_sql,
         "qvec",
         nprobe,
     )
@@ -740,11 +632,11 @@ def kmeans_step(
     The iterative refinement loop (re-literalize means, repeat) is the
     offline model-build path; each step is this one shuffle.
     """
-    cents = ivf_centroids(df, id_col, vec_col, n_centroids)
-    lit = _centroid_literal(cents, id_col, vec_col)
-    assigned = ivf_assign(df, lit, vec_col)
+    cent_sql = _ivf_centroid_sql(df, id_col, vec_col, n_centroids, None)
+    assigned = ivf_assign(df, cent_sql, vec_col)
     pe = assigned.select(
-        "cid", F.posexplode(_as_double(F.col(vec_col))).alias("pos", "val")
+        "cid",
+        F.posexplode(F.expr(_sql_as_double(_q(vec_col)))).alias("pos", "val"),
     ).select("cid", (F.col("pos") + 1).alias("pos"), "val")
     agg = pe.groupBy("cid", "pos").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -779,8 +671,8 @@ def kmeans_refine(
     long-format means back to centroid vectors driver-side (a few-KB
     model artifact, same class as ``ivf_centroids``'s collect), reassign
     against the refined literals, repeat.  Returns the final centroids
-    as (cid, vector) pairs — feed them to ``ivf_assign`` /
-    ``_centroid_literal`` for serving.
+    as (cid, vector) pairs — feed them to ``centroid_sql`` (or as
+    ``centroids=`` to the IVF builders) for serving.
 
     Each iteration is one scan + one hash aggregate; nothing corpus-
     sized ever reaches the driver.
@@ -790,12 +682,12 @@ def kmeans_refine(
         (int(r[id_col]), [float(x) for x in r[vec_col]]) for r in cents
     ]
     for _ in range(iters):
-        # one-parse literal (same rationale as _dlit_array: per-element
-        # F.lit chains are O(centroids × dim) Py4J calls per iteration)
-        assigned = ivf_assign(df, _centroid_expr(current), vec_col)
+        assigned = ivf_assign(df, centroid_sql(current), vec_col)
         pe = assigned.select(
             "cid",
-            F.posexplode(_as_double(F.col(vec_col))).alias("pos", "val"),
+            F.posexplode(F.expr(_sql_as_double(_q(vec_col)))).alias(
+                "pos", "val"
+            ),
         )
         rows = (
             pe.groupBy("cid", "pos")
@@ -848,8 +740,8 @@ def sampled_codebook(
     ]
 
 
-def _dlit_array(vals: Sequence[float]) -> Column:
-    """Literal array<double> built in ONE expression parse.
+def _dlit_sql(vals: Sequence[float]) -> str:
+    """Literal array<double> as ONE SQL fragment.
 
     A per-element ``F.array(*[F.lit(x) ...])`` chain costs a Py4J round
     trip per element — a 16×16×16-dim codebook plus centroids is
@@ -859,25 +751,40 @@ def _dlit_array(vals: Sequence[float]) -> Column:
     shortest exact round-trip decimal and Java's parseDouble is
     correctly rounded, so the literal is bit-identical to ``F.lit``'s.
     """
-    return F.expr(_dlit_sql(vals))
-
-
-def _dlit_sql(vals: Sequence[float]) -> str:
-    """``_dlit_array``'s SQL fragment form, for embedding in larger
-    one-parse expressions (see the SQL-fragment block)."""
     return (
         "array(" + ",".join(f"{_finite(x, 'codebook')!r}D" for x in vals) + ")"
     )
 
 
 def _sql_quant_sq_l2(xs: str, cw: str, quant: int) -> str:
-    """SQL fragment twin of ``_quant_sq_l2`` (same ops, same fold
-    order — values bit-identical)."""
+    """Quantized squared-L2 between a slice and a codeword (a literal
+    or a column) — THE one distance used by encode, training
+    assignment, and the ADC table (they must stay bit-identical for
+    codes and scores to agree; IEEE ops are value-deterministic, so
+    literal-vs-column operand sourcing cannot change the result)."""
     return (
         f"CAST(floor(aggregate(zip_with({xs}, {cw}, "
         "(a, b) -> (a - b) * (a - b)), 0.0D, (acc, x) -> acc + x) "
         f"* {int(quant)} + 0.5D) AS BIGINT)"
     )
+
+
+def _sql_pq_slices(v: str, m: int, sub: int) -> list[str]:
+    """The ``m`` subvectors (``sub`` dims each) of vector fragment ``v``
+    — the one slicing rule of encode, training and the ADC table."""
+    return [f"slice({v}, {s * sub + 1}, {sub})" for s in range(m)]
+
+
+def _sql_pq_nearest(xs: str, codewords: list[list[float]], quant: int) -> str:
+    """``struct(d, code)`` of the codeword nearest to slice ``xs``
+    (argmin quantized squared-L2, ties to the lowest code) — the one PQ
+    assignment, shared by ``pq_encode`` and ``pq_train_codebook``."""
+    scored = ",".join(
+        f"struct({_sql_quant_sq_l2(xs, _dlit_sql(cw), quant)} AS d, "
+        f"{code} AS code)"
+        for code, cw in enumerate(codewords)
+    )
+    return f"array_min(array({scored}))"
 
 
 def _finite(x: float, what: str) -> float:
@@ -896,21 +803,6 @@ def _finite(x: float, what: str) -> float:
     return v
 
 
-def _quant_sq_l2(
-    xs: Column, codeword: "list[float] | Column", quant: int
-) -> Column:
-    """Quantized squared-L2 between a slice column and a codeword
-    (literal list or a column) — THE one distance used by encode,
-    training assignment, and the ADC table (they must stay
-    bit-identical for codes and scores to agree; keep a single
-    definition — IEEE ops are value-deterministic, so literal-vs-column
-    operand sourcing cannot change the result)."""
-    cw = codeword if isinstance(codeword, Column) else _dlit_array(codeword)
-    diffs = F.zip_with(xs, cw, lambda a, b: (a - b) * (a - b))
-    total = F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-    return F.floor(total * quant + F.lit(0.5)).cast("bigint")
-
-
 def pq_encode(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -927,10 +819,12 @@ def pq_encode(
     slices; pass a ``pq_train_codebook`` result for a trained one).
 
     Map-only: the codebook is a literal array per subspace, distances
-    are sequential ``F.aggregate`` folds (fixed order — deterministic,
+    are sequential ``aggregate`` folds (fixed order — deterministic,
     unlike a shuffle-dependent sum), and all ``m`` assignments ride one
     ``posexplode`` — a 100 TB corpus PQ-encodes in a single scan with
-    zero joins.  Long format (vec_id, subspace, code, dist_q6).
+    zero joins.  The whole m × n_codes argmin forest is one SQL
+    fragment (one Py4J parse at any codebook size).  Long format
+    (vec_id, subspace, code, dist_q6).
     """
     if codebook is None:
         codebook = sampled_codebook(df, id_col, vec_col, m, n_codes)
@@ -938,28 +832,16 @@ def pq_encode(
     # caller's m/n_codes defaults can never mismatch it (r6 review)
     m = len(codebook)
     sub = len(codebook[0][0])
-    # the whole m × n_codes argmin forest renders as ONE parsed SQL
-    # string (plan-build latency: the per-codeword Column chain was
-    # ~2500 Py4J calls for a 16×16 codebook — the round-15 measured
-    # serving-latency term; the parsed tree is node-for-node the one
-    # the Column API built, so codes are bit-identical)
-    v = _sql_as_double(_q(vec_col))
-    per_sub = []
-    for s in range(m):
-        xs = f"slice({v}, {s * sub + 1}, {sub})"
-        scored = "array(" + ",".join(
-            f"struct({_sql_quant_sq_l2(xs, _dlit_sql(cw), quant)} AS d, "
-            f"{code} AS code)"
-            for code, cw in enumerate(codebook[s])
-        ) + ")"
-        per_sub.append(
-            f"struct((array_min({scored})).code AS code, "
-            f"(array_min({scored})).d AS d)"
-        )
-    arr = F.expr("array(" + ",".join(per_sub) + ")")
+    slices = _sql_pq_slices(_sql_as_double(_q(vec_col)), m, sub)
+    nearest = ",".join(
+        _sql_pq_nearest(xs, codebook[s], quant) for s, xs in enumerate(slices)
+    )
     return (
         fan_out(df)
-        .select(F.col(id_col), F.posexplode(arr).alias("pos", "b"))
+        .select(
+            F.col(id_col),
+            F.posexplode(F.expr(f"array({nearest})")).alias("pos", "b"),
+        )
         .select(
             id_col,
             (F.col("pos") + 1).cast("int").alias("subspace"),
@@ -998,40 +880,22 @@ def pq_train_codebook(
     """
     codebook = sampled_codebook(df, id_col, vec_col, m, n_codes)
     sub = len(codebook[0][0])
-    v = _as_double(F.col(vec_col))
-    slices = fan_out(df).select(
+    slices = ",".join(_sql_pq_slices(_sql_as_double(_q(vec_col)), m, sub))
+    sliced = fan_out(df).select(
         F.col(id_col),
-        F.posexplode(
-            F.array(*[F.slice(v, s * sub + 1, sub) for s in range(m)])
-        ).alias("pos", "xs"),
+        F.posexplode(F.expr(f"array({slices})")).alias("pos", "xs"),
     ).select((F.col("pos") + 1).cast("int").alias("subspace"), "xs")
     for _ in range(n_iters):
-        # per-subspace argmin over the slice frame — the SAME distance
-        # expression pq_encode/_pq_dtable use (_quant_sq_l2), inlined
-        # per subspace so no join is needed
-        def assign_expr():
-            whens = None
-            for s in range(m):
-                scored = F.array(
-                    *[
-                        F.struct(
-                            _quant_sq_l2(F.col("xs"), cw, quant).alias("d"),
-                            F.lit(code).alias("code"),
-                        )
-                        for code, cw in enumerate(codebook[s])
-                    ]
-                )
-                expr = F.array_min(scored)["code"]
-                whens = (
-                    F.when(F.col("subspace") == s + 1, expr)
-                    if whens is None
-                    else whens.when(F.col("subspace") == s + 1, expr)
-                )
-            return whens
-
+        # per-subspace argmin over the slice frame: pq_encode's own
+        # _sql_pq_nearest, so training and encoding assign alike
+        assign = " ".join(
+            f"WHEN subspace = {s + 1} THEN "
+            f"({_sql_pq_nearest('xs', codebook[s], quant)}).code"
+            for s in range(m)
+        )
         xq = F.floor(F.col("x") * quant + F.lit(0.5)).cast("long")
         stats = (
-            slices.withColumn("code", assign_expr())
+            sliced.withColumn("code", F.expr(f"CASE {assign} END"))
             .select("subspace", "code", F.posexplode("xs").alias("p", "x"))
             .groupBy("subspace", "code", "p")
             .agg(
@@ -1067,8 +931,8 @@ def _pq_dtable(
     element at plan build (~2s per search for a 16×16×16 codebook —
     the dominant serving-path latency) and a codebook-sized codegen
     unit; the join form is one fixed plan shape at any codebook size.
-    The distance values are bit-identical (same ``_quant_sq_l2``
-    expression; IEEE ops don't care whether an operand is literal or
+    The distance values are bit-identical (same ``_sql_quant_sq_l2``
+    fragment; IEEE ops don't care whether an operand is literal or
     column)."""
     return _pq_dtable_from(
         queries.select(F.col(id_col).alias("query_id"), vec_col),
@@ -1103,13 +967,7 @@ def _pq_dtable_from(
         ],
         "subspace INT, code INT, cvec ARRAY<DOUBLE>",
     )
-    # one-parse slice array + one-parse distance (see the SQL-fragment
-    # block: the per-slice Column chain was a measured serving-latency
-    # term; the parsed tree is identical, so distances are bit-exact)
-    qv = _sql_as_double(_q(vec_col))
-    slices = ",".join(
-        f"slice({qv}, {s * sub + 1}, {sub})" for s in range(m)
-    )
+    slices = ",".join(_sql_pq_slices(_sql_as_double(_q(vec_col)), m, sub))
     qslices = qframe.select(
         *keys,
         F.posexplode(F.expr(f"array({slices})")).alias("pos", "xs"),
@@ -1155,16 +1013,12 @@ def ivf_pq_build_index(
     a default-codebook residual build samples codewords from residual
     space, which is where a trained codebook should live too
     (``pq_train_codebook`` over the residualized frame)."""
-    if centroids is not None:
-        cent_lit = _centroid_sql(
-            [(int(c), [float(x) for x in v]) for c, v in centroids]
-        )
-    else:
-        cents = ivf_centroids(corpus, id_col, vec_col, n_centroids)
-        cent_lit = _centroid_literal_sql(cents, id_col, vec_col)
+    cent_sql = _ivf_centroid_sql(
+        corpus, id_col, vec_col, n_centroids, centroids
+    )
     if residual:
-        base = ivf_assign(corpus.select(id_col, vec_col), cent_lit, vec_col)
-        resid = residualize(base, cent_lit, vec_col)
+        base = ivf_assign(corpus.select(id_col, vec_col), cent_sql, vec_col)
+        resid = residualize(base, cent_sql, vec_col)
         if codebook is None:
             codebook = sampled_codebook(resid, id_col, "rvec", m, n_codes)
         assigned = resid.select(F.col(id_col).alias("neighbor_id"), "cid")
@@ -1176,7 +1030,7 @@ def ivf_pq_build_index(
         codebook = sampled_codebook(corpus, id_col, vec_col, m, n_codes)
     assigned = ivf_assign(
         corpus.select(F.col(id_col).alias("neighbor_id"), vec_col),
-        cent_lit,
+        cent_sql,
         vec_col,
     ).select("neighbor_id", "cid")
     codes = pq_encode(
@@ -1563,13 +1417,9 @@ def ivf_pq_search(
             ladder_index_n=ladder_index_n,
             index_n=index_n,
         )
-    if centroids is not None:
-        cent_lit = _centroid_sql(
-            [(int(c), [float(x) for x in v]) for c, v in centroids]
-        )
-    else:
-        cents = ivf_centroids(corpus, id_col, vec_col, n_centroids)
-        cent_lit = _centroid_literal_sql(cents, id_col, vec_col)
+    cent_sql = _ivf_centroid_sql(
+        corpus, id_col, vec_col, n_centroids, centroids
+    )
     # codebook: caller-supplied (pq_train_codebook) or the hash-sample
     # default; encode and dtable must share it exactly — for residual
     # indexes the default samples from residual space, matching
@@ -1577,8 +1427,8 @@ def ivf_pq_search(
     resid_corpus = None
     if residual and (codebook is None or index is None):
         resid_corpus = residualize(
-            ivf_assign(corpus.select(id_col, vec_col), cent_lit, vec_col),
-            cent_lit,
+            ivf_assign(corpus.select(id_col, vec_col), cent_sql, vec_col),
+            cent_sql,
             vec_col,
         )
     if codebook is None:
@@ -1601,7 +1451,7 @@ def ivf_pq_search(
     else:
         assigned = ivf_assign(
             corpus.select(F.col(id_col).alias("neighbor_id"), vec_col),
-            cent_lit,
+            cent_sql,
             vec_col,
         ).select("neighbor_id", "cid")
         codes = pq_encode(corpus, id_col, vec_col, m, n_codes, quant, codebook)
@@ -1628,7 +1478,7 @@ def ivf_pq_search(
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
         ),
-        cent_lit,
+        cent_sql,
         "qvec",
         nprobe,
     )
@@ -1647,7 +1497,7 @@ def ivf_pq_search(
         .select(*cand_keys)
     )
     if residual:
-        qres = residualize(probed, cent_lit, "qvec")
+        qres = residualize(probed, cent_sql, "qvec")
         dtable = _pq_dtable_from(
             qres.select("query_id", "cid", "rvec"),
             codebook,
@@ -1776,7 +1626,11 @@ def sq8_minmax(
     index, never a corpus collect."""
     rows = (
         fan_out(corpus)
-        .select(F.posexplode(_as_double(F.col(vec_col))).alias("pos", "val"))
+        .select(
+            F.posexplode(F.expr(_sql_as_double(_q(vec_col)))).alias(
+                "pos", "val"
+            )
+        )
         .groupBy("pos")
         .agg(F.min("val").alias("mn"), F.max("val").alias("mx"))
         .orderBy("pos")
@@ -1785,34 +1639,10 @@ def sq8_minmax(
     return [(float(r.mn), float(r.mx)) for r in rows]
 
 
-def _sq8_dequant(
-    codes: "Column | str", minmax: list[tuple[float, float]]
-) -> Column:
-    """Reconstruction values: mid-point of each code's cell —
-    mn + (code+0.5)·(mx−mn)/256 (degenerate dims reconstruct to mn).
-
-    Pass ``codes`` as a column NAME to get the one-parse SQL form (the
-    serving-latency fast path — identical expression tree, bit-exact
-    values); a Column keeps the legacy builder."""
-    if isinstance(codes, str):
-        return F.expr(_sql_sq8_dequant(_q(codes), minmax))
-    mns = _dlit_array([m for m, _ in minmax])
-    mxs = _dlit_array([m for _, m in minmax])
-    return F.transform(
-        codes,
-        lambda c, i: F.when(
-            F.element_at(mxs, i + 1) > F.element_at(mns, i + 1),
-            F.element_at(mns, i + 1)
-            + (c.cast("double") + F.lit(0.5))
-            * (F.element_at(mxs, i + 1) - F.element_at(mns, i + 1))
-            / F.lit(256.0),
-        ).otherwise(F.element_at(mns, i + 1)),
-    )
-
-
 def _sql_sq8_dequant(codes: str, minmax: list[tuple[float, float]]) -> str:
-    """SQL fragment twin of ``_sq8_dequant`` (same ops, same
-    precedence — bit-identical reconstructions)."""
+    """Reconstruction values of a codes array: mid-point of each code's
+    cell — mn + (code+0.5)·(mx−mn)/256 (degenerate dims reconstruct to
+    mn)."""
     mns = _dlit_sql([m for m, _ in minmax])
     mxs = _dlit_sql([m for _, m in minmax])
     return (
@@ -1854,9 +1684,6 @@ def sq8_encode(
     """
     if minmax is None:
         minmax = sq8_minmax(df, id_col, vec_col)
-    # one-parse encode expression (see the SQL-fragment block) — the
-    # per-dim Column chain was a measured plan-build latency term on
-    # the SQ8 serving paths; same tree, bit-identical codes
     mns = _dlit_sql([m for m, _ in minmax])
     mxs = _dlit_sql([m for _, m in minmax])
     codes = F.expr(
@@ -1899,11 +1726,11 @@ def sq8_topk(
         minmax = sq8_minmax(corpus, id_col, vec_col)
     ndq = sq8_encode(corpus, id_col, vec_col, minmax).select(
         F.col(id_col).alias("neighbor_id"),
-        _sq8_dequant("codes", minmax).alias("ndq"),
+        F.expr(_sql_sq8_dequant("codes", minmax)).alias("ndq"),
     )
     qdq = sq8_encode(queries, id_col, vec_col, minmax).select(
         F.col(id_col).alias("query_id"),
-        _sq8_dequant("codes", minmax).alias("qdq"),
+        F.expr(_sql_sq8_dequant("codes", minmax)).alias("qdq"),
     )
     n = ndq.withColumn("nnm", F.expr(_sql_norm("ndq")))
     q = qdq.withColumn("qnm", F.expr(_sql_norm("qdq")))
@@ -2155,25 +1982,21 @@ def ivf_sq8_topk(
     frozen-artifact persistence story as IVF-PQ; both default to the
     deterministic sample-init/corpus-scan derivations for tests.
     """
-    if centroids is not None:
-        cent_lit = _centroid_sql(
-            [(int(c), [float(x) for x in v]) for c, v in centroids]
-        )
-    else:
-        cents = ivf_centroids(corpus, id_col, vec_col, n_centroids)
-        cent_lit = _centroid_literal_sql(cents, id_col, vec_col)
+    cent_sql = _ivf_centroid_sql(
+        corpus, id_col, vec_col, n_centroids, centroids
+    )
     if minmax is None:
         minmax = sq8_minmax(corpus, id_col, vec_col)
     assigned = ivf_assign(
         corpus.select(F.col(id_col).alias("neighbor_id"), vec_col),
-        cent_lit,
+        cent_sql,
         vec_col,
     ).select("neighbor_id", "cid")
     probed = ivf_probe(
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
         ),
-        cent_lit,
+        cent_sql,
         "qvec",
         nprobe,
     ).select("query_id", "cid")
@@ -2184,11 +2007,11 @@ def ivf_sq8_topk(
     )
     ndq = sq8_encode(corpus, id_col, vec_col, minmax).select(
         F.col(id_col).alias("neighbor_id"),
-        _sq8_dequant("codes", minmax).alias("ndq"),
+        F.expr(_sql_sq8_dequant("codes", minmax)).alias("ndq"),
     ).withColumn("nnm", F.expr(_sql_norm("ndq")))
     qdq = sq8_encode(queries, id_col, vec_col, minmax).select(
         F.col(id_col).alias("query_id"),
-        _sq8_dequant("codes", minmax).alias("qdq"),
+        F.expr(_sql_sq8_dequant("codes", minmax)).alias("qdq"),
     ).withColumn("qnm", F.expr(_sql_norm("qdq")))
     scored = (
         cand.join(ndq, "neighbor_id")

@@ -57,6 +57,17 @@ CHECKPOINT_DIR_ENV = "SPARK_GRAFT_CHECKPOINT_DIR"
 _PIN_MODES = ("local", "reliable", "persist")
 
 
+def pin_mode() -> str:
+    """The validated ``SPARK_GRAFT_PIN_MODE`` that ``pin`` applies
+    (``local`` when unset); a bad value raises here, not at a pin site."""
+    mode = os.environ.get(PIN_MODE_ENV, "local").strip().lower() or "local"
+    if mode not in _PIN_MODES:
+        raise ValueError(
+            f"{PIN_MODE_ENV}={mode!r}: expected one of {_PIN_MODES}"
+        )
+    return mode
+
+
 def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     """Plan-dedup barrier: materialize ``df`` once so that 2+ downstream
     consumers (whose differing column pruning defeats ReuseExchange —
@@ -89,11 +100,7 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     round) also stay on explicit checkpoints — ``persist`` would keep
     the growing lineage alive.
     """
-    mode = os.environ.get(PIN_MODE_ENV, "local").strip().lower() or "local"
-    if mode not in _PIN_MODES:
-        raise ValueError(
-            f"{PIN_MODE_ENV}={mode!r}: expected one of {_PIN_MODES}"
-        )
+    mode = pin_mode()
     if mode == "persist":
         out = df.persist(StorageLevel.MEMORY_AND_DISK)
         _PINNED.append(out)

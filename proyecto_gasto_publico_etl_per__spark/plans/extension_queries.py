@@ -2396,7 +2396,7 @@ _PQ_NPROBE = 8
 _PQ_RERANK = 32
 
 #: one ADC subdistance: quantized squared-L2 of a {_PQ_SUB}-dim slice
-#: of {v} against the codeword slice — mirrors similarity._quant_sq_l2
+#: of {v} against the codeword slice — mirrors similarity._sql_quant_sq_l2
 #: (left-to-right accumulation in both engines)
 _ADC_DIST = f"""CAST(floor(list_reduce(
                list_transform(range(1, {_PQ_SUB + 1}),
@@ -2660,7 +2660,7 @@ def ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ivf_centroids",
             [[c, v] for c, v in pairs],
         )
-        cent_lit = similarity.centroid_literal_pairs(pairs)
+        cent_lit = similarity.centroid_sql(pairs)
         resid = similarity.residualize(
             similarity.ivf_assign(
                 emb.select("vec_id", "embedding"), cent_lit, "embedding"

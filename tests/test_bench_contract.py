@@ -189,3 +189,29 @@ def test_subsecond_floors_are_report_only(tmp_path):
     flags = {r["query"]: r["report_only"] for r in out}
     assert flags == {serving[0]: True, serving[1]: False}
     assert bench.SUBSECOND_REPORT_ONLY_SEC == 1.0
+
+
+def test_run_env_states_cpus_master_partitions_and_pin_mode(monkeypatch):
+    """The env block is the run's ledger: host CPUs, the session's master
+    and shuffle partitions, and the pin mode ``pin()`` applies — the
+    validated value, so a bad knob fails the run instead of being
+    reported."""
+    from types import SimpleNamespace
+
+    import pytest
+
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(master="local[3]"),
+        conf=SimpleNamespace(
+            get={"spark.sql.shuffle.partitions": "7"}.__getitem__
+        ),
+    )
+    monkeypatch.setenv("SPARK_GRAFT_PIN_MODE", " Persist ")
+    env = bench._run_env(spark)
+    assert env["master"] == "local[3]"
+    assert env["shuffle_partitions"] == 7
+    assert env["pin_mode"] == "persist"
+    assert env["cpus"] >= 1 and {"python", "pyspark"} <= set(env)
+    monkeypatch.setenv("SPARK_GRAFT_PIN_MODE", "bogus")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_PIN_MODE"):
+        bench._run_env(spark)

@@ -342,18 +342,15 @@ def test_kmeans_refine_improves_cosine_fit(spark):
     df = spark.createDataFrame(vecs, "vec_id INT, embedding ARRAY<DOUBLE>")
 
     def fit(cents):
-        lit = F.array(*[
-            F.struct(F.lit(cid).alias("cid"),
-                     F.array(*[F.lit(x) for x in v]).alias("cvec"))
-            for cid, v in cents
-        ])
+        lit = similarity.centroid_sql(cents)
         a = similarity.ivf_assign(df, lit, "embedding")
         # mean assigned quantized cosine: higher = tighter clusters
+        score = similarity._sql_score_q("embedding", "c.cvec")
         scored = a.select(
-            F.array_max(F.transform(
-                lit, lambda c: F.when(c.cid == F.col("cid"),
-                                      similarity.score_q(F.col("embedding"), c.cvec))
-            )).alias("s")
+            F.expr(
+                f"array_max(transform({lit}, c -> "
+                f"CASE WHEN c.cid = cid THEN {score} END))"
+            ).alias("s")
         )
         return scored.agg(F.sum("s")).collect()[0][0]
 

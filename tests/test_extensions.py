@@ -295,7 +295,7 @@ def test_ivf_centroid_seed_is_hash_sample(spark):
 def test_ivf_assignment_is_total_and_single(spark):
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     cents = similarity.ivf_centroids(emb, n_centroids=8)
-    lit = similarity._centroid_literal(cents, "vec_id", "embedding")
+    lit = similarity.centroid_sql([(r.vec_id, r.embedding) for r in cents])
     assigned = similarity.ivf_assign(emb, lit, "embedding")
     n = emb.count()
     assert assigned.count() == n  # map-only: no row lost or duplicated
@@ -1004,7 +1004,7 @@ def test_nonfinite_model_values_rejected_at_source(spark):
     from proyecto_gasto_publico_etl_per__spark.operators import similarity
 
     with pytest.raises(ValueError, match="non-finite"):
-        similarity.centroid_literal_pairs([(0, [1.0, float("nan")])])
+        similarity.centroid_sql([(0, [1.0, float("nan")])])
     bad_cb = [[[1.0, float("inf")], [0.0, 0.0]]]
     docs = spark.createDataFrame(
         [(1, [1.0, 2.0])], "vec_id INT, embedding ARRAY<DOUBLE>"
@@ -1506,7 +1506,7 @@ def test_ivf_pq_residual_matches_inline_and_append(spark):
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in cents
     ]
-    cent_lit = similarity.centroid_literal_pairs(pairs)
+    cent_lit = similarity.centroid_sql(pairs)
     resid = similarity.residualize(
         similarity.ivf_assign(
             emb.select("vec_id", "embedding"), cent_lit, "embedding"
@@ -1576,7 +1576,7 @@ def test_residualize_reconstructs(spark):
         for r in cents
     ]
     by_cid = {c: v for c, v in pairs}
-    cent_lit = similarity.centroid_literal_pairs(pairs)
+    cent_lit = similarity.centroid_sql(pairs)
     rows = similarity.residualize(
         similarity.ivf_assign(
             emb.select("vec_id", "embedding"), cent_lit, "embedding"

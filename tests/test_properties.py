@@ -396,7 +396,7 @@ def test_png_codec_roundtrip(width, height, channels, seed):
     ),
 )
 def test_dlit_array_is_bit_exact(spark, vals):
-    """The one-parse literal array (round 7: _dlit_array replaces
+    """The one-parse literal array (round 7: _dlit_sql replaces
     per-element F.lit chains in the similarity family) must be
     BIT-IDENTICAL to the F.lit path for any finite double — repr() is
     the shortest exact round-trip decimal and Spark's parser is
@@ -406,13 +406,13 @@ def test_dlit_array_is_bit_exact(spark, vals):
     import struct
 
     from proyecto_gasto_publico_etl_per__spark.operators.similarity import (
-        _dlit_array,
+        _dlit_sql,
     )
 
     row = (
         spark.range(1)
         .select(
-            _dlit_array(vals).alias("parsed"),
+            F.expr(_dlit_sql(vals)).alias("parsed"),
             F.array(*[F.lit(float(x)) for x in vals]).alias("lit"),
         )
         .collect()[0]

@@ -83,7 +83,7 @@ def main() -> None:
             )
         for residual in residual_modes:
             if residual:
-                cent_lit = similarity.centroid_literal_pairs(pairs)
+                cent_lit = similarity.centroid_sql(pairs)
                 resid = similarity.residualize(
                     similarity.ivf_assign(
                         emb.select("vec_id", "embedding"),
