@@ -2,17 +2,14 @@
 
 Covers GIF87a/GIF89a: logical-screen + global/local color tables, LZW
 decompression (LSB-first variable-width codes, dictionary growth to 12
-bits, clear/end codes), row de-interlacing, Graphic Control Extension
-transparency, and multi-frame animation with sub-rectangle frames
-composited under disposal methods 0/1 (leave) and 2 (restore
-background).  ``gif_decode`` returns the FIRST frame under the
-``_png_decode`` contract; ``gif_frames`` returns every composited
-frame — the hook ``multimodal.sample_frames`` uses to treat an
-animated GIF as a real video-ish payload.
+bits, clear/end codes), row de-interlacing and Graphic Control
+Extension transparency.  ``gif_decode`` returns the FIRST frame under
+the ``_png_decode`` contract; later frames of an animation are parsed
+but not decoded.
 
 Like the other stdlib codec paths this runs per-row inside an Arrow
 batch on the executor; the LZW loop is pure Python, bounded by batch
-sizing and thumbnail-scale payloads, while compositing is numpy.
+sizing and thumbnail-scale payloads, while palette mapping is numpy.
 """
 
 from __future__ import annotations
@@ -90,11 +87,12 @@ def _lzw_decode(data: bytes, min_code: int, expect: int) -> list[int]:
 _PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
-def _parse(payload: bytes) -> tuple[int, int, bytes | None, int, list[dict]]:
+def _parse(payload: bytes) -> tuple[bytes | None, list[dict]]:
+    """(global color table, image frames) of a GIF; each frame carries
+    its size, local table, LZW data and GCE transparent index."""
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
-    w, h = struct.unpack("<HH", payload[6:10])
-    packed, bg = payload[10], payload[11]
+    packed = payload[10]
     pos = 13
     gct = None
     if packed & 0x80:
@@ -111,12 +109,9 @@ def _parse(payload: bytes) -> tuple[int, int, bytes | None, int, list[dict]]:
             label = payload[pos + 1]
             subs, pos = _subblocks(payload, pos + 2)
             if label == 0xF9 and len(subs) >= 4:  # Graphic Control
-                gce = {
-                    "transparent": subs[3] if subs[0] & 1 else None,
-                    "disposal": (subs[0] >> 2) & 7,
-                }
+                gce = {"transparent": subs[3] if subs[0] & 1 else None}
         elif b == 0x2C:  # image descriptor
-            left, top, fw, fh = struct.unpack("<HHHH", payload[pos + 1 : pos + 9])
+            fw, fh = struct.unpack("<HH", payload[pos + 5 : pos + 9])
             p2 = payload[pos + 9]
             pos += 10
             lct = None
@@ -128,11 +123,10 @@ def _parse(payload: bytes) -> tuple[int, int, bytes | None, int, list[dict]]:
             data, pos = _subblocks(payload, pos + 1)
             frames.append(
                 {
-                    "left": left, "top": top, "w": fw, "h": fh,
+                    "w": fw, "h": fh,
                     "lct": lct, "interlace": bool(p2 & 0x40),
                     "min_code": min_code, "data": data,
                     "transparent": gce.get("transparent"),
-                    "disposal": gce.get("disposal", 0),
                 }
             )
             gce = {}
@@ -140,7 +134,7 @@ def _parse(payload: bytes) -> tuple[int, int, bytes | None, int, list[dict]]:
             raise ValueError(f"bad GIF block introducer 0x{b:02X}")
     if not frames:
         raise ValueError("GIF has no image data")
-    return w, h, gct, bg, frames
+    return gct, frames
 
 
 def _frame_indices(fr: dict) -> np.ndarray:
@@ -160,63 +154,13 @@ def _frame_indices(fr: dict) -> np.ndarray:
 
 
 @corrupt_guard("GIF")
-def gif_frames(payload: bytes) -> list[dict[str, Any]]:
-    """Every frame of a (possibly animated) GIF, composited onto the
-    logical screen: sub-rectangle frames paint over the previous canvas
-    (disposal 0/1) or over the restored background (disposal 2);
-    transparent pixels leave the underlying canvas.  Returns a list of
-    ``{width, height, channels, pixels}`` RGB canvases."""
-    w, h, gct, bg, frames = _parse(payload)
-    bg_rgb = (0, 0, 0)
-    if gct is not None and 3 * bg + 3 <= len(gct):
-        bg_rgb = tuple(gct[3 * bg : 3 * bg + 3])
-    canvas = np.full((h, w, 3), bg_rgb, dtype=np.uint8)
-    out = []
-    for fr in frames:
-        if fr["disposal"] == 3:
-            # restore-to-previous needs a saved canvas stack; silently
-            # treating it as "leave" would ghost-trail every later
-            # frame — loud guard, same contract as progressive JPEG
-            raise NotImplementedError(
-                "GIF disposal method 3 (restore-to-previous) needs "
-                "Pillow; stdlib path covers disposal 0/1/2"
-            )
-        table = fr["lct"] or gct
-        if table is None:
-            raise ValueError("GIF frame has no color table")
-        pal = np.frombuffer(table, dtype=np.uint8).reshape(-1, 3)
-        idx = _frame_indices(fr)
-        if int(idx.max(initial=0)) >= len(pal):
-            raise ValueError("GIF color index out of range")
-        region = canvas[
-            fr["top"] : fr["top"] + fr["h"], fr["left"] : fr["left"] + fr["w"]
-        ]
-        rgb = pal[idx]
-        if fr["transparent"] is not None:
-            mask = (idx == fr["transparent"])[..., None]
-            rgb = np.where(mask, region, rgb)
-        region[:] = rgb
-        out.append(
-            {
-                "width": w,
-                "height": h,
-                "channels": 3,
-                "pixels": canvas.tobytes(),
-            }
-        )
-        if fr["disposal"] == 2:  # restore background for the NEXT frame
-            region[:] = bg_rgb
-    return out
-
-
-@corrupt_guard("GIF")
 def gif_decode(payload: bytes) -> dict[str, Any]:
     """Decode the FIRST frame of a GIF to ``{width, height, channels,
     pixels}`` — the ``_png_decode``/``jpeg_decode`` contract.  A frame
     with a transparent index returns RGBA (alpha 0 on transparent
     pixels); otherwise RGB.  Frame geometry is the frame's own
     rectangle (single-image GIFs: the whole screen)."""
-    _w, _h, gct, _bg, frames = _parse(payload)
+    gct, frames = _parse(payload)
     fr = frames[0]
     table = fr["lct"] or gct
     if table is None:

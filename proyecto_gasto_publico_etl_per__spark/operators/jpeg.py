@@ -12,8 +12,9 @@ lossless, Annex-H predictive DPCM with exact reconstruction.
 Arithmetic coding, hierarchical, 12-bit, and CMYK payloads raise
 ``NotImplementedError`` with a pointer to Pillow — same contract as
 the stdlib PNG path in ``multimodal._png_decode``.  (Lossless and
-baseline are decodable HERE, unlike MP3, because every entropy table
-is carried IN the stream — see the decode_audio decision record.)
+baseline are decodable HERE because every entropy table is carried IN
+the stream: a stdlib codec is kept only when its tables are in the
+stream or algorithmic.)
 
 Like the PNG path, this runs per-row inside an Arrow batch on the
 executor: the per-block Huffman loop is pure Python (bounded by batch

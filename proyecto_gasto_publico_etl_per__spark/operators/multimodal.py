@@ -1,26 +1,22 @@
-"""Multimodal (image/audio/video) column plumbing.
+"""Multimodal (image) column plumbing.
 
 Media are opaque ``binary`` columns with typed metadata; decode /
-feature-extract / resize / frame-sample run as Arrow-batched pandas
-functions over ``mapInPandas`` — the one place this engine crosses into
-Python, because byte-level media decoding is genuinely inexpressible in
-Spark SQL.  The Spark-side plumbing (schemas, batch iteration, partition
-parallelism) is real and tested.  Decoding is REAL where a codec path
-exists: Pillow / soundfile when importable, with pure-stdlib/numpy
-fallbacks for full static PNG (all color types incl. palette+tRNS,
-depths 1-16, Adam7 interlace),
-baseline AND progressive JPEG (``operators/jpeg.py``: Huffman +
-multi-scan successive approximation + batch IDCT + chroma upsample), PCM WAV (the ``wave`` module), FLAC (``operators/flac.py``:
-full bitstream — all subframe types, Rice partitions, stereo
-decorrelation), GIF incl. animation (``operators/gif.py``: LZW,
-interlace, transparency, frame compositing), and MJPEG video frame
-extraction from BOTH container families (RIFF/AVI ``movi`` walk and the
-ISO BMFF/MP4 sample tables, ``operators/mp4.py``) so the real path runs
-even in codec-less containers; ``NotImplementedError`` only for formats
-none of those cover (arithmetic-coded JPEG / MP3 / inter-coded
-MP4-family video without the optional libs).  The deterministic md5 fake remains
-the correctness-oracle path — DuckDB can reproduce it, real pixel math
-it can't.
+feature-extract / resize run as Arrow-batched pandas functions over
+``mapInPandas`` — the one place this engine crosses into Python,
+because byte-level media decoding is genuinely inexpressible in Spark
+SQL.  The Spark-side plumbing (schemas, batch iteration, partition
+parallelism) is real and tested.  Image decoding is REAL where a codec
+path exists: Pillow when importable, with pure-stdlib/numpy fallbacks
+for full static PNG (all color types incl. palette+tRNS, depths 1-16,
+Adam7 interlace), baseline AND progressive JPEG (``operators/jpeg.py``:
+Huffman + multi-scan successive approximation + batch IDCT + chroma
+upsample) and the first frame of a GIF (``operators/gif.py``: LZW,
+interlace, transparency), so the real path runs even in codec-less
+containers; ``NotImplementedError`` only for formats none of those
+cover (e.g. arithmetic-coded JPEG without Pillow).  Audio and video
+rows carry no decoder: they keep the fake features.  The deterministic
+md5 fake remains the correctness-oracle path — DuckDB can reproduce it,
+real pixel math it can't.
 
 Scale notes: media bytes never pass through the driver; each Arrow batch
 is decoded inside its executor task.  Keep batches small via
@@ -458,9 +454,9 @@ def image_features(payload: bytes, dim: int = 4) -> list[float]:
     padded with per-channel means (dim > 4) or truncated (dim < 4).
     Deterministic given the payload — usable as a pytest oracle.
 
-    Each mean is an O(pixels) scan, so (like ``audio_features``'s
-    zero-crossing gate) a slot's scan only runs when the slot survives
-    the ``dim`` cut — at the default dim=4 no per-channel work happens."""
+    Each mean is an O(pixels) scan, so a slot's scan only runs when the
+    slot survives the ``dim`` cut — at the default dim=4 no per-channel
+    work happens."""
     d = decode_image(payload)
     px, ch = d["pixels"], d["channels"]
     mean = (sum(px) / len(px) / 255.0) if px and dim >= 4 else 0.0
@@ -490,10 +486,10 @@ def extract_features(
 
     ``decoder="fake"`` (default): the deterministic md5 features — the
     DuckDB-reproducible correctness-oracle path.
-    ``decoder="real"``: actually decode — ``image_features`` /
-    ``audio_features`` per ``media_type`` (Pillow/soundfile or the
-    stdlib PNG/WAV fallbacks); other media types keep the fake features
-    so mixed-modality frames still pass through in one plan.
+    ``decoder="real"``: image rows actually decode — ``image_features``
+    (Pillow or the stdlib image fallbacks); every other ``media_type``
+    keeps the fake features so mixed-modality frames still pass through
+    in one plan.
 
     A corpus-scale ingest must not abort on one corrupt/truncated/
     codec-less asset, so real-decode failures quarantine PER ROW by
@@ -512,8 +508,6 @@ def extract_features(
         try:
             if decoder == "real" and media_type == "image":
                 return image_features(payload, dim)
-            if decoder == "real" and media_type == "audio":
-                return audio_features(payload, dim)
         except Exception:
             if strict:
                 raise
@@ -542,106 +536,6 @@ def extract_features(
             )
 
     return assets.mapInPandas(batches, FEATURE_SCHEMA)
-
-
-def decode_audio(payload: bytes) -> dict[str, Any]:
-    """Decode an audio payload to ``{sample_rate, n_channels, samples}``
-    (``samples`` = floats in [-1, 1], channel-interleaved).
-
-    soundfile when importable (WAV/FLAC/OGG...); otherwise the stdlib
-    paths — ``operators/flac.py`` for FLAC (full bitstream: all
-    subframe types, Rice partitions, stereo decorrelation) and
-    ``operators/pcm_audio.py`` for AIFF, Sun AU, and WAV (round 11:
-    PCM 8-32 bit, float32/64, G.711 µ-law/A-law, EXTENSIBLE — the
-    stdlib ``wave`` module is no longer used).  ``NotImplementedError``
-    only for formats none of those cover (e.g. MP3 without
-    soundfile)."""
-    import io
-
-    try:
-        import soundfile as sf  # type: ignore[import-not-found]
-    except ImportError:
-        pass
-    else:
-        data, rate = sf.read(io.BytesIO(payload), always_2d=True)
-        return {
-            "sample_rate": int(rate),
-            "n_channels": int(data.shape[1]),
-            "samples": [float(x) for row in data for x in row],
-        }
-    if payload[:4] == b"fLaC":
-        from .flac import flac_decode
-
-        return flac_decode(payload)
-    if payload[:4] == b"FORM" and payload[8:12] in (b"AIFF", b"AIFC"):
-        from .pcm_audio import aiff_decode
-
-        return aiff_decode(payload)
-    if payload[:4] == b".snd":
-        from .pcm_audio import au_decode
-
-        return au_decode(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        # full WAV parser (round 11): PCM 8-32, float32/64, G.711
-        # µ-law/A-law, and WAVE_FORMAT_EXTENSIBLE — supersedes the
-        # stdlib `wave` fallback, which rejected everything but
-        # integer PCM (telephony corpora are largely G.711 WAV)
-        from .pcm_audio import wav_decode
-
-        return wav_decode(payload)
-    # Why MP3/OGG get no stdlib path while FLAC/JPEG/PNG/GIF did
-    # (round-11 decision record): every shipped stdlib codec is
-    # verifiable IN-CONTAINER because its entropy/table state is
-    # either carried in the stream (JPEG ships its Huffman/quant
-    # tables in DHT/DQT segments; FLAC its predictors per
-    # subframe) or algorithmic (PNG zlib, GIF LZW, Rice codes).
-    # MPEG audio is the opposite: the 34 Layer-III Huffman
-    # codebooks (ISO 11172-3 Table B.7), the 512-tap synthesis
-    # window (Table B.3), and the Layer-II allocation tables
-    # (B.2a-d) are ~1k arbitrary constants that live in the SPEC,
-    # not the stream.  With no network, reference decoder, or
-    # sample files here, table data could only be reproduced from
-    # memory and tested for SELF-consistency — an encoder/decoder
-    # roundtrip cannot distinguish the standard's tables from any
-    # other prefix-free set, so wrong data would pass every
-    # in-container test and silently decode real-world MP3s to
-    # garbage.  A loud guard is the correct behavior until
-    # soundfile (or verified spec table data) is available.
-    raise NotImplementedError(
-        "audio decoding beyond WAV (PCM/float/G.711), FLAC, AIFF, and "
-        "AU requires soundfile, which is not importable in this "
-        "environment"
-    )
-
-
-def audio_features(payload: bytes, dim: int = 4) -> list[float]:
-    """Real audio features: [sample_rate, n_channels, n_frames, rms];
-    at dim >= 5, the zero-crossing rate; at dim >= 6, the remaining
-    slots fill with the log-mel fingerprint (per-band mean/std of the
-    Hann-rFFT-mel spectrogram, ``audio_dsp.mel_fingerprint``, a
-    duration-invariant embedding).  Each tier's
-    O(samples) work only runs when its slots survive the cut.
-    Deterministic — pytest-oracle-able."""
-    d = decode_audio(payload)
-    s, nch = d["samples"], d["n_channels"]
-    n_frames = len(s) // nch if nch else 0
-    rms = (sum(x * x for x in s) / len(s)) ** 0.5 if s else 0.0
-    feats = [float(d["sample_rate"]), float(nch), float(n_frames), rms]
-    if dim >= 5:
-        zc = sum(
-            1 for i in range(1, len(s)) if (s[i - 1] < 0) != (s[i] < 0)
-        ) / max(1, len(s) - 1)
-        feats.append(zc)
-    if dim >= 6:
-        from .audio_dsp import mel_fingerprint
-
-        n_mels = (dim - 5 + 1) // 2  # mean+std per band fill the tail
-        feats.extend(
-            mel_fingerprint(
-                s, d["sample_rate"], n_channels=nch, n_mels=max(1, n_mels)
-            )
-        )
-    return (feats + [0.0] * dim)[:dim]
 
 
 def _fake_resized(payload: bytes, width: int, height: int) -> bytes:
@@ -706,147 +600,6 @@ def resize_images(
             yield out
 
     return assets.mapInPandas(batches, ASSET_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame", T.BinaryType(), True),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
-
-def _avi_mjpeg_frames(payload: bytes) -> list[bytes]:
-    """Walk a RIFF/AVI container and return the video stream's frame
-    payloads — the ``##dc``/``##db`` chunks inside ``LIST movi``.  For
-    an MJPEG AVI each returned frame is a STANDALONE baseline JPEG
-    decodable by ``operators/jpeg.jpeg_decode``, which makes the whole
-    video path (container seek → frame extract → pixel decode) real in
-    a codec-less container.  Header lists (hdrl/avih/strh/strf) are
-    walked and skipped — frame extraction needs only the movi chunks.
-    RIFF chunks are word-aligned (odd sizes pad one byte)."""
-    import struct
-
-    frames: list[bytes] = []
-
-    def walk(pos: int, end: int) -> None:
-        while pos + 8 <= end:
-            fourcc = payload[pos : pos + 4]
-            (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-            data_start = pos + 8
-            data_end = min(data_start + size, len(payload))
-            if fourcc in (b"RIFF", b"LIST"):
-                walk(data_start + 4, data_end)  # skip the list-type tag
-            elif (
-                fourcc[2:4] in (b"dc", b"db")
-                and fourcc[:2].isdigit()
-                and size > 0
-            ):
-                frames.append(payload[data_start:data_end])
-            pos = data_start + size + (size & 1)
-
-    walk(0, len(payload))
-    return frames
-
-
-def _real_video_frames(payload: bytes) -> list[bytes] | None:
-    """Container demux for the stdlib-verified video surfaces: a list
-    of standalone image payloads (JPEG for MJPEG tracks, PNG for GIF
-    frames), or None when the container is unsupported or the walk
-    fails — per-row quarantine, never a job abort."""
-    try:
-        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-            return _avi_mjpeg_frames(payload) or None
-        if payload[4:8] == b"ftyp":  # ISO BMFF (MP4/MOV)
-            from .mp4 import mp4_mjpeg_frames
-
-            return mp4_mjpeg_frames(payload) or None
-        if payload[:6] in (b"GIF87a", b"GIF89a"):
-            from .gif import gif_frames
-
-            return [
-                _png_encode(
-                    fr["width"], fr["height"], fr["channels"], fr["pixels"]
-                )
-                for fr in gif_frames(payload)
-            ]
-    except Exception:
-        return None
-    return None
-
-
-def sample_frames(assets: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Sample ``n_frames`` evenly-spaced frames from each video payload —
-    a row-expanding mapInPandas (one input row → n output rows), the shape
-    a real video pipeline needs.  Non-video rows produce no frames.
-
-    RIFF/AVI and ISO BMFF (MP4/MOV) payloads get REAL container
-    seeking: the ``LIST movi`` chunk walk / the moov sample tables
-    extract the actual frame bytestreams and the evenly-spaced pick
-    indexes real frames (for MJPEG each one is a standalone JPEG —
-    decodable downstream by ``decode_image``).  Animated GIFs
-    composite their real frames once and re-encode each sampled one as
-    PNG.  Other containers (MKV needs a real demuxer; inter-coded MP4
-    tracks need the optional libs) fall back to
-    the deterministic span-slicing fake — and so does any payload whose
-    container walk FAILS (truncated download with a valid magic): a
-    corpus-ingest operator must quarantine per row, never abort the
-    job (the ``extract_features`` convention).  Each payload's
-    container is walked/decoded ONCE, not once per sampled frame.  The
-    expansion factor is bounded per batch, so executor memory stays
-    O(batch × n_frames).  Asset meta passes through unchanged on every
-    frame row (row repetition keeps the Arrow column backing — freshly
-    built map columns don't round-trip).
-    """
-
-    def real_frames(p: bytes) -> list[bytes] | None:
-        """Per-payload container walk, run ONCE per row: a list of
-        standalone frame payloads, or None → span-slicing fallback.
-        Any failure quarantines to None rather than raising — BOTH
-        corrupt payloads (ValueError) and valid payloads hitting an
-        unsupported feature (NotImplementedError, e.g. GIF disposal 3):
-        bulk ingest must never abort on one row, so the loud-guard
-        contract belongs to the direct ``gif_frames``/``decode_image``
-        calls, and here unsupported degrades to the deterministic
-        fallback like any other undecodable payload."""
-        return _real_video_frames(p)
-
-    def frame_at(p: bytes, real: list[bytes] | None, i: int) -> bytes:
-        if real:
-            return real[i * len(real) // n_frames]
-        span = max(1, len(p) // n_frames)
-        return p[i * span : (i + 1) * span]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            video = pdf[
-                (pdf["media_type"] == "video") & pdf["payload"].notna()
-            ]
-            if video.empty:
-                continue
-            # one bytes() conversion AND one container walk per row —
-            # the n_frames repetition only indexes the caches
-            pays = [bytes(p) for p in video["payload"]]
-            cache = [real_frames(p) for p in pays]
-            rep = video.loc[video.index.repeat(n_frames)]
-            idx = list(range(n_frames)) * len(video)
-            frames = [
-                frame_at(pays[r // n_frames], cache[r // n_frames], i)
-                for r, i in enumerate(idx)
-            ]
-            out = pd.DataFrame(
-                {
-                    "asset_id": rep["asset_id"].values,
-                    "frame_idx": pd.array(idx, dtype="int32"),
-                    "frame": frames,
-                }
-            )
-            out["meta"] = rep["meta"].values
-            yield out
-
-    return assets.mapInPandas(batches, FRAME_SCHEMA)
 
 
 def documents_as_assets(docs: DataFrame) -> DataFrame:

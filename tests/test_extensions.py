@@ -544,18 +544,10 @@ def test_resize_images_real_decoder(spark):
     assert out.meta["width"] == "2" and out.meta["height"] == "2"
 
 
-def test_decode_audio_real_wav():
-    d = multimodal.decode_audio(_wav_pcm16([0, 16384, -16384, 0]))
-    assert d["sample_rate"] == 8000 and d["n_channels"] == 1
-    assert d["samples"] == [0.0, 0.5, -0.5, 0.0]
-    feats = multimodal.audio_features(_wav_pcm16([0, 16384, -16384, 0]))
-    assert feats[:3] == [8000.0, 1.0, 4.0]
-
-
 def test_extract_features_real_decoder(spark):
-    """A real 1-px PNG and a real WAV through extract_features(decoder=
-    'real') — the mapInPandas plumbing carrying actual decoded features;
-    non-media rows keep the fake (md5) features in the same plan."""
+    """A real 1-px PNG through extract_features(decoder='real') — the
+    mapInPandas plumbing carrying actual decoded features; audio and text
+    rows keep the fake (md5) features in the same plan."""
     png = _png_rgb8([[(255, 0, 0)]])
     wav = _wav_pcm16([0, 16384, -16384, 0])
     assets = spark.createDataFrame(
@@ -571,7 +563,7 @@ def test_extract_features_real_decoder(spark):
         for r in multimodal.extract_features(assets, decoder="real").collect()
     }
     assert feats[1] == multimodal.image_features(png, 4)
-    assert feats[2] == multimodal.audio_features(wav, 4)
+    assert feats[2] == multimodal.fake_features(wav, 4)
     assert feats[3] == multimodal.fake_features(b"hello", 4)
 
 
@@ -650,24 +642,6 @@ def test_resize_images_plumbing(spark):
     # deterministic: same input → same bytes
     again = {r.asset_id: r for r in multimodal.resize_images(assets, 8, 8).collect()}
     assert bytes(again[1].payload) == bytes(out[1].payload)
-
-
-def test_sample_frames_expands_videos_only(spark):
-    assets = spark.createDataFrame(
-        [
-            (1, "video", bytearray(bytes(range(64))), {"src": "v"}),
-            (2, "image", bytearray(b"img"), None),
-        ],
-        multimodal.ASSET_SCHEMA,
-    )
-    frames = multimodal.sample_frames(assets, n_frames=4).collect()
-    assert {r.asset_id for r in frames} == {1}
-    assert sorted(r.frame_idx for r in frames) == [0, 1, 2, 3]
-    # evenly-spaced 16-byte spans of the 64-byte payload
-    by_idx = {r.frame_idx: bytes(r.frame) for r in frames}
-    assert by_idx[0] == bytes(range(16)) and by_idx[3] == bytes(range(48, 64))
-    # asset meta rides along on every frame row
-    assert all(r.meta == {"src": "v"} for r in frames)
 
 
 def test_redact_pii(spark):

@@ -91,28 +91,21 @@ def gif_write(
     w: int,
     h: int,
     gct: bytes,
-    bg: int = 0,
 ) -> bytes:
-    """frames: [{idx: np.ndarray[h,w], left, top, transparent, disposal,
-    interlace, lct}] — minimal but valid GIF89a."""
+    """frames: [{idx: np.ndarray[h,w], transparent, interlace, lct}] —
+    minimal but valid GIF89a; every frame sits at the screen origin."""
     depth = max(1, (len(gct) // 3 - 1).bit_length())
     out = bytearray(b"GIF89a")
     out += struct.pack("<HH", w, h)
-    out += bytes([0x80 | (depth - 1), bg, 0])
+    out += bytes([0x80 | (depth - 1), 0, 0])
     out += gct
     for fr in frames:
         idx = fr["idx"]
         fh, fw = idx.shape
-        if fr.get("transparent") is not None or fr.get("disposal"):
-            packed = ((fr.get("disposal", 0) & 7) << 2) | (
-                1 if fr.get("transparent") is not None else 0
-            )
-            out += bytes([0x21, 0xF9, 4, packed, 0, 0,
-                          fr.get("transparent") or 0, 0])
+        if fr.get("transparent") is not None:
+            out += bytes([0x21, 0xF9, 4, 1, 0, 0, fr["transparent"], 0])
         out += bytes([0x2C])
-        out += struct.pack(
-            "<HHHH", fr.get("left", 0), fr.get("top", 0), fw, fh
-        )
+        out += struct.pack("<HHHH", 0, 0, fw, fh)
         lct = fr.get("lct")
         p2 = 0x40 if fr.get("interlace") else 0
         if lct:
@@ -184,88 +177,10 @@ def test_transparency_first_frame_rgba():
     assert (got[0, 0, :3] == PAL[0]).all()
 
 
-def test_animation_subrect_composites_over_previous():
-    base = _rand_idx(8, 8, seed=1)
-    patch = np.full((2, 3), 4, np.uint8)
-    payload = gif_write(
-        [
-            {"idx": base},
-            {"idx": patch, "left": 2, "top": 5},
-        ],
-        8, 8, GCT,
-    )
-    frames = gif.gif_frames(payload)
-    assert len(frames) == 2
-    f0 = np.frombuffer(frames[0]["pixels"], np.uint8).reshape(8, 8, 3)
-    f1 = np.frombuffer(frames[1]["pixels"], np.uint8).reshape(8, 8, 3)
-    assert (f0 == PAL[base]).all()
-    assert (f1[5:7, 2:5] == PAL[4]).all()  # the painted patch
-    mask = np.ones((8, 8), bool)
-    mask[5:7, 2:5] = False
-    assert (f1[mask] == f0[mask]).all()  # everything else persists
-
-
-def test_animation_transparent_pixels_keep_canvas():
-    base = np.zeros((4, 4), np.uint8)
-    overlay = np.array([[1, 5], [5, 2]], np.uint8)  # 5 = transparent
-    payload = gif_write(
-        [
-            {"idx": base},
-            {"idx": overlay, "left": 1, "top": 1, "transparent": 5},
-        ],
-        4, 4, GCT,
-    )
-    f1 = np.frombuffer(
-        gif.gif_frames(payload)[1]["pixels"], np.uint8
-    ).reshape(4, 4, 3)
-    assert (f1[1, 1] == PAL[1]).all() and (f1[2, 2] == PAL[2]).all()
-    assert (f1[1, 2] == PAL[0]).all()  # transparent → base shows through
-    assert (f1[2, 1] == PAL[0]).all()
-
-
-def test_disposal_background_restores_between_frames():
-    base = _rand_idx(4, 4, seed=2)
-    payload = gif_write(
-        [
-            {"idx": base, "disposal": 2},  # restore bg after frame 1
-            {"idx": np.full((1, 1), 6, np.uint8), "left": 0, "top": 0},
-        ],
-        4, 4, GCT, bg=7,
-    )
-    f1 = np.frombuffer(
-        gif.gif_frames(payload)[1]["pixels"], np.uint8
-    ).reshape(4, 4, 3)
-    assert (f1[0, 0] == PAL[6]).all()
-    assert (f1[1:] == PAL[7]).all()  # bg color, not frame 1's pixels
-
-
 def test_decode_image_dispatches_gif():
     idx = _rand_idx(5, 6, seed=9)
     d = multimodal.decode_image(gif_write([{"idx": idx}], 6, 5, GCT))
     assert (d["width"], d["height"], d["channels"]) == (6, 5, 3)
-
-
-def test_sample_frames_animated_gif_yields_png_frames(spark):
-    """An animated GIF as a video payload: sample_frames composites the
-    real frames and re-encodes each as PNG, so downstream decode_image
-    sees standalone images."""
-    frames = [
-        {"idx": np.full((4, 4), c, np.uint8)} for c in (0, 1, 2, 3)
-    ]
-    payload = gif_write(frames, 4, 4, GCT)
-    assets = spark.createDataFrame(
-        [(1, "video", bytearray(payload), {})], multimodal.ASSET_SCHEMA
-    )
-    out = sorted(
-        (r["frame_idx"], bytes(r["frame"]))
-        for r in multimodal.sample_frames(assets, n_frames=2).collect()
-    )
-    assert len(out) == 2
-    for i, (fi, png) in enumerate(out):
-        d = multimodal.decode_image(png)
-        got = np.frombuffer(d["pixels"], np.uint8).reshape(4, 4, 3)
-        expect_color = PAL[(0, 2)[i]]  # frames 0 and 2 of 4, evenly spaced
-        assert (got == expect_color).all()
 
 
 def test_malformed_gif_raises():
@@ -276,43 +191,6 @@ def test_malformed_gif_raises():
     good = gif_write([{"idx": _rand_idx(6, 6)}], 6, 6, GCT)
     with pytest.raises(ValueError):
         gif.gif_decode(good[:20])
-
-
-def test_disposal_restore_previous_raises():
-    """Disposal 3 (restore-to-previous) is unsupported: compositing it
-    as 'leave' would ghost-trail every later frame — loud guard."""
-    payload = gif_write(
-        [
-            {"idx": _rand_idx(4, 4), "disposal": 3},
-            {"idx": _rand_idx(4, 4, seed=8)},
-        ],
-        4, 4, GCT,
-    )
-    with pytest.raises(NotImplementedError, match="disposal"):
-        gif.gif_frames(payload)
-
-
-def test_sample_frames_quarantines_malformed_container(spark):
-    """A truncated payload with a valid GIF magic must NOT abort the
-    job: the row quarantines to the span-slicing fallback (the
-    extract_features per-row convention)."""
-    good = gif_write([{"idx": _rand_idx(4, 4)}], 4, 4, GCT)
-    bad = good[:30]  # valid magic, truncated mid-structure
-    assets = spark.createDataFrame(
-        [(1, "video", bytearray(bad), {}),
-         (2, "video", bytearray(good), {})],
-        multimodal.ASSET_SCHEMA,
-    )
-    out = {
-        (r["asset_id"], r["frame_idx"]): bytes(r["frame"])
-        for r in multimodal.sample_frames(assets, n_frames=2).collect()
-    }
-    assert len(out) == 4  # both rows produced frames — no job abort
-    assert all(len(v) > 0 for v in out.values())
-    # the good row still gets REAL frames (PNG re-encode)
-    assert out[(2, 0)][:8] == b"\x89PNG\r\n\x1a\n"
-    # the bad row fell back to deterministic span slices of the payload
-    assert out[(1, 0)] == bad[: len(bad) // 2]
 
 
 def test_resize_image_real_on_gif_payload():

@@ -12,6 +12,7 @@ that should stay must be wired into an entry point.
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -112,3 +113,55 @@ def test_every_package_module_is_reachable():
         "package modules no entry point imports (delete them, or wire "
         "them into an entry point): " + ", ".join(unreached)
     )
+
+
+#: a package module path as prose and tooling name it
+_MODULE_PATH = re.compile(
+    r"\b(operators|sources|plans|streaming|functions)/(\w+)\.py\b"
+)
+
+
+def _scanned_files() -> list[Path]:
+    """The package, tools, perfbench, the bench and the optional
+    requirements: every file whose text may point a reader at a module."""
+    files = [ROOT / "bench.py", ROOT / "requirements-optional.txt"]
+    for top in (ROOT / PKG, ROOT / "tools", ROOT / "perfbench"):
+        files += [
+            p for p in sorted(top.rglob("*"))
+            if p.is_file() and "__pycache__" not in p.parts
+        ]
+    return files
+
+
+def _stale_module_paths(files: list[Path], root: Path) -> list[str]:
+    """``file:line: path`` for each module path the files name that has
+    no file in the package."""
+    stale = []
+    for path in files:
+        text = path.read_text(encoding="utf-8", errors="replace")
+        for lineno, line in enumerate(text.splitlines(), 1):
+            for m in _MODULE_PATH.finditer(line):
+                if not (root / PKG / m.group(1) / f"{m.group(2)}.py").is_file():
+                    rel = path.relative_to(root)
+                    stale.append(f"{rel}:{lineno}: {m.group(0)}")
+    return stale
+
+
+def test_stale_path_gate_on_toy_tree(tmp_path):
+    """The gate's own contract: a named module that exists passes, one
+    that does not is reported with its file and line."""
+    (tmp_path / PKG / "operators").mkdir(parents=True)
+    (tmp_path / PKG / "operators" / "kept.py").write_text("")
+    notes = tmp_path / "notes.txt"
+    notes.write_text("see operators/kept.py\nand operators/gone.py\n")
+    assert _stale_module_paths([notes], tmp_path) == [
+        "notes.txt:2: operators/gone.py"
+    ]
+
+
+def test_named_module_paths_exist():
+    """A deleted module must leave no pointer behind in code, tooling or
+    requirements: every ``operators|sources|plans|streaming|functions``
+    path they name has a file in the package."""
+    stale = _stale_module_paths(_scanned_files(), ROOT)
+    assert not stale, "paths to modules that do not exist:\n" + "\n".join(stale)
