@@ -666,7 +666,9 @@ def main(argv: list[str] | None = None) -> None:
 
         read_monthly_csv(spark, args.raw_csv).show(args.rows, truncate=40)
     elif args.cmd == "load":
-        normalized = spark.read.parquet(args.normalized_dir)
+        normalized = mef_pipeline.read_warehouse(
+            spark, args.normalized_dir, "normalized"
+        )
         if args.years:
             # ANO_EJE is the normalized zone's partition column — this
             # filter prunes to the requested years' files

@@ -33,6 +33,16 @@ Scale: the fact is partitioned by ``anio`` so every year-filtered query
 prunes partitions; dims stay broadcast-sized; the fact's wide shuffles in
 the load are the grain consolidation and the grain anti-join against the
 batch's own year partitions.
+
+Schemas: ``WAREHOUSE`` declares every stored table, derived from
+``schema.DIMENSIONS``/``FACT_FKS``/``METRICS``/``COLS_CLAVE``.  The
+normalized zone's entry governs ``load``'s and ``streaming_load``'s read
+of the transform output; the dim, ``dim_tiempo`` and fact entries govern
+both sides of the warehouse: every write is conformed to its entry
+(``_conform``, which also carries the business comments into the parquet
+footers) and every read in this module goes through ``read_warehouse``
+with it.  No read here infers a schema, so building a load, a refresh or
+the views runs no Spark job of its own.
 """
 
 from __future__ import annotations
@@ -42,11 +52,21 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators import normalize, star
 from ..operators.timedim import build_time_dim
-from ..schema import DIMENSIONS, FACT_FKS, METRICS, raw_name
-from ..schema_comments import with_column_comments
+from ..schema import (
+    COLS_CLAVE,
+    DIMENSIONS,
+    FACT_FKS,
+    METRICS,
+    RAW_INT_COLS,
+    RAW_METRIC_COLS,
+    Dim,
+    raw_name,
+)
+from ..schema_comments import COLUMN_COMMENTS
 from ..sources.csv_source import read_monthly_csv
 from . import views as V
 
@@ -66,6 +86,117 @@ RENAME_MAP: dict[str, str] = {
     },
     **{m.upper(): m for m in METRICS},
 }
+
+
+_INT, _LONG, _TEXT = T.IntegerType(), T.LongType(), T.StringType()
+
+
+def _field(name: str, dtype: T.DataType) -> T.StructField:
+    """A catalog column carrying its business comment
+    (CreacionDBOrigen.sql:75-137) as Spark field metadata."""
+    comment = COLUMN_COMMENTS.get(name)
+    return T.StructField(
+        name, dtype, True, {"comment": comment} if comment else {}
+    )
+
+
+def _dim_schema(dim: Dim) -> T.StructType:
+    """Stored dim: surrogate id, then natural keys (trimmed strings, or
+    ints for ``int_keys``), then attributes (``star.extract_dim``)."""
+    return T.StructType(
+        [
+            _field(dim.id_col, _LONG),
+            *(_field(k, _INT if k in dim.int_keys else _TEXT) for k in dim.key),
+            *(_field(a, _TEXT) for a in dim.attrs),
+        ]
+    )
+
+
+#: stored table → declared schema: the normalized zone (``transform``'s
+#: output, partitioned by ``ANO_EJE``), the calendar, the 7 dims and the
+#: fact (partitioned by ``anio``; partition columns come last).  Metrics
+#: are ``money.DEC`` (decimal(18,4)) when normalized and decimal(28,4) in
+#: the fact, the type of Spark's sum over them in ``star.consolidate``.
+WAREHOUSE: dict[str, T.StructType] = {
+    "normalized": T.StructType(
+        [
+            T.StructField(
+                c,
+                _INT
+                if c in RAW_INT_COLS
+                else T.DecimalType(18, 4)
+                if c in RAW_METRIC_COLS
+                else _TEXT,
+            )
+            for c in COLS_CLAVE
+            if c != "ANO_EJE"
+        ]
+        + [T.StructField("FECHA", T.DateType()), T.StructField("ANO_EJE", _INT)]
+    ),
+    "dim_tiempo": T.StructType(
+        [
+            _field("tiempo_id", _LONG),
+            _field("fecha", T.DateType()),
+            *(_field(c, _INT) for c in ("anio", "mes", "trimestre")),
+        ]
+    ),
+    **{dim.name: _dim_schema(dim) for dim in DIMENSIONS},
+    "fact_gasto_mensual": T.StructType(
+        [
+            *(_field(k, _LONG) for k in FACT_FKS),
+            *(_field(m, T.DecimalType(28, 4)) for m in METRICS),
+            _field("anio", _INT),
+        ]
+    ),
+}
+
+
+def read_warehouse(
+    spark: SparkSession, path: str | Path, table: str
+) -> DataFrame:
+    """Read stored ``table`` at ``path`` under its ``WAREHOUSE`` schema:
+    no schema-inference job, and the comments ride on the columns."""
+    schema = WAREHOUSE[table]
+    df = spark.read.schema(schema).parquet(str(path))
+    if table == "fact_gasto_mensual":
+        # the scan drops a partition column's field metadata
+        df = df.withMetadata("anio", schema["anio"].metadata)
+    return df
+
+
+def _read_star(
+    spark: SparkSession, warehouse: str
+) -> tuple[DataFrame, DataFrame, dict[str, DataFrame]]:
+    """(fact, dim_tiempo, dims by name) of a loaded warehouse."""
+    wh = Path(warehouse)
+    return (
+        read_warehouse(spark, wh / "fact_gasto_mensual", "fact_gasto_mensual"),
+        read_warehouse(spark, wh / "dim_tiempo", "dim_tiempo"),
+        {d.name: read_warehouse(spark, wh / d.name, d.name) for d in DIMENSIONS},
+    )
+
+
+def _conform(df: DataFrame, table: str) -> DataFrame:
+    """``df`` in ``table``'s catalog column order with the catalog's field
+    metadata, ready to write.  A column missing or typed otherwise than
+    the catalog raises ``ValueError``: what is written must be what every
+    read declares."""
+    schema = WAREHOUSE[table]
+    have = {f.name: f.dataType for f in df.schema.fields}
+    bad = [
+        f"{f.name}: frame "
+        f"{have[f.name].simpleString() if f.name in have else 'none'}, "
+        f"catalog {f.dataType.simpleString()}"
+        for f in schema.fields
+        if have.get(f.name) != f.dataType
+    ]
+    if bad:
+        raise ValueError(
+            f"{table} write disagrees with the catalog: " + "; ".join(bad)
+        )
+    return df.select(
+        *[F.col(f.name).alias(f.name, metadata=f.metadata) for f in schema]
+    )
 
 
 def transform(
@@ -113,7 +244,9 @@ def load(
     side, one grain consolidation, and a grain-keyed anti-join fact append.
     Re-loading the same input is a no-op that writes no file (the ON
     CONFLICT DO NOTHING property)."""
-    return load_frame(spark, spark.read.parquet(normalized_dir), warehouse)
+    return load_frame(
+        spark, read_warehouse(spark, normalized_dir, "normalized"), warehouse
+    )
 
 
 def load_frame(
@@ -125,22 +258,29 @@ def load_frame(
     Writes only the delta, never rewriting a stored file: the calendar
     when it is absent, each dim's new natural keys, and the fact grain
     rows its years do not hold yet.  A replay of the same input writes
-    nothing."""
+    nothing.
+
+    ``WAREHOUSE`` governs both sides: each written frame is conformed to
+    its table's entry, which also stores the business comments
+    (CreacionDBOrigen.sql:75-137) in every dim/fact/calendar footer, and
+    the stored dims and fact are read back with it.  The caller's
+    ``normalized`` frame keeps whatever schema it came with.  Returns the
+    whole stored fact, read under the catalog."""
     wh = Path(warehouse)
-    # business-meaning column comments (CreacionDBOrigen.sql:75-137) ride
-    # along as field metadata into every dim/fact parquet written below
-    records = with_column_comments(_star_records(normalized))
+    records = _star_records(normalized)
 
     time_path = wh / "dim_tiempo"
     if not time_path.exists():
-        with_column_comments(build_time_dim(spark)).write.parquet(
+        _conform(build_time_dim(spark), "dim_tiempo").write.parquet(
             str(time_path)
         )
 
     for dim in DIMENSIONS:
         dim_path = wh / dim.name
         existing = (
-            spark.read.parquet(str(dim_path)) if dim_path.exists() else None
+            read_warehouse(spark, dim_path, dim.name)
+            if dim_path.exists()
+            else None
         )
         new_rows = star.new_dim_rows(
             existing, star.extract_dim(records, dim), dim.key
@@ -148,7 +288,9 @@ def load_frame(
         # a flat append of an empty frame still writes an empty part
         # file; dim deltas are broadcast-sized, so one file per load
         if not new_rows.isEmpty():
-            new_rows.coalesce(1).write.mode("append").parquet(str(dim_path))
+            _conform(new_rows, dim.name).coalesce(1).write.mode(
+                "append"
+            ).parquet(str(dim_path))
 
     resolved = star.resolve_fks(records, DIMENSIONS)
     complete = star.fk_complete_filter(
@@ -167,9 +309,9 @@ def load_frame(
         years = [
             r.anio for r in batch.select("anio").distinct().collect()
         ]
-        existing_fact = spark.read.parquet(str(fact_path)).filter(
-            F.col("anio").isin(years)
-        )
+        existing_fact = read_warehouse(
+            spark, fact_path, "fact_gasto_mensual"
+        ).filter(F.col("anio").isin(years))
     else:
         existing_fact = None
     new_rows = star.new_fact_rows(
@@ -178,8 +320,10 @@ def load_frame(
     # appended files land only under the batch's own anio partitions
     # (a partitioned append of an empty delta writes no file); every
     # stored file keeps its bytes
-    new_rows.write.mode("append").partitionBy("anio").parquet(str(fact_path))
-    return spark.read.parquet(str(fact_path))
+    _conform(new_rows, "fact_gasto_mensual").write.mode(
+        "append"
+    ).partitionBy("anio").parquet(str(fact_path))
+    return read_warehouse(spark, fact_path, "fact_gasto_mensual")
 
 
 def streaming_load(
@@ -200,13 +344,11 @@ def streaming_load(
 
     Returns the finished StreamingQuery (already awaited).
     """
-    schema = spark.read.parquet(normalized_dir).schema
-
     def handle(batch: DataFrame, _batch_id: int) -> None:
         load_frame(spark, batch, warehouse)
 
     query = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(WAREHOUSE["normalized"])
         .parquet(normalized_dir)
         .writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint_dir)
@@ -239,15 +381,10 @@ def materialize_agg_mensual(
     ``load_frame`` already knows the loaded years (its own partition
     scoping); pass them straight through.
     """
-    wh = Path(warehouse)
-    fact = spark.read.parquet(str(wh / "fact_gasto_mensual"))
+    fact, time_dim, dims = _read_star(spark, warehouse)
     if years is not None:
         # lands on the partition column → file pruning at the scan
         fact = fact.filter(F.col("anio").isin([int(y) for y in years]))
-    time_dim = spark.read.parquet(str(wh / "dim_tiempo"))
-    dims = {
-        d.name: spark.read.parquet(str(wh / d.name)) for d in DIMENSIONS
-    }
     agg = V.vw_gasto_agregado_mensual_star(fact, time_dim, dims)
     agg.write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
@@ -255,13 +392,11 @@ def materialize_agg_mensual(
 
 
 def register_views(spark: SparkSession, warehouse: str) -> DataFrame:
-    """Serve stage: register vw_gasto_mensual / agregado views (V:21-196)."""
-    wh = Path(warehouse)
-    fact = spark.read.parquet(str(wh / "fact_gasto_mensual"))
-    time_dim = spark.read.parquet(str(wh / "dim_tiempo"))
-    dims = {
-        d.name: spark.read.parquet(str(wh / d.name)) for d in DIMENSIONS
-    }
+    """Serve stage: register vw_gasto_mensual / agregado views (V:21-196).
+
+    The star is read under ``WAREHOUSE``, so registering runs no Spark job
+    and the served columns carry the catalog's business comments."""
+    fact, time_dim, dims = _read_star(spark, warehouse)
     # serve the FACT's anio (the partition column) and the calendar's
     # mes/trimestre: a year predicate on the view then lands on the
     # partition column and prunes fact files; the dropped calendar anio

@@ -4,15 +4,14 @@ The reference documents every raw column with a COMMENT ON COLUMN
 (``ETL Gasto publico Perú/sql/CreacionDBOrigen.sql:75-137``); those
 descriptions are carried here keyed by STAR column name (the loader's
 rename applied, ``etl/cargar_postgres.py:159-233``) and attached as
-Spark column metadata (``Column.metadata["comment"]``) on the warehouse
-tables and served views — parquet persists Spark field metadata, so a
-BI user reading the warehouse sees the business meaning in the schema,
-same as a psql user running ``\\d+`` against the reference.
+Spark field metadata (``metadata["comment"]``) by the warehouse catalog
+(``plans/mef_pipeline.WAREHOUSE``), which every warehouse write and read
+uses — parquet persists Spark field metadata, so a BI user reading the
+warehouse sees the business meaning in the schema, same as a psql user
+running ``\\d+`` against the reference.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
 
 #: star column → business description (CreacionDBOrigen.sql:75-137).
 COLUMN_COMMENTS: dict[str, str] = {
@@ -93,19 +92,3 @@ COLUMN_COMMENTS: dict[str, str] = {
     "fecha": "Primer día del mes del período presupuestal.",
     "trimestre": "Trimestre calendario del período.",
 }
-
-
-def with_column_comments(
-    df: DataFrame, comments: dict[str, str] = COLUMN_COMMENTS
-) -> DataFrame:
-    """Attach the business comment to every matching column's metadata.
-    Parquet round-trips Spark field metadata, so warehouse tables keep
-    their documentation.  One projection, however many columns match."""
-    return df.select(
-        *[
-            df[c].alias(c, metadata={"comment": comments[c]})
-            if c in comments
-            else df[c]
-            for c in df.columns
-        ]
-    )

@@ -2,7 +2,7 @@
 
 from .csv_source import read_monthly_csv
 from .parquet_source import read_parquet, write_parquet
-from .tables import TABLES, load_table, register_views
+from .tables import TABLES, load_table
 
 __all__ = [
     "read_monthly_csv",
@@ -10,5 +10,4 @@ __all__ = [
     "write_parquet",
     "TABLES",
     "load_table",
-    "register_views",
 ]

@@ -453,9 +453,6 @@ def test_wide_etl_steps_are_one_projection(spark):
         RAW_INT_COLS,
         RAW_METRIC_COLS,
     )
-    from proyecto_gasto_publico_etl_per__spark.schema_comments import (
-        with_column_comments,
-    )
 
     def added(before, after) -> int:
         return _project_count(after) - _project_count(before)
@@ -469,7 +466,5 @@ def test_wide_etl_steps_are_one_projection(spark):
     cleaned = normalize.clean_text_cols(coerced, text)
     assert len(text) == 54 and added(coerced, cleaned) == 1
     records = mef_pipeline._star_records(cleaned)
-    commented = with_column_comments(records)
-    assert added(records, commented) == 1
-    resolved = star.resolve_fks(commented, DIMENSIONS)
-    assert len(DIMENSIONS) == 7 and added(commented, resolved) == 2
+    resolved = star.resolve_fks(records, DIMENSIONS)
+    assert len(DIMENSIONS) == 7 and added(records, resolved) == 2

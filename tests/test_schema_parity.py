@@ -149,28 +149,6 @@ def test_placeholder_labels_split_no_groups(spark):
     assert row.pia == 3.0
 
 
-def test_column_comments_survive_warehouse_roundtrip(spark, tmp_path):
-    """The reference documents every column with COMMENT ON COLUMN
-    (CreacionDBOrigen.sql:75-137); the engine carries the same
-    descriptions as Spark field metadata through the warehouse parquet."""
-    from proyecto_gasto_publico_etl_per__spark.schema_comments import (
-        COLUMN_COMMENTS,
-        with_column_comments,
-    )
-
-    df = spark.createDataFrame(
-        [(2024, "SALUD", 1.5)],
-        "anio int, sector_nombre string, monto_pia double",
-    )
-    out = str(tmp_path / "t")
-    with_column_comments(df).write.parquet(out)
-    back = spark.read.parquet(out)
-    meta = {f.name: f.metadata.get("comment") for f in back.schema.fields}
-    assert meta["anio"] == COLUMN_COMMENTS["anio"]
-    assert meta["sector_nombre"] == COLUMN_COMMENTS["sector_nombre"]
-    assert meta["monto_pia"] == "Presupuesto Institucional de Apertura (PIA)."
-
-
 def test_comments_cover_all_star_columns():
     """Every dimension key/attr, metric, and calendar column has a
     business description (the 63-comment contract + dim_tiempo)."""
