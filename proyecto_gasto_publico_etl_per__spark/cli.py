@@ -666,21 +666,29 @@ def main(argv: list[str] | None = None) -> None:
 
         read_monthly_csv(spark, args.raw_csv).show(args.rows, truncate=40)
     elif args.cmd == "load":
-        normalized = mef_pipeline.read_warehouse(
-            spark, args.normalized_dir, "normalized"
-        )
-        if args.years:
-            # ANO_EJE is the normalized zone's partition column — this
-            # filter prunes to the requested years' files
-            from pyspark.sql import functions as F
+        if args.years or args.validate:
+            # a filtered or validated frame is not the file set the load
+            # ledger keys on: load it without the ledger
+            normalized = mef_pipeline.read_warehouse(
+                spark, args.normalized_dir, "normalized"
+            )
+            if args.years:
+                # ANO_EJE is the normalized zone's partition column — this
+                # filter prunes to the requested years' files
+                from pyspark.sql import functions as F
 
-            normalized = normalized.filter(F.col("ANO_EJE").isin(args.years))
-        if args.validate:
-            from .operators import expectations as X
+                normalized = normalized.filter(
+                    F.col("ANO_EJE").isin(args.years)
+                )
+            if args.validate:
+                from .operators import expectations as X
 
-            row = X.assert_ok(normalized, X.standard_monthly_checks())
-            print(f"validated {row.n_rows} rows: all checks pass")
-        fact = mef_pipeline.load_frame(spark, normalized, args.warehouse)
+                row = X.assert_ok(normalized, X.standard_monthly_checks())
+                print(f"validated {row.n_rows} rows: all checks pass")
+            fact = mef_pipeline.load_frame(spark, normalized, args.warehouse)
+        else:
+            # the whole normalized dir: a replay stops at the load ledger
+            fact = mef_pipeline.load(spark, args.normalized_dir, args.warehouse)
         print(f"fact rows: {fact.count()} → {args.warehouse}")
     elif args.cmd == "corpus-build":
         from .plans.corpus_pipeline import build_corpus

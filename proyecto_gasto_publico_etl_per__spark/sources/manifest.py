@@ -91,7 +91,7 @@ def _bloom_pos_cols(col: str, bits: int, k: int) -> list:
     ]
 
 
-def _data_files(path: str) -> list[str]:
+def data_files(path: str) -> list[str]:
     """The table's parquet data files (top-level part files and
     Hive-style partition subdirs), excluding ``_``/``.``-prefixed
     entries — the same visibility rule Hadoop's listing applies."""
@@ -149,7 +149,7 @@ def build_stats_manifest(
     positions, ≤ BLOOM_BITS ints per file)."""
     if not cols and not blooms:
         raise ValueError("manifest: need at least one tracked column")
-    files = _data_files(path)
+    files = data_files(path)
     if not files:
         raise ValueError(f"manifest: no parquet data files under {path!r}")
     table_cols = set(spark.read.parquet(path).schema.names)
@@ -271,7 +271,7 @@ def select_files(
         )
     rows = mf.select("file", f"min_{col}", f"max_{col}").collect()
     known = {r["file"] for r in rows}
-    live = _data_files(path)
+    live = data_files(path)
     unknown = [f for f in live if os.path.basename(f) not in known]
     if unknown:
         raise ValueError(
@@ -355,7 +355,7 @@ def select_files_eq(
         sel.append(f"bloom_{col}")
     rows = mf.select(*sel).collect()
     known = {r["file"] for r in rows}
-    live = _data_files(path)
+    live = data_files(path)
     unknown = [f for f in live if os.path.basename(f) not in known]
     if unknown:
         raise ValueError(

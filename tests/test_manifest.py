@@ -147,7 +147,7 @@ def test_compacted_file_tolerated(spark, tmp_path):
     root = str(tmp_path / "t")
     df.repartition(2).write.parquet(root)
     manifest.build_stats_manifest(spark, root, ["v"])
-    victims = manifest._data_files(root)
+    victims = manifest.data_files(root)
     os.remove(victims[0])
     kept, total = manifest.select_files(spark, root, "v", 0, 10)
     assert total == 1 and len(kept) == 1

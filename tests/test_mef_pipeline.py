@@ -6,6 +6,7 @@ raw file, including the idempotent re-load property."""
 from __future__ import annotations
 
 import csv
+import json
 import os
 import re
 from pathlib import Path
@@ -270,6 +271,16 @@ def test_cli_load_year_filter(spark, tmp_path):
     cli.main(["load", norm, wh, "2024"])
     years = [r.anio for r in spark.read.parquet(f"{wh}/fact_gasto_mensual").collect()]
     assert years == [2024]  # 2023 excluded by the load year filter
+    # a filtered load is not the file set the ledger keys on
+    assert not _ledger_entries(wh)
+
+    # the whole dir goes through mef_pipeline.load and its ledger
+    cli.main(["load", norm, wh])
+    assert len(_ledger_entries(wh)) == 1
+    years = sorted(
+        r.anio for r in spark.read.parquet(f"{wh}/fact_gasto_mensual").collect()
+    )
+    assert years == [2023, 2024]
 
 
 def test_cli_sniff_and_inspect(tmp_path, capsys, spark):
@@ -468,3 +479,142 @@ def test_wide_etl_steps_are_one_projection(spark):
     records = mef_pipeline._star_records(cleaned)
     resolved = star.resolve_fks(records, DIMENSIONS)
     assert len(DIMENSIONS) == 7 and added(records, resolved) == 2
+
+
+def _jobs_of(spark, group: str, run) -> int:
+    """Spark jobs started while ``run()`` ran under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "mef load job-count gate")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _ledger_entries(wh: str) -> list[Path]:
+    return sorted(Path(wh, mef_pipeline.LEDGER).glob("_*.json"))
+
+
+def _month(spark, tmp_path, name: str, rows: list[list[str]]) -> str:
+    """Transform a one-off raw month into its own normalized dir."""
+    raw = tmp_path / f"{name}.csv"
+    _write_csv(raw, rows)
+    nd = str(tmp_path / f"normalized_{name}")
+    mef_pipeline.transform(spark, str(raw), nd)
+    return nd
+
+
+def test_replay_runs_no_spark_job(spark, tmp_path, raw_csv):
+    """A replay of transform + load stops at the transform gate and the
+    load ledger: no Spark job, no file written."""
+    norm_dir = str(tmp_path / "normalized")
+    wh = str(tmp_path / "warehouse")
+    mef_pipeline.transform(spark, raw_csv, norm_dir)
+    mef_pipeline.load(spark, norm_dir, wh)
+    assert len(_ledger_entries(wh)) == 1
+    first = _data_files(wh)
+
+    def replay():
+        mef_pipeline.transform(spark, raw_csv, norm_dir)
+        mef_pipeline.load(spark, norm_dir, wh)
+
+    assert _jobs_of(spark, "mef-replay", replay) == 0
+    assert _data_files(wh) == first
+    assert spark.read.parquet(f"{wh}/fact_gasto_mensual").count() == 2
+
+
+def test_changed_file_under_same_name_is_loaded(spark, tmp_path, raw_csv):
+    """The ledger keys on the normalized bytes, not on names: a re-transform
+    of a changed raw file into the same dir loads its new grain rows."""
+    norm_dir = str(tmp_path / "normalized")
+    wh = str(tmp_path / "warehouse")
+    mef_pipeline.transform(spark, raw_csv, norm_dir)
+    mef_pipeline.load(spark, norm_dir, wh)
+
+    with open(raw_csv, "a", newline="") as fh:
+        csv.writer(fh).writerow(
+            ["2024", "4", "E", "GOBIERNO NACIONAL", "001", "E1",
+             "Ejecutora Uno", "01", "SALUD", "7", "8", "9"]
+        )
+    mef_pipeline.transform(spark, raw_csv, norm_dir, overwrite=True)
+    fact = mef_pipeline.load(spark, norm_dir, wh)
+    assert sorted(r.tiempo_id for r in fact.collect()) == [
+        202401, 202402, 202404
+    ]
+    assert len(_ledger_entries(wh)) == 2
+
+
+def test_stale_ledger_reloads_missing_rows(spark, tmp_path, raw_csv):
+    """A ledger entry whose recorded fact file is gone does not skip the
+    load: the grain anti-join re-appends exactly the missing rows."""
+    norm_dir = str(tmp_path / "normalized")
+    wh = str(tmp_path / "warehouse")
+    mef_pipeline.transform(spark, raw_csv, norm_dir)
+    want = {tuple(r) for r in mef_pipeline.load(spark, norm_dir, wh).collect()}
+    (entry,) = _ledger_entries(wh)
+    recorded = json.loads(entry.read_text())["files"]
+    fact_files = [f for f in recorded if f.startswith("fact_gasto_mensual/")]
+    assert fact_files
+    for rel in fact_files:
+        Path(wh, rel).unlink()
+    assert mef_pipeline.read_warehouse(
+        spark, f"{wh}/fact_gasto_mensual", "fact_gasto_mensual"
+    ).count() == 0
+
+    got = {tuple(r) for r in mef_pipeline.load(spark, norm_dir, wh).collect()}
+    assert got == want
+    # the reload re-recorded the entry, so the next replay is free again
+    assert _jobs_of(
+        spark, "mef-stale-replay", lambda: mef_pipeline.load(spark, norm_dir, wh)
+    ) == 0
+
+
+def test_one_new_ejecutora_appends_one_dim_row(spark, tmp_path, raw_csv):
+    """A month whose only new natural key is one ejecutora appends one row
+    to ``dim_ejecutora`` and no file to any other dim."""
+    norm_dir = str(tmp_path / "normalized")
+    wh = str(tmp_path / "warehouse")
+    mef_pipeline.transform(spark, raw_csv, norm_dir)
+    mef_pipeline.load(spark, norm_dir, wh)
+    before = _data_files(wh)
+    n_ejec = spark.read.parquet(f"{wh}/dim_ejecutora").count()
+
+    nd = _month(spark, tmp_path, "2024-05-Gasto-Mensual", [
+        ["2024", "5", "E", "GOBIERNO NACIONAL", "009", "E9",
+         "Ejecutora Nueve", "01", "SALUD", "1", "2", "3"],
+        ["2024", "5", "R", "GOBIERNO REGIONAL", "002", "E2",
+         "Ejecutora Dos", "02", "EDUCACION", "4", "5", "6"],
+    ])
+    mef_pipeline.load(spark, nd, wh)
+    added = set(_data_files(wh)) - set(before)
+    dim_files = {rel for rel in added if rel.startswith("dim_")}
+    assert len(dim_files) == 1 and next(iter(dim_files)).startswith(
+        "dim_ejecutora/"
+    ), added
+    assert spark.read.parquet(f"{wh}/dim_ejecutora").count() == n_ejec + 1
+    new = spark.read.parquet(f"{wh}/{next(iter(dim_files))}").collect()
+    assert [(r.sec_ejec, r.ejecutora_codigo) for r in new] == [("009", "E9")]
+
+
+#: Spark jobs of a monthly load into an existing year that brings no new
+#: dim key, on the small fixture: the probe's collect, then the fact's
+#: grain consolidation and partition-scoped anti-join append.
+REFRESH_LOAD_JOB_BUDGET = 6
+
+
+def test_refresh_load_job_budget(spark, tmp_path, raw_csv):
+    """The refresh load runs one probe, not a probe per dim: a change that
+    adds probe jobs back fails here."""
+    norm_dir = str(tmp_path / "normalized")
+    wh = str(tmp_path / "warehouse")
+    mef_pipeline.transform(spark, raw_csv, norm_dir)
+    mef_pipeline.load(spark, norm_dir, wh)
+    nd = _month(spark, tmp_path, "2024-03-Gasto-Mensual", [
+        ["2024", "3", "E", "GOBIERNO NACIONAL", "001", "E1",
+         "Ejecutora Uno", "01", "SALUD", "7", "8", "9"],
+    ])
+    n = _jobs_of(spark, "mef-refresh", lambda: mef_pipeline.load(spark, nd, wh))
+    assert n <= REFRESH_LOAD_JOB_BUDGET, n
+    assert spark.read.parquet(f"{wh}/fact_gasto_mensual").count() == 3
