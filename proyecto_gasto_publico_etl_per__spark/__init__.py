@@ -14,7 +14,7 @@ every operator it implements (SURVEY.md §2) Spark-first:
                   exact-decimal money math, cross-engine stable hashing)
 - ``plans``     — the analytic views and parameterized queries (Q1-Q7,
                   V-base / V-aggm / V-agga) as DataFrame builders
-- ``streaming`` — incremental / Structured Streaming ingestion
+- ``streaming`` — event-time window operators (batch or streaming frames)
 
 Everything is DataFrame API + Spark SQL; Catalyst/AQE does the physical
 planning.  One declared query runs Python per row: ``multimodal_extract``

@@ -207,14 +207,6 @@ def main(argv: list[str] | None = None) -> None:
     cb.add_argument("--val-fraction", type=float, default=0.01)
     cb.add_argument("--test-fraction", type=float, default=0.01)
     cb.add_argument(
-        "--classifier-model",
-        default=None,
-        help="model-store path of a trained quality classifier "
-             "(plans.corpus_pipeline.train_quality_classifier); adds a "
-             "learned p_keep gate on top of the heuristic gates",
-    )
-    cb.add_argument("--classifier-threshold", type=float, default=0.5)
-    cb.add_argument(
         "--dsir-target-source",
         action="append",
         default=None,
@@ -584,7 +576,7 @@ def main(argv: list[str] | None = None) -> None:
         "drift-score",
         help="goodness-of-fit chi-square of a batch's token distribution "
              "vs a frozen drift-freeze reference (one row: n_tokens, "
-             "chi2_micro) — the batch twin of the streaming monitor",
+             "chi2_micro)",
     )
     dsc.add_argument("sf_dir")
     dsc.add_argument("ref_dir")
@@ -593,8 +585,7 @@ def main(argv: list[str] | None = None) -> None:
         "classifier-eval",
         help="k-fold cross-validation of the quality classifier on a "
              "corpus-build profile zone: per-fold held-out AUC + "
-             "log-loss (vs the zero-model baseline) — the measured "
-             "quality number to ship beside --classifier-model",
+             "log-loss (vs the zero-model baseline)",
     )
     ce.add_argument(
         "profile_dir",
@@ -697,8 +688,6 @@ def main(argv: list[str] | None = None) -> None:
             spark, args.sf_dir, args.out_dir, lang=args.lang,
             val_fraction=args.val_fraction,
             test_fraction=args.test_fraction,
-            classifier_model=args.classifier_model,
-            classifier_threshold=args.classifier_threshold,
             dsir_target_sources=(
                 tuple(args.dsir_target_sources)
                 if args.dsir_target_sources

@@ -54,72 +54,3 @@ def region_map_label(dep_col: Column | str, placeholder: str = "SIN DEPARTAMENTO
         label_or_placeholder(dep_col, placeholder),
         F.lit(", Perú"),
     )
-
-
-#: Spanish/Latin-1 accented characters and their folded forms, aligned
-#: by position for F.translate (JVM-side 1:1 char map, no UDF).  ñ/Ñ
-#: fold to n/N — intentional for MATCH KEYS ONLY (display labels keep
-#: their accents; the reference's limpiar_texto never folds).
-_ACCENTED = "ÁÉÍÓÚÜÑÀÈÌÒÙÂÊÎÔÛÄËÏÖáéíóúüñàèìòùâêîôûäëïö"
-_FOLDED = "AEIOUUNAEIOUAEIOUAEIOaeiouunaeiouaeiouaeio"
-
-
-def fold_accents(col: Column | str) -> Column:
-    """Strip diacritics (á→a, Ñ→N) via a literal translate map.
-
-    For matching/dedup keys over Spanish labels — 'EDUCACIÓN' and the
-    commonly-mistyped 'EDUCACION' must meet in a join.  NOT applied to
-    display columns: the serving views keep the reference's exact label
-    bytes."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.translate(c, _ACCENTED, _FOLDED)
-
-
-def match_key(col: Column | str) -> Column:
-    """Canonical label-matching key: clean → fold accents → lowercase.
-    The join key for fuzzy dimension-label matching and cross-source
-    label reconciliation (blocked-Levenshtein's exact-prefilter)."""
-    return F.lower(fold_accents(clean_text(col)))
-
-
-def reconcile_on_match_key(
-    left, right, label_col: str, how: str = "inner", key_col: str = "__mk"
-):
-    """Join two frames on the canonical match key of ``label_col`` —
-    the production entry point for cross-source label reconciliation
-    ('EDUCACIÓN' meets 'educacion').  Right-side columns other than the
-    label keep their names; both original labels survive as
-    ``<label_col>`` / ``<label_col>_right`` so the caller can audit
-    what was reconciled.  Exact-canonical matching; for typo-distance
-    matching feed the SURVIVORS of this join's anti-complement to the
-    blocked-Levenshtein path (this is its exact prefilter).
-
-    Raises on column collisions instead of silently corrupting the
-    output: ``withColumnRenamed`` to an existing ``<label_col>_right``
-    would duplicate the name, and ``withColumn(key_col, ...)`` would
-    OVERWRITE a caller column named ``key_col``."""
-    renamed = f"{label_col}_right"
-    if renamed in right.columns:
-        raise ValueError(
-            f"right frame already has a column {renamed!r}; rename it "
-            "or pass a different label_col"
-        )
-    if renamed in left.columns:
-        raise ValueError(
-            f"left frame already has a column {renamed!r}; the join "
-            "output would carry two columns of that name — rename it "
-            "or pass a different label_col"
-        )
-    clash = [
-        f for f in (left, right) if key_col in f.columns
-    ]
-    if clash:
-        raise ValueError(
-            f"key_col {key_col!r} already exists in an input frame; "
-            "pass an unused key_col"
-        )
-    lk = left.withColumn(key_col, match_key(label_col))
-    rk = right.withColumnRenamed(label_col, renamed).withColumn(
-        key_col, match_key(renamed)
-    )
-    return lk.join(rk, key_col, how).drop(key_col)

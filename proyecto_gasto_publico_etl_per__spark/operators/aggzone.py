@@ -209,8 +209,7 @@ def build_agg_zone(
     aggregate for cnt/sum/min/max (map-side combinable, one shuffle on
     the group keys) plus, per kmv column, one distinct + bounded
     window (see `_kmv_partial`).  An explicit root is rewritten in
-    place (`zones.build_root`), which is what streamed epoch replays
-    (`streaming.incremental.zone_epoch_ingest`) need."""
+    place (`zones.build_root`)."""
     if not keys:
         raise ValueError("aggzone: need at least one group key")
     root, mode = zones.build_root(root, "agg_zone_")

@@ -224,8 +224,8 @@ def kfold_eval(
     mechanics — salt "fold", stable across runs/partitionings/appends,
     so experiments compare like with like), train on k−1 folds, report
     held-out AUC + log-loss per fold.  This is the measured quality
-    number ``corpus-build --classifier-model`` should ship with —
-    train-set loss alone flatters any model.
+    number a trained classifier should ship with — train-set loss alone
+    flatters any model.
 
     Returns one dict per fold:
     ``{fold, n_train, n_eval, auc, logloss, logloss_zero}`` where

@@ -316,8 +316,7 @@ def band_signatures(
     sigs: DataFrame | None = None,
 ) -> DataFrame:
     """(doc, band, band_sig): md5 of each ordered minhash band slice —
-    the LSH bucket key.  Shared by the batch candidate join and the
-    streaming ingest filter (the bucket table IS this frame's history).
+    the LSH bucket key of the candidate join.
 
     ``sigs``: optional precomputed ``minhash_signatures`` frame (see
     there) — avoids re-deriving the signature chain when the caller
@@ -858,65 +857,11 @@ def _propagate_min_labels(
 # --- duplicated-span scrubbing (sub-document exact-substring dedup) ----------
 
 
-def dup_span_meta_from_grams(grams: DataFrame) -> DataFrame:
-    """The duplicated-gram metadata table ``(gkey, keeper)`` from a
-    ``(doc, start, gkey)`` posting frame: grams in ≥2 distinct docs,
-    keyed to their minimum-id owner.  Exposed so the metadata can be
-    PERSISTED and served to ``dup_span_scrub(meta=...)`` at ingest —
-    the incremental hygiene path (see ``dup_span_meta``)."""
-    return (
-        grams.select("gkey", "doc")
-        .distinct()
-        .groupBy("gkey")
-        .agg(
-            F.count("*").cast("bigint").alias("nd"),
-            F.min("doc").alias("keeper"),
-        )
-        .where(F.col("nd") >= 2)
-        .select("gkey", "keeper")
-    )
-
-
-def dup_span_meta(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-) -> DataFrame:
-    """Build the persistable duplicated-gram metadata over a corpus —
-    the index-build half of incremental span scrubbing.  At ingest,
-    new batches scrub against this FROZEN table
-    (``dup_span_scrub(batch, meta=frozen)``): every duplicated span the
-    indexed corpus owns is removed from arriving docs (arriving ids are
-    never the keeper when ids are monotone), at O(|batch|) cost per
-    batch instead of recomputing the corpus-wide gram aggregate.  The
-    approximation is the standard incremental one: duplication WITHIN
-    the new batch (or between two not-yet-indexed batches) is not seen
-    until the metadata's next rebuild — same cadence contract as the
-    ANN index (``ivf_pq_index_append``) and the LSH bucket history;
-    stated once in SCALE.md §"Frozen-artifact serving" and pinned by
-    ``tests/test_frozen_contract.py``."""
-    base = fan_out(df).select(
-        F.col(id_col).alias("doc"), _tokens(text_col).alias("toks")
-    )
-    grams = base.select(
-        "doc", F.posexplode(_grams_from_tokens(F.col("toks"), n)).alias(
-            "g0", "gram"
-        )
-    ).select(
-        "doc",
-        (F.col("g0") + 1).alias("start"),
-        F.unhex(F.md5("gram")).alias("gkey"),
-    )
-    return dup_span_meta_from_grams(grams)
-
-
 def dup_span_scrub(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 5,
-    meta: DataFrame | None = None,
 ) -> DataFrame:
     """Exact duplicated-span scrubbing — sub-document dedup, the
     exact-substring family (Lee et al. 2022, "Deduplicating Training
@@ -954,15 +899,13 @@ def dup_span_scrub(
     base = fan_out(df).select(
         F.col(id_col).alias("doc"), _tokens(text_col).alias("toks")
     )
-    if not df.isStreaming:
-        # base feeds the token-position explode, the gram explode, and
-        # the final per-doc stats join (3 references); grams feeds the
-        # metadata aggregate and the cover join (2).  The references'
-        # exchange children differ, so the tokenize/gram chains re-ran
-        # per reference — pin each to one execution (optimization r15,
-        # the minhash-lane pattern; the streaming twin passes batch
-        # frames through foreachBatch, so this covers it too)
-        base = pin(base)
+    # base feeds the token-position explode, the gram explode, and the
+    # final per-doc stats join (3 references); grams feeds the metadata
+    # aggregate and the cover join (2).  The references' exchange
+    # children differ, so the tokenize/gram chains re-ran per reference
+    # — pin each to one execution (optimization r15, the minhash-lane
+    # pattern)
+    base = pin(base)
     tokpos = base.select(
         "doc", F.posexplode("toks").alias("ti0", "tok")
     ).select("doc", (F.col("ti0") + 1).alias("ti"), "tok")
@@ -975,10 +918,20 @@ def dup_span_scrub(
         (F.col("g0") + 1).alias("start"),
         F.unhex(F.md5("gram")).alias("gkey"),
     )
-    if not df.isStreaming and meta is None:
-        grams = pin(grams)
-    if meta is None:
-        meta = dup_span_meta_from_grams(grams)
+    grams = pin(grams)
+    # per-gram metadata: grams in >= 2 distinct docs, keyed to their
+    # minimum-id owner
+    meta = (
+        grams.select("gkey", "doc")
+        .distinct()
+        .groupBy("gkey")
+        .agg(
+            F.count("*").cast("bigint").alias("nd"),
+            F.min("doc").alias("keeper"),
+        )
+        .where(F.col("nd") >= 2)
+        .select("gkey", "keeper")
+    )
     cover = (
         grams.join(meta, "gkey")
         .where(F.col("doc") != F.col("keeper"))

@@ -8,7 +8,7 @@ summary row counting violations of each, computed in a SINGLE scan
 (conditional sums — no per-check pass, no driver loop).
 
 Use at load boundaries: ``check(normalized, STANDARD_CHECKS)`` after
-transform, or on a batch before ``append_fact``.
+transform, or on a batch before ``mef_pipeline.load_frame``.
 """
 
 from __future__ import annotations

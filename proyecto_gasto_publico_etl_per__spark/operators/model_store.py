@@ -1,7 +1,7 @@
 """Tiny model-artifact persistence for the training loops.
 
-The engine's trained models are deliberately driver-sized (logreg
-weight vectors, DSIR log-ratios, IVF centroids, PQ codebooks — KBs),
+The engine's trained models are deliberately driver-sized (DSIR
+log-ratios, IVF centroids, PQ codebooks — KBs),
 but a 100 TB pipeline still needs them durable and versioned between
 stages: train once, score many runs, resume after restarts.  Rather than pickle (no
 cross-version story) or JSON sidecar files (outside the warehouse's
@@ -48,23 +48,6 @@ def load_model(
             f"model at {path!r} is kind={row.kind!r}, expected {kind!r}"
         )
     return json.loads(row.payload), row.version
-
-
-def save_logreg(
-    spark: SparkSession, path: str, weights: list[float], bias: float,
-    feature_cols: list[str],
-) -> None:
-    save_model(
-        spark, path, "logreg",
-        {"weights": weights, "bias": bias, "features": feature_cols},
-    )
-
-
-def load_logreg(
-    spark: SparkSession, path: str
-) -> tuple[list[float], float, list[str]]:
-    payload, _ = load_model(spark, path, "logreg")
-    return payload["weights"], payload["bias"], payload["features"]
 
 
 def save_pq_codebook(spark: SparkSession, path: str, codebook) -> None:

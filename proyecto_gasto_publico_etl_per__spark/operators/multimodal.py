@@ -1,7 +1,7 @@
 """Multimodal (image) column plumbing.
 
-Media are opaque ``binary`` columns with typed metadata; decode /
-feature-extract / resize run as Arrow-batched pandas functions over
+Media are opaque ``binary`` columns with typed metadata; decode and
+feature extraction run as Arrow-batched pandas functions over
 ``mapInPandas`` — the one place this engine crosses into Python,
 because byte-level media decoding is genuinely inexpressible in Spark
 SQL.  The Spark-side plumbing (schemas, batch iteration, partition
@@ -318,53 +318,6 @@ def decode_image(payload: bytes) -> dict[str, Any]:
     }
 
 
-def _png_encode(
-    width: int, height: int, channels: int, pixels: bytes
-) -> bytes:
-    """Pure-stdlib PNG writer (8-bit gray/gray+A/RGB/RGBA, filter 0).
-    The re-encode half of the stdlib codec path — filter 0 trades a few
-    compressed bytes for zero per-pixel Python work."""
-    import struct
-    import zlib
-
-    ctype = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-    stride = width * channels
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + typ
-            + data
-            + struct.pack(">I", zlib.crc32(typ + data))
-        )
-
-    raw = b"".join(
-        b"\x00" + pixels[y * stride : (y + 1) * stride] for y in range(height)
-    )
-    return (
-        _PNG_MAGIC
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", width, height, 8, ctype, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _box_weights(dst: int, src: int) -> "np.ndarray":
-    """Row-normalized overlap matrix W (dst × src) for exact
-    area-average resampling: W[d, s] = |[d·src/dst, (d+1)·src/dst) ∩
-    [s, s+1)| · dst/src.  Rows sum to 1 exactly up to FP, so flat
-    images stay flat and the global mean is preserved."""
-    import numpy as np
-
-    edges = np.arange(dst + 1, dtype=np.float64) * (src / dst)
-    w = np.zeros((dst, src), dtype=np.float64)
-    for dpos in range(dst):
-        lo, hi = edges[dpos], edges[dpos + 1]
-        for s in range(int(lo), min(int(np.ceil(hi)), src)):
-            w[dpos, s] = min(hi, s + 1) - max(lo, s)
-    return w * (dst / src)
-
-
 def _looks_like_tga(p: bytes) -> bool:
     """TGA has no magic — sniff only headers the stdlib decoder handles
     (uncolormapped type 2/3/10/11 at 8/24/32 bpp).  Checked LAST in the
@@ -376,77 +329,6 @@ def _looks_like_tga(p: bytes) -> bool:
         and p[2] in (2, 3, 10, 11)
         and p[16] in (8, 24, 32)
     )
-
-
-def resize_image_real(payload: bytes, width: int, height: int) -> bytes:
-    """Real decode → resample → re-encode.  Pillow (LANCZOS, any format)
-    when importable; else stdlib decode + exact area-average (box)
-    resampling + stdlib PNG encode (round 11 — antialiased downscales;
-    was nearest-neighbor).  Output is always PNG on the stdlib path
-    (Pillow keeps PNG too, for determinism across environments)."""
-    try:
-        import io
-
-        from PIL import Image  # type: ignore[import-not-found]
-    except ImportError:
-        if payload[:8] == _PNG_MAGIC:
-            d = _png_decode(payload)
-        elif payload[:2] == b"\xff\xd8":
-            from .jpeg import jpeg_decode
-
-            d = jpeg_decode(payload)
-        elif payload[:6] in (b"GIF87a", b"GIF89a"):
-            from .gif import gif_decode
-
-            d = gif_decode(payload)
-        elif payload[:4] in (b"II*\x00", b"MM\x00*"):
-            from .tiff import tiff_decode
-
-            d = tiff_decode(payload)
-        elif payload[:2] == b"BM":
-            from .bmp import bmp_decode
-
-            d = bmp_decode(payload)
-        elif payload[:1] == b"P" and payload[1:2] in b"123456":
-            from .simple_images import pnm_decode
-
-            d = pnm_decode(payload)
-        elif _looks_like_tga(payload):
-            from .simple_images import tga_decode
-
-            d = tga_decode(payload)
-        else:
-            raise NotImplementedError(
-                "resize beyond PNG, JPEG (baseline/progressive/lossless), "
-                "GIF, baseline TIFF, BMP, netpbm, and TGA requires "
-                "Pillow, not importable here"
-            ) from None
-        import numpy as np
-
-        ch, sw, sh = d["channels"], d["width"], d["height"]
-        src = np.frombuffer(d["pixels"], np.uint8).reshape(sh, sw, ch)
-        # exact area-average (box) resampling, separable: out = Wy·S·Wxᵀ
-        # per channel.  Each target pixel averages its exact fractional
-        # source box, so downscales are antialiased (nearest-neighbor
-        # aliases hard on thumbnails) and an upscale whose target box
-        # falls inside one source pixel reduces to replication — the
-        # same blocks nearest-neighbor produced.  Vectorized numpy,
-        # O(H·sh + W·sw) weight build + two matmuls per image.
-        wy = _box_weights(height, sh)
-        wx = _box_weights(width, sw)
-        # Factored two-matmul contraction (Wy·S, then ·Wxᵀ) — a single
-        # three-operand einsum without optimize= evaluates the naive
-        # O(H·W·sh·sw·C) loop (measured 25 s for one 800×800→64×64).
-        tmp = np.tensordot(wy, src.astype(np.float64), axes=(1, 0))
-        res = np.moveaxis(np.tensordot(tmp, wx, axes=(1, 1)), 2, 1)
-        out = np.clip(np.round(res), 0, 255).astype(np.uint8)
-        return _png_encode(width, height, ch, out.tobytes())
-    img = Image.open(io.BytesIO(payload))
-    buf = io.BytesIO()
-    # Resampling.LANCZOS on modern Pillow; the module-level constant on old
-    lanczos = getattr(getattr(Image, "Resampling", Image), "LANCZOS")
-    img.resize((width, height), resample=lanczos).save(buf, format="PNG")
-    return buf.getvalue()
 
 
 def image_features(payload: bytes, dim: int = 4) -> list[float]:
@@ -536,70 +418,6 @@ def extract_features(
             )
 
     return assets.mapInPandas(batches, FEATURE_SCHEMA)
-
-
-def _fake_resized(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in for decode→resize→re-encode: a payload
-    derived from (md5(payload), target dims).  Real impl decodes with a
-    codec and re-encodes; only these bytes change, not the plumbing."""
-    seed = hashlib.md5(
-        payload + f":{width}x{height}".encode()
-    ).digest()
-    return seed * (width * height // len(seed) + 1)
-
-
-def resize_images(
-    assets: DataFrame, width: int = 64, height: int = 64,
-    decoder: str = "fake", strict: bool = False,
-) -> DataFrame:
-    """Resize every image payload to (width, height) — asset schema in,
-    asset schema out, so resizes compose with any other asset operator.
-
-    Plumbing is real (Arrow batches, meta updated with the new dims,
-    non-image rows pass through untouched).  ``decoder="real"`` runs
-    ``resize_image_real`` (Pillow or the stdlib PNG codec path);
-    ``"fake"`` keeps the deterministic md5 stand-in the oracle uses.
-
-    Real-decode failures quarantine PER ROW by default (same contract
-    as ``extract_features``): the bad asset's payload becomes NULL and
-    its meta gains ``resize_error`` (never silently keeping the
-    original bytes, which would claim a resize that didn't happen);
-    ``strict=True`` restores loud failure.
-    """
-    if decoder not in ("fake", "real"):
-        raise ValueError(f"decoder must be 'fake' or 'real', got {decoder!r}")
-
-    def one(b: bytes) -> bytes | None:
-        try:
-            if decoder == "real":
-                return resize_image_real(bytes(b), width, height)
-            return _fake_resized(bytes(b), width, height)
-        except Exception:
-            if strict:
-                raise
-            return None  # quarantined; meta marks the failure below
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            is_img = (out["media_type"] == "image") & out["payload"].notna()
-            resized = out.loc[is_img, "payload"].map(one)
-            out.loc[is_img, "payload"] = resized
-            ok = resized.notna()
-            out.loc[is_img, "meta"] = [
-                {
-                    **(dict(m) if m is not None else {}),
-                    **(
-                        {"width": str(width), "height": str(height)}
-                        if good
-                        else {"resize_error": "decode_failed"}
-                    ),
-                }
-                for m, good in zip(out.loc[is_img, "meta"], ok)
-            ]
-            yield out
-
-    return assets.mapInPandas(batches, ASSET_SCHEMA)
 
 
 def documents_as_assets(docs: DataFrame) -> DataFrame:

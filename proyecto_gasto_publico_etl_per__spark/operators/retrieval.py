@@ -28,11 +28,10 @@ index-directory layout follow the shared zone lifecycle in
 
 Every zone holds associative integer aggregates, so zones built over
 DISJOINT document subsets merge exactly: postings/doclen union, dfreq
-re-sums per term, stats add.  That associativity is what makes both
-the append path (`plans.extension_queries.bm25_append_serving`) and
-the streaming at-ingest path (`streaming.incremental.zone_epoch_
-ingest` over `build_bm25_index`) value-identical to a full rebuild —
-contracts the test suite and the driver's oracle gate both pin.
+re-sums per term, stats add.  That associativity is what makes
+the append path (`plans.extension_queries.bm25_append_serving`)
+value-identical to a full rebuild — a contract the test suite and the
+driver's oracle gate both pin.
 
 Scoring is BM25 with k1=6/5, b=3/4 and the log-free rational idf
 idf = (N - df + ½)/(df + ½) (the BM25 idf core without the log; see
@@ -138,8 +137,7 @@ def build_bm25_index(
     """One pass over ``docs`` (doc_id, text) → the four zones under
     ``root`` (a fresh tempdir when None).  Returns the root.
 
-    An explicit root is rewritten in place (`zones.build_root`), which
-    is what streamed epoch replays need."""
+    An explicit root is rewritten in place (`zones.build_root`)."""
     root, mode = zones.build_root(root, "bm25_index_")
     words = docs.select(
         "doc_id", F.posexplode(dedup._tokens("text")).alias("pos", "tok")
@@ -153,12 +151,11 @@ def build_bm25_index(
     # NOT localCheckpoint: the cache is explicitly released in the
     # finally block below, where checkpoint blocks would sit in the
     # one-JVM storage pool until driver GC happened to run the
-    # ContextCleaner — a long-running streamed index calling
-    # this per micro-batch accumulated them without bound (r13
-    # review).  The sorted in-doc position list rides in the same
-    # entry (the positional-index layout) — phrase queries intersect
-    # positions of adjacent terms on postings(q) alone, never
-    # re-reading text.
+    # ContextCleaner — a long-running caller building index after
+    # index accumulated them without bound (r13 review).  The sorted
+    # in-doc position list rides in the same entry (the positional-index
+    # layout) — phrase queries intersect positions of adjacent terms on
+    # postings(q) alone, never re-reading text.
     tf = (
         words.groupBy("doc_id", "tok")
         .agg(

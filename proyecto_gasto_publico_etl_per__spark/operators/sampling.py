@@ -260,108 +260,3 @@ def pps_systematic_sample(
     )
     c = c.withColumn("n_hits", (f_hi - f_lo).cast("long"))
     return c.filter(F.col("n_hits") >= 1).drop("_step")
-
-
-def weighted_sample_aes(
-    df: DataFrame,
-    key_col: str,
-    weight_col: str,
-    k: int,
-    salt: str = "aes",
-) -> DataFrame:
-    """Weighted sampling WITHOUT replacement, exactly ``k`` rows
-    (Efraimidis–Spirakis A-ES): rank every row by ``-ln(u)/w`` with a
-    deterministic per-key uniform ``u`` from the md5 hash, keep the k
-    smallest — inclusion probability is proportional-to-size without
-    replacement, the one-shot complement of ``pps_systematic_sample``
-    (systematic, with multiplicity) for "give me k distinct docs,
-    long-docs-first" selection.
-
-    Scale shape: one map expression + ``TakeOrderedAndProject`` — no
-    cumulative-sum pass, no window, nothing corpus-sized shuffled.
-
-    Determinism: ``u`` is hash-derived, so the sample is stable across
-    runs and partitionings ON A GIVEN ENGINE; it is deliberately NOT an
-    oracle-declared operator because ``ln`` is libm-dependent at the
-    last ulp (the repo-wide rule), which could flip a boundary rank
-    across engines.  Rows with NULL or non-positive weight are excluded
-    (they have no well-defined inclusion probability).
-
-    Returns the sampled rows with their ``aes_score`` (ascending =
-    earlier pick).
-    """
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"{salt}:"), F.col(key_col).cast("string")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(1.0)
-    ) / F.lit(float(2**60))
-    score = -F.log(u) / F.col(weight_col).cast("double")
-    return (
-        df.filter(F.col(weight_col).cast("double") > 0)
-        .withColumn("aes_score", score)
-        .orderBy("aes_score", key_col)
-        .limit(k)
-    )
-
-
-def weighted_sample_aes_per_group(
-    df: DataFrame,
-    key_col: str,
-    weight_col: str,
-    group_col: str,
-    k: int,
-    salt: str = "aes",
-) -> DataFrame:
-    """Exactly-``k``-per-group weighted sampling without replacement —
-    ``weighted_sample_aes`` stratified by ``group_col`` (e.g. k docs per
-    language, long-docs-favored), in ONE pass: the same A-ES exponential
-    key, ranked by a window PARTITIONED on the group (a parallel
-    partitioned sort, never a global one).  Groups smaller than ``k``
-    return all their eligible rows.
-
-    Same determinism contract as ``weighted_sample_aes``: stable across
-    runs and partitionings on a given engine; not oracle-declared (libm
-    ``ln``).
-    """
-    from pyspark.sql import Window
-
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"{salt}:"), F.col(key_col).cast("string")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(1.0)
-    ) / F.lit(float(2**60))
-    w = (
-        Window.partitionBy(group_col)
-        .orderBy("aes_score", key_col)
-    )
-    return (
-        df.filter(F.col(weight_col).cast("double") > 0)
-        .withColumn(
-            "aes_score", -F.log(u) / F.col(weight_col).cast("double")
-        )
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )

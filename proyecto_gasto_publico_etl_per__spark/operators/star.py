@@ -1,5 +1,5 @@
-"""Star-schema construction: surrogate keys, idempotent dim upsert, FK
-resolution, grain consolidation.
+"""Star-schema construction: surrogate keys, idempotent dim and fact
+deltas, FK resolution, grain consolidation.
 
 This is the Spark restatement of the reference's load stage
 (``ETL Gasto publico Perú/etl/cargar_postgres.py:270-388``).  The reference
@@ -7,15 +7,15 @@ round-trips to PostgreSQL on every dim read/insert and fact sub-batch; here
 all state lives as Parquet tables and each step is one lazy plan:
 
 - dim "INSERT ... ON CONFLICT DO NOTHING" (L:127-152)  →  dedup + null-safe
-  left-anti join (``new_dim_rows``, the delta a load appends) and its
-  ``existing ∪ delta`` form (``upsert_dim``), property-tested idempotent;
+  left-anti join (``new_dim_rows``, the delta a load appends),
+  property-tested idempotent;
 - client-side dim key→id caches (L:283-320)            →  inline hash ids
   over the normalized keys (``resolve_fks``, two projections for all dims);
 - SERIAL surrogate ids                                  →  xxhash64 natural-
   key hashes (functions/hashing.py) — no sequence, no coordination;
 - grain consolidation group-by-sum (L:374-375)          →  shuffle hash agg
   with map-side partial aggregation (``consolidate``), then a grain-keyed
-  anti-join (``new_fact_rows``; ``append_fact`` is ``existing ∪ delta``).
+  anti-join (``new_fact_rows``).
 
 Scale notes (100 TB): dims stay broadcast-sized (≤ tens of thousands of
 rows, SURVEY.md §1.4) so the dim anti-joins broadcast the stored dim and
@@ -91,20 +91,6 @@ def new_dim_rows(
     return new_rows.select(existing.columns)
 
 
-def upsert_dim(
-    existing: DataFrame | None, incoming: DataFrame, keys: Sequence[str]
-) -> DataFrame:
-    """Idempotent dedup-append: the engine-level ``ON CONFLICT DO NOTHING``
-    (cargar_postgres.py:127-152; SURVEY.md §7.4).
-
-    Returns existing ∪ (incoming ∖ existing on natural key).  Appending the
-    same batch twice is a no-op — the idempotency property the reference
-    gets from unique indexes (L:101-113).
-    """
-    new_rows = new_dim_rows(existing, incoming, keys)
-    return new_rows if existing is None else existing.unionByName(new_rows)
-
-
 def resolve_fks(
     records: DataFrame, dims: Sequence[Dim] = DIMENSIONS
 ) -> DataFrame:
@@ -159,17 +145,6 @@ def new_fact_rows(
     if existing is None:
         return batch
     return batch.join(existing.select(*grain), list(grain), "left_anti")
-
-
-def append_fact(
-    existing: DataFrame | None,
-    incoming: DataFrame,
-    grain: Sequence[str] = FACT_FKS,
-    metrics: Sequence[str] = METRICS,
-) -> DataFrame:
-    """Idempotent fact append: existing ∪ ``new_fact_rows``."""
-    new_rows = new_fact_rows(existing, incoming, grain, metrics)
-    return new_rows if existing is None else existing.unionByName(new_rows)
 
 
 def scd1_merge(

@@ -451,8 +451,7 @@ def chi2_against_reference(
     df: DataFrame, ref: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """Goodness-of-fit χ² of ``df``'s token distribution against a
-    frozen reference distribution (``token_distribution`` output) — the
-    batch twin of ``streaming.incremental.streaming_drift_monitor``.
+    frozen reference distribution (``token_distribution`` output).
 
     Unlike ``chi2_source_drift`` (groups vs their own corpus), the
     reference here is EXTERNAL and frozen, so an arriving batch can be

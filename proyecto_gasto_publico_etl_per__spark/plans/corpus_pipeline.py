@@ -30,10 +30,10 @@ partitioning is re-planned from real on-disk sizes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import chunking, classifier, dedup, model_store, sampling, textstats
+from ..operators import chunking, dedup, sampling, textstats
 from ..sources.tables import load_table
 from .extension_queries import (
     CHUNK_SIZE,
@@ -43,42 +43,15 @@ from .extension_queries import (
     PACK_BUDGET,
 )
 
-#: the profile-zone signals the learned quality filter trains on — the
-#: ratio features are scale-free, so a model trained at one corpus size
-#: scores any other.
+#: the profile-zone signals the ``classifier-eval`` CLI cross-validates
+#: the quality classifier on — the ratio features are scale-free, so a
+#: model trained at one corpus size scores any other.
 QUALITY_FEATURES: tuple[str, ...] = (
     "mean_token_len",
     "punct_ratio",
     "upper_ratio",
     "stopword_ratio",
 )
-
-
-def train_quality_classifier(
-    spark: SparkSession,
-    labeled_profile: DataFrame,
-    model_path: str,
-    label_col: str = "label",
-    n_iters: int = 40,
-    lr: float = 1.0,
-) -> tuple[list[float], float]:
-    """Train the corpus quality classifier on a labeled profile frame
-    (the fastText workflow: label a sample "reference-like" = 1 /
-    "crawl-like" = 0, train, score everything) and persist it through
-    the model store so ``build_corpus(classifier_model=...)`` can apply
-    it in any later run.  Trains standardized (round 10): the profile
-    features are badly conditioned for raw GD (mean_token_len ~4.5
-    near-constant beside 0-1 ratios — oscillation at any useful lr);
-    weights come back in RAW feature space, so scoring is unchanged.
-    Measure what you trained: the ``classifier-eval`` CLI step reports
-    per-fold held-out AUC/log-loss on the same zone."""
-    feats = list(QUALITY_FEATURES)
-    w, b = classifier.logreg_train(
-        labeled_profile, feats, label_col, n_iters=n_iters, lr=lr,
-        standardize=True,
-    )
-    model_store.save_logreg(spark, model_path, w, b, feats)
-    return w, b
 
 
 def build_corpus(
@@ -91,8 +64,6 @@ def build_corpus(
     max_tokens: int = 500,
     val_fraction: float = 0.01,
     test_fraction: float = 0.01,
-    classifier_model: str | None = None,
-    classifier_threshold: float = 0.5,
     source_cap_n: int | None = None,
     mixture_allocations: dict[str, int] | None = None,
     dsir_target_sources: tuple[str, ...] | None = None,
@@ -100,13 +71,6 @@ def build_corpus(
     dsir_sample_permille: int | None = None,
 ) -> dict:
     """Run the full corpus build; returns the report row as a dict.
-
-    ``classifier_model``: optional model-store path of a trained quality
-    classifier (``train_quality_classifier``); when given, docs must
-    ALSO score ``p_keep >= classifier_threshold`` to survive the clean
-    gate — learned filtering composes with (never replaces) the
-    heuristic gates, the Gopher-then-classifier layering production
-    pipelines use.
 
     ``source_cap_n`` / ``mixture_allocations``: optional mixture
     controls applied to the TRAIN split before packing (eval splits are
@@ -139,13 +103,6 @@ def build_corpus(
         & (F.col("lang_pred") == lang)
         & F.col("n_tokens").between(min_tokens, max_tokens)
     )
-    if classifier_model is not None:
-        w, b, feats = model_store.load_logreg(spark, classifier_model)
-        selected = (
-            classifier.logreg_score(selected, feats, w, b)
-            .where(F.col("p_keep") >= classifier_threshold)
-            .drop("p_keep")
-        )
     clusters = dedup.cluster_duplicates(
         dedup.ngram_jaccard_pairs(
             docs, threshold=JACCARD_T, max_df=NGRAM_MAX_DF

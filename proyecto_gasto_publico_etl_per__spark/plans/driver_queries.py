@@ -2144,12 +2144,6 @@ def _is_green(row: dict) -> bool:
     return not any(c is False for c in checks) and any(c is True for c in checks)
 
 
-def _driver_green_names() -> set[str]:
-    """Names whose most recent driver row is green (all recorded checks
-    passed, no error).  See :func:`_latest_check_rows` for latest-wins."""
-    return {n for n, (_, row) in _latest_check_rows().items() if _is_green(row)}
-
-
 def _ordered_names() -> list[str]:
     """Registration order for the driver contract.
 

@@ -3645,8 +3645,9 @@ def multimodal_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """streaming.windowed_event_counts on the batch events frame — the
-    identical code path Structured Streaming runs with a watermark."""
+    """streaming.incremental.windowed_event_counts on the batch events
+    frame — the identical code path Structured Streaming runs with a
+    watermark."""
     ev = load_table(spark, sf_dir, "events")
     out = windowed_event_counts(ev)
     return out.select(

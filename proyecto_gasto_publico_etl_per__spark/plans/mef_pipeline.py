@@ -15,19 +15,22 @@ Here each step is ONE lazy Spark plan; there is no chunk loop, no driver
 concat, no per-batch DB round-trip.  The warehouse is a directory of
 Parquet tables:
 
-    <warehouse>/dim_tiempo/            (252-row generated calendar)
+    <warehouse>/dim_tiempo/            (generated calendar, 2010-2030 and
+                                        any later-loaded year)
     <warehouse>/dim_<name>/            (7 extracted dimensions)
     <warehouse>/fact_gasto_mensual/    (partitioned by anio)
     <warehouse>/_loads/_<sha256>.json  (load ledger, one entry per input)
 
 The load is append-only, like the reference's insert-only loader
 (``ON CONFLICT DO NOTHING``, etl/cargar_postgres.py:127-152,379-388): it
-writes ``dim_tiempo`` once, appends each dim's new natural keys and the
-fact's new grain rows, and never rewrites a stored file.  One probe job
-finds which dims the batch brings new surrogate ids to and which years
-it touches; a dim gains one file per load that brings it new keys, and
-a fact year partition gains files only when the load brings new grain
-rows for that year (one per writing task, one at monthly-delta size).
+writes ``dim_tiempo`` once, appends the calendar years a batch brings
+beyond it, each dim's new natural keys and the fact's new grain rows,
+and never rewrites a stored file.  One probe job finds which dims the
+batch brings new surrogate ids to, which years it touches and which of
+those the calendar lacks; a dim gains one file per load that brings it
+new keys, and a fact year partition gains files only when the load
+brings new grain rows for that year (one per writing task, one at
+monthly-delta size).
 Nothing compacts those files: a fact year partition's file count grows
 with every load that adds rows to it.
 
@@ -50,13 +53,13 @@ batch's own year partitions.
 
 Schemas: ``WAREHOUSE`` declares every stored table, derived from
 ``schema.DIMENSIONS``/``FACT_FKS``/``METRICS``/``COLS_CLAVE``.  The
-normalized zone's entry governs ``load``'s and ``streaming_load``'s read
-of the transform output; the dim, ``dim_tiempo`` and fact entries govern
-both sides of the warehouse: every write is conformed to its entry
-(``_conform``, which also carries the business comments into the parquet
-footers) and every read in this module goes through ``read_warehouse``
-with it.  No read here infers a schema, so building a load, a refresh or
-the views runs no Spark job of its own.
+normalized zone's entry governs ``load``'s read of the transform
+output; the dim, ``dim_tiempo`` and fact entries govern both sides of
+the warehouse: every write is conformed to its entry (``_conform``,
+which also carries the business comments into the parquet footers) and
+every read in this module goes through ``read_warehouse`` with it.  No
+read here infers a schema, so building a load, a refresh or the views
+runs no Spark job of its own.
 """
 
 from __future__ import annotations
@@ -328,10 +331,9 @@ def load_frame(
     spark: SparkSession, normalized: DataFrame, warehouse: str
 ) -> DataFrame:
     """The load stage on an already-materialized normalized frame — the
-    CLI's filtered load and the streaming loader's per-micro-batch handler
-    call it; ``load`` runs the same steps behind its ledger.  It keeps no
-    ledger: a replay of the same frame pays the probe and the fact
-    anti-join, and writes nothing.
+    CLI's filtered load calls it; ``load`` runs the same steps behind its
+    ledger.  It keeps no ledger: a replay of the same frame pays the
+    probe and the fact anti-join, and writes nothing.
 
     ``WAREHOUSE`` governs both sides: each written frame is conformed to
     its table's entry, which also stores the business comments
@@ -347,17 +349,19 @@ def load_frame(
 
 def _probe(
     spark: SparkSession, resolved: DataFrame, wh: Path
-) -> tuple[set[str], list[int]]:
-    """One collect of at most 8 rows: the dims the batch brings new
-    surrogate ids to, and the batch's years.
+) -> tuple[set[str], list[int], list[int]]:
+    """One collect of at most 9 rows: the dims the batch brings new
+    surrogate ids to, the batch's years, and those of its years the
+    stored calendar lacks.
 
-    The batch's ``(dim name, id)`` pairs plus its ``("anio", year)`` pairs
-    are left-anti joined against the stored dims' pairs, then grouped by
-    name (the map-side partial aggregate absorbs duplicates).  Id equality
-    stands in for null-safe natural-key equality: ``surrogate_key``
-    hashes exactly the ``_key_expr``-normalized keys on both sides, so the
-    two differ only on a 64-bit collision, which the fact FKs already
-    assume (functions/hashing.py)."""
+    The batch's ``(dim name, id)`` pairs plus its ``("anio", year)`` and
+    ``("dim_tiempo", year)`` pairs are left-anti joined against the
+    stored dims' pairs and the stored calendar's ``("dim_tiempo", anio)``
+    pairs, then grouped by name (the map-side partial aggregate absorbs
+    duplicates).  Id equality stands in for null-safe natural-key
+    equality: ``surrogate_key`` hashes exactly the ``_key_expr``-
+    normalized keys on both sides, so the two differ only on a 64-bit
+    collision, which the fact FKs already assume (functions/hashing.py)."""
     pairs = resolved.select(
         F.inline(
             F.array(
@@ -368,10 +372,13 @@ def _probe(
                     )
                     for d in DIMENSIONS
                 ],
-                F.struct(
-                    F.lit("anio").alias("name"),
-                    F.col("anio").cast("long").alias("id"),
-                ),
+                *[
+                    F.struct(
+                        F.lit(name).alias("name"),
+                        F.col("anio").cast("long").alias("id"),
+                    )
+                    for name in ("anio", "dim_tiempo")
+                ],
             )
         )
     )
@@ -382,29 +389,40 @@ def _probe(
         for d in DIMENSIONS
         if (wh / d.name).exists()
     ]
-    if stored:
-        pairs = pairs.join(
-            F.broadcast(reduce(DataFrame.union, stored)),
-            ["name", "id"],
-            "left_anti",
+    stored.append(
+        read_warehouse(spark, wh / "dim_tiempo", "dim_tiempo").select(
+            F.lit("dim_tiempo").alias("name"),
+            F.col("anio").cast("long").alias("id"),
         )
-    year = F.when(F.col("name") == "anio", F.col("id"))
+    )
+    pairs = pairs.join(
+        F.broadcast(reduce(DataFrame.union, stored)),
+        ["name", "id"],
+        "left_anti",
+    )
+    year = F.when(F.col("name").isin("anio", "dim_tiempo"), F.col("id"))
     rows = (
         pairs.groupBy("name")
         .agg(F.collect_set(year).alias("years"))
         .collect()
     )
-    new_dims = {r.name for r in rows if r.name != "anio"}
-    years = sorted(int(y) for r in rows if r.name == "anio" for y in r.years)
-    return new_dims, years
+    by_name = {r.name: sorted(int(y) for y in r.years) for r in rows}
+    new_dims = set(by_name) - {"anio", "dim_tiempo"}
+    return new_dims, by_name.get("anio", []), by_name.get("dim_tiempo", [])
 
 
 def _load_delta(
     spark: SparkSession, normalized: DataFrame, wh: Path
 ) -> list[int]:
     """Write the load's delta, never rewriting a stored file: the calendar
-    when it is absent, each dim's new natural keys, and the fact grain
-    rows its years do not hold yet.  Returns the batch's years."""
+    when it is absent, the calendar years the batch brings beyond it,
+    each dim's new natural keys, and the fact grain rows its years do not
+    hold yet.  Returns the batch's years.
+
+    Every stored fact row thus has its calendar and dim rows, so the
+    serving joins drop none.  The reference instead drops a row whose
+    month its fixed 2010-2030 calendar lacks (cargar_postgres.py:365-372).
+    """
     records = _star_records(normalized)
 
     time_path = wh / "dim_tiempo"
@@ -414,7 +432,14 @@ def _load_delta(
         )
 
     resolved = star.resolve_fks(records, DIMENSIONS)
-    new_dims, years = _probe(spark, resolved, wh)
+    new_dims, years, new_years = _probe(spark, resolved, wh)
+    if new_years:
+        calendar = build_time_dim(
+            spark, f"{new_years[0]}-01-01", f"{new_years[-1]}-12-01"
+        ).filter(F.col("anio").isin(new_years))
+        _conform(calendar, "dim_tiempo").coalesce(1).write.mode(
+            "append"
+        ).parquet(str(time_path))
     for dim in DIMENSIONS:
         if dim.name not in new_dims:
             continue
@@ -459,39 +484,6 @@ def _load_delta(
         "append"
     ).partitionBy("anio").parquet(str(fact_path))
     return years
-
-
-def streaming_load(
-    spark: SparkSession,
-    normalized_dir: str,
-    warehouse: str,
-    checkpoint_dir: str,
-):
-    """Continuous load: normalized Parquet files land, each micro-batch
-    runs the SAME idempotent star load (dims upsert, FK resolve,
-    consolidate, grain anti-join append) via ``foreachBatch``.
-
-    Two idempotency layers compose: checkpointed source offsets give
-    exactly-once per FILE, and the grain anti-join makes even a replayed
-    batch a no-op — the streaming restatement of the reference's
-    resumable batch ranges + ``ON CONFLICT DO NOTHING``
-    (cargar_postgres.py:322-330,379-388).
-
-    Returns the finished StreamingQuery (already awaited).
-    """
-    def handle(batch: DataFrame, _batch_id: int) -> None:
-        load_frame(spark, batch, warehouse)
-
-    query = (
-        spark.readStream.schema(WAREHOUSE["normalized"])
-        .parquet(normalized_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
 
 
 def materialize_agg_mensual(

@@ -22,21 +22,20 @@ from pyspark.sql import functions as F
 
 from ..functions.cleaning import label_or_placeholder, region_map_label
 from ..functions.money import GRID, gmicros, gsum
-from ..schema import DIMENSIONS, METRICS, Dim
+from ..schema import DIMENSIONS, METRICS
 
 
 def star_denormalize(
     fact: DataFrame,
     time_dim: DataFrame,
     dims: Mapping[str, DataFrame],
-    dim_defs: Sequence[Dim] = DIMENSIONS,
-    how: str = "inner",
 ) -> DataFrame:
-    """V-base (JN4): fact joined to dim_tiempo + all dimensions on surrogate
-    ids.  Every dim is broadcast — the fact never shuffles for this join."""
-    out = fact.join(F.broadcast(time_dim), "tiempo_id", how)
-    for dim in dim_defs:
-        out = out.join(F.broadcast(dims[dim.name]), dim.id_col, how)
+    """V-base (JN4): fact inner-joined to dim_tiempo + all dimensions on
+    surrogate ids.  Every dim is broadcast — the fact never shuffles for
+    this join."""
+    out = fact.join(F.broadcast(time_dim), "tiempo_id")
+    for dim in DIMENSIONS:
+        out = out.join(F.broadcast(dims[dim.name]), dim.id_col)
     return out
 
 
@@ -195,7 +194,6 @@ def _star_preagg(
     fact: DataFrame,
     time_dim: DataFrame,
     dims: Mapping[str, DataFrame],
-    dim_defs: Sequence[Dim],
     needed_attrs: set[str],
     time_cols: Sequence[str],
     metric_cols: Sequence[str],
@@ -208,8 +206,8 @@ def _star_preagg(
     then drops the whole group, exactly as the pre-join inner would have
     dropped its rows.
     """
-    contributing = [d for d in dim_defs if set(d.attrs) & needed_attrs]
-    rest = [d for d in dim_defs if not (set(d.attrs) & needed_attrs)]
+    contributing = [d for d in DIMENSIONS if set(d.attrs) & needed_attrs]
+    rest = [d for d in DIMENSIONS if not (set(d.attrs) & needed_attrs)]
     out = fact
     for d in rest:
         out = out.join(
@@ -239,13 +237,12 @@ def vw_gasto_agregado_mensual_star(
     fact: DataFrame,
     time_dim: DataFrame,
     dims: Mapping[str, DataFrame],
-    dim_defs: Sequence[Dim] = DIMENSIONS,
 ) -> DataFrame:
     """AGG8 via agg-below-join: exact rewrite of
     ``vw_gasto_agregado_mensual(star_denormalize(fact, time_dim, dims))``."""
     needed = set(AGG_GROUP_COLS[3:])
     pre = _star_preagg(
-        fact, time_dim, dims, dim_defs, needed,
+        fact, time_dim, dims, needed,
         time_cols=("mes", "trimestre"), metric_cols=METRICS,
     )
     return finalize_agg_mensual(pre)
@@ -255,13 +252,12 @@ def vw_gasto_agregado_anual_star(
     fact: DataFrame,
     time_dim: DataFrame,
     dims: Mapping[str, DataFrame],
-    dim_defs: Sequence[Dim] = DIMENSIONS,
 ) -> DataFrame:
     """AGG9 via agg-below-join: exact rewrite of
     ``vw_gasto_agregado_anual(star_denormalize(fact, time_dim, dims))``."""
     needed = {"sector_nombre", "pliego_nombre"}
     pre = _star_preagg(
-        fact, time_dim, dims, dim_defs, needed,
+        fact, time_dim, dims, needed,
         time_cols=(), metric_cols=[m for m, _ in ANNUAL_METRIC_ALIASES],
     )
     return finalize_agg_anual(pre)

@@ -17,8 +17,8 @@ subsumed by the partitioned file scan; the utf-8-sig BOM is consumed
 natively by Spark's UTF-8 reader) and the groups union by name — the Spark
 shape of the reference's per-file encoding retry.
 
-Malformed lines follow the same loud-failure discipline as the JSONL
-source, NOT a silent ``DROPMALFORMED``: each scan parses PERMISSIVE into
+Malformed lines follow a loud-failure discipline, NOT a silent
+``DROPMALFORMED``: each scan parses PERMISSIVE into
 an explicit all-string schema (header read driver-side during the sniff)
 plus a ``_corrupt_record`` capture column, and the load fails when the
 bad-line ratio crosses a threshold.  Rows a quote-mangled line would have
@@ -39,7 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .jsonl_source import CORRUPT_COL, corruption_stats
+#: the capture column of a PERMISSIVE scan's unparseable lines
+CORRUPT_COL = "_corrupt_record"
 
 #: transformar_mensual.py:131: utf-8 first (BOM variant handled natively),
 #: then latin-1 — the only two encodings MEF extracts arrive in.
@@ -50,6 +51,31 @@ ENCODINGS: tuple[str, ...] = ("UTF-8", "ISO-8859-1")
 #: file is latin-1; at warehouse scale this is one small ranged read per
 #: file of driver-side metadata work, not dataflow.
 SNIFF_BYTES = 4 << 20
+
+
+def corruption_stats(df: DataFrame) -> tuple[int, int]:
+    """(total rows, corrupt rows) in ONE scan — a single conditional-sum
+    aggregate, no second job (same discipline as
+    ``operators/expectations``).
+
+    EVERY schema column is referenced in the aggregate, for two reasons:
+    a plan referencing ONLY ``_corrupt_record`` over a raw scan is
+    rejected by Spark (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and — subtler —
+    CSV/JSON parsers under column pruning only parse the referenced
+    fields, so a row malformed past the referenced prefix would never be
+    flagged corrupt.  Referencing all columns forces the full-row parse
+    that corruption detection requires; the counts themselves are free.
+    """
+    others = [c for c in df.columns if c != CORRUPT_COL]
+    row = df.agg(
+        F.count("*").alias("total"),
+        F.count(F.col(CORRUPT_COL)).alias("bad"),
+        *[
+            F.count(F.col(c)).alias(f"_w{i}")
+            for i, c in enumerate(others)
+        ],
+    ).collect()[0]
+    return int(row["total"]), int(row["bad"])
 
 
 def detect_encoding(path: str | Path, sample_bytes: int = SNIFF_BYTES) -> str:

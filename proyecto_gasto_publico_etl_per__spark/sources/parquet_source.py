@@ -71,17 +71,3 @@ def write_table(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(path)
-
-
-def read_table(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    columns: Sequence[str] | None = None,
-) -> DataFrame:
-    if fmt not in _COLUMNAR:
-        raise ValueError(f"columnar format required, got {fmt!r}")
-    df = spark.read.format(fmt).load(path)
-    if columns:
-        df = df.select(*columns)
-    return df

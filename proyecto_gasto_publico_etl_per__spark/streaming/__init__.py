@@ -1,1 +1,1 @@
-"""Structured Streaming / incremental ingestion."""
+"""Event-time window operators that run on batch or streaming frames."""

@@ -224,49 +224,6 @@ def test_empty_input_zone_tolerated(spark):
     )
 
 
-def test_streamed_epochs_equal_batch(spark, tmp_path):
-    """zone_epoch_ingest epochs of build_agg_zone served together ==
-    one batch zone — the streamed==batch identity of the rollup lane."""
-    import functools
-
-    from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        zone_epoch_ingest,
-    )
-
-    df = _orders_input(spark).drop("okey").limit(600)
-    src = tmp_path / "src"
-    src.mkdir()
-    parts = df.randomSplit([1.0, 1.0, 1.0], seed=7)
-    for i, p in enumerate(parts):
-        p.coalesce(1).write.parquet(str(src / f"b{i}"))
-
-    zones = str(tmp_path / "zones")
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q = zone_epoch_ingest(
-        stream,
-        zones,
-        str(tmp_path / "ckpt"),
-        functools.partial(aggzone.build_agg_zone, **_SPEC),
-    )
-    q.awaitTermination(180)
-
-    import glob
-
-    roots = sorted(glob.glob(f"{zones}/epoch=*"))
-    assert len(roots) >= 2, "expected one zone per micro-batch"
-    batch_df = spark.read.parquet(
-        *[str(src / f"b{i}") for i in range(3)]
-    )
-    whole = aggzone.build_agg_zone(spark, batch_df, **_SPEC)
-    assert _rows(aggzone.serve_agg(spark, roots)) == _rows(
-        aggzone.serve_agg(spark, [whole])
-    )
-
-
 def test_zone_is_self_describing(spark):
     """spec.json records the build spec verbatim — the artifact a
     catalog would register."""

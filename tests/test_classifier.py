@@ -202,8 +202,8 @@ def test_logreg_standardize_maps_weights_to_raw_space(spark):
 
 def test_cli_classifier_eval(spark, tmp_path, capsys):
     """The classifier-eval CLI step over a profile zone: per-fold lines
-    plus the mean summary — the measured quality number that ships
-    beside corpus-build --classifier-model."""
+    plus the mean summary — the measured quality number a trained
+    classifier ships with."""
     from proyecto_gasto_publico_etl_per__spark import cli
     from proyecto_gasto_publico_etl_per__spark.operators.textstats import (
         lang_id,

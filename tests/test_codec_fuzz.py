@@ -1,5 +1,5 @@
 """Codec robustness fuzz (round 11): the per-row quarantine contract in
-bulk ingest (`extract_features`, `resize_images`) catches exceptions,
+bulk ingest (`extract_features`) catches exceptions,
 but the DIRECT decode surfaces promise a typed error contract — a
 malformed payload raises ValueError (corrupt) or NotImplementedError
 (unsupported feature), NEVER IndexError / KeyError / struct.error /
@@ -27,6 +27,7 @@ from proyecto_gasto_publico_etl_per__spark.operators import (  # noqa: E402
 from proyecto_gasto_publico_etl_per__spark.operators.jpeg import (  # noqa: E402
     jpeg_decode,
 )
+from png_ref import png_encode  # noqa: E402
 
 #: the typed contract: anything else escaping a decoder is a bug
 ALLOWED = (ValueError, NotImplementedError)
@@ -67,7 +68,7 @@ def _pixels(w=12, h=10, ch=3, seed=0):
 
 def test_fuzz_png():
     src = _pixels()
-    payload = multimodal._png_encode(12, 10, 3, src)
+    payload = png_encode(12, 10, 3, src)
     _assert_contract(
         multimodal._png_decode,
         _mutations(payload, np.random.default_rng(1)),

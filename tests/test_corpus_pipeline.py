@@ -69,90 +69,6 @@ def test_build_corpus_stages_consistent(spark, tmp_path):
     assert rep["n_docs_in"] == report["n_docs_in"]
 
 
-def test_build_corpus_with_learned_filter(spark, tmp_path):
-    """The Gopher-then-classifier layering: train a quality classifier
-    on the profile zone (weak labels), persist it, rebuild with it —
-    the clean zone can only shrink, never grow, and the pipeline ends
-    green end-to-end."""
-    from proyecto_gasto_publico_etl_per__spark.plans.corpus_pipeline import (
-        QUALITY_FEATURES,
-        train_quality_classifier,
-    )
-
-    out_plain = str(tmp_path / "plain")
-    plain = build_corpus(spark, SF_SMOKE, out_plain)
-
-    # weak supervision off the plain run's profile zone: long-ish docs
-    # with low punctuation are "reference-like"
-    profile = spark.read.parquet(f"{out_plain}/profile")
-    labeled = profile.withColumn(
-        "label",
-        ((F.col("n_tokens") >= 10) & (F.col("punct_ratio") <= 0.1)).cast(
-            "int"
-        ),
-    ).select(*QUALITY_FEATURES, "label")
-    model_path = str(tmp_path / "qmodel")
-    w, b = train_quality_classifier(
-        spark, labeled, model_path, n_iters=20
-    )
-    assert len(w) == len(QUALITY_FEATURES)
-
-    out_learned = str(tmp_path / "learned")
-    learned = build_corpus(
-        spark, SF_SMOKE, out_learned,
-        classifier_model=model_path, classifier_threshold=0.5,
-    )
-    assert learned["n_docs_clean"] <= plain["n_docs_clean"]
-    assert learned["n_docs_in"] == plain["n_docs_in"]
-    # the learned gate composes: every surviving doc still passes the
-    # heuristic gates (clean ⊆ plain-clean)
-    plain_ids = {
-        r.doc_id
-        for r in spark.read.parquet(f"{out_plain}/clean").select("doc_id").collect()
-    }
-    learned_ids = {
-        r.doc_id
-        for r in spark.read.parquet(f"{out_learned}/clean").select("doc_id").collect()
-    }
-    assert learned_ids <= plain_ids
-
-
-def test_cli_corpus_build_with_classifier(spark, tmp_path, capsys):
-    """corpus-build --classifier-model end-to-end through the CLI."""
-    from pyspark.sql import functions as F
-
-    from proyecto_gasto_publico_etl_per__spark import cli
-    from proyecto_gasto_publico_etl_per__spark.plans.corpus_pipeline import (
-        QUALITY_FEATURES,
-        train_quality_classifier,
-    )
-    from proyecto_gasto_publico_etl_per__spark.operators.textstats import (
-        quality_stats,
-    )
-    from proyecto_gasto_publico_etl_per__spark.sources.tables import load_table
-
-    profile = quality_stats(
-        load_table(spark, SF_SMOKE, "documents")
-    ).select(*QUALITY_FEATURES, "n_tokens")
-    labeled = profile.withColumn(
-        "label", (F.col("n_tokens") >= 10).cast("int")
-    )
-    model = str(tmp_path / "model")
-    train_quality_classifier(spark, labeled, model, n_iters=10)
-
-    out = str(tmp_path / "corpus")
-    cli.main(
-        [
-            "corpus-build", SF_SMOKE, out,
-            "--classifier-model", model,
-            "--classifier-threshold", "0.5",
-        ]
-    )
-    printed = capsys.readouterr().out
-    assert "n_docs_clean:" in printed
-    assert spark.read.parquet(f"{out}/clean").count() > 0
-
-
 def test_build_corpus_mixture_controls(spark, tmp_path):
     """source_cap + language token allocations applied to the train
     split only: selection persists to selected/, caps hold, eval splits

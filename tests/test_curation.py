@@ -492,7 +492,7 @@ def test_dsir_train_score_roundtrip(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        model_store.load_logreg(spark, path)
+        model_store.load_model(spark, path, "logreg")
 
 
 def test_dsir_weight_pure_python_identity(spark):

@@ -6,6 +6,7 @@ additions from silently overflowing that verification budget."""
 from __future__ import annotations
 
 import __spark_entry__ as entry
+from driver_ref import driver_green_names
 from proyecto_gasto_publico_etl_per__spark.plans import driver_queries as DQ
 
 
@@ -20,7 +21,7 @@ def test_unchecked_queries_fit_the_window():
     still lands inside the 50-slot window — otherwise a declared query
     can NEVER earn a driver correctness row."""
     names = list(entry.queries())
-    green = DQ._driver_green_names()
+    green = driver_green_names()
     unchecked = [n for n in names if n not in green]
     assert len(unchecked) <= 50, (
         f"{len(unchecked)} never-checked queries exceed the 50-slot "

@@ -1,17 +1,14 @@
 """The frozen-artifact staleness contract, pinned in ONE place.
 
-Three serving paths scrub/dedup/encode arriving batches against a
-FROZEN artifact built from the already-indexed corpus:
+Two paths dedup/encode arriving batches against a FROZEN artifact built
+from the already-indexed corpus:
 
-- span scrub vs frozen duplicated-gram metadata
-  (``operators/dedup.dup_span_meta`` → ``dup_span_scrub(meta=...)``),
 - LSH admission vs the frozen bucket-signature history
-  (``operators/dedup.band_signatures`` — the batch primitive under
-  ``streaming/incremental.streaming_neardup_ingest``'s bucket table),
+  (``operators/dedup.band_signatures``),
 - IVF-PQ delta encoding vs frozen centroids/codebook
   (``operators/similarity.ivf_pq_index_append``).
 
-All three share the SAME approximation: duplication (or drift) that
+Both share the SAME approximation: duplication (or drift) that
 exists only WITHIN the un-indexed arrivals — including a batch arriving
 twice before any artifact refresh — is UNSEEN until the artifact's next
 rebuild.  This test loads batch B twice against each frozen artifact
@@ -47,22 +44,6 @@ def test_frozen_artifact_staleness_contract(spark):
         "doc_id INT, text STRING",
     )
 
-    # ── span scrub: frozen meta misses intra-batch duplication ──────
-    meta = dedup.dup_span_meta(corpus)
-    scrubbed = {
-        r.doc_id: r for r in dedup.dup_span_scrub(batch, meta=meta).collect()
-    }
-    assert scrubbed[10].n_dup_tokens == 0  # the documented miss
-    assert scrubbed[11].n_dup_tokens == 0
-    # rebuild heals: the corpus-wide recompute sees the shared span and
-    # scrubs it from the non-keeper (doc 11; doc 10 owns by min-id)
-    healed = {
-        r.doc_id: r
-        for r in dedup.dup_span_scrub(corpus.unionByName(batch)).collect()
-    }
-    assert healed[10].n_dup_tokens == 0  # keeper keeps its occurrences
-    assert healed[11].n_dup_tokens > 0  # duplicate span scrubbed
-
     # ── LSH admission: frozen bucket history re-admits a replay ─────
     frozen_buckets = (
         dedup.band_signatures(corpus).select("band", "band_sig").distinct()
@@ -80,9 +61,8 @@ def test_frozen_artifact_staleness_contract(spark):
     # first arrival: no collision with A's history → both admitted
     assert colliding(frozen_buckets) == set()
     # SECOND arrival of the same batch against the STILL-frozen table:
-    # again no collision — the replay is re-admitted (the miss; the
-    # streaming path closes this per-epoch by writing B's signatures,
-    # but between artifact refreshes the batch primitive cannot see B)
+    # again no collision — the replay is re-admitted (the miss: between
+    # artifact refreshes the batch primitive cannot see B)
     assert colliding(frozen_buckets) == set()
     # rebuild heals: history including B's signatures drops the replay
     rebuilt = (

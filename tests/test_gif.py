@@ -193,15 +193,6 @@ def test_malformed_gif_raises():
         gif.gif_decode(good[:20])
 
 
-def test_resize_image_real_on_gif_payload():
-    idx = _rand_idx(8, 8)
-    out = multimodal.resize_image_real(
-        gif_write([{"idx": idx}], 8, 8, GCT), 4, 4
-    )
-    d = multimodal.decode_image(out)
-    assert (d["width"], d["height"], d["channels"]) == (4, 4, 3)
-
-
 # --- property test: lossless indexed round-trip ------------------------------
 
 from hypothesis import given, settings  # noqa: E402

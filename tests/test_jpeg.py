@@ -122,17 +122,6 @@ def test_decode_image_dispatches_jpeg():
     assert _maxerr(px, d["pixels"]) <= 12
 
 
-def test_resize_image_real_on_jpeg_payload():
-    """The stdlib resize path decodes JPEG, nearest-neighbor resamples,
-    and re-encodes PNG — decode the output and check geometry."""
-    px = _gradient(16, 16, 3)
-    out = multimodal.resize_image_real(
-        jpeg_encode(px, 16, 16, 3, quality=95), 4, 4
-    )
-    d = multimodal.decode_image(out)
-    assert (d["width"], d["height"], d["channels"]) == (4, 4, 3)
-
-
 # --- property tests: the decoder holds over the geometry/knob space ---------
 
 from hypothesis import given, settings  # noqa: E402

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from proyecto_gasto_publico_etl_per__spark.plans import mef_pipeline
 from proyecto_gasto_publico_etl_per__spark.plans import queries as Q
+from proyecto_gasto_publico_etl_per__spark.schema import DIMENSIONS
 
 #: Reference-true raw headers (transformar_mensual.py:32-69): the ejecutora
 #: code column is ``EJECUTORA`` (no _CODIGO suffix) and the sector code is
@@ -151,46 +152,6 @@ def test_cli_transform_directory_with_year_filter(spark, tmp_path):
     cli.main(["transform", str(raw), out, "2023", "2024"])
     years = sorted(r.ANO_EJE for r in spark.read.parquet(out).collect())
     assert years == [2023, 2024]  # 2025 excluded by the year filter
-
-
-def test_streaming_load_continuous_warehouse(spark, tmp_path, raw_csv):
-    """Normalized files arrive over time; each streaming_load run folds
-    exactly the new ones into the star warehouse, idempotently."""
-    norm_dir = str(tmp_path / "normalized")
-    wh = str(tmp_path / "warehouse")
-    ckpt = str(tmp_path / "ckpt")
-
-    mef_pipeline.transform(spark, raw_csv, norm_dir)
-    mef_pipeline.streaming_load(spark, norm_dir, wh, ckpt)
-    fact = spark.read.parquet(f"{wh}/fact_gasto_mensual")
-    assert fact.count() == 2  # consolidated grain, as in the batch load
-
-    # nothing new: re-run leaves the warehouse untouched
-    mef_pipeline.streaming_load(spark, norm_dir, wh, ckpt)
-    assert spark.read.parquet(f"{wh}/fact_gasto_mensual").count() == 2
-
-    # a new month lands in the normalized zone
-    extra = tmp_path / "2024-extra.csv"
-    _write_csv(
-        extra,
-        [["2024", "3", "M", "GOBIERNO LOCAL", "003", "E3", "Ejecutora Tres",
-          "03", "TRANSPORTE", "70", "77", "60"]],
-    )
-    # (transform's mode=ignore skips an existing dir — append directly)
-    from proyecto_gasto_publico_etl_per__spark.operators import normalize
-    from proyecto_gasto_publico_etl_per__spark.sources.csv_source import (
-        read_monthly_csv,
-    )
-
-    normalize.normalize_monthly(
-        read_monthly_csv(spark, str(extra))
-    ).write.mode("append").partitionBy("ANO_EJE").parquet(norm_dir)
-
-    mef_pipeline.streaming_load(spark, norm_dir, wh, ckpt)
-    fact3 = spark.read.parquet(f"{wh}/fact_gasto_mensual")
-    assert fact3.count() == 3
-    total = fact3.agg(F.sum("monto_pia").alias("t")).collect()[0].t
-    assert float(total) == 420.5  # 350.5 + 70
 
 
 def test_incremental_load_touches_only_affected_year_partitions(
@@ -618,3 +579,58 @@ def test_refresh_load_job_budget(spark, tmp_path, raw_csv):
     n = _jobs_of(spark, "mef-refresh", lambda: mef_pipeline.load(spark, nd, wh))
     assert n <= REFRESH_LOAD_JOB_BUDGET, n
     assert spark.read.parquet(f"{wh}/fact_gasto_mensual").count() == 3
+
+
+def _orphan_fact_rows(spark, wh: str) -> int:
+    """Stored fact rows without their calendar row or a dim row."""
+    fact, time_dim, dims = mef_pipeline._read_star(spark, wh)
+    parents = [(time_dim, "tiempo_id")]
+    parents += [(dims[d.name], d.id_col) for d in DIMENSIONS]
+    return sum(
+        fact.join(parent.select(key), key, "left_anti").count()
+        for parent, key in parents
+    )
+
+
+def test_months_beyond_the_calendar_are_served(spark, tmp_path, raw_csv):
+    """Months of 2031 and 2009 lie outside the generated 2010-2030
+    calendar: the load appends those years' calendar rows, so
+    ``vw_gasto_mensual`` serves them instead of silently dropping them,
+    and no stored fact row lacks its calendar or dim row."""
+    norm_dir = str(tmp_path / "normalized")
+    wh = str(tmp_path / "warehouse")
+    mef_pipeline.transform(spark, raw_csv, norm_dir)
+    mef_pipeline.load(spark, norm_dir, wh)
+    assert _orphan_fact_rows(spark, wh) == 0
+    calendar = spark.read.parquet(f"{wh}/dim_tiempo")
+    assert calendar.count() == 252
+
+    nd = _month(spark, tmp_path, "2031-and-2009-Gasto-Mensual", [
+        ["2031", "7", "E", "GOBIERNO NACIONAL", "001", "E1",
+         "Ejecutora Uno", "01", "SALUD", "7", "8", "9"],
+        ["2009", "12", "R", "GOBIERNO REGIONAL", "002", "E2",
+         "Ejecutora Dos", "02", "EDUCACION", "4", "5", "6"],
+    ])
+    mef_pipeline.load(spark, nd, wh)
+    mef_pipeline.register_views(spark, wh)
+    served = spark.sql(
+        "SELECT anio, mes, trimestre, monto_devengado FROM vw_gasto_mensual "
+        "WHERE anio IN (2009, 2031)"
+    ).collect()
+    assert sorted((r.anio, r.mes, r.trimestre) for r in served) == [
+        (2009, 12, 4), (2031, 7, 3)
+    ]
+    assert _orphan_fact_rows(spark, wh) == 0
+    calendar = spark.read.parquet(f"{wh}/dim_tiempo")
+    assert calendar.count() == 252 + 24
+    assert calendar.select("tiempo_id").distinct().count() == 252 + 24
+
+    # a load whose years the calendar now covers appends no calendar file
+    before = _data_files(f"{wh}/dim_tiempo")
+    nd = _month(spark, tmp_path, "2031-08-Gasto-Mensual", [
+        ["2031", "8", "E", "GOBIERNO NACIONAL", "001", "E1",
+         "Ejecutora Uno", "01", "SALUD", "1", "2", "3"],
+    ])
+    mef_pipeline.load(spark, nd, wh)
+    assert _data_files(f"{wh}/dim_tiempo") == before
+    assert _orphan_fact_rows(spark, wh) == 0

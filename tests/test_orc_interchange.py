@@ -1,11 +1,10 @@
-"""ORC interchange sink/source: lossless round-trip + partition pruning."""
+"""ORC interchange sink: lossless round-trip + partition pruning on read."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from proyecto_gasto_publico_etl_per__spark.sources.parquet_source import (
-    read_table,
     write_table,
 )
 from proyecto_gasto_publico_etl_per__spark.sources.tables import load_table
@@ -21,8 +20,8 @@ def test_orc_roundtrip_matches_parquet(spark, tmp_path):
     write_table(orders, pq, "parquet", partition_by=["anio"])
     write_table(orders, orc, "orc", partition_by=["anio"])
 
-    a = {tuple(r) for r in read_table(spark, pq, "parquet").collect()}
-    b = {tuple(r) for r in read_table(spark, orc, "orc").collect()}
+    a = {tuple(r) for r in spark.read.parquet(pq).collect()}
+    b = {tuple(r) for r in spark.read.orc(orc).collect()}
     assert a == b and a
 
 
@@ -34,7 +33,7 @@ def test_orc_partition_pruning_and_pushdown(spark, tmp_path):
     write_table(orders, orc, "orc", partition_by=["anio"])
     years = [r["anio"] for r in orders.select("anio").distinct().collect()]
     assert len(years) > 1
-    one = read_table(spark, orc, "orc").where(F.col("anio") == years[0])
+    one = spark.read.orc(orc).where(F.col("anio") == years[0])
     plan = one._jdf.queryExecution().executedPlan().toString()
     # partition filter reached the scan (pruned directory listing), and
     # only the matching year's rows come back
@@ -43,7 +42,7 @@ def test_orc_partition_pruning_and_pushdown(spark, tmp_path):
     )
     assert one.select("anio").distinct().collect()[0]["anio"] == years[0]
     # projection pushes down too (ReadSchema narrows)
-    proj = read_table(spark, orc, "orc", columns=["o_orderkey"])
+    proj = spark.read.orc(orc).select("o_orderkey")
     assert proj.columns == ["o_orderkey"]
 
 

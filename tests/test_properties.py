@@ -9,7 +9,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from proyecto_gasto_publico_etl_per__spark.functions.cleaning import clean_text
-from proyecto_gasto_publico_etl_per__spark.operators.star import upsert_dim
+from proyecto_gasto_publico_etl_per__spark.operators.star import new_dim_rows
 
 SETTINGS = settings(
     max_examples=10,
@@ -83,20 +83,20 @@ def test_try_cast_keeps_ints_nulls_junk(spark, ints, junk):
 def test_upsert_dim_union_semantics_and_idempotency(
     spark, existing_keys, incoming_keys
 ):
-    """SNK3 contract: after an upsert the dim holds exactly the union of
-    key sets, each key once; re-upserting the same batch changes nothing
-    (ON CONFLICT DO NOTHING)."""
+    """SNK3 contract: after the load appends ``new_dim_rows`` the dim holds
+    exactly the union of key sets, each key once; the same batch again
+    yields an empty delta (ON CONFLICT DO NOTHING)."""
     existing = (
         spark.createDataFrame([(k,) for k in set(existing_keys)], "k INT")
         if existing_keys
         else None
     )
     incoming = spark.createDataFrame([(k,) for k in incoming_keys], "k INT")
-    once = upsert_dim(existing, incoming, ["k"])
+    delta = new_dim_rows(existing, incoming, ["k"])
+    once = delta if existing is None else existing.unionByName(delta)
     got = sorted(r.k for r in once.collect())
     assert got == sorted(set(existing_keys) | set(incoming_keys))
-    twice = upsert_dim(once, incoming, ["k"])
-    assert sorted(r.k for r in twice.collect()) == got
+    assert new_dim_rows(once, incoming, ["k"]).count() == 0
 
 
 @SETTINGS
@@ -369,13 +369,15 @@ def test_png_codec_roundtrip(width, height, channels, seed):
     supports.  (Driver-side only — no Spark job per example.)"""
     import random
 
+    from png_ref import png_encode
+
     from proyecto_gasto_publico_etl_per__spark.operators import multimodal
 
     rng = random.Random(seed)
     pixels = bytes(
         rng.randrange(256) for _ in range(width * height * channels)
     )
-    png = multimodal._png_encode(width, height, channels, pixels)
+    png = png_encode(width, height, channels, pixels)
     d = multimodal.decode_image(png)
     assert (d["width"], d["height"], d["channels"]) == (
         width,

@@ -71,10 +71,12 @@ def test_driver_window_rotation_invariant():
     driver-green query may occupy a window slot while an unchecked (or
     red) one waits outside — the registration order must self-rotate
     from the committed CORRECTNESS artifacts."""
+    from driver_ref import driver_green_names
+
     from proyecto_gasto_publico_etl_per__spark.plans import driver_queries as D
 
     names = list(D.all_queries())
-    green = D._driver_green_names()
+    green = driver_green_names()
     window, outside = names[:50], names[50:]
     waiting = [n for n in outside if n not in green]
     if waiting:  # only binding while >50 queries still need a green row

@@ -1,28 +1,39 @@
-"""Every package module must be reachable from an entry point.
+"""Every package module and function must be reachable from an entry point.
 
-A static walk of the package's import graph with ``ast``: it starts from
-the files a user or the benchmark actually runs (the driver contract, the
-bench, the CLI, the paper's ETL pipeline, perfbench and the tools) and
-follows ``import`` / ``from ... import`` statements anywhere in a file,
-including those inside functions.  A module that no walk reaches is dead
-code: only its own tests keep it alive.  There is no allowlist; a lane
-that should stay must be wired into an entry point.
+Two static walks with ``ast``, neither with an allowlist; a lane that
+should stay must be wired into an entry point.
+
+- Modules: a walk of the package's import graph.  It starts from the
+  files a user or the benchmark actually runs (the driver contract, the
+  bench, the CLI, perfbench and the tools) and follows ``import`` /
+  ``from ... import`` statements anywhere in a file, including those
+  inside functions.
+- Functions: a walk of names.  A top-level package function or class is
+  reached when reached code names it; its body then counts as reached
+  code too.  Tests never count.
+
+Whatever no walk reaches is dead code: only its own tests keep it alive.
+Two more gates keep prose honest: every module path and every dotted
+``module.name`` that code, help text or tooling names must exist.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
+import io
 import re
+import tokenize
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = "proyecto_gasto_publico_etl_per__spark"
 
+#: what a user or the benchmark runs: the roots of both walks
 ENTRY_FILES = [
     ROOT / "__spark_entry__.py",
     ROOT / "bench.py",
     ROOT / PKG / "cli.py",
-    ROOT / PKG / "plans" / "mef_pipeline.py",
     *sorted((ROOT / "perfbench").glob("*.py")),
     *sorted((ROOT / "tools").glob("*.py")),
 ]
@@ -115,6 +126,124 @@ def test_every_package_module_is_reachable():
     )
 
 
+_IDENT = re.compile(r"[A-Za-z_]\w*\Z")
+
+
+def _names(nodes: list[ast.AST]) -> set[str]:
+    """Every identifier the code names: a ``Name``, an attribute, or a
+    string that is a bare identifier (``getattr``, ``__all__``, lookup
+    tables keyed by function name)."""
+    out: set[str] = set()
+    for node in nodes:
+        for x in ast.walk(node):
+            if isinstance(x, ast.Name):
+                out.add(x.id)
+            elif isinstance(x, ast.Attribute):
+                out.add(x.attr)
+            elif isinstance(x, ast.Constant) and isinstance(x.value, str):
+                if _IDENT.match(x.value):
+                    out.add(x.value)
+    return out
+
+
+def _is_register(decorator: ast.expr) -> bool:
+    """``@register(...)``: the decorator that declares a query."""
+    f = decorator.func if isinstance(decorator, ast.Call) else decorator
+    return (isinstance(f, ast.Name) and f.id == "register") or (
+        isinstance(f, ast.Attribute) and f.attr == "register"
+    )
+
+
+def _unreached_defs(root_files: list[Path], root: Path) -> list[str]:
+    """``module.name`` of each top-level package function or class that
+    no reached code names.
+
+    Reached from the start: the root files, every package module's
+    statements outside its top-level functions and classes (they run on
+    import), decorator expressions, and the bodies of ``@register``
+    queries.  A def named by reached code is reached, and the names in
+    its body then count too, up to a fixpoint: a name used only inside
+    an unreached function does not keep anything alive.
+    """
+    reached: set[str] = set()
+    defs: dict[tuple[str, str], set[str]] = {}
+    for path in root_files:
+        reached |= _names([ast.parse(path.read_text(encoding="utf-8"))])
+    for mod, path in sorted(_package_modules(root).items()):
+        if path in root_files:
+            continue
+        tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
+        for st in tree.body:
+            if not isinstance(
+                st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                reached |= _names([st])
+                continue
+            reached |= _names(st.decorator_list)
+            body = _names(
+                [n for n in ast.iter_child_nodes(st)
+                 if n not in st.decorator_list]
+            )
+            if any(_is_register(d) for d in st.decorator_list):
+                reached |= body
+            else:
+                defs[(mod.removeprefix(f"{PKG}."), st.name)] = body
+    grew = True
+    while grew:
+        grew = False
+        for (_, name), body in defs.items():
+            if name in reached and not body <= reached:
+                reached |= body
+                grew = True
+    return sorted(f"{m}.{n}" for m, n in defs if n not in reached)
+
+
+def test_function_walk_on_toy_package(tmp_path):
+    """The function walk's own contract: a def named only inside an
+    unreached def stays unreached (transitivity), an ``@register`` query
+    is a root whose helpers are reached, and attribute, string and
+    module-level references count."""
+    pkg = tmp_path / PKG
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "q.py").write_text(
+        "from .reg import register\n"
+        "@register('declared name')\n"
+        "def q1():\n    return helper()\n"
+        "def helper():\n    return 1\n"
+        "def dead():\n    return only_dead()\n"
+        "def only_dead():\n    return 2\n"
+        "TABLE = {'x': by_table}\n"
+        "def by_table():\n    return 3\n"
+    )
+    (pkg / "reg.py").write_text(
+        "def register(name):\n    return lambda f: f\n"
+    )
+    (pkg / "m.py").write_text(
+        "def by_attr():\n    pass\n"
+        "def by_string():\n    pass\n"
+        "class Unused:\n    def method(self):\n        return by_attr()\n"
+    )
+    entry = tmp_path / "main.py"
+    entry.write_text(
+        f"from {PKG} import m\n"
+        "m.by_attr()\n"
+        "getattr(m, 'by_string')()\n"
+    )
+    assert _unreached_defs([entry], tmp_path) == [
+        "m.Unused", "q.dead", "q.only_dead",
+    ]
+
+
+def test_every_package_function_is_reachable():
+    unreached = _unreached_defs(ENTRY_FILES, ROOT)
+    assert not unreached, (
+        "package functions or classes that no entry point reaches (delete "
+        "them with their tests, or wire them into an entry point): "
+        + ", ".join(unreached)
+    )
+
+
 #: a package module path as prose and tooling name it
 _MODULE_PATH = re.compile(
     r"\b(operators|sources|plans|streaming|functions)/(\w+)\.py\b"
@@ -159,9 +288,136 @@ def test_stale_path_gate_on_toy_tree(tmp_path):
     ]
 
 
+#: a dotted name as prose names it: ``incremental.session_window_agg``
+_DOTTED = re.compile(r"\b[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)+")
+
+#: a dotted name ending in one of these names a file, not a module member
+_FILE_SUFFIXES = {"py", "md", "json", "txt", "parquet", "csv", "sql"}
+
+
+def _prose(path: Path) -> list[tuple[int, str]]:
+    """(line, text) of each comment and string literal line of a Python
+    file: its docstrings, comments and help text.  A literal without
+    whitespace is a key (a span or metric label such as
+    ``"plans.build_s"``), not prose, and is skipped."""
+    literal = {tokenize.STRING, getattr(tokenize, "FSTRING_MIDDLE", -1)}
+    out = []
+    text = path.read_text(encoding="utf-8")
+    for tok in tokenize.generate_tokens(io.StringIO(text).readline):
+        if tok.type in literal:
+            if not any(c.isspace() for c in tok.string):
+                continue
+        elif tok.type != tokenize.COMMENT:
+            continue
+        out += [
+            (tok.start[0] + i, line)
+            for i, line in enumerate(tok.string.splitlines())
+        ]
+    return out
+
+
+@functools.cache
+def _top_level_names(path: Path) -> set[str]:
+    """Names a module binds at top level: defs, classes, assignments and
+    imports, also under a top-level ``if``/``try``."""
+    names: set[str] = set()
+    todo = list(ast.parse(path.read_text(encoding="utf-8")).body)
+    while todo:
+        st = todo.pop()
+        if isinstance(
+            st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ):
+            names.add(st.name)
+        elif isinstance(st, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = st.targets if isinstance(st, ast.Assign) else [st.target]
+            names.update(
+                x.id for t in targets for x in ast.walk(t)
+                if isinstance(x, ast.Name)
+            )
+        elif isinstance(st, (ast.Import, ast.ImportFrom)):
+            names.update(
+                (a.asname or a.name).split(".")[0] for a in st.names
+            )
+        elif isinstance(st, (ast.If, ast.Try)):
+            todo += st.body + st.orelse + getattr(st, "finalbody", [])
+            todo += [s for h in getattr(st, "handlers", []) for s in h.body]
+    return names
+
+
+def _stale_dotted_names(files: list[Path], root: Path) -> list[str]:
+    """``file:line: name`` for each dotted ``module.name`` the files' prose
+    names whose module exists but binds no such name at top level.
+
+    The module part is the full dotted name under the package (with or
+    without the package prefix) or a module's short name, its last part
+    (``dedup.dup_span_scrub``); the longest prefix that is a module
+    counts.  A dotted name whose head is no package module is not a
+    pointer into the package and is not checked."""
+    mods = {
+        name.removeprefix(PKG).removeprefix("."): path
+        for name, path in _package_modules(root).items()
+    }
+    short: dict[str, list[str]] = {}
+    for name in mods:
+        if name:
+            short.setdefault(name.rsplit(".", 1)[-1], []).append(name)
+    stale = []
+    for path in files:
+        for lineno, line in _prose(path):
+            for m in _DOTTED.finditer(line):
+                parts = m.group(0).split(".")
+                if parts[0] == PKG:
+                    parts = parts[1:]
+                heads = (
+                    [parts[0]] if parts[0] in mods else short.get(parts[0], [])
+                )
+                for i in range(len(parts), 0, -1):
+                    found = [".".join([h, *parts[1:i]]) for h in heads]
+                    found = [f for f in found if f in mods]
+                    if found:
+                        break
+                else:
+                    continue
+                if i == len(parts) or parts[i] in _FILE_SUFFIXES:
+                    continue
+                if not any(parts[i] in _top_level_names(mods[f]) for f in found):
+                    rel = path.relative_to(root)
+                    stale.append(f"{rel}:{lineno}: {m.group(0)}")
+    return stale
+
+
+def test_stale_dotted_gate_on_toy_tree(tmp_path):
+    """The dotted gate's own contract: a member the module binds passes by
+    full or short module name, a missing one is reported with its file
+    and line, and file names, bare-key literals and names outside the
+    package are not checked."""
+    (tmp_path / PKG / "operators").mkdir(parents=True)
+    (tmp_path / PKG / "__init__.py").write_text("")
+    (tmp_path / PKG / "operators" / "__init__.py").write_text("")
+    (tmp_path / PKG / "operators" / "kept.py").write_text(
+        "def f():\n    pass\nX = 1\n"
+    )
+    notes = tmp_path / "notes.py"
+    notes.write_text(
+        '"""Use ``operators.kept.f`` or ``kept.X``; see kept.py."""\n'
+        "# and kept.gone, json.dumps\n"
+        'LABEL = "kept.label"\n'
+        f'HELP = "see {PKG}.operators.kept.missing"\n'
+    )
+    assert _stale_dotted_names([notes], tmp_path) == [
+        "notes.py:2: kept.gone",
+        f"notes.py:4: {PKG}.operators.kept.missing",
+    ]
+
+
 def test_named_module_paths_exist():
-    """A deleted module must leave no pointer behind in code, tooling or
-    requirements: every ``operators|sources|plans|streaming|functions``
-    path they name has a file in the package."""
-    stale = _stale_module_paths(_scanned_files(), ROOT)
+    """A deleted module or function must leave no pointer behind in code,
+    tooling or requirements: every ``operators|sources|plans|streaming|
+    functions`` path they name has a file in the package, and every
+    dotted ``module.name`` the Python files' prose names is bound by that
+    module."""
+    files = _scanned_files()
+    stale = _stale_module_paths(files, ROOT)
     assert not stale, "paths to modules that do not exist:\n" + "\n".join(stale)
+    stale = _stale_dotted_names([f for f in files if f.suffix == ".py"], ROOT)
+    assert not stale, "names no module binds:\n" + "\n".join(stale)

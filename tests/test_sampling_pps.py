@@ -8,8 +8,6 @@ arithmetic, same md5 buckets).
 
 import hashlib
 
-from pyspark.sql import functions as F
-
 from proyecto_gasto_publico_etl_per__spark.operators import sampling
 
 
@@ -109,54 +107,3 @@ def test_pps_k_exceeding_total_weight_selects_everything(spark):
         for r in sampling.pps_systematic_sample(df, "id", "w", k=100).collect()
     }
     assert got == {1: 3, 2: 1, 3: 2}
-
-
-def test_weighted_sample_aes_contract(spark):
-    from proyecto_gasto_publico_etl_per__spark.operators.sampling import (
-        weighted_sample_aes,
-    )
-
-    rows = [(i, 1) for i in range(100)] + [(999, 10**9), (-5, 0)]
-    df = spark.createDataFrame(rows, "id LONG, w LONG")
-    got = weighted_sample_aes(df, "id", "w", k=10).collect()
-    assert len(got) == 10
-    ids = {r["id"] for r in got}
-    assert 999 in ids  # the dominating weight is picked
-    assert -5 not in ids  # zero weight is ineligible
-    # deterministic across partitionings
-    again = weighted_sample_aes(
-        spark.createDataFrame(rows, "id LONG, w LONG").repartition(7),
-        "id",
-        "w",
-        k=10,
-    ).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, again))
-    # k > eligible rows degrades to "all eligible rows"
-    small = spark.createDataFrame(rows[:3], "id LONG, w LONG")
-    assert weighted_sample_aes(small, "id", "w", k=50).count() == 3
-
-
-def test_weighted_sample_aes_per_group(spark):
-    from proyecto_gasto_publico_etl_per__spark.operators.sampling import (
-        weighted_sample_aes,
-        weighted_sample_aes_per_group,
-    )
-
-    rows = [
-        (g * 100 + i, ["en", "es", "de"][g], 1 + (i % 5))
-        for g in range(3)
-        for i in range(20)
-    ] + [(900, "fr", 7)]  # a group smaller than k
-    df = spark.createDataFrame(rows, "id LONG, lang STRING, w LONG")
-    out = weighted_sample_aes_per_group(df, "id", "w", "lang", k=4).collect()
-    by_lang = {}
-    for r in out:
-        by_lang.setdefault(r["lang"], []).append(r["id"])
-    assert {len(v) for k_, v in by_lang.items() if k_ != "fr"} == {4}
-    assert by_lang["fr"] == [900]  # under-k group returns all rows
-    # per-group selection == running the global sampler on that group
-    en_only = df.filter(F.col("lang") == "en")
-    solo = {
-        r["id"] for r in weighted_sample_aes(en_only, "id", "w", k=4).collect()
-    }
-    assert set(by_lang["en"]) == solo

@@ -218,6 +218,8 @@ def test_decode_image_dispatches_pnm_and_tga():
     assert multimodal.decode_image(
         tga_write(src, 6, 6, 3, rle=True)
     )["pixels"] == src
-    # resize path too
-    png = multimodal.resize_image_real(pnm_write(src, 6, 6, 3), 6, 6)
-    assert multimodal.decode_image(png)["pixels"] == src
+    # and the decoders the dispatch routes to, called directly
+    assert simple_images.pnm_decode(pnm_write(src, 6, 6, 3))["pixels"] == src
+    assert simple_images.tga_decode(
+        tga_write(src, 6, 6, 3, rle=True)
+    )["pixels"] == src

@@ -1,4 +1,4 @@
-"""Star-builder tests: surrogate keys, idempotent upsert, FK resolution,
+"""Star-builder tests: surrogate keys, idempotent deltas, FK resolution,
 grain consolidation (reference load parity: etl/cargar_postgres.py:270-388)."""
 
 from __future__ import annotations
@@ -43,14 +43,12 @@ def test_upsert_dim_idempotent(spark):
          ("06", "012", "023", "F2", "D2", "G2")],
         [*dim.key, *dim.attrs],
     )
-    first = star.upsert_dim(None, star.extract_dim(batch, dim), dim.key)
+    first = star.new_dim_rows(None, star.extract_dim(batch, dim), dim.key)
     assert first.count() == 2
-    # ON CONFLICT DO NOTHING: re-appending the same batch changes nothing
-    second = star.upsert_dim(first, star.extract_dim(batch, dim), dim.key)
-    assert second.count() == 2
-    assert sorted(r[dim.id_col] for r in second.collect()) == sorted(
-        r[dim.id_col] for r in first.collect()
-    )
+    # ON CONFLICT DO NOTHING: re-appending the same batch adds no row
+    again = star.new_dim_rows(first, star.extract_dim(batch, dim), dim.key)
+    assert again.count() == 0
+    assert again.columns == first.columns
 
 
 def test_upsert_dim_appends_only_new_keys(spark):
@@ -63,8 +61,12 @@ def test_upsert_dim_appends_only_new_keys(spark):
          ("07", "013", "024", "F3", "D3", "G3")],
         [*dim.key, *dim.attrs],
     )
-    d1 = star.upsert_dim(None, star.extract_dim(b1, dim), dim.key)
-    d2 = star.upsert_dim(d1, star.extract_dim(b2, dim), dim.key)
+    d1 = star.new_dim_rows(None, star.extract_dim(b1, dim), dim.key)
+    delta = star.new_dim_rows(d1, star.extract_dim(b2, dim), dim.key)
+    assert [tuple(r[k] for k in dim.key) for r in delta.collect()] == [
+        ("07", "013", "024")
+    ]
+    d2 = d1.unionByName(delta)
     rows = {tuple(r[k] for k in dim.key): r for r in d2.collect()}
     assert len(rows) == 2
     # first-writer wins on conflicting attrs (DO NOTHING semantics)
@@ -123,12 +125,15 @@ def test_append_fact_idempotent(spark):
         [(1, Decimal("5.00")), (1, Decimal("3.00")), (2, Decimal("1.00"))],
         "k INT, m DECIMAL(18,4)",
     )
-    f1 = star.append_fact(None, batch, grain, metrics)
+    f1 = star.new_fact_rows(None, batch, grain, metrics)
     assert {(r.k, str(r.m)) for r in f1.collect()} == {
         (1, "8.0000"), (2, "1.0000")
     }
-    # property: loading the same batch twice must not change fact sums
-    f2 = star.append_fact(f1, batch, grain, metrics)
+    # property: loading the same batch twice must not change fact sums —
+    # the replay's delta is empty
+    replay = star.new_fact_rows(f1, batch, grain, metrics)
+    assert replay.count() == 0
+    f2 = f1.unionByName(replay)
     assert {(r.k, str(r.m)) for r in f2.collect()} == {
         (1, "8.0000"), (2, "1.0000")
     }

@@ -1,109 +1,13 @@
-"""Structured Streaming incremental-load tests (streaming/incremental.py)."""
+"""Streaming tests: the event-time operators of streaming/incremental.py and
+the batch operators run per micro-batch inside ``foreachBatch``."""
 
 from __future__ import annotations
 
-import tempfile
-from datetime import datetime, timedelta
-from pathlib import Path
-
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-    incremental_load,
-    streaming_transform,
     windowed_event_counts,
 )
-
-SCHEMA = T.StructType(
-    [
-        T.StructField("k", T.IntegerType()),
-        T.StructField("v", T.StringType()),
-    ]
-)
-
-
-def test_incremental_load_exactly_once_per_file(spark):
-    with tempfile.TemporaryDirectory() as tmp:
-        src = Path(tmp, "src")
-        out = str(Path(tmp, "out"))
-        ckpt = str(Path(tmp, "ckpt"))
-        spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA).write.parquet(
-            str(src / "batch1")
-        )
-
-        incremental_load(
-            spark, f"{src}/*", out, ckpt, SCHEMA,
-            transform=lambda df: df.withColumn("v", F.upper("v")),
-        )
-        assert sorted(
-            (r.k, r.v) for r in spark.read.parquet(out).collect()
-        ) == [(1, "A"), (2, "B")]
-
-        # re-run with no new files: nothing reprocessed (idempotent resume,
-        # the engine form of skip-if-exists + ON CONFLICT DO NOTHING)
-        incremental_load(spark, f"{src}/*", out, ckpt, SCHEMA,
-                         transform=lambda df: df.withColumn("v", F.upper("v")))
-        assert spark.read.parquet(out).count() == 2
-
-        # a new file arrives: only it is processed
-        spark.createDataFrame([(3, "c")], SCHEMA).write.parquet(
-            str(src / "batch2")
-        )
-        incremental_load(spark, f"{src}/*", out, ckpt, SCHEMA,
-                         transform=lambda df: df.withColumn("v", F.upper("v")))
-        assert sorted(
-            (r.k, r.v) for r in spark.read.parquet(out).collect()
-        ) == [(1, "A"), (2, "B"), (3, "C")]
-
-
-RAW_HEADER = [
-    "ANO_EJE", "MES_EJE", "NIVEL_GOBIERNO", "NIVEL_GOBIERNO_NOMBRE",
-    "SECTOR_NOMBRE", "MONTO_PIA", "MONTO_DEVENGADO",
-]
-
-
-def _raw_csv(path: Path, rows: list[list[str]]) -> None:
-    path.parent.mkdir(parents=True, exist_ok=True)
-    lines = [",".join(RAW_HEADER)] + [",".join(r) for r in rows]
-    path.write_text("\n".join(lines) + "\n")
-
-
-def test_streaming_transform_exactly_once_per_file(spark):
-    with tempfile.TemporaryDirectory() as tmp:
-        raw = Path(tmp, "raw")
-        out = str(Path(tmp, "normalized"))
-        ckpt = str(Path(tmp, "ckpt"))
-        _raw_csv(
-            raw / "2024-Gasto-Mensual.csv",
-            [
-                ["2024", "1", "E", "NACIONAL", "SALUD", "100.5", "90"],
-                ["bad", "1", "E", "x", "x", "1", "1"],  # filtered (FLT1)
-            ],
-        )
-
-        streaming_transform(spark, f"{raw}/*.csv", out, ckpt, RAW_HEADER)
-        first = spark.read.parquet(out)
-        assert first.count() == 1  # junk row dropped by the validity filter
-        row = first.collect()[0]
-        assert row.ANO_EJE == 2024 and str(row.FECHA) == "2024-01-01"
-        # full normalization ran: 67-column conformed schema + FECHA
-        assert "SEC_EJEC" in first.columns and "FECHA" in first.columns
-
-        # re-run with no new files: nothing reprocessed
-        streaming_transform(spark, f"{raw}/*.csv", out, ckpt, RAW_HEADER)
-        assert spark.read.parquet(out).count() == 1
-
-        # a new month lands: only it is processed, same year partition
-        _raw_csv(
-            raw / "2024-Gasto-Mensual-02.csv",
-            [["2024", "2", "R", "REGIONAL", "EDUCACION", "200", "180"]],
-        )
-        streaming_transform(spark, f"{raw}/*.csv", out, ckpt, RAW_HEADER)
-        months = sorted(
-            r.MES_EJE for r in spark.read.parquet(out).collect()
-        )
-        assert months == [1, 2]
 
 
 def test_windowed_event_counts_matches_batch_groupby(spark):
@@ -123,207 +27,6 @@ def test_windowed_event_counts_matches_batch_groupby(spark):
         for r in direct.collect()
     }
     assert w == d
-
-
-def test_enrich_stream_static_join(spark, tmp_path):
-    """Stream-static broadcast enrichment: streamed events pick up dim
-    attributes per micro-batch, matching the batch join exactly."""
-    from proyecto_gasto_publico_etl_per__spark.sources.tables import load_table
-    from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        enrich_stream,
-    )
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    src = str(tmp_path / "events_src")
-    ev.write.parquet(src)
-
-    tiers = spark.createDataFrame(
-        [(uid, "GOLD" if uid % 3 == 0 else "STD")
-         for uid in range(0, 200)],
-        "user_id LONG, tier STRING",
-    )
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
-    enriched = enrich_stream(stream, tiers, ["user_id"])
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("enriched_events")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = {
-        (r.event_id, r.tier)
-        for r in spark.sql(
-            "SELECT event_id, tier FROM enriched_events"
-        ).collect()
-    }
-    want = {
-        (r.event_id, r.tier)
-        for r in ev.join(tiers, ["user_id"], "left")
-        .select("event_id", "tier")
-        .collect()
-    }
-    assert got == want and len(got) == ev.count()
-
-
-def test_join_streams_matches_batch_range_join(spark, tmp_path):
-    """Stream-stream join (click→purchase within 1 hour): streamed result
-    equals the same join run in batch, and the plan carries watermarks on
-    BOTH sides (the state-eviction contract)."""
-    from proyecto_gasto_publico_etl_per__spark.sources.tables import load_table
-    from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        join_streams,
-    )
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    # watermarks demand TIMESTAMP (not NTZ): cast once at the edge,
-    # exactly what an ingest job does before declaring event time
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    csrc, psrc = str(tmp_path / "clicks"), str(tmp_path / "purch")
-    clicks.write.parquet(csrc)
-    purchases.write.parquet(psrc)
-
-    cstream = spark.readStream.schema(clicks.schema).parquet(csrc)
-    pstream = spark.readStream.schema(purchases.schema).parquet(psrc)
-    joined = join_streams(
-        cstream, pstream, "user_id", within="1 hour", watermark="2 hours"
-    )
-    assert joined.isStreaming
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("attributed")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.click_id, r.r_purchase_id)
-        for r in spark.sql("SELECT * FROM attributed").collect()
-    }
-
-    batch = join_streams(
-        clicks, purchases, "user_id", within="1 hour", watermark="2 hours"
-    )
-    want = {(r.click_id, r.r_purchase_id) for r in batch.collect()}
-    assert got == want
-    assert want  # fixture actually exercises the correlation
-
-
-def test_join_streams_left_outer_keeps_unmatched(spark):
-    """leftOuter semantics pinned in batch mode (streaming outer only
-    emits after watermark expiry — same code path, same predicate)."""
-    from proyecto_gasto_publico_etl_per__spark.sources.tables import load_table
-    from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        join_streams,
-    )
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    inner = join_streams(clicks, purchases, "user_id", how="inner")
-    outer = join_streams(clicks, purchases, "user_id", how="leftOuter")
-    n_clicks = clicks.count()
-    matched_clicks = inner.select("click_id").distinct().count()
-    outer_rows = outer.count()
-    # every unmatched click appears exactly once with a NULL right side
-    assert (
-        outer_rows == inner.count() + (n_clicks - matched_clicks)
-    )
-    assert (
-        outer.where(F.col("r_purchase_id").isNull()).count()
-        == n_clicks - matched_clicks
-    )
-
-
-def test_streaming_neardup_ingest(spark, tmp_path):
-    """LSH admission control across micro-batches: a near-duplicate (one
-    word edited) of an already-admitted doc is dropped in a LATER batch
-    (history bucket table), an in-batch near-dup keeps the smallest id,
-    and distinct docs pass."""
-    from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        streaming_neardup_ingest,
-    )
-
-    base = " ".join(f"word{i} token{i} item{i}" for i in range(40))
-    near = base.replace("word7 ", "edited7 ")  # one word changed
-    other = " ".join(f"alpha{i} beta{i} gamma{i}" for i in range(40))
-    other_near = other.replace("beta3 ", "delta3 ")  # one word changed
-    # (trailing spaces: "beta3" alone would also rewrite beta30..beta39
-    # and push similarity below the LSH s-curve)
-    schema = "doc_id LONG, text STRING"
-    src = tmp_path / "src"
-    src.mkdir()
-    # two source files → two micro-batches (maxFilesPerTrigger=1)
-    spark.createDataFrame([(1, base), (2, other)], schema).coalesce(
-        1
-    ).write.parquet(str(src / "batch1"))
-    spark.createDataFrame(
-        [(3, near), (4, "completely unrelated fresh content here"),
-         (5, other_near), (6, other_near)],
-        schema,
-    ).coalesce(1).write.parquet(str(src / "batch2"))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    corpus = str(tmp_path / "corpus")
-    buckets = str(tmp_path / "buckets")
-    q = streaming_neardup_ingest(
-        stream, corpus, buckets, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(180)
-
-    corpus_df = spark.read.parquet(corpus)
-    # per-epoch partitions (idempotent replay) double as provenance
-    assert "epoch" in corpus_df.columns
-    admitted = sorted(r.doc_id for r in corpus_df.collect())
-    # 3 ≈ 1 (cross-batch drop); 5 ≈ 2 (cross-batch drop); 6 == 5 would
-    # be an in-batch drop but 5 is itself dropped against history, so 6
-    # falls with it (transitive candidate policy); 4 is fresh
-    assert 1 in admitted and 2 in admitted and 4 in admitted
-    assert 3 not in admitted and 5 not in admitted and 6 not in admitted
-    # bucket table holds only admitted docs' signatures
-    bucket_docs = {
-        r.doc for r in spark.read.parquet(buckets).select("doc").collect()
-    }
-    assert bucket_docs == set(admitted)
-    # idempotent re-run with same checkpoint: no new rows
-    n_before = spark.read.parquet(corpus).count()
-    stream2 = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q2 = streaming_neardup_ingest(
-        stream2, corpus, buckets, str(tmp_path / "ckpt")
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(corpus).count() == n_before
 
 
 def test_session_window_agg_matches_declared_sessionize(spark):
@@ -396,47 +99,6 @@ def test_session_window_agg_streaming_runs(spark, tmp_path):
         "session_end",
         "n_events",
     ]
-
-
-def test_join_streams_rejects_unsupported_how(spark):
-    import pytest
-
-    from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        join_streams,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00")], "user_id INT, ts STRING"
-    ).select("user_id", F.col("ts").cast("timestamp").alias("ts"))
-    with pytest.raises(ValueError, match="inner.*leftOuter"):
-        join_streams(df, df, "user_id", how="fullOuter")
-
-
-def test_join_streams_uniquifies_prefix_collision(spark):
-    """A left column already named r_<x> (or a right one) must not make
-    the renamed right side ambiguous — the prefix uniquifies instead."""
-    from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        join_streams,
-    )
-
-    left = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00", "L")],
-        "user_id INT, ts STRING, r_val STRING",
-    ).select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"), "r_val"
-    )
-    right = spark.createDataFrame(
-        [(1, "2024-01-01 00:10:00", "R")],
-        "user_id INT, ts STRING, val STRING",
-    ).select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"), "val"
-    )
-    out = join_streams(left, right, "user_id")
-    assert len(out.columns) == len(set(out.columns)), out.columns
-    row = out.collect()[0]
-    # left's r_val kept; right's val uniquified past the collision
-    assert row.r_val == "L"
-    assert "r_ts" in out.columns and row.r_r_val == "R"
 
 
 def test_ann_search_at_ingest(spark, tmp_path):
@@ -727,139 +389,6 @@ def test_sq8_encode_at_ingest(spark, tmp_path):
     assert streamed == batch
 
 
-def test_streaming_drift_monitor_equals_batch_twin(spark, tmp_path):
-    """Per-epoch streamed chi2 scores == batch chi2_against_reference on
-    the same files, and a vocabulary-shifted batch scores far above an
-    in-distribution batch."""
-    from proyecto_gasto_publico_etl_per__spark.operators.textstats import (
-        chi2_against_reference,
-        token_distribution,
-    )
-    from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        streaming_drift_monitor,
-    )
-
-    schema = "doc_id LONG, text STRING"
-    corpus_rows = [
-        (i, " ".join(f"w{j % 19}" for j in range(i, i + 30)))
-        for i in range(40)
-    ]
-    corpus = spark.createDataFrame(corpus_rows, schema)
-    ref_dir = str(tmp_path / "ref")
-    token_distribution(corpus, top_v=15).write.parquet(ref_dir)
-
-    src = tmp_path / "src"
-    src.mkdir()
-    in_dist = [(100 + i, " ".join(f"w{j % 19}" for j in range(i, i + 25)))
-               for i in range(10)]
-    shifted = [(200 + i, " ".join(f"q{j % 11}" for j in range(25)) + " w0")
-               for i in range(10)]
-    spark.createDataFrame(in_dist, schema).coalesce(1).write.parquet(
-        str(src / "batch1")
-    )
-    spark.createDataFrame(shifted, schema).coalesce(1).write.parquet(
-        str(src / "batch2")
-    )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    scores_dir = str(tmp_path / "scores")
-    q = streaming_drift_monitor(
-        stream, ref_dir, scores_dir, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(180)
-
-    got = {
-        r["epoch"]: (r["n_tokens"], r["chi2_micro"])
-        for r in spark.read.parquet(scores_dir).collect()
-    }
-    assert len(got) == 2
-    ref = spark.read.parquet(ref_dir)
-    expected = {}
-    for epoch, rows in ((0, in_dist), (1, shifted)):
-        row = chi2_against_reference(
-            spark.createDataFrame(rows, schema), ref
-        ).collect()[0]
-        expected[epoch] = (row["n_tokens"], row["chi2_micro"])
-    # file order == epoch order under maxFilesPerTrigger=1 (batch1 first)
-    assert got == expected
-    assert got[1][1] > 10 * got[0][1]  # shifted batch spikes the score
-
-
-def test_bm25_index_ingest_streamed_equals_batch(spark, tmp_path):
-    """At-ingest inverted-index maintenance: three source files → three
-    micro-batch epoch zone sets; serving over ALL epoch roots must
-    equal serving over one batch-built index of the whole corpus (the
-    associative-zone contract, streamed edition), and a checkpointed
-    re-run must add no epochs (idempotent replay)."""
-    from proyecto_gasto_publico_etl_per__spark.operators.retrieval import (
-        bm25_serve,
-        build_bm25_index,
-    )
-    from proyecto_gasto_publico_etl_per__spark.plans.extension_queries import (
-        _BM25_TERMS,
-    )
-    from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        zone_epoch_ingest,
-    )
-
-    schema = "doc_id LONG, text STRING"
-    src = tmp_path / "src"
-    src.mkdir()
-    batches = [
-        [(1, "spark hash merge spark table"), (2, "hash value row scan")],
-        [(3, "merge merge spark"), (4, "table value agg"), (5, "")],
-        [(6, "spark spark spark hash merge hash")],
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / f"batch{i}")
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    zones = tmp_path / "zones"
-    q = zone_epoch_ingest(
-        stream, str(zones), str(tmp_path / "ckpt"), build_bm25_index
-    )
-    q.awaitTermination(180)
-
-    roots = sorted(str(p) for p in zones.glob("epoch=*"))
-    assert len(roots) == 3  # one zone set per micro-batch
-
-    all_docs = spark.createDataFrame(
-        [r for rows in batches for r in rows], schema
-    )
-    batch_root = build_bm25_index(spark, all_docs)
-    streamed = {
-        tuple(r)
-        for r in bm25_serve(spark, roots, _BM25_TERMS).collect()
-    }
-    rebuilt = {
-        tuple(r)
-        for r in bm25_serve(spark, [batch_root], _BM25_TERMS).collect()
-    }
-    assert streamed == rebuilt and len(streamed) == 4  # docs 4, 5 unmatched
-
-    # idempotent replay: same checkpoint, no new epochs
-    stream2 = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q2 = zone_epoch_ingest(
-        stream2, str(zones), str(tmp_path / "ckpt"), build_bm25_index
-    )
-    q2.awaitTermination(120)
-    assert sorted(str(p) for p in zones.glob("epoch=*")) == roots
-
-
 def test_bm25_compaction_preserves_serving(spark, tmp_path):
     """Folding epoch/delta roots into one compacted root (zone-level
     re-sums, no re-tokenize) must not change serving output."""
@@ -893,282 +422,3 @@ def test_bm25_compaction_preserves_serving(spark, tmp_path):
         for r in bm25_serve(spark, [compacted], _BM25_TERMS).collect()
     }
     assert single == multi and len(single) == 4
-
-
-def test_bm25_delete_ingest_streamed_equals_batch(spark, tmp_path):
-    """Round 15: deletes arriving IN-STREAM (zone_delete_ingest →
-    delete_from_bm25_index) over a streamed-built index must equal the
-    batch delete of the same ids — and both equal a rebuild over the
-    remaining docs (the living-index story covers takedowns at ingest,
-    matching the append twin).  A checkpointed replay adds nothing."""
-    from proyecto_gasto_publico_etl_per__spark.operators.retrieval import (
-        bm25_serve,
-        build_bm25_index,
-        delete_from_bm25_index,
-    )
-    from proyecto_gasto_publico_etl_per__spark.plans.extension_queries import (
-        _BM25_TERMS,
-    )
-    from proyecto_gasto_publico_etl_per__spark.sources.zones import (
-        index_roots,
-    )
-    from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        zone_delete_ingest,
-        zone_epoch_ingest,
-    )
-
-    schema = "doc_id LONG, text STRING"
-    docs = [
-        (1, "spark hash merge spark table"),
-        (2, "hash value row scan"),
-        (3, "merge merge spark"),
-        (4, "table value agg"),
-        (5, "spark spark spark hash merge hash"),
-    ]
-    src = tmp_path / "docs"
-    src.mkdir()
-    for i in (0, 1):
-        spark.createDataFrame(
-            docs[i * 3 : i * 3 + 3], schema
-        ).coalesce(1).write.parquet(str(src / f"batch{i}"))
-    zones = tmp_path / "zones"
-    q = zone_epoch_ingest(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*")),
-        str(zones),
-        str(tmp_path / "ckpt_ingest"),
-        build_bm25_index,
-    )
-
-    def delete(spark, ids):
-        # the streamed index's epoch roots, resolved per micro-batch
-        roots = index_roots(str(zones), "postings")
-        return delete_from_bm25_index(spark, roots, ids)
-
-    q.awaitTermination(180)
-
-    # delete requests stream in: doc 2 (epoch 0) and doc 5 (epoch 1),
-    # plus an id never ingested (ignored)
-    dsrc = tmp_path / "dels"
-    dsrc.mkdir()
-    spark.createDataFrame([(2,)], "doc_id LONG").coalesce(1).write.parquet(
-        str(dsrc / "d0")
-    )
-    spark.createDataFrame(
-        [(5,), (999,)], "doc_id LONG"
-    ).coalesce(1).write.parquet(str(dsrc / "d1"))
-    qd = zone_delete_ingest(
-        spark.readStream.schema("doc_id LONG")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(dsrc / "*")),
-        str(tmp_path / "ckpt_del"),
-        delete,
-    )
-    qd.awaitTermination(180)
-
-    roots = sorted(str(p) for p in zones.glob("epoch=*"))
-    streamed = {
-        tuple(r) for r in bm25_serve(spark, roots, _BM25_TERMS).collect()
-    }
-
-    # batch twin: build whole corpus, delete the same ids in one call
-    all_docs = spark.createDataFrame(docs, schema)
-    batch_root = build_bm25_index(spark, all_docs)
-    delete_from_bm25_index(spark, [batch_root], [2, 5, 999])
-    batch = {
-        tuple(r)
-        for r in bm25_serve(spark, [batch_root], _BM25_TERMS).collect()
-    }
-    rebuilt_root = build_bm25_index(
-        spark, all_docs.where(~F.col("doc_id").isin(2, 5))
-    )
-    rebuilt = {
-        tuple(r)
-        for r in bm25_serve(
-            spark, [rebuilt_root], _BM25_TERMS
-        ).collect()
-    }
-    assert streamed == batch == rebuilt
-    assert not any(row[0] in (2, 5) for row in streamed)
-
-    # replay with the same checkpoint: the delete op's idempotence
-    # means the served set is unchanged
-    qd2 = zone_delete_ingest(
-        spark.readStream.schema("doc_id LONG")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(dsrc / "*")),
-        str(tmp_path / "ckpt_del"),
-        delete,
-    )
-    qd2.awaitTermination(180)
-    assert {
-        tuple(r) for r in bm25_serve(spark, roots, _BM25_TERMS).collect()
-    } == streamed
-
-
-def test_ann_delete_ingest_streamed_equals_batch(spark, tmp_path):
-    """Round 15: vector takedowns arriving IN-STREAM (zone_delete_ingest
-    → delete_from_ann_index) against a persisted IVF-PQ index must equal
-    the one-call batch delete of the same ids — and serving the
-    tombstoned index equals search over the index rebuilt on the
-    remaining vectors.  A checkpointed replay adds nothing."""
-    from proyecto_gasto_publico_etl_per__spark.operators.similarity import (
-        ANN_TOMBSTONES_SCHEMA,
-        delete_from_ann_index,
-        ivf_centroids,
-        ivf_pq_build_index,
-        ivf_pq_search,
-        sampled_codebook,
-    )
-    from proyecto_gasto_publico_etl_per__spark.sources.tables import (
-        load_table,
-    )
-    from proyecto_gasto_publico_etl_per__spark.sources.zones import (
-        read_tombstones,
-    )
-    from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        zone_delete_ingest,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    queries = emb.filter(F.col("vec_id") < 3)
-    cents = ivf_centroids(emb, "vec_id", "embedding", 8)
-    cb = sampled_codebook(emb, "vec_id", "embedding", 16, 8)
-    kw = dict(
-        k=5, n_centroids=8, nprobe=4, m=16, n_codes=8, rerank=8,
-        codebook=cb, centroids=cents,
-    )
-
-    def persist_index(corpus, base):
-        assigned, codes = ivf_pq_build_index(
-            corpus, n_centroids=8, m=16, n_codes=8,
-            codebook=cb, centroids=cents,
-        )
-        assigned.write.parquet(f"{base}/index_assigned")
-        codes.write.parquet(f"{base}/index_codes")
-
-    def serve(base, corpus=emb):
-        idx = (
-            spark.read.parquet(f"{base}/index_assigned"),
-            spark.read.parquet(f"{base}/index_codes"),
-        )
-        return {
-            tuple(r)
-            for r in ivf_pq_search(
-                corpus, queries, index=idx,
-                tombstones=read_tombstones(
-                    spark, [base], ANN_TOMBSTONES_SCHEMA
-                ),
-                **kw,
-            ).collect()
-        }
-
-    streamed_base = str(tmp_path / "idx_stream")
-    batch_base = str(tmp_path / "idx_batch")
-    persist_index(emb, streamed_base)
-    persist_index(emb, batch_base)
-
-    # two delete-request micro-batches; 10**9 is never indexed
-    dsrc = tmp_path / "dels"
-    dsrc.mkdir()
-    spark.createDataFrame([(21,)], "vec_id LONG").coalesce(1).write.parquet(
-        str(dsrc / "d0")
-    )
-    spark.createDataFrame(
-        [(35,), (10**9,)], "vec_id LONG"
-    ).coalesce(1).write.parquet(str(dsrc / "d1"))
-    def delete(spark, ids):
-        return delete_from_ann_index(spark, streamed_base, ids)
-
-    q = zone_delete_ingest(
-        spark.readStream.schema("vec_id LONG")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(dsrc / "*")),
-        str(tmp_path / "ckpt"),
-        delete,
-    )
-    q.awaitTermination(180)
-
-    delete_from_ann_index(spark, batch_base, [21, 35, 10**9])
-    got = serve(streamed_base)
-    assert got == serve(batch_base)
-    assert not any(row[1] in (21, 35) for row in got)
-
-    # rebuild-on-remaining twin
-    remaining = emb.filter(~F.col("vec_id").isin(21, 35))
-    rebuilt_base = str(tmp_path / "idx_rebuilt")
-    persist_index(remaining, rebuilt_base)
-    assert got == serve(rebuilt_base, corpus=remaining)
-
-    # checkpointed replay: idempotent, nothing changes
-    q2 = zone_delete_ingest(
-        spark.readStream.schema("vec_id LONG")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(dsrc / "*")),
-        str(tmp_path / "ckpt"),
-        delete,
-    )
-    q2.awaitTermination(180)
-    assert serve(streamed_base) == got
-
-
-def _mins(m: float) -> datetime:
-    return datetime(2024, 1, 1, 8, 0, 0) + timedelta(minutes=m)
-
-
-def test_dedup_ingest_two_layers(spark, tmp_path):
-    """dedup_ingest: an arriving corpus drop collapses in-stream
-    duplicates (same content, different ids, different micro-batches)
-    AND drops anything already in the static corpus — novel docs pass."""
-    from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        dedup_ingest,
-    )
-
-    doc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("ingest_ts", T.TimestampType()),
-        ]
-    )
-    existing = spark.createDataFrame(
-        [(1, "already in the corpus")], "doc_id LONG, text STRING"
-    )
-    src = tmp_path / "drops"
-    batches = [
-        [
-            (100, "brand new document", _mins(0)),
-            (101, "already in the corpus", _mins(1)),  # dup of history
-        ],
-        [
-            (102, "brand  new   document", _mins(2)),  # in-stream dup
-            #      (whitespace-normalized to batch-0's text)
-            (103, "another novel one", _mins(3)),
-        ],
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, doc_schema).coalesce(1).write.parquet(
-            str(src / f"b{i}")
-        )
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    name = f"ingest_{abs(hash(str(src))) % 10**8}"
-    q = (
-        dedup_ingest(stream, existing)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    kept = {
-        r.doc_id for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    assert 100 in kept and 103 in kept  # novel docs pass
-    assert 101 not in kept  # duplicate of the static corpus
-    assert 102 not in kept  # in-stream duplicate within the watermark

@@ -400,56 +400,8 @@ def test_decode_image_dispatches_tiff_and_bmp():
     ):
         d = multimodal.decode_image(payload)
         assert d["pixels"] == src
-    # resize path dispatches too (nearest-neighbor identity at same size)
-    png = multimodal.resize_image_real(
-        tiff_encode(src, 6, 6, 3), 6, 6
-    )
-    assert multimodal.decode_image(png)["pixels"] == src
-
-
-# --- area-average resize (round 11, replaces nearest-neighbor) -----------------
-
-
-def test_box_resize_downscale_is_exact_block_average():
-    # 4x4 quadrants -> 2x2: each target pixel is an exact quadrant mean
-    q = np.zeros((4, 4, 3), np.uint8)
-    q[:2, :2] = (200, 0, 0)
-    q[:2, 2:] = (0, 200, 0)
-    q[2:, :2] = (0, 0, 200)
-    q[2:, 2:] = (100, 100, 100)
-    from test_tiff_bmp import bmp_encode as _enc  # self-import for clarity
-
-    payload = _enc(q.tobytes(), 4, 4, 3)
-    out = multimodal.decode_image(
-        multimodal.resize_image_real(payload, 2, 2)
-    )
-    got = np.frombuffer(out["pixels"], np.uint8).reshape(2, 2, 3)
-    assert (got[0, 0] == (200, 0, 0)).all()
-    assert (got[1, 1] == (100, 100, 100)).all()
-    # fractional-box case: 3x1 row [0, 90, 255] -> 2x1 averages
-    row = np.array([[[0], [90], [255]]], np.uint8)
-    png = multimodal._png_encode(3, 1, 1, row.tobytes())
-    out2 = multimodal.decode_image(multimodal.resize_image_real(png, 2, 1))
-    # target boxes: [0,1.5) -> (1·0 + 0.5·90)/1.5 = 30;
-    #               [1.5,3) -> (0.5·90 + 1·255)/1.5 = 200
-    assert list(out2["pixels"]) == [30, 200]
-
-
-def test_box_resize_preserves_mean_and_flat_images():
-    rng = np.random.default_rng(12)
-    src = rng.integers(0, 256, (9, 14, 3), dtype=np.uint8)
-    png = multimodal._png_encode(14, 9, 3, src.tobytes())
-    out = multimodal.decode_image(multimodal.resize_image_real(png, 5, 4))
-    got = np.frombuffer(out["pixels"], np.uint8).reshape(4, 5, 3)
-    # global mean preserved up to uint8 rounding of each output pixel
-    assert abs(got.mean() - src.mean()) < 1.0
-    flat = np.full((7, 7, 1), 77, np.uint8)
-    pf = multimodal._png_encode(7, 7, 1, flat.tobytes())
-    for dims in ((3, 3), (7, 7), (13, 5)):
-        o = multimodal.decode_image(
-            multimodal.resize_image_real(pf, *dims)
-        )
-        assert set(o["pixels"]) == {77}, dims  # flat stays exactly flat
+    # and the decoder the dispatch routes to, called directly
+    assert tiff.tiff_decode(tiff_encode(src, 6, 6, 3))["pixels"] == src
 
 
 def test_bmp_rle8_implausible_dimensions_raise_before_allocating():

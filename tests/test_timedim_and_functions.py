@@ -2,10 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from proyecto_gasto_publico_etl_per__spark.functions.cleaning import (
-    clean_text,
     label_or_placeholder,
     region_map_label,
 )
@@ -60,85 +57,3 @@ def test_hex_hash32_matches_duckdb(spark):
             "SELECT CAST(('0x' || substr(md5(?),1,8)) AS BIGINT)", [s]
         ).fetchone()[0]
         assert duck == h, s
-
-
-def test_fold_accents_and_match_key(spark):
-    from proyecto_gasto_publico_etl_per__spark.functions.cleaning import (
-        fold_accents,
-        match_key,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, "EDUCACIÓN"),
-            (2, "educacion"),
-            (3, "  Año   Fiscal\t"),
-            (4, "GOBIERNO REGIONAL DEL DEPARTAMENTO DE APURÍMAC"),
-        ],
-        "id INT, label STRING",
-    )
-    out = {
-        r.id: (r.folded, r.key)
-        for r in df.select(
-            "id",
-            fold_accents("label").alias("folded"),
-            match_key("label").alias("key"),
-        ).collect()
-    }
-    assert out[1][0] == "EDUCACION"
-    assert out[1][1] == out[2][1] == "educacion"
-    assert out[3][1] == "ano fiscal"
-    assert out[4][1].endswith("apurimac")
-
-
-def test_reconcile_on_match_key(spark):
-    from proyecto_gasto_publico_etl_per__spark.functions.cleaning import (
-        reconcile_on_match_key,
-    )
-
-    a = spark.createDataFrame(
-        [(1, "EDUCACIÓN"), (2, "SALUD"), (3, "TRANSPORTE")],
-        "id INT, sector STRING",
-    )
-    b = spark.createDataFrame(
-        [("educacion", 100), ("Salud ", 200), ("AGRICULTURA", 300)],
-        "sector STRING, monto INT",
-    )
-    out = reconcile_on_match_key(a, b, "sector")
-    rows = {r.id: (r.sector, r.sector_right, r.monto) for r in out.collect()}
-    assert rows == {
-        1: ("EDUCACIÓN", "educacion", 100),
-        2: ("SALUD", "Salud ", 200),
-    }
-
-
-def test_reconcile_on_match_key_rejects_collisions(spark):
-    """Column collisions fail loudly instead of corrupting the join:
-    a pre-existing <label>_right would duplicate the name, and a
-    pre-existing key_col would be silently overwritten."""
-    import pytest
-
-    from proyecto_gasto_publico_etl_per__spark.functions.cleaning import (
-        reconcile_on_match_key,
-    )
-
-    a = spark.createDataFrame([(1, "SALUD")], "id INT, sector STRING")
-    b_dup = spark.createDataFrame(
-        [("salud", "x")], "sector STRING, sector_right STRING"
-    )
-    with pytest.raises(ValueError, match="sector_right"):
-        reconcile_on_match_key(a, b_dup, "sector")
-    a_left_dup = spark.createDataFrame(
-        [(1, "SALUD", "x")], "id INT, sector STRING, sector_right STRING"
-    )
-    with pytest.raises(ValueError, match="left frame"):
-        reconcile_on_match_key(a_left_dup, b_dup.drop("sector_right"), "sector")
-    a_mk = spark.createDataFrame(
-        [(1, "SALUD", "boom")], "id INT, sector STRING, __mk STRING"
-    )
-    b = spark.createDataFrame([("salud", 1)], "sector STRING, monto INT")
-    with pytest.raises(ValueError, match="__mk"):
-        reconcile_on_match_key(a_mk, b, "sector")
-    # a caller-chosen key_col sidesteps the collision
-    out = reconcile_on_match_key(a_mk, b, "sector", key_col="__mk2")
-    assert out.collect()[0].monto == 1

@@ -130,45 +130,6 @@ def test_postings_read_is_partition_pruned(spark, corpus):
     assert "In(tri" in pushed
 
 
-def test_streamed_epochs_equal_batch(spark, tmp_path):
-    """zone_epoch_ingest epochs of build_trigram_index served together
-    == one batch index — the substring lane's streamed==batch
-    identity."""
-    from proyecto_gasto_publico_etl_per__spark.streaming.incremental import (
-        zone_epoch_ingest,
-    )
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
-        "doc_id", "text"
-    ).limit(120)
-    src = tmp_path / "src"
-    src.mkdir()
-    parts = docs.randomSplit([1.0, 1.0, 1.0], seed=3)
-    for i, p in enumerate(parts):
-        p.coalesce(1).write.parquet(str(src / f"b{i}"))
-
-    zones = str(tmp_path / "zones")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q = zone_epoch_ingest(
-        stream, zones, str(tmp_path / "ckpt"), trigram.build_trigram_index
-    )
-    q.awaitTermination(180)
-
-    import glob
-
-    roots = sorted(glob.glob(f"{zones}/epoch=*"))
-    assert len(roots) >= 2
-    batch_docs = spark.read.parquet(*[str(src / f"b{i}") for i in range(3)])
-    whole = trigram.build_trigram_index(spark, batch_docs)
-    assert _served(spark, roots, "window sc", batch_docs) == _served(
-        spark, [whole], "window sc", batch_docs
-    )
-
-
 def test_cli_substring_lifecycle(spark, tmp_path, capsys):
     """substring-index-build → substring-search → append → search
     (== full rebuild) — the user-facing lifecycle."""
@@ -274,8 +235,8 @@ def test_cli_substring_delete(spark, tmp_path, capsys):
 
 def test_cli_substring_streamed_and_ambiguous_layouts(spark, tmp_path, capsys):
     """The substring commands resolve an index dir like the text and
-    aggregate commands do: a streamed index (epoch=N roots only, the
-    layout `zone_epoch_ingest` writes) deletes and serves, and a dir
+    aggregate commands do: a streamed index (epoch=N roots only) deletes
+    and serves, and a dir
     that is both a bare root and holds base/ is refused as ambiguous
     instead of serving only the bare zones."""
     from proyecto_gasto_publico_etl_per__spark import cli
