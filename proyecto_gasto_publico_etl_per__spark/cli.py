@@ -1235,19 +1235,19 @@ def main(argv: list[str] | None = None) -> None:
         scope = f"years {args.years}" if args.years else "full rebuild"
         print(f"aggregate refreshed ({scope}) → {args.agg_path}")
     else:
-        base = mef_pipeline.register_views(spark, args.warehouse)
+        source = mef_pipeline.register_views(spark, args.warehouse)
         runners = {
-            "q1": lambda: Q.q1_ytd_by_sector(base, args.anio, args.mes_corte),
-            "q2": lambda: Q.q2_top_ejecutoras(base, args.anio, args.top or 5),
+            "q1": lambda: Q.q1_ytd_by_sector(source, args.anio, args.mes_corte),
+            "q2": lambda: Q.q2_top_ejecutoras(source, args.anio, args.top or 5),
             "q3": lambda: Q.q3_share_of_total(
-                base, args.anio, args.mes_corte, args.sector
+                source, args.anio, args.mes_corte, args.sector
             ),
-            "q4": lambda: Q.q4_backlog(base, args.anio, args.mes_corte),
+            "q4": lambda: Q.q4_backlog(source, args.anio, args.mes_corte),
             "q5": lambda: Q.q5_quarterly_evolution(
-                base, args.anio, args.anio_fin or args.anio
+                source, args.anio, args.anio_fin or args.anio
             ),
-            "q6": lambda: Q.q6_rollup_year_sector(base),
-            "q7": lambda: Q.q7_topn_year(base, args.anio, args.top or 10),
+            "q6": lambda: Q.q6_rollup_year_sector(source),
+            "q7": lambda: Q.q7_topn_year(source, args.anio, args.top or 10),
         }
         runners[args.name]().show(50, truncate=False)
 

@@ -6,9 +6,12 @@ with EXTRACT(YEAR/MONTH/QUARTER) (sql/CreacionDeDataWareHouse.sql:18-24) —
 
 ``tiempo_id`` is deterministic arithmetic (anio*100+mes) rather than a
 SERIAL sequence: stable across runs and engines, order-free, and trivially
-reconstructible from any (year, month) pair, which lets the time-FK lookup
-join (JN1) be replaced by pure column arithmetic when desired — a join
-eliminated entirely at 100 TB scale.
+reconstructible from any (year, month) pair.  The load computes it from
+the row's period with no lookup join (JN1), and the serving planner
+(``views.plan_star``) derives ``fecha``/``mes``/``trimestre`` back from it
+(``views.CALENDAR_SQL``), so no serving plan joins this table.  The stored
+calendar is the reference's table: the load writes it and appends the
+years a batch brings beyond it, and the planner reads only its schema.
 """
 
 from __future__ import annotations

@@ -185,12 +185,10 @@ def read_warehouse(
     return df
 
 
-def _read_star(
-    spark: SparkSession, warehouse: str
-) -> tuple[DataFrame, DataFrame, dict[str, DataFrame]]:
+def _read_star(spark: SparkSession, warehouse: str) -> V.WarehouseStar:
     """(fact, dim_tiempo, dims by name) of a loaded warehouse."""
     wh = Path(warehouse)
-    return (
+    return V.WarehouseStar(
         read_warehouse(spark, wh / "fact_gasto_mensual", "fact_gasto_mensual"),
         read_warehouse(spark, wh / "dim_tiempo", "dim_tiempo"),
         {d.name: read_warehouse(spark, wh / d.name, d.name) for d in DIMENSIONS},
@@ -420,8 +418,10 @@ def _load_delta(
     hold yet.  Returns the batch's years.
 
     Every stored fact row thus has its calendar and dim rows, so the
-    serving joins drop none.  The reference instead drops a row whose
-    month its fixed 2010-2030 calendar lacks (cargar_postgres.py:365-372).
+    serving joins drop none; the serving planner (``views.plan_star``)
+    relies on this to join only the dims a query reads and no calendar.
+    The reference instead drops a row whose month its fixed 2010-2030
+    calendar lacks (cargar_postgres.py:365-372).
     """
     records = _star_records(normalized)
 
@@ -508,35 +508,35 @@ def materialize_agg_mensual(
     Pass the years the load touched: the same set its fact anti-join
     was scoped to.
     """
-    fact, time_dim, dims = _read_star(spark, warehouse)
+    source = _read_star(spark, warehouse)
     if years is not None:
         # lands on the partition column → file pruning at the scan
-        fact = fact.filter(F.col("anio").isin([int(y) for y in years]))
-    agg = V.vw_gasto_agregado_mensual_star(fact, time_dim, dims)
+        source = source._replace(
+            fact=source.fact.filter(F.col("anio").isin([int(y) for y in years]))
+        )
+    agg = V.vw_gasto_agregado_mensual_star(source)
     agg.write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("anio").parquet(str(agg_path))
 
 
-def register_views(spark: SparkSession, warehouse: str) -> DataFrame:
-    """Serve stage: register vw_gasto_mensual / agregado views (V:21-196).
+def register_views(spark: SparkSession, warehouse: str) -> V.WarehouseStar:
+    """Serve stage: register vw_gasto_mensual / agregado views (V:21-196)
+    and return the warehouse source the ``plans.queries`` builders take.
 
     The star is read under ``WAREHOUSE``, so registering runs no Spark job
-    and the served columns carry the catalog's business comments."""
-    fact, time_dim, dims = _read_star(spark, warehouse)
-    # serve the FACT's anio (the partition column) and the calendar's
-    # mes/trimestre: a year predicate on the view then lands on the
-    # partition column and prunes fact files; the dropped calendar anio
-    # is identical by construction (tiempo_id = anio*100 + mes)
-    base = V.star_denormalize(fact, time_dim.drop("anio"), dims)
-    base.createOrReplaceTempView("vw_gasto_mensual")
-    # the aggregate views use the agg-below-join rewrite (exact; see
-    # plans/views.py): fact pre-aggregates on the contributing FK ids, so
-    # the dim joins run on group-cardinality rows, not fact-cardinality
-    V.vw_gasto_agregado_mensual_star(fact, time_dim, dims).createOrReplaceTempView(
+    and the served columns carry the catalog's business comments.  Every
+    view comes from the serving planner (``views.plan_star``): the monthly
+    view is its all-columns case, and the aggregate views pre-aggregate
+    the fact on the FK ids of the dims they read before joining those
+    dims alone.  A query built on the returned source joins only the dims
+    it reads, not the whole view."""
+    source = _read_star(spark, warehouse)
+    V.vw_gasto_mensual(source).createOrReplaceTempView("vw_gasto_mensual")
+    V.vw_gasto_agregado_mensual_star(source).createOrReplaceTempView(
         "vw_gasto_agregado_mensual"
     )
-    V.vw_gasto_agregado_anual_star(fact, time_dim, dims).createOrReplaceTempView(
+    V.vw_gasto_agregado_anual_star(source).createOrReplaceTempView(
         "vw_gasto_agregado_anual"
     )
-    return base
+    return source

@@ -1,42 +1,131 @@
-"""The serving views as DataFrame builders.
+"""The serving views and the one serving planner.
 
 Reference: ``ETL Gasto publico Perú/sql/CreacionDeUsuariosyVistas.sql`` —
 ``vw_gasto_mensual`` (V:21-114, the 8-way denormalizing star join),
 ``vw_gasto_agregado_mensual`` (V:119-179) and ``vw_gasto_agregado_anual``
 (V:185-196).
 
-``star_denormalize`` is the V-base join: fact × 8 broadcast dims.  The
-aggregate views then group the denormalized frame by *computed* label
-columns — the reference groups directly by ``COALESCE(...)``/``CONCAT(...)``
-expressions (V:161-179); per SURVEY.md §7.4 we materialize those as named
-columns before ``groupBy`` so select-list and grouping expressions are
-identical by construction.
+``plan_star`` is the only code that attaches dims to a warehouse serving
+plan.  A loaded warehouse keeps a referential invariant: every stored
+fact FK has its dim row and every ``tiempo_id`` its calendar row
+(``mef_pipeline._load_delta``).  Every join of the reference's star is
+then a row-preserving lookup, so the planner joins only the broadcast
+dims holding a column its caller reads, and serves ``fecha``/``mes``/
+``trimestre`` by arithmetic on ``tiempo_id`` (= anio*100 + mes,
+operators/timedim.py): no calendar join, and no join kept only to filter
+rows.  Spark's catalog records no FK constraint, so Catalyst cannot drop
+those joins on its own.  ``vw_gasto_mensual`` is the planner's
+all-columns case.
+
+The aggregate views group by *computed* label columns — the reference
+groups directly by ``COALESCE(...)``/``CONCAT(...)`` expressions
+(V:161-179); per SURVEY.md §7.4 we materialize those as named columns
+before ``groupBy`` so select-list and grouping expressions are identical
+by construction.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Iterable, Mapping, Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import label_or_placeholder, region_map_label
 from ..functions.money import GRID, gmicros, gsum
-from ..schema import DIMENSIONS, METRICS
+from ..schema import DIMENSIONS, METRICS, Dim
 
 
-def star_denormalize(
-    fact: DataFrame,
-    time_dim: DataFrame,
-    dims: Mapping[str, DataFrame],
+class WarehouseStar(NamedTuple):
+    """A loaded warehouse's tables, read under the catalog: the fact, the
+    calendar (whose schema types and comments the derived calendar
+    columns carry; no plan joins it) and the 7 dims by name."""
+
+    fact: DataFrame
+    calendar: DataFrame
+    dims: Mapping[str, DataFrame]
+
+
+#: what a serving query reads: a loaded warehouse, or an already
+#: denormalized star frame (the testdata adapter,
+#: ``testdata_star.build_star``), which passes through unchanged.
+StarSource = WarehouseStar | DataFrame
+
+#: calendar column → its SQL over ``tiempo_id`` (= anio*100 + mes), in
+#: the calendar's column order.
+CALENDAR_SQL: dict[str, str] = {
+    "fecha": "make_date(tiempo_id div 100, tiempo_id % 100, 1)",
+    "mes": "tiempo_id % 100",
+    "trimestre": "(tiempo_id % 100 - 1) div 3 + 1",
+}
+
+#: ``vw_gasto_mensual``'s columns in served order — the order the
+#: reference-shaped chain of USING joins (fact ⋈ calendar ⋈ 7 dims)
+#: served: the FK ids (last dim first), ``tiempo_id``, the metrics and
+#: the fact's ``anio``, the calendar columns, then each dim's natural
+#: keys and attributes.
+VIEW_COLUMNS: tuple[str, ...] = (
+    *(d.id_col for d in reversed(DIMENSIONS)),
+    "tiempo_id",
+    *METRICS,
+    "anio",
+    *CALENDAR_SQL,
+    *(c for d in DIMENSIONS for c in d.columns),
+)
+
+
+def _dims_read(columns: set[str]) -> list[Dim]:
+    """The dims holding at least one of ``columns``."""
+    return [d for d in DIMENSIONS if columns & set(d.columns)]
+
+
+def plan_star(
+    star: StarSource,
+    columns: Iterable[str],
+    rows: DataFrame | None = None,
 ) -> DataFrame:
-    """V-base (JN4): fact inner-joined to dim_tiempo + all dimensions on
-    surrogate ids.  Every dim is broadcast — the fact never shuffles for
-    this join."""
-    out = fact.join(F.broadcast(time_dim), "tiempo_id")
-    for dim in DIMENSIONS:
-        out = out.join(F.broadcast(dims[dim.name]), dim.id_col)
+    """The frame a serving plan reads ``columns`` from.
+
+    A DataFrame ``star`` passes through unchanged.  For a warehouse,
+    ``rows`` (the fact, or a pre-aggregate of it keyed on ``tiempo_id``
+    and dim FK ids) gets the calendar columns among ``columns`` derived
+    from ``tiempo_id`` with the calendar's types and comments, and one
+    broadcast inner join per dim holding one of ``columns``, on that
+    dim's id and those columns only.  The load's invariant makes each
+    join drop no row, so the result serves the same rows as the full
+    star join.
+    """
+    if isinstance(star, DataFrame):
+        return star
+    wanted = set(columns)
+    out = star.fact if rows is None else rows
+    derived = [c for c in CALENDAR_SQL if c in wanted]
+    if derived:
+        calendar = star.calendar.schema
+        out = out.select(
+            "*",
+            *[
+                F.expr(CALENDAR_SQL[c])
+                .cast(calendar[c].dataType)
+                .alias(c, metadata=calendar[c].metadata)
+                for c in derived
+            ],
+        )
+    for d in _dims_read(wanted):
+        cols = [c for c in d.columns if c in wanted]
+        out = out.join(
+            F.broadcast(star.dims[d.name].select(d.id_col, *cols)), d.id_col
+        )
     return out
+
+
+def vw_gasto_mensual(star: WarehouseStar) -> DataFrame:
+    """V-base (JN4, V:21-114): the fact with every calendar and dim
+    column, in ``VIEW_COLUMNS`` order.  The fact's own ``anio`` (its
+    partition column) is served, so a year predicate on the view prunes
+    fact files."""
+    return plan_star(star, VIEW_COLUMNS).select(*VIEW_COLUMNS)
 
 
 #: (column, placeholder) — the five labels the view wraps in
@@ -128,9 +217,10 @@ def vw_gasto_agregado_anual(base: DataFrame) -> DataFrame:
 #
 # The reference views (V:119-196) join the full star THEN group.  Because
 # every dimension is unique on its surrogate id (the dim builders assign
-# ids over distinct natural keys), the inner dim joins are row-preserving
-# lookups, so aggregating the fact FIRST on the surviving FK subset and
-# joining the (broadcast) dims onto group-cardinality rows is an EXACT
+# ids over distinct natural keys) and holds every id the fact stores (the
+# load's invariant), the inner dim joins are row-preserving lookups, so
+# aggregating the fact FIRST on the FK ids of the dims the view reads and
+# joining those (broadcast) dims onto group-cardinality rows is an EXACT
 # rewrite: the join input shrinks from fact-cardinality to
 # group-cardinality, and the map-side partial aggregate hashes narrow int
 # ids instead of 13 label strings.  Exactness of the two-stage sum: the
@@ -191,73 +281,39 @@ def finalize_agg_anual(preagg: DataFrame) -> DataFrame:
 
 
 def _star_preagg(
-    fact: DataFrame,
-    time_dim: DataFrame,
-    dims: Mapping[str, DataFrame],
-    needed_attrs: set[str],
-    time_cols: Sequence[str],
+    star: WarehouseStar,
+    columns: set[str],
     metric_cols: Sequence[str],
 ) -> DataFrame:
-    """Pre-aggregate fact metric micros below the dim joins (warehouse path).
+    """Pre-aggregate the fact's metric micros below the dim joins, then
+    attach ``columns`` with ``plan_star``.
 
-    Non-contributing dims get a broadcast LEFT SEMI join (reproducing the
-    inner join's row set without widening rows); contributing dims join
-    AFTER the pre-aggregate, on group-cardinality rows — an unmatched id
-    then drops the whole group, exactly as the pre-join inner would have
-    dropped its rows.
+    The fact groups on ``anio``, on ``tiempo_id`` when a calendar column
+    is read, and on the FK id of each dim holding a read column, so the
+    dims join group-cardinality rows.  No other dim and no calendar is
+    joined: the load's invariant means they would drop no row.
     """
-    contributing = [d for d in DIMENSIONS if set(d.attrs) & needed_attrs]
-    rest = [d for d in DIMENSIONS if not (set(d.attrs) & needed_attrs)]
-    out = fact
-    for d in rest:
-        out = out.join(
-            F.broadcast(dims[d.name].select(d.id_col)), d.id_col, "left_semi"
-        )
-    if not time_cols:
-        # anio is served from the fact itself; the time join only gates rows
-        out = out.join(
-            F.broadcast(time_dim.select("tiempo_id")), "tiempo_id", "left_semi"
-        )
-    keys = ["anio"] + (["tiempo_id"] if time_cols else [])
-    keys += [d.id_col for d in contributing]
-    pre = out.groupBy(*keys).agg(*micros_sums(metric_cols))
-    if time_cols:
-        pre = pre.join(
-            F.broadcast(time_dim.select("tiempo_id", *time_cols)), "tiempo_id"
-        )
-    for d in contributing:
-        attrs = [a for a in d.attrs if a in needed_attrs]
-        pre = pre.join(
-            F.broadcast(dims[d.name].select(d.id_col, *attrs)), d.id_col
-        )
-    return pre
+    keys = ["anio"]
+    if columns & CALENDAR_SQL.keys():
+        keys.append("tiempo_id")
+    keys += [d.id_col for d in _dims_read(columns)]
+    pre = star.fact.groupBy(*keys).agg(*micros_sums(metric_cols))
+    return plan_star(star, columns, rows=pre)
 
 
-def vw_gasto_agregado_mensual_star(
-    fact: DataFrame,
-    time_dim: DataFrame,
-    dims: Mapping[str, DataFrame],
-) -> DataFrame:
+def vw_gasto_agregado_mensual_star(star: WarehouseStar) -> DataFrame:
     """AGG8 via agg-below-join: exact rewrite of
-    ``vw_gasto_agregado_mensual(star_denormalize(fact, time_dim, dims))``."""
-    needed = set(AGG_GROUP_COLS[3:])
-    pre = _star_preagg(
-        fact, time_dim, dims, needed,
-        time_cols=("mes", "trimestre"), metric_cols=METRICS,
-    )
+    ``vw_gasto_agregado_mensual(vw_gasto_mensual(star))``."""
+    pre = _star_preagg(star, set(AGG_GROUP_COLS[1:]), METRICS)
     return finalize_agg_mensual(pre)
 
 
-def vw_gasto_agregado_anual_star(
-    fact: DataFrame,
-    time_dim: DataFrame,
-    dims: Mapping[str, DataFrame],
-) -> DataFrame:
+def vw_gasto_agregado_anual_star(star: WarehouseStar) -> DataFrame:
     """AGG9 via agg-below-join: exact rewrite of
-    ``vw_gasto_agregado_anual(star_denormalize(fact, time_dim, dims))``."""
-    needed = {"sector_nombre", "pliego_nombre"}
+    ``vw_gasto_agregado_anual(vw_gasto_mensual(star))``."""
     pre = _star_preagg(
-        fact, time_dim, dims, needed,
-        time_cols=(), metric_cols=[m for m, _ in ANNUAL_METRIC_ALIASES],
+        star,
+        {"sector_nombre", "pliego_nombre"},
+        [m for m, _ in ANNUAL_METRIC_ALIASES],
     )
     return finalize_agg_anual(pre)

@@ -236,6 +236,101 @@ def test_column_comments_stored_and_served(spark, warehouse):
         assert served[col].metadata.get("comment") == comment, col
 
 
+#: ``vw_gasto_mensual``'s served columns and types, in order: the FK ids
+#: (last dim first), ``tiempo_id``, the metrics and the fact's ``anio``,
+#: the calendar columns, then each dim's keys and attributes.
+VIEW_SCHEMA = [
+    ("clasif_gasto_id", "bigint"),
+    ("financiera_id", "bigint"),
+    ("meta_id", "bigint"),
+    ("funcional_id", "bigint"),
+    ("programatica_id", "bigint"),
+    ("ejecutora_id", "bigint"),
+    ("nivel_gobierno_id", "bigint"),
+    ("tiempo_id", "bigint"),
+    ("monto_pia", "decimal(28,4)"),
+    ("monto_pim", "decimal(28,4)"),
+    ("monto_certificado", "decimal(28,4)"),
+    ("monto_comprometido_anual", "decimal(28,4)"),
+    ("monto_comprometido", "decimal(28,4)"),
+    ("monto_devengado", "decimal(28,4)"),
+    ("monto_girado", "decimal(28,4)"),
+    ("anio", "int"),
+    ("fecha", "date"),
+    ("mes", "int"),
+    ("trimestre", "int"),
+    ("nivel_gobierno_codigo", "string"),
+    ("nivel_gobierno_nombre", "string"),
+    ("sec_ejec", "string"),
+    ("ejecutora_codigo", "string"),
+    ("ejecutora_nombre", "string"),
+    ("sector", "string"),
+    ("sector_nombre", "string"),
+    ("pliego", "string"),
+    ("pliego_nombre", "string"),
+    ("dep_ejecutora_codigo", "string"),
+    ("dep_ejecutora_nombre", "string"),
+    ("prov_ejecutora_codigo", "string"),
+    ("prov_ejecutora_nombre", "string"),
+    ("dist_ejecutora_codigo", "string"),
+    ("dist_ejecutora_nombre", "string"),
+    ("programa_ppto", "string"),
+    ("tipo_act_proy", "string"),
+    ("producto_proyecto", "string"),
+    ("actividad_accion_obra", "string"),
+    ("sec_func", "string"),
+    ("programa_ppto_nombre", "string"),
+    ("producto_proyecto_nombre", "string"),
+    ("actividad_accion_obra_nombre", "string"),
+    ("tipo_act_proy_nombre", "string"),
+    ("funcion", "string"),
+    ("division_funcional", "string"),
+    ("grupo_funcional", "string"),
+    ("funcion_nombre", "string"),
+    ("division_funcional_nombre", "string"),
+    ("grupo_funcional_nombre", "string"),
+    ("meta", "string"),
+    ("finalidad", "string"),
+    ("dep_meta_codigo", "string"),
+    ("finalidad_nombre", "string"),
+    ("meta_nombre", "string"),
+    ("dep_meta_nombre", "string"),
+    ("fuente_financiamiento", "string"),
+    ("rubro", "string"),
+    ("tipo_recurso", "string"),
+    ("categoria_gasto", "string"),
+    ("fuente_financiamiento_nombre", "string"),
+    ("rubro_nombre", "string"),
+    ("tipo_recurso_nombre", "string"),
+    ("categoria_gasto_nombre", "string"),
+    ("tipo_transaccion", "int"),
+    ("generica", "string"),
+    ("subgenerica", "string"),
+    ("subgenerica_det", "string"),
+    ("especifica", "string"),
+    ("especifica_det", "string"),
+    ("generica_nombre", "string"),
+    ("subgenerica_nombre", "string"),
+    ("subgenerica_det_nombre", "string"),
+    ("especifica_nombre", "string"),
+    ("especifica_det_nombre", "string"),
+]
+
+
+def test_monthly_view_schema_is_pinned(spark, warehouse):
+    """``vw_gasto_mensual`` serves these names, in this order, with these
+    types, each nullable and carrying its catalog comment (none on the
+    surrogate ids)."""
+    _, wh = warehouse
+    mef_pipeline.register_views(spark, str(wh))
+    served = spark.table("vw_gasto_mensual").schema
+    assert [(f.name, f.dataType.simpleString()) for f in served] == VIEW_SCHEMA
+    assert all(f.nullable for f in served)
+    assert {f.name: f.metadata.get("comment") for f in served} == {
+        name: COLUMN_COMMENTS.get(name) for name, _ in VIEW_SCHEMA
+    }
+
+
 def test_register_views_starts_no_spark_job(spark, warehouse):
     _, wh = warehouse
     jobs = _jobs_of(

@@ -28,29 +28,33 @@ HEADER = [
 ]
 
 
-def _write_csv(path: Path, rows: list[list[str]]) -> None:
+def _write_csv(
+    path: Path, rows: list[list[str]], header: list[str] = HEADER
+) -> None:
     with open(path, "w", newline="") as fh:
         w = csv.writer(fh)
-        w.writerow(HEADER)
+        w.writerow(header)
         w.writerows(rows)
+
+
+#: the ``raw_csv`` fixture's rows: a duplicate grain, a junk year and an
+#: out-of-range month among them
+RAW_ROWS = [
+    ["2024", "1", "E", "GOBIERNO NACIONAL", "001", "E1",
+     " Ejecutora   Uno ", "01", "SALUD", "100.5", "110", "90"],
+    ["2024", "1", "E", "GOBIERNO NACIONAL", "001", "E1",
+     "Ejecutora Uno", "01", "SALUD", "50", "55", "45.25"],  # same grain
+    ["2024", "2", "R", "GOBIERNO REGIONAL", "002", "E2",
+     "Ejecutora Dos", "02", "EDUCACION", "200", "220", "180"],
+    ["bad", "1", "E", "x", "003", "E3", "x", "03", "x", "1", "1", "1"],
+    ["2024", "13", "E", "x", "004", "E4", "x", "04", "x", "1", "1", "1"],
+]
 
 
 @pytest.fixture()
 def raw_csv(tmp_path):
     p = tmp_path / "2024-Gasto-Mensual.csv"
-    _write_csv(
-        p,
-        [
-            ["2024", "1", "E", "GOBIERNO NACIONAL", "001", "E1",
-             " Ejecutora   Uno ", "01", "SALUD", "100.5", "110", "90"],
-            ["2024", "1", "E", "GOBIERNO NACIONAL", "001", "E1",
-             "Ejecutora Uno", "01", "SALUD", "50", "55", "45.25"],  # same grain
-            ["2024", "2", "R", "GOBIERNO REGIONAL", "002", "E2",
-             "Ejecutora Dos", "02", "EDUCACION", "200", "220", "180"],
-            ["bad", "1", "E", "x", "003", "E3", "x", "03", "x", "1", "1", "1"],
-            ["2024", "13", "E", "x", "004", "E4", "x", "04", "x", "1", "1", "1"],
-        ],
-    )
+    _write_csv(p, RAW_ROWS)
     return str(p)
 
 
@@ -80,7 +84,8 @@ def test_full_pipeline(spark, tmp_path, raw_csv):
     total = fact2.agg(F.sum("monto_pia").alias("t")).collect()[0].t
     assert float(total) == 350.5
 
-    base = mef_pipeline.register_views(spark, wh)
+    source = mef_pipeline.register_views(spark, wh)
+    base = spark.table("vw_gasto_mensual")
     # the denormalized view carries dim attributes + calendar columns
     assert {"anio", "mes", "trimestre", "sector_nombre",
             "ejecutora_nombre"} <= set(base.columns)
@@ -88,7 +93,7 @@ def test_full_pipeline(spark, tmp_path, raw_csv):
     names = {r.ejecutora_nombre for r in base.select("ejecutora_nombre").collect()}
     assert "Ejecutora Uno" in names
 
-    q1 = Q.q1_ytd_by_sector(base, 2024, 6).collect()
+    q1 = Q.q1_ytd_by_sector(source, 2024, 6).collect()
     by_sector = {r.sector_nombre: r.devengado_ytd for r in q1}
     assert by_sector == {"EDUCACION": 180.0, "SALUD": 135.25}
 
@@ -634,3 +639,263 @@ def test_months_beyond_the_calendar_are_served(spark, tmp_path, raw_csv):
     mef_pipeline.load(spark, nd, wh)
     assert _data_files(f"{wh}/dim_tiempo") == before
     assert _orphan_fact_rows(spark, wh) == 0
+
+
+# --- serving over the warehouse ---------------------------------------------
+
+#: a wider extract: its clasificador keys and comprometido give one
+#: específica a positive backlog, so Q4 serves rows
+Q4_HEADER = [
+    *HEADER, "GENERICA", "ESPECIFICA", "ESPECIFICA_NOMBRE", "MONTO_COMPROMETIDO",
+]
+
+
+@pytest.fixture(scope="module")
+def served_warehouse(spark, tmp_path_factory):
+    """A warehouse of the ``raw_csv`` rows, months of 2031 and 2009 (beyond
+    the generated calendar) and a month in which one específica has
+    committed more than it accrued."""
+    root = tmp_path_factory.mktemp("served")
+    wh = str(root / "warehouse")
+    months = {
+        "2024-Gasto-Mensual": (HEADER, RAW_ROWS),
+        "2031-and-2009-Gasto-Mensual": (HEADER, [
+            ["2031", "7", "E", "GOBIERNO NACIONAL", "001", "E1",
+             "Ejecutora Uno", "01", "SALUD", "7", "8", "9"],
+            ["2009", "12", "R", "GOBIERNO REGIONAL", "002", "E2",
+             "Ejecutora Dos", "02", "EDUCACION", "4", "5", "6"],
+        ]),
+        "2024-03-Gasto-Mensual": (Q4_HEADER, [
+            ["2024", "3", "E", "GOBIERNO NACIONAL", "001", "E1",
+             "Ejecutora Uno", "01", "SALUD", "10", "20", "5.5",
+             "2", "1", "ESP UNO", "30.25"],
+            ["2024", "3", "R", "GOBIERNO REGIONAL", "003", "E3",
+             "Ejecutora Tres", "01", "SALUD", "1", "2", "3",
+             "2", "1", "ESP UNO", "4"],
+            ["2024", "4", "R", "GOBIERNO REGIONAL", "002", "E2",
+             "Ejecutora Dos", "02", "EDUCACION", "10", "60", "50",
+             "2", "2", "ESP DOS", "40"],
+        ]),
+    }
+    for name, (header, rows) in months.items():
+        raw = root / f"{name}.csv"
+        _write_csv(raw, rows, header)
+        nd = str(root / f"normalized_{name}")
+        mef_pipeline.transform(spark, str(raw), nd)
+        mef_pipeline.load(spark, nd, wh)
+    return wh
+
+
+def _serving_ops(spark, source) -> dict:
+    """The paper's seven star-serving operations over a registered
+    warehouse: Q1-Q5 for 2024 up to June, and both aggregate views."""
+    return {
+        "q1": lambda: Q.q1_ytd_by_sector(source, 2024, 6),
+        "q2": lambda: Q.q2_top_ejecutoras(source, 2024),
+        "q3": lambda: Q.q3_share_of_total(source, 2024, 6, "SALUD"),
+        "q4": lambda: Q.q4_backlog(source, 2024, 6),
+        "q5": lambda: Q.q5_quarterly_evolution(source, 2009, 2031),
+        "vw_gasto_agregado_mensual": lambda: spark.table(
+            "vw_gasto_agregado_mensual"
+        ),
+        "vw_gasto_agregado_anual": lambda: spark.table(
+            "vw_gasto_agregado_anual"
+        ),
+    }
+
+
+#: Spark jobs of one star-serving operation (build, plan, run, fetch as
+#: Arrow) or of the aggregate refresh on the small fixture: a broadcast
+#: per dim read plus the aggregate's stages.  Q1-Q5 run 3-5, the monthly
+#: view and the materialize 6, so a calendar join added back to those
+#: two fails; over the full star (fact ⋈ calendar ⋈ 7 dims) each ran
+#: 10-12.
+SERVING_JOB_BUDGET = 6
+
+
+def test_serving_job_budget(spark, tmp_path, served_warehouse):
+    """Each serving operation and the refresh's materialize join only the
+    dims they read and no calendar: a change that joins them back fails
+    here."""
+    wh = served_warehouse
+    source = mef_pipeline.register_views(spark, wh)
+    jobs = {
+        name: _jobs_of(spark, f"mef-serve-{name}", lambda b=build: b().toArrow())
+        for name, build in _serving_ops(spark, source).items()
+    }
+    jobs["materialize"] = _jobs_of(
+        spark,
+        "mef-serve-materialize",
+        lambda: mef_pipeline.materialize_agg_mensual(
+            spark, wh, str(tmp_path / "agg"), years=[2024]
+        ),
+    )
+    assert max(jobs.values()) <= SERVING_JOB_BUDGET, jobs
+
+
+def _reference_star(wh: str):
+    """DuckDB over the stored parquet with the reference's star
+    (V:21-114): the fact inner-joined to ``dim_tiempo`` and all 7 dims,
+    serving the calendar's anio/mes/trimestre."""
+    import duckdb
+
+    con = duckdb.connect()
+    for table in ("dim_tiempo", *(d.name for d in DIMENSIONS)):
+        con.execute(
+            f"CREATE VIEW {table} AS "
+            f"SELECT * FROM read_parquet('{wh}/{table}/*.parquet')"
+        )
+    con.execute(
+        "CREATE VIEW fact_gasto_mensual AS SELECT * FROM read_parquet("
+        f"'{wh}/fact_gasto_mensual/*/*.parquet', hive_partitioning = false)"
+    )
+    joins = " ".join(f"JOIN {d.name} USING ({d.id_col})" for d in DIMENSIONS)
+    con.execute(
+        "CREATE VIEW vw_gasto_mensual AS SELECT * FROM fact_gasto_mensual "
+        f"JOIN dim_tiempo USING (tiempo_id) {joins}"
+    )
+    return con
+
+
+#: the reference SQL of the serving operations (Q:3-101, README:244-265,
+#: V:119-196) with ``_serving_ops``' parameters, over ``_reference_star``
+REFERENCE_SQL = {
+    "q1": """
+        SELECT sector_nombre,
+               CAST(SUM(monto_devengado) AS DOUBLE) AS devengado_ytd
+        FROM vw_gasto_mensual
+        WHERE anio = 2024 AND mes BETWEEN 1 AND 6
+        GROUP BY sector_nombre""",
+    "q2": """
+        SELECT ejecutora_nombre,
+               CAST(SUM(monto_devengado) AS DOUBLE) AS devengado_total
+        FROM vw_gasto_mensual
+        WHERE anio = 2024
+        GROUP BY ejecutora_nombre
+        ORDER BY devengado_total DESC, ejecutora_nombre
+        LIMIT 5""",
+    "q3": """
+        WITH ytd AS (
+            SELECT ejecutora_nombre, SUM(monto_devengado) AS dev
+            FROM vw_gasto_mensual
+            WHERE anio = 2024 AND mes BETWEEN 1 AND 6
+              AND sector_nombre = 'SALUD'
+            GROUP BY ejecutora_nombre
+        )
+        SELECT ejecutora_nombre,
+               CAST(dev AS DOUBLE) AS devengado_ytd,
+               CASE WHEN SUM(dev) OVER () > 0
+                    THEN CAST(dev AS DOUBLE) / CAST(SUM(dev) OVER () AS DOUBLE)
+                    ELSE 0 END AS participacion
+        FROM ytd""",
+    "q4": """
+        SELECT especifica_nombre,
+               CAST(SUM(monto_comprometido) AS DOUBLE) AS comprometido,
+               CAST(SUM(monto_devengado) AS DOUBLE) AS devengado,
+               CAST(SUM(monto_comprometido) AS DOUBLE)
+                 - CAST(SUM(monto_devengado) AS DOUBLE) AS backlog
+        FROM vw_gasto_mensual
+        WHERE anio = 2024 AND mes BETWEEN 1 AND 6
+        GROUP BY especifica_nombre
+        HAVING CAST(SUM(monto_comprometido) AS DOUBLE)
+                 - CAST(SUM(monto_devengado) AS DOUBLE) > 0
+        ORDER BY backlog DESC, especifica_nombre
+        LIMIT 20""",
+    "q5": """
+        SELECT anio, trimestre, nivel_gobierno_nombre,
+               CAST(SUM(monto_devengado) AS DOUBLE) AS devengado
+        FROM vw_gasto_mensual
+        WHERE anio BETWEEN 2009 AND 2031
+        GROUP BY 1, 2, 3""",
+    "q6": """
+        SELECT anio, sector_nombre,
+               CAST(SUM(monto_devengado) AS DOUBLE) AS ejecutado_total
+        FROM vw_gasto_mensual
+        GROUP BY 1, 2""",
+    "q7": """
+        SELECT sector_nombre, ejecutora_nombre,
+               CAST(SUM(monto_devengado) AS DOUBLE) AS devengado_total
+        FROM vw_gasto_mensual
+        WHERE anio = 2024
+        GROUP BY 1, 2
+        ORDER BY devengado_total DESC, ejecutora_nombre, sector_nombre
+        LIMIT 10""",
+    "vw_gasto_agregado_mensual": """
+        WITH labeled AS (
+            SELECT anio, mes, trimestre, ejecutora_nombre,
+                   COALESCE(NULLIF(TRIM(sector_nombre), ''), 'SIN SECTOR')
+                       AS sector_nombre,
+                   COALESCE(NULLIF(TRIM(pliego_nombre), ''), 'SIN PLIEGO')
+                       AS pliego_nombre,
+                   COALESCE(NULLIF(TRIM(dep_ejecutora_nombre), ''),
+                            'SIN DEPARTAMENTO') AS dep_ejecutora_nombre,
+                   COALESCE(NULLIF(TRIM(prov_ejecutora_nombre), ''),
+                            'SIN PROVINCIA') AS prov_ejecutora_nombre,
+                   COALESCE(NULLIF(TRIM(dist_ejecutora_nombre), ''),
+                            'SIN DISTRITO') AS dist_ejecutora_nombre,
+                   fuente_financiamiento_nombre, categoria_gasto_nombre,
+                   generica_nombre, especifica_nombre,
+                   monto_pia, monto_pim, monto_certificado,
+                   monto_comprometido_anual, monto_comprometido,
+                   monto_devengado, monto_girado
+            FROM vw_gasto_mensual
+        )
+        SELECT anio, mes, trimestre, ejecutora_nombre, sector_nombre,
+               pliego_nombre, dep_ejecutora_nombre, prov_ejecutora_nombre,
+               dist_ejecutora_nombre,
+               'Departamento de ' || dep_ejecutora_nombre || ', Perú'
+                   AS region_mapa,
+               fuente_financiamiento_nombre, categoria_gasto_nombre,
+               generica_nombre, especifica_nombre,
+               CAST(SUM(COALESCE(monto_pia, 0)) AS DOUBLE) AS pia,
+               CAST(SUM(COALESCE(monto_pim, 0)) AS DOUBLE) AS pim,
+               CAST(SUM(COALESCE(monto_certificado, 0)) AS DOUBLE)
+                   AS certificado,
+               CAST(SUM(COALESCE(monto_comprometido_anual, 0)) AS DOUBLE)
+                   AS comprometido_anual,
+               CAST(SUM(COALESCE(monto_comprometido, 0)) AS DOUBLE)
+                   AS comprometido,
+               CAST(SUM(COALESCE(monto_devengado, 0)) AS DOUBLE) AS devengado,
+               CAST(SUM(COALESCE(monto_girado, 0)) AS DOUBLE) AS girado
+        FROM labeled
+        GROUP BY 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14""",
+    "vw_gasto_agregado_anual": """
+        SELECT anio, sector_nombre, pliego_nombre,
+               CAST(SUM(COALESCE(monto_pim, 0)) AS DOUBLE) AS pim_total,
+               CAST(SUM(COALESCE(monto_devengado, 0)) AS DOUBLE)
+                   AS devengado_total,
+               CAST(SUM(COALESCE(monto_girado, 0)) AS DOUBLE) AS girado_total
+        FROM vw_gasto_mensual
+        GROUP BY 1, 2, 3""",
+}
+
+
+def test_serving_equals_the_reference_star_sql(spark, served_warehouse):
+    """Q1-Q7 built on ``register_views``' source, and the registered
+    aggregate views, equal the reference SQL over the full star join in
+    DuckDB: rows, columns, Arrow types and value hash
+    (``tools/check_correctness``' comparison)."""
+    from perfbench.check import compare
+
+    wh = served_warehouse
+    source = mef_pipeline.register_views(spark, wh)
+    builders = {
+        **_serving_ops(spark, source),
+        "q6": lambda: Q.q6_rollup_year_sector(source),
+        "q7": lambda: Q.q7_topn_year(source, 2024),
+    }
+    con = _reference_star(wh)
+    try:
+        want = {
+            name: con.execute(sql).arrow() for name, sql in REFERENCE_SQL.items()
+        }
+    finally:
+        con.close()
+    assert want["q4"].num_rows == 1
+    assert set(want["q5"].column("anio").to_pylist()) == {2009, 2024, 2031}
+    failures = [
+        reason
+        for name, build in builders.items()
+        if (reason := compare(name, build().toArrow(), want[name]))
+    ]
+    assert not failures, failures

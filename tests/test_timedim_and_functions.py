@@ -9,6 +9,7 @@ from proyecto_gasto_publico_etl_per__spark.functions.cleaning import (
 from proyecto_gasto_publico_etl_per__spark.functions.hashing import hex_hash32
 from proyecto_gasto_publico_etl_per__spark.functions.money import dsum
 from proyecto_gasto_publico_etl_per__spark.operators.timedim import build_time_dim
+from proyecto_gasto_publico_etl_per__spark.plans import views as V
 
 
 def test_time_dim_shape(spark):
@@ -20,6 +21,23 @@ def test_time_dim_shape(spark):
     assert (last.anio, last.mes, last.trimestre) == (2030, 12, 4)
     assert first.tiempo_id == 201001 and last.tiempo_id == 203012
     assert td.select("tiempo_id").distinct().count() == 252
+
+
+def test_planner_calendar_arithmetic_matches_the_calendar(spark):
+    """The serving planner derives ``fecha``/``mes``/``trimestre`` from
+    ``tiempo_id`` alone; for every month of 2009-2031 (years beyond the
+    default 2010-2030 calendar included) they equal the generated
+    calendar row for row, with its types."""
+    calendar = build_time_dim(spark, "2009-01-01", "2031-12-01")
+    source = V.WarehouseStar(
+        fact=calendar.select("tiempo_id", "anio"), calendar=calendar, dims={}
+    )
+    planned = V.plan_star(source, V.CALENDAR_SQL).select(*calendar.columns)
+    assert planned.schema.simpleString() == calendar.schema.simpleString()
+    got = planned.orderBy("tiempo_id").collect()
+    want = calendar.orderBy("tiempo_id").collect()
+    assert len(want) == 23 * 12
+    assert got == want
 
 
 def test_label_or_placeholder(spark):
