@@ -1,8 +1,8 @@
-"""Windows BMP decode — pure stdlib (round 11, in-container-verifiable
-codec rule: BMP is pure structure + an algorithmic RLE; no spec
-tables).  Covered: BITMAPINFOHEADER (and the larger V4/V5 headers,
-which extend it compatibly) with 8-bit palette, 24-bit BGR, and 32-bit
-BGRA pixels, uncompressed or RLE8, bottom-up and top-down row order,
+"""Windows BMP decode — pure stdlib (round 11).  BMP is pure structure
+plus an algorithmic RLE with no spec tables, which is what the
+kept-codec rule in ``codec_errors`` asks.  Covered: BITMAPINFOHEADER
+(and the larger V4/V5 headers, which extend it compatibly) with 8-bit
+palette, 24-bit BGR, and 32-bit BGRA pixels, uncompressed or RLE8, bottom-up and top-down row order,
 4-byte row padding.  1/4-bit, RLE4, and BITFIELDS payloads raise loud
 ``NotImplementedError`` guards toward Pillow.
 

@@ -6,17 +6,15 @@ feature extraction run as Arrow-batched pandas functions over
 because byte-level media decoding is genuinely inexpressible in Spark
 SQL.  The Spark-side plumbing (schemas, batch iteration, partition
 parallelism) is real and tested.  Image decoding is REAL where a codec
-path exists: Pillow when importable, with pure-stdlib/numpy fallbacks
-for full static PNG (all color types incl. palette+tRNS, depths 1-16,
-Adam7 interlace), baseline AND progressive JPEG (``operators/jpeg.py``:
-Huffman + multi-scan successive approximation + batch IDCT + chroma
-upsample) and the first frame of a GIF (``operators/gif.py``: LZW,
-interlace, transparency), so the real path runs even in codec-less
-containers; ``NotImplementedError`` only for formats none of those
-cover (e.g. arithmetic-coded JPEG without Pillow).  Audio and video
-rows carry no decoder: they keep the fake features.  The deterministic
-md5 fake remains the correctness-oracle path — DuckDB can reproduce it,
-real pixel math it can't.
+path exists: Pillow when importable, else the stdlib paths kept under
+the rule in ``operators/codec_errors.py`` — full static PNG here (all
+color types incl. palette+tRNS, depths 1-16, Adam7 interlace),
+baseline TIFF (``operators/tiff.py``), BMP (``operators/bmp.py``) and
+netpbm/TGA (``operators/simple_images.py``).  Any other format
+without Pillow (JPEG, GIF, WebP, ...) raises ``NotImplementedError``.  Audio and video rows carry no decoder: they
+keep the fake features.  The deterministic md5 fake remains the
+correctness-oracle path — DuckDB can reproduce it, real pixel math it
+can't.
 
 Scale notes: media bytes never pass through the driver; each Arrow batch
 is decoded inside its executor task.  Keep batches small via
@@ -266,10 +264,10 @@ def decode_image(payload: bytes) -> dict[str, Any]:
     (``pixels`` = row-major interleaved 8-bit bytes).
 
     Pillow when importable (any format it knows); otherwise the
-    stdlib paths (full static PNG above, baseline + progressive JPEG in
-    ``operators/jpeg.py``).  Raises ``NotImplementedError`` only when
-    none covers the payload (e.g. arithmetic-coded JPEG without
-    Pillow)."""
+    stdlib paths: full static PNG above, baseline TIFF in
+    ``operators/tiff.py``, BMP in ``operators/bmp.py``, netpbm and TGA
+    in ``operators/simple_images.py``.  Raises ``NotImplementedError``
+    for every other format (JPEG, GIF, WebP, ...) without Pillow."""
     try:
         import io
 
@@ -277,14 +275,6 @@ def decode_image(payload: bytes) -> dict[str, Any]:
     except ImportError:
         if payload[:8] == _PNG_MAGIC:
             return _png_decode(payload)
-        if payload[:2] == b"\xff\xd8":
-            from .jpeg import jpeg_decode
-
-            return jpeg_decode(payload)
-        if payload[:6] in (b"GIF87a", b"GIF89a"):
-            from .gif import gif_decode
-
-            return gif_decode(payload)
         if payload[:4] in (b"II*\x00", b"MM\x00*"):
             from .tiff import tiff_decode
 
@@ -302,9 +292,8 @@ def decode_image(payload: bytes) -> dict[str, Any]:
 
             return tga_decode(payload)
         raise NotImplementedError(
-            "image decoding beyond PNG, JPEG (baseline/progressive/"
-            "lossless), GIF, baseline TIFF, BMP, netpbm, and TGA "
-            "requires Pillow, which is not importable in this "
+            "image decoding beyond PNG, baseline TIFF, BMP, netpbm and "
+            "TGA requires Pillow, which is not importable in this "
             "environment"
         ) from None
     img = Image.open(io.BytesIO(payload))

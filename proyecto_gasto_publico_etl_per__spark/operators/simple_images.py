@@ -1,8 +1,8 @@
 """Netpbm (PGM/PPM/PBM) and TGA decode — pure stdlib (round 11).
 
 Both formats are pure structure (ASCII or fixed headers + raw/RLE
-samples — no entropy tables), so they pass the codec lane's
-in-container-verifiability rule.  Netpbm is common in ML/vision
+samples — no entropy tables), so they pass the codec lane's kept-codec
+rule (``operators/codec_errors.py``).  Netpbm is common in ML/vision
 datasets (P2/P3 ASCII and P4/P5/P6 binary, 8- and 16-bit maxvals);
 TGA in legacy game/graphics corpora (types 2/3 uncompressed and 10/11
 RLE true-color/grayscale, bottom-up or top-down origins, 24/32-bit

@@ -1,9 +1,7 @@
-"""Baseline TIFF decode — pure stdlib, no Pillow.
+"""Baseline TIFF decode — pure stdlib, no Pillow (round 11).
 
-Round 11 continues the in-container-verifiable codec rule — a stdlib
-codec is kept only when its tables are in the stream or algorithmic.
-Baseline TIFF qualifies because everything is structural or
-algorithmic — the IFD tag walk is
+Baseline TIFF meets the kept-codec rule in ``codec_errors`` because
+everything is structural or algorithmic — the IFD tag walk is
 plain struct unpacking, and all three baseline compressions are
 table-free algorithms (none / PackBits RLE / TIFF-flavor LZW with its
 MSB-first packing and early code-width change).  Covered: striped

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import label_or_placeholder, region_map_label
-from ..functions.money import GRID, gmicros, gsum
+from ..functions.money import GRID, gmicros
 from ..schema import DIMENSIONS, METRICS, Dim
 
 
@@ -175,44 +175,6 @@ AGG_METRIC_ALIASES: tuple[tuple[str, str], ...] = tuple(
 )
 
 
-def vw_gasto_agregado_mensual(base: DataFrame) -> DataFrame:
-    """V-aggm (AGG8): monthly rollup grouped by time + ejecutora + cleaned
-    location/sector labels + financiera/clasificador names, with NULL-safe
-    SUMs (``SUM(COALESCE(m,0))``, V:149-155).
-
-    Column-for-column the reference view (V:119-179): 13 group columns +
-    ``region_mapa`` + the 7 un-prefixed metric totals.
-    """
-    labeled = base.withColumns(_agg_labels())
-    sums = [
-        gsum(F.coalesce(F.col(m), F.lit(0)), out)  # NULL-safe exact grid sum
-        for m, out in AGG_METRIC_ALIASES
-    ]
-    agg = labeled.groupBy(*AGG_GROUP_COLS).agg(*sums)
-    # region_mapa is a pure function of the (already-coalesced) departamento
-    # group key — attach it AFTER the aggregate so it never widens the
-    # shuffle key (same result set as grouping by it; V:161-179 groups by
-    # the expression because SQL must).  The inner coalesce is a no-op on
-    # the placeholder-substituted column but keeps the expression the
-    # reference's exact V:136-140 composition.
-    return agg.select(
-        *AGG_GROUP_COLS[:9],
-        region_map_label("dep_ejecutora_nombre").alias("region_mapa"),
-        *AGG_GROUP_COLS[9:],
-        *[out for _, out in AGG_METRIC_ALIASES],
-    )
-
-
-def vw_gasto_agregado_anual(base: DataFrame) -> DataFrame:
-    """V-agga (AGG9): ``SUM(pim), SUM(devengado), SUM(girado) GROUP BY anio,
-    sector_nombre, pliego_nombre`` (V:185-196)."""
-    return base.groupBy("anio", "sector_nombre", "pliego_nombre").agg(
-        gsum(F.coalesce(F.col("monto_pim"), F.lit(0)), "pim_total"),
-        gsum(F.coalesce(F.col("monto_devengado"), F.lit(0)), "devengado_total"),
-        gsum(F.coalesce(F.col("monto_girado"), F.lit(0)), "girado_total"),
-    )
-
-
 # --- agg-below-join rewrite ---------------------------------------------
 #
 # The reference views (V:119-196) join the full star THEN group.  Because
@@ -258,9 +220,13 @@ def _present(metric: str, alias: str):
 
 
 def finalize_agg_mensual(preagg: DataFrame) -> DataFrame:
-    """Final aggregate of a micros-pre-aggregated base: same output as
-    ``vw_gasto_agregado_mensual(base)`` when ``preagg`` carries the view's
-    group source columns plus ``__micros_<metric>`` partial sums."""
+    """V-aggm (AGG8, V:119-179) over a micros-pre-aggregated base:
+    labels the view's group source columns, sums the
+    ``__micros_<metric>`` partials per label group, and serves the
+    reference's select list (13 group columns + ``region_mapa`` + the 7
+    un-prefixed metric totals).  ``region_mapa`` is a pure function of
+    the coalesced departamento group key, so it is attached after the
+    aggregate and never widens the shuffle key."""
     labeled = preagg.withColumns(_agg_labels())
     agg = labeled.groupBy(*AGG_GROUP_COLS).agg(
         *[_present(m, out) for m, out in AGG_METRIC_ALIASES]
@@ -274,7 +240,8 @@ def finalize_agg_mensual(preagg: DataFrame) -> DataFrame:
 
 
 def finalize_agg_anual(preagg: DataFrame) -> DataFrame:
-    """Final aggregate of a micros-pre-aggregated base for V-agga."""
+    """V-agga (AGG9, V:185-196) over a micros-pre-aggregated base:
+    pim, devengado and girado totals per anio, sector and pliego."""
     return preagg.groupBy("anio", "sector_nombre", "pliego_nombre").agg(
         *[_present(m, out) for m, out in ANNUAL_METRIC_ALIASES]
     )
@@ -302,15 +269,15 @@ def _star_preagg(
 
 
 def vw_gasto_agregado_mensual_star(star: WarehouseStar) -> DataFrame:
-    """AGG8 via agg-below-join: exact rewrite of
-    ``vw_gasto_agregado_mensual(vw_gasto_mensual(star))``."""
+    """AGG8 via agg-below-join: an exact rewrite of the reference view,
+    which groups ``vw_gasto_mensual(star)`` after the full star join."""
     pre = _star_preagg(star, set(AGG_GROUP_COLS[1:]), METRICS)
     return finalize_agg_mensual(pre)
 
 
 def vw_gasto_agregado_anual_star(star: WarehouseStar) -> DataFrame:
-    """AGG9 via agg-below-join: exact rewrite of
-    ``vw_gasto_agregado_anual(vw_gasto_mensual(star))``."""
+    """AGG9 via agg-below-join: an exact rewrite of the reference view,
+    which groups ``vw_gasto_mensual(star)`` after the full star join."""
     pre = _star_preagg(
         star,
         {"sector_nombre", "pliego_nombre"},

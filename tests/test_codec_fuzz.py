@@ -20,12 +20,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from proyecto_gasto_publico_etl_per__spark.operators import (  # noqa: E402
     bmp,
-    gif,
     multimodal,
     tiff,
-)
-from proyecto_gasto_publico_etl_per__spark.operators.jpeg import (  # noqa: E402
-    jpeg_decode,
 )
 from png_ref import png_encode  # noqa: E402
 
@@ -72,26 +68,6 @@ def test_fuzz_png():
     _assert_contract(
         multimodal._png_decode,
         _mutations(payload, np.random.default_rng(1)),
-    )
-
-
-def test_fuzz_jpeg_baseline_and_lossless():
-    from jpeg_ref import jpeg_encode
-    from test_jpeg_lossless import jpeg_lossless_encode
-
-    base = jpeg_encode(_pixels(ch=1), 12, 10, 1, quality=90)
-    ll = jpeg_lossless_encode(_pixels(ch=1, seed=2), 12, 10, 1, predictor=4)
-    rng = np.random.default_rng(2)
-    _assert_contract(jpeg_decode, _mutations(base, rng))
-    _assert_contract(jpeg_decode, _mutations(ll, rng))
-
-
-def test_fuzz_gif():
-    from test_gif import GCT, _rand_idx, gif_write  # the test-side writer
-
-    payload = gif_write([{"idx": _rand_idx(10, 12)}], 12, 10, GCT)
-    _assert_contract(
-        gif.gif_decode, _mutations(payload, np.random.default_rng(3))
     )
 
 

@@ -334,26 +334,29 @@ def test_multimodal_plumbing(spark):
 
 
 def test_decode_unsupported_format_raises():
-    # unknown magic → explicit NotImplementedError; malformed payloads
-    # of a KNOWN magic (truncated JPEG / truncated PNG) → loud parse
-    # error from the stdlib codec, never a silent fake
+    # a magic outside the kept stdlib codecs (PNG, TIFF, BMP, netpbm,
+    # TGA) → explicit NotImplementedError naming them; a malformed
+    # payload of a kept magic (truncated PNG, TIFF junk) → loud parse
+    # error, never a silent fake
     try:
         import PIL  # noqa: F401
 
         pytest.skip("Pillow present: all formats decode for real")
     except ImportError:
         pass
-    with pytest.raises(NotImplementedError):
-        # WebP stays guarded (VP8L's distance-map table is spec data —
-        # the same in-container-verifiability rule as MP3)
-        multimodal.decode_image(b"RIFF\x00\x00\x00\x00WEBPVP8L")
+    for payload in (
+        b"RIFF\x00\x00\x00\x00WEBPVP8L",
+        b"\xff\xd8\xff\xe0junk",
+        b"GIF89ajunkjunkjunk",
+    ):
+        with pytest.raises(
+            NotImplementedError, match="PNG, baseline TIFF, BMP, netpbm and"
+        ):
+            multimodal.decode_image(payload)
     with pytest.raises(ValueError):
-        # TIFF decodes for real since round 11: junk is CORRUPT now
+        multimodal.decode_image(b"\x89PNG\r\n\x1a\ntruncated")
+    with pytest.raises(ValueError):
         multimodal.decode_image(b"II*\x00tiff-ish junk")
-    with pytest.raises(ValueError):
-        multimodal.decode_image(b"\xff\xd8\xff\xe0junk")
-    with pytest.raises(ValueError):
-        multimodal.decode_image(b"GIF89ajunkjunkjunk")
     with pytest.raises(NotImplementedError):
         multimodal.decode_image(b"\x89PNG")
 

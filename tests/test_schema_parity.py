@@ -60,6 +60,12 @@ REFERENCE_MONTHLY_VIEW_COLS = [
 ]
 
 
+def _preagg(base, group_cols, metric_cols):
+    """The serving form's first stage over a test frame: NULL-safe long
+    micros partials per group, as ``views._star_preagg`` builds them."""
+    return base.groupBy(*group_cols).agg(*V.micros_sums(metric_cols))
+
+
 def test_cols_clave_matches_reference():
     """The engine accepts exactly the reference's raw header set — a real
     MEF extract (DEPARTAMENTO_EJECUTORA, EJECUTORA, DEPARTAMENTO_META …)
@@ -92,7 +98,9 @@ def test_monthly_view_columns_match_reference(spark):
             "decimal(18,4)"
         ),
     )
-    out = V.vw_gasto_agregado_mensual(base)
+    out = V.finalize_agg_mensual(
+        _preagg(base, V.AGG_GROUP_COLS, schema.METRICS)
+    )
     assert out.columns == REFERENCE_MONTHLY_VIEW_COLS
 
 
@@ -106,7 +114,13 @@ def test_annual_view_columns_match_reference(spark):
             "monto_girado decimal(18,4)"
         ),
     )
-    out = V.vw_gasto_agregado_anual(base)
+    out = V.finalize_agg_anual(
+        _preagg(
+            base,
+            ("anio", "sector_nombre", "pliego_nombre"),
+            [m for m, _ in V.ANNUAL_METRIC_ALIASES],
+        )
+    )
     assert out.columns == [
         "anio", "sector_nombre", "pliego_nombre",
         "pim_total", "devengado_total", "girado_total",
@@ -138,7 +152,9 @@ def test_placeholder_labels_split_no_groups(spark):
             "monto_girado double"
         ),
     )
-    out = V.vw_gasto_agregado_mensual(base).collect()
+    out = V.finalize_agg_mensual(
+        _preagg(base, V.AGG_GROUP_COLS, schema.METRICS)
+    ).collect()
     assert len(out) == 1
     row = out[0]
     assert row.sector_nombre == "SIN SECTOR"

@@ -1,6 +1,6 @@
 """Baseline TIFF and BMP decode tests (`operators/tiff.py`,
 `operators/bmp.py`, round 11): test-side writers with real LZW /
-PackBits / RLE8 compressors (the jpeg_ref pattern), exact roundtrips —
+PackBits / RLE8 compressors (the png_ref pattern), exact roundtrips —
 both formats are lossless, so byte equality, no tolerance."""
 
 from __future__ import annotations
