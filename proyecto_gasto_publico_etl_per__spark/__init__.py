@@ -10,9 +10,8 @@ every operator it implements (SURVEY.md §2) Spark-first:
                   (surrogate keys, anti-join upsert, FK resolution, grain
                   consolidation), plus large-scale extensions (dedup,
                   similarity search, text stats, multimodal plumbing
-                  whose stdlib image decode keeps PNG, TIFF, BMP,
-                  netpbm and TGA only; ``operators/codec_errors.py``
-                  states the rule)
+                  whose stdlib image decode keeps PNG, netpbm and TGA
+                  only; ``operators/codec_errors.py`` states the rule)
 - ``functions`` — reusable column expressions (text cleaning, labels,
                   exact-decimal money math, cross-engine stable hashing)
 - ``plans``     — the analytic views and parameterized queries (Q1-Q7,

@@ -37,13 +37,13 @@ def _layout(fn, *args):
 
 
 def _index_roots(index_dir: str, marker: str, what: str) -> list[str]:
-    """The zone roots of an index dir (`zones.index_roots`: base/,
-    delta=N/, epoch=N/, or a bare root holding ``marker``)."""
+    """The zone roots of an index dir (`zones.index_roots`: base/ and
+    delta=N/, or a bare root holding ``marker``)."""
     roots = _layout(zones.index_roots, index_dir, marker)
     if not roots:
         raise SystemExit(
-            f"{index_dir}: no {what} here (expected base/, delta=N/, "
-            f"epoch=N/, or a bare zone root with {marker})"
+            f"{index_dir}: no {what} here (expected base/ and delta=N/, "
+            f"or a bare zone root with {marker})"
         )
     return roots
 
@@ -504,9 +504,8 @@ def main(argv: list[str] | None = None) -> None:
 
     azs = sub.add_parser(
         "agg-zone-serve",
-        help="final aggregates over all zone roots (base + deltas + "
-             "streamed epochs): reads |groups|x|zones| partial rows, "
-             "never the base table",
+        help="final aggregates over all zone roots (base + deltas): "
+             "reads |groups|x|zones| partial rows, never the base table",
     )
     azs.add_argument("agg_dir")
     azs.add_argument("--out", default=None,
@@ -517,7 +516,7 @@ def main(argv: list[str] | None = None) -> None:
 
     azc = sub.add_parser(
         "agg-zone-compact",
-        help="fold base + delta + epoch zones into ONE root at out_dir "
+        help="fold base + delta zones into ONE root at out_dir "
              "(partial-level merge, no base-table re-read) — bounds "
              "serve-time fan-in after many appends",
     )

@@ -11,10 +11,13 @@ cargar_postgres.py:127-152).  Collision risk at dim cardinalities (≤ 10^6
 rows vs 2^64 space) is ~1e-7 — negligible, and detectable by a
 count-distinct audit.
 
-Cross-engine hashes: ``xxhash64`` is Spark-specific, so operators whose
-results must be reproducible outside Spark (MinHash signatures checked
-against a DuckDB oracle) use the first 8 hex digits of md5 as a uint32 —
-identical in any engine with ``md5()``.
+Cross-engine hashes: ``xxhash64`` is Spark-specific, so a query whose
+result must be reproducible outside Spark (MinHash signatures checked
+against a DuckDB oracle) uses the first 8 hex digits of md5 as a uint32,
+identical in any engine with ``md5()``.  Each such query writes the hash
+inline, with its own salt: ``conv(substring(md5(x), 1, 8), 16, 10)`` on
+the Spark side (in SQL or as the same ``F.conv`` Column), and
+``CAST(('0x' || substr(md5(x), 1, 8)) AS BIGINT)`` in the oracle.
 """
 
 from __future__ import annotations
@@ -40,12 +43,3 @@ def surrogate_key(*cols: Column | str) -> Column:
         parts.append(F.coalesce(F.trim(col.cast("string")), F.lit("")))
     return F.xxhash64(F.concat_ws(_SEP, *parts))
 
-
-def hex_hash32(col: Column | str, seed: int = 0) -> Column:
-    """Engine-portable 32-bit hash: uint32 from md5 hex prefix.
-
-    DuckDB equivalent: ``CAST(('0x' || substr(md5(seed || x), 1, 8)) AS BIGINT)``.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    salted = F.concat(F.lit(str(seed)), c.cast("string")) if seed else c.cast("string")
-    return F.conv(F.substring(F.md5(salted), 1, 8), 16, 10).cast("bigint")

@@ -8,7 +8,7 @@ per run; SURVEY.md §2.6).  That is fine at reference scale and fatal at
 aggregation every day.  This module is the engine's materialized-view
 maintenance lane, on the zone lifecycle the BM25/ANN/trigram lanes
 share (`sources.zones`: roots, the URI boundary, the compaction guard,
-the base/delta=N/epoch=N layout): each ingest batch writes its OWN
+the base/delta=N layout): each ingest batch writes its OWN
 small zone of per-group PARTIAL aggregates, serving merges the zones'
 partials (cost: |groups| × |zones| rows, independent of base-table
 size), and a periodic compaction folds zones into one.
@@ -82,7 +82,7 @@ _HASH_SPACE = 1 << 32
 def kmv_hash(col: Column | str) -> Column:
     """Portable uint32 hash for the KMV sketch: the first 8 hex digits
     of ``md5('k|' || value)`` as a BIGINT.  DuckDB twin (the oracle's
-    mirror, the `functions.hashing.hex_hash32` discipline)::
+    mirror, the md5-prefix hash of ``functions/hashing.py``)::
 
         CAST(('0x' || substr(md5('k|' || CAST(c AS VARCHAR)), 1, 8))
              AS BIGINT)
@@ -347,7 +347,7 @@ def serve_agg(spark: SparkSession, roots: Sequence[str]) -> DataFrame:
     finalizes.  At 100 TB this is the whole point — a dashboard query
     over a year of zones costs megabytes while the base table costs
     terabytes; correctness rides on zone disjointness, which the
-    producers (batch split builds, streaming epochs) guarantee."""
+    producers (the base build and each append's delta) guarantee."""
     partials, spec = read_partials(spark, roots)
     return _finalize(_merge_partials(partials, spec), spec)
 
@@ -355,12 +355,12 @@ def serve_agg(spark: SparkSession, roots: Sequence[str]) -> DataFrame:
 def compact_agg_zones(
     spark: SparkSession, roots: Sequence[str], out_root: str | None = None
 ) -> str:
-    """Fold many zone roots (ingest epochs, append deltas) into ONE —
+    """Fold many zone roots (a base and its append deltas) into ONE —
     a partial-level merge only, never a base-table re-read.  Serving
     the compacted root equals serving the inputs by the same
     associativity serving itself relies on (pytest-pinned); at scale
     this is the periodic job that keeps the per-query zone fan-in
-    bounded while ingest keeps appending epochs.  ``out_root`` is
+    bounded while ingest keeps appending deltas.  ``out_root`` is
     guarded by `zones.compact_root`."""
     if out_root is None:
         out_root = tempfile.mkdtemp(prefix="agg_zone_compacted_") + "/zone"

@@ -14,13 +14,12 @@ The kept-codec rule, stated once for the lane: a stdlib codec is kept
 only while it is both (1) verifiable in the container — its tables are
 in the stream or algorithmic, so a test-side writer can round-trip it
 with no spec data and no external decoder — and (2) worth its lines
-to this engine's scope.  PNG (``multimodal._png_decode``), baseline
-TIFF (``tiff``), BMP (``bmp``), netpbm and TGA (``simple_images``) are
-what remains.  JPEG and GIF passed (1) but were retired on (2): the MEF
-spending ETL reads no images and no declared query, CLI command or
-bench entry decoded them.  TIFF and BMP fail (2) the same way and are
-the next codecs to retire.  Every format outside the kept set raises
-``NotImplementedError`` without Pillow."""
+to this engine's scope.  PNG (``multimodal._png_decode``), netpbm and
+TGA (``simple_images``) are what remains.  JPEG, GIF, TIFF and BMP
+passed (1) but were retired on (2): the MEF spending ETL reads no
+images and no declared query, CLI command or bench entry decoded them.
+Every format outside the kept set raises ``NotImplementedError``
+without Pillow."""
 
 from __future__ import annotations
 

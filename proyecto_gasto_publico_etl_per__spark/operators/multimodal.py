@@ -8,10 +8,10 @@ SQL.  The Spark-side plumbing (schemas, batch iteration, partition
 parallelism) is real and tested.  Image decoding is REAL where a codec
 path exists: Pillow when importable, else the stdlib paths kept under
 the rule in ``operators/codec_errors.py`` — full static PNG here (all
-color types incl. palette+tRNS, depths 1-16, Adam7 interlace),
-baseline TIFF (``operators/tiff.py``), BMP (``operators/bmp.py``) and
+color types incl. palette+tRNS, depths 1-16, Adam7 interlace) and
 netpbm/TGA (``operators/simple_images.py``).  Any other format
-without Pillow (JPEG, GIF, WebP, ...) raises ``NotImplementedError``.  Audio and video rows carry no decoder: they
+without Pillow (JPEG, GIF, TIFF, BMP, WebP, ...) raises
+``NotImplementedError``.  Audio and video rows carry no decoder: they
 keep the fake features.  The deterministic md5 fake remains the
 correctness-oracle path — DuckDB can reproduce it, real pixel math it
 can't.
@@ -264,10 +264,11 @@ def decode_image(payload: bytes) -> dict[str, Any]:
     (``pixels`` = row-major interleaved 8-bit bytes).
 
     Pillow when importable (any format it knows); otherwise the
-    stdlib paths: full static PNG above, baseline TIFF in
-    ``operators/tiff.py``, BMP in ``operators/bmp.py``, netpbm and TGA
-    in ``operators/simple_images.py``.  Raises ``NotImplementedError``
-    for every other format (JPEG, GIF, WebP, ...) without Pillow."""
+    stdlib paths kept under the rule in ``operators/codec_errors.py``:
+    full static PNG above, netpbm and TGA in
+    ``operators/simple_images.py``.  Raises ``NotImplementedError`` for
+    every other format (JPEG, GIF, TIFF, BMP, WebP, ...) without
+    Pillow."""
     try:
         import io
 
@@ -275,14 +276,6 @@ def decode_image(payload: bytes) -> dict[str, Any]:
     except ImportError:
         if payload[:8] == _PNG_MAGIC:
             return _png_decode(payload)
-        if payload[:4] in (b"II*\x00", b"MM\x00*"):
-            from .tiff import tiff_decode
-
-            return tiff_decode(payload)
-        if payload[:2] == b"BM":
-            from .bmp import bmp_decode
-
-            return bmp_decode(payload)
         if payload[:1] == b"P" and payload[1:2] in b"123456":
             from .simple_images import pnm_decode
 
@@ -292,9 +285,8 @@ def decode_image(payload: bytes) -> dict[str, Any]:
 
             return tga_decode(payload)
         raise NotImplementedError(
-            "image decoding beyond PNG, baseline TIFF, BMP, netpbm and "
-            "TGA requires Pillow, which is not importable in this "
-            "environment"
+            "image decoding beyond PNG, netpbm and TGA requires Pillow, "
+            "which is not importable in this environment"
         ) from None
     img = Image.open(io.BytesIO(payload))
     if img.mode not in ("L", "LA", "RGB", "RGBA"):

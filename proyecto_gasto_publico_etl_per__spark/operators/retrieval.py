@@ -408,7 +408,7 @@ def bm25_serve(
 def compact_bm25_index(
     spark: SparkSession, roots: Sequence[str], out_root: str
 ) -> str:
-    """Fold many zone roots (append deltas, streaming epochs) into ONE
+    """Fold many zone roots (a base and its append deltas) into ONE
     — zone-level unions and re-sums only, never a re-tokenize:
     postings and dfreq re-sum per key across roots (a doc split across
     roots would double-count otherwise — inputs must be disjoint-doc
@@ -416,7 +416,7 @@ def compact_bm25_index(
     Serving over the compacted root equals serving over the inputs by
     the same associativity the producers rely on; at scale this is the
     periodic job that keeps the per-query root fan-in (and file count)
-    bounded while ingest keeps appending epochs.
+    bounded while ingest keeps appending deltas.
 
     Tombstones FOLD here: deleted docs' posting/doclen rows are
     anti-joined out and dfreq/stats recomputed from the folded zones,

@@ -1195,7 +1195,7 @@ def bm25_compacted_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     associativity triangle the lane rests on (inline == served ==
     append-merged == compacted).  At 100 TB compaction is what bounds
     per-query root fan-in and file count while ingest keeps appending
-    epoch zones."""
+    delta zones."""
     return retrieval.bm25_serve(
         spark, [_compacted_index_root(spark, sf_dir)], _BM25_TERMS
     )
@@ -4460,7 +4460,7 @@ def incr_agg_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle with `incr_agg_serving`, so compaction-preserves-results
     sits under the driver's hash gate the same way
     `bm25_compacted_serving` pins the text-index fold.  At scale this
-    bounds the serve-time fan-in: ingest appends epochs, compaction
+    bounds the serve-time fan-in: ingest appends deltas, compaction
     periodically folds them, queries read O(1) roots."""
     from ..operators import aggzone
 

@@ -1,13 +1,13 @@
-"""Data sources: CSV with encoding fallback, Parquet, testdata tables."""
+"""Data sources: CSV with encoding fallback and the declared testdata
+tables.  Parquet is read under a declared schema, never inferred:
+``load_table`` for the testdata tables, ``plans/mef_pipeline.read_warehouse``
+for the warehouse."""
 
 from .csv_source import read_monthly_csv
-from .parquet_source import read_parquet, write_parquet
 from .tables import TABLES, load_table
 
 __all__ = [
     "read_monthly_csv",
-    "read_parquet",
-    "write_parquet",
     "TABLES",
     "load_table",
 ]

@@ -26,7 +26,7 @@ forms a delete batch, and its compaction fold.
   with no data files, which schema inference cannot read.  Partition
   discovery runs per root, because roots live in unrelated directories.
 - **Build** (`build_root`).  A fresh tempdir, or an explicit root
-  rewritten in place (epoch replays, CLI base/delta roots).  A rebuilt
+  rewritten in place (CLI base/delta roots, a replayed build).  A rebuilt
   root drops any stale tombstones zone: deletes write it, not builds,
   and a survivor would anti-join the new corpus's matching ids.
 - **Delete** (`append_tombstones`, `read_tombstones`).  A delete
@@ -43,10 +43,10 @@ forms a delete batch, and its compaction fold.
   tombstones first would otherwise destroy the inputs' own.  The
   output carries no tombstones zone.
 - **Layout** (`index_roots`, `base_root`, `delta_root`).  An index
-  directory holds ``base/``, ``delta=N/`` (CLI appends) and
-  ``epoch=N/`` (streamed micro-batches) roots, or is itself a bare
-  root (a compacted output).  Both at once is ambiguous and refused:
-  serving either subset alone would drop the other's rows.
+  directory holds a ``base/`` root and ``delta=N/`` roots (CLI
+  appends), or is itself a bare root (a compacted output).  Both at
+  once is ambiguous and refused: serving either subset alone would
+  drop the other's rows.
 """
 
 from __future__ import annotations
@@ -238,8 +238,8 @@ def compact_root(out_root: str, roots: Sequence[str]) -> str:
     return out_root
 
 
-def _numbered(index_dir: str, prefix: str) -> list[int]:
-    """The N of each ``<index_dir>/<prefix>=N`` root, ascending."""
+def _numbered(index_dir: str) -> list[int]:
+    """The N of each ``<index_dir>/delta=N`` root, ascending."""
     try:
         names = os.listdir(index_dir)
     except FileNotFoundError:
@@ -247,17 +247,13 @@ def _numbered(index_dir: str, prefix: str) -> list[int]:
     return sorted(
         int(m.group(1))
         for name in names
-        if (m := re.fullmatch(rf"{prefix}=(\d+)", name))
+        if (m := re.fullmatch(r"delta=(\d+)", name))
     )
 
 
 def _stale(index_dir: str) -> list[str]:
-    """The delta=N and epoch=N roots under ``index_dir``."""
-    return [
-        f"{index_dir}/{prefix}={n}"
-        for prefix in ("delta", "epoch")
-        for n in _numbered(index_dir, prefix)
-    ]
+    """The delta=N roots under ``index_dir``, ascending."""
+    return [f"{index_dir}/delta={n}" for n in _numbered(index_dir)]
 
 
 def _is_bare(index_dir: str, marker: str) -> bool:
@@ -266,7 +262,7 @@ def _is_bare(index_dir: str, marker: str) -> bool:
 
 def index_roots(index_dir: str, marker: str) -> list[str]:
     """The zone roots of an index directory: ``base/``, then
-    ``delta=N/`` and ``epoch=N/`` in ascending N, or ``[index_dir]``
+    ``delta=N/`` in ascending N, or ``[index_dir]``
     when ``marker`` (the lane's always-written entry, e.g. postings)
     sits directly under it.  Empty when there is neither; a directory
     that is both raises."""
@@ -299,8 +295,8 @@ def _refuse_bare(index_dir: str, marker: str, what: str) -> None:
 
 def base_root(index_dir: str, marker: str) -> str:
     """Where a full build of the index at ``index_dir`` goes.  Refuses
-    a bare root and surviving delta/epoch roots, which a rebuilt base
-    would double-count."""
+    a bare root and surviving delta roots, which a rebuilt base would
+    double-count."""
     index_dir = as_local_path(index_dir)
     _refuse_bare(index_dir, marker, "building base/")
     stale = _stale(index_dir)
@@ -325,5 +321,5 @@ def delta_root(index_dir: str, marker: str) -> str:
             f"{index_dir}: no base/ zone — build the index first (an "
             "append follows the base's layout)"
         )
-    n = max(_numbered(index_dir, "delta"), default=-1) + 1
+    n = max(_numbered(index_dir), default=-1) + 1
     return f"{index_dir}/delta={n}"

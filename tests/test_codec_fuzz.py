@@ -19,9 +19,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from proyecto_gasto_publico_etl_per__spark.operators import (  # noqa: E402
-    bmp,
     multimodal,
-    tiff,
 )
 from png_ref import png_encode  # noqa: E402
 
@@ -69,27 +67,6 @@ def test_fuzz_png():
         multimodal._png_decode,
         _mutations(payload, np.random.default_rng(1)),
     )
-
-
-def test_fuzz_tiff():
-    from test_tiff_bmp import tiff_encode
-
-    rng = np.random.default_rng(4)
-    for comp in (1, 5, 32773):
-        payload = tiff_encode(
-            _pixels(seed=comp), 12, 10, 3, compression=comp,
-            rows_per_strip=4,
-        )
-        _assert_contract(tiff.tiff_decode, _mutations(payload, rng))
-
-
-def test_fuzz_bmp():
-    from test_tiff_bmp import bmp_encode
-
-    rng = np.random.default_rng(5)
-    for ch in (1, 3, 4):
-        payload = bmp_encode(_pixels(ch=ch, seed=ch), 12, 10, ch)
-        _assert_contract(bmp.bmp_decode, _mutations(payload, rng))
 
 
 def test_fuzz_pnm_and_tga():

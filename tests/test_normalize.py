@@ -92,25 +92,35 @@ def test_normalize_monthly_end_to_end(spark):
 
 
 def test_schema_evolution_merge_schema(spark, tmp_path):
-    """Files written before a column existed read as NULL under
-    mergeSchema — the reference's ALTER TABLE ADD COLUMN path
-    (CreacionDeDataWareHouse.sql:149-150) without a migration."""
-    from proyecto_gasto_publico_etl_per__spark.sources.parquet_source import (
-        read_parquet,
+    """A warehouse file written before a column existed reads it as NULL
+    under the declared schema: the reference's ALTER TABLE ADD COLUMN
+    path (CreacionDeDataWareHouse.sql:149-150 add ``finalidad_nombre``
+    and ``meta_nombre`` to ``dim_meta``) without a migration."""
+    from proyecto_gasto_publico_etl_per__spark.plans.mef_pipeline import (
+        read_warehouse,
     )
 
-    p = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], "id INT, x STRING").write.parquet(
-        f"{p}/part=old"
-    )
+    p = str(tmp_path / "dim_meta")
     spark.createDataFrame(
-        [(2, "b", 9.5)], "id INT, x STRING, meta_nombre DOUBLE"
-    ).write.parquet(f"{p}/part=new")
+        [(1, "0001", "F1", "D1", "dep 1")],
+        "meta_id BIGINT, meta STRING, finalidad STRING, "
+        "dep_meta_codigo STRING, dep_meta_nombre STRING",
+    ).write.parquet(p)
+    spark.createDataFrame(
+        [(2, "0002", "F2", "D2", "fin 2", "meta 2", "dep 2")],
+        "meta_id BIGINT, meta STRING, finalidad STRING, "
+        "dep_meta_codigo STRING, finalidad_nombre STRING, "
+        "meta_nombre STRING, dep_meta_nombre STRING",
+    ).write.mode("append").parquet(p)
 
-    df = read_parquet(spark, p, merge_schema=True)
-    rows = {r.id: r for r in df.collect()}
-    assert rows[1].meta_nombre is None  # old file: evolved column is NULL
-    assert rows[2].meta_nombre == 9.5
+    df = read_warehouse(spark, p, "dim_meta")
+    rows = {r.meta_id: r for r in df.collect()}
+    # old file: the late columns are NULL
+    assert rows[1].finalidad_nombre is None
+    assert rows[1].meta_nombre is None
+    assert rows[1].dep_meta_nombre == "dep 1"
+    assert rows[2].finalidad_nombre == "fin 2"
+    assert rows[2].meta_nombre == "meta 2"
 
 
 def test_malformed_csv_lines_counted_never_silently_dropped(

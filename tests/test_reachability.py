@@ -131,8 +131,8 @@ _IDENT = re.compile(r"[A-Za-z_]\w*\Z")
 
 def _names(nodes: list[ast.AST]) -> set[str]:
     """Every identifier the code names: a ``Name``, an attribute, or a
-    string that is a bare identifier (``getattr``, ``__all__``, lookup
-    tables keyed by function name)."""
+    string that is a bare identifier (``getattr``, lookup tables keyed
+    by function name)."""
     out: set[str] = set()
     for node in nodes:
         for x in ast.walk(node):
@@ -154,6 +154,14 @@ def _is_register(decorator: ast.expr) -> bool:
     )
 
 
+def _is_all(st: ast.stmt) -> bool:
+    """An assignment to the module's ``__all__``."""
+    targets = st.targets if isinstance(st, ast.Assign) else (
+        [st.target] if isinstance(st, (ast.AnnAssign, ast.AugAssign)) else []
+    )
+    return any(isinstance(t, ast.Name) and t.id == "__all__" for t in targets)
+
+
 def _unreached_defs(root_files: list[Path], root: Path) -> list[str]:
     """``module.name`` of each top-level package function or class that
     no reached code names.
@@ -163,7 +171,8 @@ def _unreached_defs(root_files: list[Path], root: Path) -> list[str]:
     import), decorator expressions, and the bodies of ``@register``
     queries.  A def named by reached code is reached, and the names in
     its body then count too, up to a fixpoint: a name used only inside
-    an unreached function does not keep anything alive.
+    an unreached function does not keep anything alive.  A module's
+    ``__all__`` reaches nothing: re-exporting a name is not calling it.
     """
     reached: set[str] = set()
     defs: dict[tuple[str, str], set[str]] = {}
@@ -174,6 +183,8 @@ def _unreached_defs(root_files: list[Path], root: Path) -> list[str]:
             continue
         tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
         for st in tree.body:
+            if _is_all(st):
+                continue
             if not isinstance(
                 st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ):
@@ -201,8 +212,8 @@ def _unreached_defs(root_files: list[Path], root: Path) -> list[str]:
 def test_function_walk_on_toy_package(tmp_path):
     """The function walk's own contract: a def named only inside an
     unreached def stays unreached (transitivity), an ``@register`` query
-    is a root whose helpers are reached, and attribute, string and
-    module-level references count."""
+    is a root whose helpers are reached, attribute, string and
+    module-level references count, and ``__all__`` does not."""
     pkg = tmp_path / PKG
     pkg.mkdir()
     (pkg / "__init__.py").write_text("")
@@ -222,6 +233,8 @@ def test_function_walk_on_toy_package(tmp_path):
     (pkg / "m.py").write_text(
         "def by_attr():\n    pass\n"
         "def by_string():\n    pass\n"
+        "__all__ = ['by_all']\n"
+        "def by_all():\n    pass\n"
         "class Unused:\n    def method(self):\n        return by_attr()\n"
     )
     entry = tmp_path / "main.py"
@@ -231,7 +244,7 @@ def test_function_walk_on_toy_package(tmp_path):
         "getattr(m, 'by_string')()\n"
     )
     assert _unreached_defs([entry], tmp_path) == [
-        "m.Unused", "q.dead", "q.only_dead",
+        "m.Unused", "m.by_all", "q.dead", "q.only_dead",
     ]
 
 

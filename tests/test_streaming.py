@@ -390,7 +390,7 @@ def test_sq8_encode_at_ingest(spark, tmp_path):
 
 
 def test_bm25_compaction_preserves_serving(spark, tmp_path):
-    """Folding epoch/delta roots into one compacted root (zone-level
+    """Folding base/delta roots into one compacted root (zone-level
     re-sums, no re-tokenize) must not change serving output."""
     from proyecto_gasto_publico_etl_per__spark.operators.retrieval import (
         bm25_serve,

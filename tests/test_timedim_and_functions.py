@@ -6,7 +6,6 @@ from proyecto_gasto_publico_etl_per__spark.functions.cleaning import (
     label_or_placeholder,
     region_map_label,
 )
-from proyecto_gasto_publico_etl_per__spark.functions.hashing import hex_hash32
 from proyecto_gasto_publico_etl_per__spark.functions.money import dsum
 from proyecto_gasto_publico_etl_per__spark.operators.timedim import build_time_dim
 from proyecto_gasto_publico_etl_per__spark.plans import views as V
@@ -62,16 +61,3 @@ def test_dsum_exact_decimal(spark):
     df = spark.createDataFrame([(0.1,), (0.2,), (0.3,)], ["m"])
     out = df.agg(dsum("m", "s")).collect()[0].s
     assert out == 0.6
-
-
-def test_hex_hash32_matches_duckdb(spark):
-    import duckdb
-
-    df = spark.createDataFrame([("abc",), ("hello world",)], ["s"])
-    got = {r.s: r.h for r in df.select("s", hex_hash32("s").alias("h")).collect()}
-    con = duckdb.connect()
-    for s, h in got.items():
-        duck = con.execute(
-            "SELECT CAST(('0x' || substr(md5(?),1,8)) AS BIGINT)", [s]
-        ).fetchone()[0]
-        assert duck == h, s

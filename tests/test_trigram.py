@@ -198,20 +198,20 @@ def test_delete_equals_rebuild_on_remaining(spark, corpus):
 
 
 def test_epoch_rebuild_clears_stale_tombstones(spark, tmp_path):
-    """An epoch-root rebuild must clear a surviving tombstones zone —
-    the previous index's deletions must not suppress the NEW corpus's
-    matching doc_ids (the r14 stale-zone rule)."""
+    """Rebuilding an explicit root must clear a surviving tombstones
+    zone — the previous index's deletions must not suppress the NEW
+    corpus's matching doc_ids (the r14 stale-zone rule)."""
     docs = spark.createDataFrame(
         [(1, "window scan a"), (2, "window scan b")],
         "doc_id LONG, text STRING",
     )
-    root = str(tmp_path / "epoch=0")
+    root = str(tmp_path / "idx")
     trigram.build_trigram_index(spark, docs, root=root)
     trigram.delete_from_trigram_index(
         spark, [root], spark.createDataFrame([(1,)], "doc_id LONG")
     )
     assert _served(spark, [root], "window sc", docs) == [2]
-    # replayed epoch: same root rebuilt — deletions must vanish
+    # replayed build: same root rebuilt — deletions must vanish
     trigram.build_trigram_index(spark, docs, root=root)
     assert _served(spark, [root], "window sc", docs) == [1, 2]
 
@@ -235,10 +235,10 @@ def test_cli_substring_delete(spark, tmp_path, capsys):
 
 def test_cli_substring_streamed_and_ambiguous_layouts(spark, tmp_path, capsys):
     """The substring commands resolve an index dir like the text and
-    aggregate commands do: a streamed index (epoch=N roots only) deletes
-    and serves, and a dir
-    that is both a bare root and holds base/ is refused as ambiguous
-    instead of serving only the bare zones."""
+    aggregate commands do: an index of base/ plus a delta=N/ root
+    deletes and serves across both, and a dir that is both a bare root
+    and holds base/ is refused as ambiguous instead of serving only the
+    bare zones."""
     from proyecto_gasto_publico_etl_per__spark import cli
 
     schema = "doc_id LONG, text STRING"
@@ -247,16 +247,16 @@ def test_cli_substring_streamed_and_ambiguous_layouts(spark, tmp_path, capsys):
     docs = spark.createDataFrame(rows, schema)
     docs.write.parquet(d)
 
-    streamed = tmp_path / "streamed"
+    layered = tmp_path / "layered"
     trigram.build_trigram_index(
-        spark, docs.where(F.col("doc_id") <= 2), root=f"{streamed}/epoch=0"
+        spark, docs.where(F.col("doc_id") <= 2), root=f"{layered}/base"
     )
     trigram.build_trigram_index(
-        spark, docs.where(F.col("doc_id") > 2), root=f"{streamed}/epoch=1"
+        spark, docs.where(F.col("doc_id") > 2), root=f"{layered}/delta=1"
     )
-    cli.main(["substring-index-delete", str(streamed), "1"])
+    cli.main(["substring-index-delete", str(layered), "1"])
     assert "tombstoned 1 documents" in capsys.readouterr().out
-    cli.main(["substring-search", str(streamed), d, "window sc"])
+    cli.main(["substring-search", str(layered), d, "window sc"])
     assert "[2]" in capsys.readouterr().out
 
     both = tmp_path / "both"

@@ -56,7 +56,7 @@ def test_compact_overlap_refused(
 @pytest.mark.parametrize("lane", ["bm25", "trigram"])
 def test_rebuild_clears_stale_tombstones(spark, tmp_path, lane):
     """Rebuilding into a root that carries tombstones (a replayed
-    epoch) drops them: the old index's deletions must not hide the
+    build) drops them: the old index's deletions must not hide the
     new corpus's rows."""
     lane = LANES[lane]
     root = lane.build(spark, str(tmp_path / "idx"))
@@ -128,11 +128,10 @@ def test_index_dir_layouts(tmp_path, lane):
         zones.delta_root(d, marker)
 
     assert zones.base_root(f"file:{d}", marker) == f"{d}/base"
-    for sub in ("base", "delta=10", "delta=2", "epoch=1", "epoch=0"):
+    for sub in ("base", "delta=10", "delta=2"):
         _touch(f"{d}/{sub}/{marker}")
     assert zones.index_roots(d, marker) == [
         f"{d}/base", f"{d}/delta=2", f"{d}/delta=10",
-        f"{d}/epoch=0", f"{d}/epoch=1",
     ]
     assert zones.delta_root(d, marker) == f"{d}/delta=11"
     with pytest.raises(ValueError, match="double-counts"):
