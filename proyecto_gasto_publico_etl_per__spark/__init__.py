@@ -9,9 +9,7 @@ every operator it implements (SURVEY.md §2) Spark-first:
 - ``operators`` — normalization, time dimension, star-schema build
                   (surrogate keys, anti-join upsert, FK resolution, grain
                   consolidation), plus large-scale extensions (dedup,
-                  similarity search, text stats, multimodal plumbing
-                  whose stdlib image decode keeps PNG, netpbm and TGA
-                  only; ``operators/codec_errors.py`` states the rule)
+                  similarity search, text stats)
 - ``functions`` — reusable column expressions (text cleaning, labels,
                   exact-decimal money math, cross-engine stable hashing)
 - ``plans``     — the analytic views and parameterized queries (Q1-Q7,
@@ -19,13 +17,11 @@ every operator it implements (SURVEY.md §2) Spark-first:
 - ``streaming`` — event-time window operators (batch or streaming frames)
 
 Everything is DataFrame API + Spark SQL; Catalyst/AQE does the physical
-planning.  One declared query runs Python per row: ``multimodal_extract``
-(Arrow-batched ``mapInPandas`` over binary payloads, ``operators/multimodal.py``;
-``tools/plan_audit.py`` allowlists it and gates every other query as
-UDF-free).  Outside the query registry pandas runs in one place: the
-parquet footer reader that builds the stats manifest
-(``sources/manifest.py``, ``mapInPandas`` over file paths, one row per
-file, run before the pruned scan is planned).
+planning.  No declared query runs Python per row: ``tools/plan_audit.py``
+fails on any Python exec node in a declared plan, with no allowlist.
+pandas runs in one place: the parquet footer reader that builds the
+stats manifest (``sources/manifest.py``, ``mapInPandas`` over file
+paths, one row per file, run before the pruned scan is planned).
 """
 
 __version__ = "0.1.0"

@@ -2082,7 +2082,6 @@ DRIVER_PRIORITY: list[str] = [
     "repetition_stats",
     "sequence_packing",
     "lang_sampling_weights",
-    "multimodal_extract",
     "stream_window_agg",
     "gopher_gates",
     "doc_curation_profile",

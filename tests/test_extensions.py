@@ -1,5 +1,5 @@
 """Tests for the training-data-pipeline extensions: dedup, similarity,
-text stats, multimodal plumbing."""
+text stats."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from proyecto_gasto_publico_etl_per__spark.operators import (
     dedup,
-    multimodal,
     similarity,
     textstats,
 )
@@ -309,218 +308,6 @@ def test_ivf_assignment_is_total_and_single(spark):
         for r in assigned.filter(F.col("vec_id").isin(cent_ids)).collect()
     }
     assert all(v == c for v, c in self_rows.items())
-
-
-def test_multimodal_plumbing(spark):
-    docs = spark.createDataFrame(
-        [(1, "hello", "en", "s", 5), (2, "world!", "en", "s", 6)],
-        "doc_id INT, text STRING, lang STRING, source STRING, n_chars INT",
-    )
-    assets = multimodal.documents_as_assets(docs)
-    assert [f.name for f in assets.schema.fields] == [
-        "asset_id",
-        "media_type",
-        "payload",
-        "meta",
-    ]
-    feats = {r.asset_id: r for r in multimodal.extract_features(assets).collect()}
-    import hashlib
-
-    assert feats[1].n_bytes == 5
-    assert feats[1].byte_md5 == hashlib.md5(b"hello").hexdigest()
-    assert feats[1].features == [
-        hashlib.md5(b"hello").digest()[i] / 255.0 for i in range(4)
-    ]
-
-
-def test_decode_unsupported_format_raises():
-    # a magic outside the kept stdlib codecs (PNG, netpbm, TGA) →
-    # explicit NotImplementedError naming them; a malformed payload of
-    # a kept magic (truncated PNG) → loud parse error, never a silent
-    # fake
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("Pillow present: all formats decode for real")
-    except ImportError:
-        pass
-    for payload in (
-        b"RIFF\x00\x00\x00\x00WEBPVP8L",
-        b"\xff\xd8\xff\xe0junk",
-        b"GIF89ajunkjunkjunk",
-        b"II*\x00tiff-ish junk",
-        b"BM\x00\x00bmp-ish junk",
-    ):
-        with pytest.raises(NotImplementedError, match="PNG, netpbm and TGA"):
-            multimodal.decode_image(payload)
-    with pytest.raises(ValueError):
-        multimodal.decode_image(b"\x89PNG\r\n\x1a\ntruncated")
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"\x89PNG")
-
-
-def _png_rgb8(pixels: list[list[tuple[int, int, int]]]) -> bytes:
-    """Minimal PNG writer (8-bit RGB, filter 0) for decode tests."""
-    import struct
-    import zlib
-
-    h, w = len(pixels), len(pixels[0])
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + typ
-            + data
-            + struct.pack(">I", zlib.crc32(typ + data))
-        )
-
-    raw = b"".join(
-        b"\x00" + b"".join(bytes(px) for px in row) for row in pixels
-    )
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _wav_pcm16(samples: list[int], rate: int = 8000) -> bytes:
-    import io
-    import struct
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(struct.pack(f"<{len(samples)}h", *samples))
-    return buf.getvalue()
-
-
-def test_decode_image_real_png():
-    # 1×1 red pixel — the verdict's canonical case
-    d = multimodal.decode_image(_png_rgb8([[(255, 0, 0)]]))
-    assert (d["width"], d["height"], d["channels"]) == (1, 1, 3)
-    assert d["pixels"] == b"\xff\x00\x00"
-    # 2×2 with all-distinct channel values round-trips exactly
-    px = [[(1, 2, 3), (4, 5, 6)], [(7, 8, 9), (10, 11, 12)]]
-    d2 = multimodal.decode_image(_png_rgb8(px))
-    assert d2["pixels"] == bytes(range(1, 13))
-    feats = multimodal.image_features(_png_rgb8([[(255, 0, 0)]]), dim=4)
-    assert feats == [1.0, 1.0, 3.0, pytest.approx(255 / 3 / 255.0)]
-
-
-def test_png_filters_roundtrip():
-    """Sub/Up/Average/Paeth unfilters reverse what a filtering encoder
-    writes: re-encode each scanline with every filter type and check the
-    decoder restores the original pixels."""
-    import struct
-    import zlib
-
-    px_rows = [
-        [(10, 200, 30), (12, 198, 33), (200, 1, 99)],
-        [(11, 199, 31), (13, 197, 34), (201, 2, 98)],
-        [(50, 60, 70), (80, 90, 100), (110, 120, 130)],
-    ]
-    flat_rows = [b"".join(bytes(p) for p in row) for row in px_rows]
-    stride, ch = 9, 3
-
-    def enc(line: bytes, prev: bytes, f: int) -> bytes:
-        out = bytearray()
-        for i in range(stride):
-            a = line[i - ch] if i >= ch else 0
-            b = prev[i]
-            c = prev[i - ch] if i >= ch else 0
-            if f == 1:
-                pred = a
-            elif f == 2:
-                pred = b
-            elif f == 3:
-                pred = (a + b) // 2
-            else:  # paeth
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            out.append((line[i] - pred) & 0xFF)
-        return bytes(out)
-
-    for f in (1, 2, 3, 4):
-        prev = bytes(stride)
-        raw = b""
-        for line in flat_rows:
-            raw += bytes([f]) + enc(line, prev, f)
-            prev = line
-
-        def chunk(typ: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data))
-                + typ
-                + data
-                + struct.pack(">I", zlib.crc32(typ + data))
-            )
-
-        png = (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 3, 8, 2, 0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(raw))
-            + chunk(b"IEND", b"")
-        )
-        assert multimodal._png_decode(png)["pixels"] == b"".join(flat_rows), (
-            f"filter {f}"
-        )
-
-
-def test_extract_features_real_decoder(spark):
-    """A real 1-px PNG through extract_features(decoder='real') — the
-    mapInPandas plumbing carrying actual decoded features; audio and text
-    rows keep the fake (md5) features in the same plan."""
-    png = _png_rgb8([[(255, 0, 0)]])
-    wav = _wav_pcm16([0, 16384, -16384, 0])
-    assets = spark.createDataFrame(
-        [
-            (1, "image", bytearray(png), None),
-            (2, "audio", bytearray(wav), None),
-            (3, "text", bytearray(b"hello"), None),
-        ],
-        multimodal.ASSET_SCHEMA,
-    )
-    feats = {
-        r.asset_id: r.features
-        for r in multimodal.extract_features(assets, decoder="real").collect()
-    }
-    assert feats[1] == multimodal.image_features(png, 4)
-    assert feats[2] == multimodal.fake_features(wav, 4)
-    assert feats[3] == multimodal.fake_features(b"hello", 4)
-
-
-def test_real_decoder_quarantines_bad_payloads(spark):
-    """Corpus-scale ingest contract: one corrupt/codec-less asset must
-    degrade PER ROW (NULL features), not abort the scan; strict=True
-    restores loud failure."""
-    png = _png_rgb8([[(255, 0, 0)]])
-    assets = spark.createDataFrame(
-        [
-            (1, "image", bytearray(png), None),
-            (2, "image", bytearray(b"\x89PNG\r\n\x1a\ntruncated"), None),
-            (3, "image", bytearray(b"\xff\xd8\xff\xe0jpeg-ish"), None),
-        ],
-        multimodal.ASSET_SCHEMA,
-    )
-    feats = {
-        r.asset_id: r.features
-        for r in multimodal.extract_features(assets, decoder="real").collect()
-    }
-    assert feats[1] == multimodal.image_features(png, 4)
-    assert feats[2] is None and feats[3] is None
-    # strict mode: the job fails loudly on the first bad asset
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        multimodal.extract_features(
-            assets, decoder="real", strict=True
-        ).collect()
 
 
 def test_cluster_duplicates_components(spark):

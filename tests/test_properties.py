@@ -356,37 +356,6 @@ def test_gsum_overflow_fails_loudly_never_wraps(spark):
         df.groupBy("g").agg(gsum("v", "t")).collect()
 
 
-@given(
-    st.integers(min_value=1, max_value=6),
-    st.integers(min_value=1, max_value=6),
-    st.sampled_from([1, 2, 3, 4]),
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_png_codec_roundtrip(width, height, channels, seed):
-    """Pure-Python codec property: encode(any 8-bit image) → decode
-    restores exact pixels, for every channel count the stdlib path
-    supports.  (Driver-side only — no Spark job per example.)"""
-    import random
-
-    from png_ref import png_encode
-
-    from proyecto_gasto_publico_etl_per__spark.operators import multimodal
-
-    rng = random.Random(seed)
-    pixels = bytes(
-        rng.randrange(256) for _ in range(width * height * channels)
-    )
-    png = png_encode(width, height, channels, pixels)
-    d = multimodal.decode_image(png)
-    assert (d["width"], d["height"], d["channels"]) == (
-        width,
-        height,
-        channels,
-    )
-    assert d["pixels"] == pixels
-
-
 @SETTINGS
 @given(
     vals=st.lists(

@@ -264,9 +264,9 @@ _MODULE_PATH = re.compile(
 
 
 def _scanned_files() -> list[Path]:
-    """The package, tools, perfbench, the bench and the optional
-    requirements: every file whose text may point a reader at a module."""
-    files = [ROOT / "bench.py", ROOT / "requirements-optional.txt"]
+    """The package, tools, perfbench and the bench: every file whose text
+    may point a reader at a module."""
+    files = [ROOT / "bench.py"]
     for top in (ROOT / PKG, ROOT / "tools", ROOT / "perfbench"):
         files += [
             p for p in sorted(top.rglob("*"))
@@ -424,9 +424,9 @@ def test_stale_dotted_gate_on_toy_tree(tmp_path):
 
 
 def test_named_module_paths_exist():
-    """A deleted module or function must leave no pointer behind in code,
-    tooling or requirements: every ``operators|sources|plans|streaming|
-    functions`` path they name has a file in the package, and every
+    """A deleted module or function must leave no pointer behind in code
+    or tooling: every ``operators|sources|plans|streaming|functions``
+    path they name has a file in the package, and every
     dotted ``module.name`` the Python files' prose names is bound by that
     module."""
     files = _scanned_files()

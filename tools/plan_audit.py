@@ -4,15 +4,17 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 For every query in the registry, prints any red-flag physical nodes:
 - CartesianProduct / BroadcastNestedLoopJoin — O(N·M) joins;
-- BatchEvalPython / ArrowEvalPython — Python UDFs in the plan
-  (the engine's parity surface is supposed to be UDF-free; only the
-  isolated multimodal path may legitimately show Arrow exec);
+- any Python exec node — a per-row or per-batch crossing into Python
+  (UDFs, pandas UDFs, mapInPandas/mapInArrow, grouped and cogrouped
+  applyIn*).  No declared query may run Python per row: every plan is
+  relational, so Catalyst sees through all of it;
 - SortMergeJoin on a side we expected broadcast is NOT flagged here
   (size-dependent, AQE decides) — this audit is about structural
   mistakes, not tuning.
 
-Exit code 1 if any unexpected flag fires (multimodal's Arrow nodes are
-allowlisted), so it can run as a gate.
+Exit code 1 if any flag fires outside the reviewed CARTESIAN_OK
+allowlist, so it can run as a gate.  Python exec nodes have no
+allowlist.
 """
 
 from __future__ import annotations
@@ -22,15 +24,26 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+#: matched as substrings of the executed plan, so a node name also
+#: catches its suffixed variants (BatchEvalPythonUDTF, ArrowEvalPythonUDTF,
+#: FlatMapGroupsInPandasWithState)
 RED_FLAGS = (
     "CartesianProduct",
     "BroadcastNestedLoopJoin",
-    "BatchEvalPython",
-    "ArrowEvalPython",
+    # Python exec nodes, as pyspark 4.1 names them
+    # (org.apache.spark.sql.execution.python.*Exec)
+    "BatchEvalPython",  # @udf
+    "ArrowEvalPython",  # scalar pandas_udf
+    "ArrowAggregatePython",  # grouped-aggregate pandas_udf
+    "ArrowWindowPython",  # pandas_udf over a window
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapGroupsInPandas",  # groupBy().applyInPandas
+    "FlatMapGroupsInArrow",  # groupBy().applyInArrow
+    "FlatMapCoGroupsInPandas",  # cogroup().applyInPandas
+    "FlatMapCoGroupsInArrow",  # cogroup().applyInArrow
+    "TransformWithStateInPySpark",  # streaming transformWithState*
 )
-
-#: queries allowed to carry Python-exec nodes (isolated mapInPandas path)
-PYTHON_OK = {"multimodal_extract"}
 
 #: queries whose nested-loop/cartesian node is BY DESIGN over a
 #: provably tiny side (reviewed 2026-08-13):
@@ -83,6 +96,19 @@ CARTESIAN_OK = {
 }
 
 
+def plan_flags(name: str, plan: str) -> list[str]:
+    """The red-flag nodes in one query's executed-plan string, after the
+    CARTESIAN_OK allowlist."""
+    hits = [f for f in RED_FLAGS if f in plan]
+    if name in CARTESIAN_OK:
+        hits = [
+            h
+            for h in hits
+            if h not in ("CartesianProduct", "BroadcastNestedLoopJoin")
+        ]
+    return hits
+
+
 def audit(spark, sf_dir: str, verbose: bool = False) -> list[tuple[str, list[str]]]:
     """Audit every declared query's physical plan; returns the flagged
     (name, red-flag nodes) pairs after allowlisting.  Importable so the
@@ -96,15 +122,7 @@ def audit(spark, sf_dir: str, verbose: bool = False) -> list[tuple[str, list[str
     flagged: list[tuple[str, list[str]]] = []
     for name, fn in sorted(entry.queries().items()):
         plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        hits = [f for f in RED_FLAGS if f in plan]
-        if name in PYTHON_OK:
-            hits = [h for h in hits if "EvalPython" not in h]
-        if name in CARTESIAN_OK:
-            hits = [
-                h
-                for h in hits
-                if h not in ("CartesianProduct", "BroadcastNestedLoopJoin")
-            ]
+        hits = plan_flags(name, plan)
         if hits:
             flagged.append((name, hits))
             print(f"FLAG  {name:30s} {','.join(hits)}")
