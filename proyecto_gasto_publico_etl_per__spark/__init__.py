@@ -9,7 +9,8 @@ every operator it implements (SURVEY.md §2) Spark-first:
 - ``operators`` — normalization, time dimension, star-schema build
                   (surrogate keys, anti-join upsert, FK resolution, grain
                   consolidation), plus large-scale extensions (dedup,
-                  similarity search, text stats)
+                  similarity search, text stats, binary-payload
+                  plumbing that decodes no media)
 - ``functions`` — reusable column expressions (text cleaning, labels,
                   exact-decimal money math, cross-engine stable hashing)
 - ``plans``     — the analytic views and parameterized queries (Q1-Q7,

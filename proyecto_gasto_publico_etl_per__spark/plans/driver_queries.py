@@ -2082,6 +2082,7 @@ DRIVER_PRIORITY: list[str] = [
     "repetition_stats",
     "sequence_packing",
     "lang_sampling_weights",
+    "multimodal_extract",
     "stream_window_agg",
     "gopher_gates",
     "doc_curation_profile",

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..operators import (
     chunking,
     dedup,
+    multimodal,
     retrieval,
     sampling,
     similarity,
@@ -3590,6 +3591,40 @@ def lang_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("weight_q"),
         )
+    )
+
+
+# --- multimodal plumbing -----------------------------------------------------
+
+
+@register(
+    "multimodal_extract",
+    """
+    SELECT doc_id AS asset_id,
+           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+           md5(text) AS byte_md5,
+           CAST(('0x' || substr(md5(text), 1, 2)) AS INT) / 255.0 AS f0,
+           CAST(('0x' || substr(md5(text), 3, 2)) AS INT) / 255.0 AS f1,
+           CAST(('0x' || substr(md5(text), 5, 2)) AS INT) / 255.0 AS f2,
+           CAST(('0x' || substr(md5(text), 7, 2)) AS INT) / 255.0 AS f3
+    FROM documents
+    """,
+)
+def multimodal_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binary-payload feature extraction in built-in column expressions
+    (documents' UTF-8 bytes stand in for media payloads; the oracle
+    reproduces the deterministic md5 extractor)."""
+    docs = load_table(spark, sf_dir, "documents")
+    assets = multimodal.documents_as_assets(docs)
+    feats = multimodal.extract_features(assets)
+    return feats.select(
+        "asset_id",
+        "n_bytes",
+        "byte_md5",
+        F.col("features")[0].alias("f0"),
+        F.col("features")[1].alias("f1"),
+        F.col("features")[2].alias("f2"),
+        F.col("features")[3].alias("f3"),
     )
 
 

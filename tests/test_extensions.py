@@ -1,5 +1,5 @@
 """Tests for the training-data-pipeline extensions: dedup, similarity,
-text stats."""
+text stats, multimodal plumbing."""
 
 from __future__ import annotations
 
@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from proyecto_gasto_publico_etl_per__spark.operators import (
     dedup,
+    multimodal,
     similarity,
     textstats,
 )
@@ -308,6 +309,28 @@ def test_ivf_assignment_is_total_and_single(spark):
         for r in assigned.filter(F.col("vec_id").isin(cent_ids)).collect()
     }
     assert all(v == c for v, c in self_rows.items())
+
+
+def test_multimodal_plumbing(spark):
+    docs = spark.createDataFrame(
+        [(1, "hello", "en", "s", 5), (2, "world!", "en", "s", 6)],
+        "doc_id INT, text STRING, lang STRING, source STRING, n_chars INT",
+    )
+    assets = multimodal.documents_as_assets(docs)
+    assert [f.name for f in assets.schema.fields] == [
+        "asset_id",
+        "media_type",
+        "payload",
+        "meta",
+    ]
+    feats = {r.asset_id: r for r in multimodal.extract_features(assets).collect()}
+    import hashlib
+
+    assert feats[1].n_bytes == 5
+    assert feats[1].byte_md5 == hashlib.md5(b"hello").hexdigest()
+    assert feats[1].features == [
+        hashlib.md5(b"hello").digest()[i] / 255.0 for i in range(4)
+    ]
 
 
 def test_cluster_duplicates_components(spark):

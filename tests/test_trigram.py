@@ -197,6 +197,25 @@ def test_delete_equals_rebuild_on_remaining(spark, corpus):
     assert _served(spark, [folded], "window sc", docs) == want
 
 
+def test_epoch_rebuild_clears_stale_tombstones(spark, tmp_path):
+    """Rebuilding an explicit root must clear a surviving tombstones
+    zone — the previous index's deletions must not suppress the NEW
+    corpus's matching doc_ids (the r14 stale-zone rule)."""
+    docs = spark.createDataFrame(
+        [(1, "window scan a"), (2, "window scan b")],
+        "doc_id LONG, text STRING",
+    )
+    root = str(tmp_path / "idx")
+    trigram.build_trigram_index(spark, docs, root=root)
+    trigram.delete_from_trigram_index(
+        spark, [root], spark.createDataFrame([(1,)], "doc_id LONG")
+    )
+    assert _served(spark, [root], "window sc", docs) == [2]
+    # replayed build: same root rebuilt — deletions must vanish
+    trigram.build_trigram_index(spark, docs, root=root)
+    assert _served(spark, [root], "window sc", docs) == [1, 2]
+
+
 def test_cli_substring_delete(spark, tmp_path, capsys):
     from proyecto_gasto_publico_etl_per__spark import cli
 
